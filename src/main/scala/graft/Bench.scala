@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bench main — driver contract: print ONE JSON line
   * `{"metric":...,"value":total_sec,"unit":"sec","queries":{...},"sf":...}`.
@@ -50,6 +50,38 @@ object Bench {
     "q_holm_bonferroni", "q_borda", "q_label_noise", "q_hot_section",
     "q_margin_sample", "q_doremi_weights", "q_median_polish", "q_ppr")
 
+  /** One pass over `queries`: each query's `count()` timed, minus the
+    * memo builds it triggered (summed per memo in `memo`). A query that
+    * throws gets no time; it is named in `failed` and on stderr.
+    */
+  final case class Pass(times: Map[String, Double], memo: Map[String, Double],
+      failed: Set[String]) {
+    def total: Double = times.values.sum + memo.values.sum
+  }
+
+  def timePass(spark: SparkSession, sfDir: String,
+      queries: Iterable[(String, (SparkSession, String) => DataFrame)]): Pass = {
+    val memo = scala.collection.mutable.Map[String, Double]()
+    val failed = Set.newBuilder[String]
+    val times = queries.flatMap { case (name, fn) =>
+      graft.sources.SessionMemo.drainBuildLog()
+      val t0 = System.nanoTime()
+      val ok =
+        try { fn(spark, sfDir).count(); true }
+        catch {
+          case e: Throwable =>
+            Console.err.println(s"bench: FAILED $name: $e")
+            failed += name
+            false
+        }
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      val builds = graft.sources.SessionMemo.drainBuildLog()
+      builds.foreach { case (k, s) => memo(k) = memo.getOrElse(k, 0.0) + s }
+      if (ok) Some(name -> math.max(elapsed - builds.map(_._2).sum, 0.0)) else None
+    }.toMap
+    Pass(times, memo.toMap, failed.result())
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -89,21 +121,8 @@ object Bench {
     // whichever consumer runs first. The headline total still INCLUDES
     // memo seconds (same work, honest attribution).
     graft.sources.SessionMemo.record(true)
-    def runPass(): (Map[String, Double], Map[String, Double]) = {
-      val memo = scala.collection.mutable.Map[String, Double]()
-      val qs = SparkEntry.queries
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
-          graft.sources.SessionMemo.drainBuildLog()
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          val elapsed = (System.nanoTime() - t0) / 1e9
-          val builds = graft.sources.SessionMemo.drainBuildLog()
-          builds.foreach { case (k, s) => memo(k) = memo.getOrElse(k, 0.0) + s }
-          name -> math.max(elapsed - builds.map(_._2).sum, 0.0)
-        }
-      (qs, memo.toMap)
-    }
+    def runPass(): Pass = timePass(spark, sfDir,
+      SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) })
     // Host telemetry: 1/5/15-min loadavg sampled immediately before each
     // pass. A loaded host inflates a pass; recording the load state makes
     // a contaminated official run self-documenting instead of a judging
@@ -115,7 +134,7 @@ object Bench {
           .split("\\s+").take(3).toSeq.map(_.toDouble)
       } catch { case _: Throwable => Seq.empty }
     val passLoads = scala.collection.mutable.ArrayBuffer[Seq[Double]]()
-    val allPasses = scala.collection.mutable.ArrayBuffer[(Map[String, Double], Map[String, Double])]()
+    val allPasses = scala.collection.mutable.ArrayBuffer[Pass]()
     def nextPass(): Unit = {
       if (allPasses.nonEmpty) {
         graft.sources.SessionMemo.release(spark)
@@ -133,9 +152,7 @@ object Bench {
     // ACTS on its own telemetry: run up to GRAFT_BENCH_MAX_EXTRA
     // (default 2) additional passes until the best two agree.
     def bestTwoDisagreementPct(): Double = {
-      val totals = allPasses
-        .map { case (qs, memo) => qs.values.sum + memo.values.sum }
-        .sorted
+      val totals = allPasses.map(_.total).sorted
       if (totals.size > 1 && totals.head > 0)
         (totals(1) - totals.head) / totals.head * 100.0
       else 0.0
@@ -149,7 +166,7 @@ object Bench {
       nextPass()
       extraPasses += 1
     }
-    val passTotals = allPasses.map { case (qs, memo) => qs.values.sum + memo.values.sum }.toSeq
+    val passTotals = allPasses.map(_.total).toSeq
     val passDisagreementPct = bestTwoDisagreementPct()
     if (passDisagreementPct > 15.0)
       Console.err.println(
@@ -157,22 +174,24 @@ object Bench {
           s"after $extraPasses extra pass(es) " +
           s"(${passTotals.map(t => f"$t%.1f").mkString("/")} s; loadavg ${passLoads.map(_.mkString(",")).mkString(" | ")}) — " +
           "host likely contended; treat the headline with suspicion and re-run quiet")
-    val results = allPasses.head._1.keys.map { name =>
-      name -> allPasses.map(_._1(name)).min
+    // a query that threw in any pass is reported, never timed
+    val failed = allPasses.flatMap(_.failed).toSet
+    val results = (allPasses.head.times.keySet -- failed).map { name =>
+      name -> allPasses.map(_.times(name)).min
     }.toMap
     // which pass won each query (index of the min) — aggregate counts
     // make a contended pass self-documenting (a pass that wins ~0
     // queries contributed nothing but heat)
     val winCounts = allPasses.indices.map { i =>
-      allPasses.head._1.keys.count { name =>
-        val times = allPasses.map(_._1(name))
+      results.keys.count { name =>
+        val times = allPasses.map(_.times(name))
         times.indexOf(times.min) == i
       }
     }
     // per-memo min across passes, mirroring the per-query protocol
     // (trivial plan-only memos below 50 ms are noise — drop them)
-    val memoBuilds = allPasses.flatMap(_._2.keys).distinct.map { k =>
-      k -> allPasses.map(_._2.getOrElse(k, 0.0)).min
+    val memoBuilds = allPasses.flatMap(_.memo.keys).distinct.map { k =>
+      k -> allPasses.map(_.memo.getOrElse(k, 0.0)).min
     }.filter(_._2 >= 0.05).toMap
     val memoTotal = memoBuilds.values.sum
     val total =
@@ -185,7 +204,8 @@ object Bench {
       .mkString("{", ",", "}")
     val loadsJson = passLoads.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
     val winsJson = winCounts.mkString("[", ",", "]")
-    println(s"""{"queries":$qsFull,"memo_builds":$memoFull,"memo_total":${f"$memoTotal%.3f"},"sf":"$sfDir","unit":"sec","n_queries":${results.size},"passes":${allPasses.size},"extra_passes":$extraPasses,"pass_totals":$rawTotals,"pass_win_counts":$winsJson,"loadavg":$loadsJson,"pass_disagreement_pct":${f"$passDisagreementPct%.1f"},"metric":"total","value":$total}""")
+    val failedJson = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    println(s"""{"queries":$qsFull,"failed":$failedJson,"memo_builds":$memoFull,"memo_total":${f"$memoTotal%.3f"},"sf":"$sfDir","unit":"sec","n_queries":${results.size},"passes":${allPasses.size},"extra_passes":$extraPasses,"pass_totals":$rawTotals,"pass_win_counts":$winsJson,"loadavg":$loadsJson,"pass_disagreement_pct":${f"$passDisagreementPct%.1f"},"metric":"total","value":$total}""")
     // Compact final line: seconds at ms precision; the previous round's
     // comparison set first (so the driver's round-over-round view keeps
     // every query it compared last round, fast or slow), then the

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -7,106 +8,90 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.streaming.{LogStream, UpsertSink}
 
 /** The product pipeline — the rebuild of the reference's
-  * `LogAnalysis.main` (`LogAnalysis.java:34-94`): one shared parsed
-  * stream feeding the three continuous analytics, each attached to a
-  * PK-upsert sink.
+  * `LogAnalysis.main` (`LogAnalysis.java:34-94`): ONE stateful streaming
+  * query from log lines to the three PK-upsert sinks.
   *
   * Deliberate improvement over the reference (its B4 quirk): the
   * reference launches three INDEPENDENT jobs, each re-consuming the
-  * Kafka topic (`LogAnalysis.java:131,187,258`). Here the parse happens
-  * once per micro-batch and the three sinks share it.
+  * Kafka topic (`LogAnalysis.java:131,187,258`). Here each line is read
+  * and parsed once per micro-batch. Every parsed row becomes tagged
+  * (kind, key) rows counted by one update-mode aggregate
+  * ([[graft.streaming.LogStream.keyedCounts]]): one state store, one
+  * checkpoint. One foreachBatch splits the changelog by kind into the
+  * three sinks.
   *
-  * Top-N sinks run in COMPLETE mode (per-key aggregate state is small —
-  * one row per section/article) and rank inside foreachBatch — Spark's
-  * equivalent of Blink's streaming Top-N rewrite (SURVEY.md §2.1 Q4).
+  * Top-10 (Blink's streaming Top-N rewrite, SURVEY.md §2.1 Q4): each
+  * batch merges the sink's current top 10 with the changelog's top 10,
+  * count desc then id asc. The merge is exact because counts never
+  * decrease on this insert-only stream: a key outside the old top 10
+  * that the batch did not touch still ranks below the old tenth row,
+  * and every kept row can only have moved up.
   */
 object LogAnalysisApp {
 
   final case class Pipelines(
-      hotSection: StreamingQuery,
-      hotArticle: StreamingQuery,
-      clientIp: StreamingQuery,
-      hotSectionIncr: StreamingQuery,
+      query: StreamingQuery,
       sectionSink: UpsertSink,
       articleSink: UpsertSink,
-      clientSink: UpsertSink,
-      sectionTopSink: UpsertSink)
+      clientSink: UpsertSink)
 
   /** Wire the three analytics onto an unbounded `line` stream. Dims are
     * static snapshots (broadcast per micro-batch — the lookup-join
     * analog). Sinks are in-memory upsert tables; swap the merge lambda
     * for graft.sources.JdbcUpsert#write against MySQL in production.
+    *
+    * Sinks start empty. On a restart from a checkpoint with a committed
+    * batch they are first filled from the committed state, so they then
+    * hold what an uninterrupted run holds.
     */
   def start(spark: SparkSession, lines: DataFrame,
       sectionDim: DataFrame, articleDim: DataFrame,
       checkpointRoot: String): Pipelines = {
-    // transformWithState (the incremental top-N below) requires the
-    // RocksDB state store; the aggregate sinks run on it too — the
-    // provider you'd run at scale anyway (changelog checkpointing,
-    // off-heap state). Set before any query start so every sink's
-    // snapshot of the conf agrees.
+    // RocksDB: off-heap state with changelog checkpointing, the provider
+    // the per-client state needs at scale. Set before the query starts
+    // so the checkpoint records it.
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val parsed = LogStream.parsedTuples(lines)
-
+    val checkpoint = s"$checkpointRoot/product"
     val sectionSink = new UpsertSink(Seq("section_id"))
     val articleSink = new UpsertSink(Seq("article_id"))
     val clientSink = new UpsertSink(Seq("client_ip"))
 
-    def top10(df: DataFrame, orderCol: String, idCol: String): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
-      // complete-mode batch = the aggregate state table (group-count-
-      // bounded), so one partition is CORRECT — but key the window
-      // (GraftFunctions.singleton_key) rather than leave the spec
-      // empty: same execution, no "No Partition Defined" WARN
-      df.withColumn("_rn", row_number().over(
-          Window.partitionBy(graft.functions.GraftFunctions.singleton_key(col(idCol)))
-            .orderBy(col(orderCol).desc, col(idCol))))
-        .filter(col("_rn") <= 10).drop("_rn")
+    // rows are (id, name, pv): count desc, then id asc
+    def top10(sink: UpsertSink, rows: DataFrame, batchId: Long): Unit = {
+      val Array(id, _, pv) = rows.columns
+      sink.mergeTop(rows.orderBy(col(pv).desc, col(id)).limit(10), batchId, 10) { v =>
+        (-v(2).asInstanceOf[Long], v(0).asInstanceOf[Int])
+      }
+    }
+    def publish(batch: DataFrame, batchId: Long): Unit = {
+      val changes = batch.persist()
+      try {
+        top10(sectionSink, LogStream.sectionTotals(changes, sectionDim), batchId)
+        top10(articleSink, LogStream.articleTotals(changes, articleDim), batchId)
+        clientSink.merge(LogStream.clientTotals(changes), batchId)
+      } finally changes.unpersist()
     }
 
-    val hotSection = LogStream.sectionCounts(parsed, sectionDim)
-      .writeStream.outputMode("complete")
-      .option("checkpointLocation", s"$checkpointRoot/hot_section")
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        // complete-mode top-N: batch is the whole table; replace() swaps
-        // atomically enough that readers never see it empty/partial.
-        sectionSink.replace(top10(df, "section_pv", "section_id"), id)
-      }.start()
+    // Spark's `statestore` source reads the aggregate's committed state
+    // as key{kind, key}, value{count}: a changelog of every key, which
+    // the empty sinks take like any batch.
+    if (hasCommittedBatch(spark, checkpoint))
+      publish(spark.read.format("statestore").load(checkpoint)
+        .select(col("key.kind"), col("key.key"), col("value.count")), -1L)
 
-    val hotArticle = LogStream.articleCounts(parsed, articleDim)
-      .writeStream.outputMode("complete")
-      .option("checkpointLocation", s"$checkpointRoot/hot_article")
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        articleSink.replace(top10(df, "article_pv", "article_id"), id)
-      }.start()
-
-    val clientIp = LogStream.clientCounts(parsed)
+    val query = LogStream.keyedCounts(LogStream.parsedTuples(lines))
       .writeStream.outputMode("update")
-      .option("checkpointLocation", s"$checkpointRoot/client_ip")
-      .foreachBatch { (df: DataFrame, id: Long) => clientSink.merge(df, id) }
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(publish _)
       .start()
+    Pipelines(query, sectionSink, articleSink, clientSink)
+  }
 
-    // Incremental Blink-parity top-N off the SAME shared parse: the
-    // keyed rank operator (graft.streaming.TopNStream) instead of the
-    // complete-mode sort — per-batch work is O(touched sections + k),
-    // state never replays the whole aggregate table. Sink upserts by
-    // rank, exactly the reference's MySQL top-10 table contract.
-    val sectionTopSink = new UpsertSink(Seq("rank"))
-    val hotSectionIncr = graft.streaming.TopNStream(
-        parsed.filter(col("section_id") =!= 0)
-          .select(lit("section").as("ctx"),
-            col("section_id").cast("string").as("item"),
-            lit(1L).as("delta")), 10)
-      .toDF("ctx", "rank", "item", "cnt")
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", s"$checkpointRoot/hot_section_incr")
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        sectionTopSink.merge(df.drop("ctx"), id)
-      }.start()
-
-    Pipelines(hotSection, hotArticle, clientIp, hotSectionIncr,
-      sectionSink, articleSink, clientSink, sectionTopSink)
+  private def hasCommittedBatch(spark: SparkSession, checkpoint: String): Boolean = {
+    val commits = new Path(checkpoint, "commits")
+    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(commits) && fs.listStatus(commits).exists(_.getPath.getName.forall(_.isDigit))
   }
 
   final case class Monitors(
@@ -115,9 +100,9 @@ object LogAnalysisApp {
       alarms: scala.collection.concurrent.TrieMap[Long, (Long, Option[Long], Boolean)],
       funnelSink: UpsertSink)
 
-  /** The extension sinks, attached to the SAME shared parse as the three
-    * product analytics (the multi-sink answer to the reference's B4
-    * three-independent-jobs topology — one parse, N consumers):
+  /** The extension sinks over the same `line` stream as the product
+    * pipeline. Each monitor is its own streaming query that reads and
+    * parses the source itself (the funnel reads it for both join sides):
     *
     *   - **volume alarm**: each micro-batch's row count robust-z'd
     *     against `refVolumes` (historical per-period volumes, an `x:
@@ -127,13 +112,11 @@ object LogAnalysisApp {
     *   - **browse→read funnel**: the stream-stream interval join
     *     ([[graft.streaming.EventJoinStream]]) between section browses
     *     (fid hits) and article reads (tid hits) by the SAME client
-    *     within `maxGapSec` — both sides derive from the one parsed
-    *     stream, watermarked on the log's event time, so the symmetric
-    *     join state stays O(rate × window) forever.
+    *     within `maxGapSec` — both sides watermarked on the log's event
+    *     time, so the symmetric join state stays O(rate × window) forever.
     *
     * Scale note: everything here is per-micro-batch narrow work plus one
-    * watermark-bounded join keyed on client_ip; no new scan of the
-    * source, no unbounded state.
+    * watermark-bounded join keyed on client_ip; no unbounded state.
     */
   def startMonitors(spark: SparkSession, lines: DataFrame,
       refVolumes: DataFrame, checkpointRoot: String,
@@ -183,6 +166,6 @@ object LogAnalysisApp {
       graft.analytics.ForumAnalytics.sections(spark, sfDir),
       graft.analytics.ForumAnalytics.articles(spark, sfDir),
       cfg.checkpointDir)
-    p.clientIp.awaitTermination()
+    p.query.awaitTermination()
   }
 }

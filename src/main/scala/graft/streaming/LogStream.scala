@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.logs.LogParser
@@ -19,9 +19,13 @@ import graft.logs.LogParser
   *     .java:100-115`) → `foreachBatch` + key-wise MERGE (here an
   *     in-memory PK table; swap the merge lambda for `INSERT ... ON
   *     DUPLICATE KEY UPDATE` against a real JDBC pool at deploy time)
+  *   - the three `count(1) GROUP BY` queries → one keyed count
+  *     ([[keyedCounts]]): one state store for sections, articles and
+  *     clients
   *   - streaming Top-N (`ORDER BY cnt DESC LIMIT 10`,
-  *     `LogAnalysis.java:184-185`) → per-batch `row_number() <= n` inside
-  *     foreachBatch (Blink's rank-operator rewrite, done by hand)
+  *     `LogAnalysis.java:184-185`) → the sink's top 10 merged with each
+  *     changelog's top 10 inside foreachBatch (Blink's rank-operator
+  *     rewrite, done by hand; `graft.LogAnalysisApp`)
   *
   * The reference is processing-time only (no watermarks — SURVEY.md §2.3);
   * [[windowedEventCounts]] adds the event-time+watermark variant Spark
@@ -35,28 +39,61 @@ object LogStream {
   def parsedTuples(lines: DataFrame): DataFrame =
     LogParser.accessTuples(lines).withColumn("proctime", current_timestamp())
 
-  /** Continuous per-section PV counts against a static dim snapshot
-    * (stream-static broadcast join — Spark's semantic for the reference's
-    * `FOR SYSTEM_TIME AS OF proctime` lookup join, `LogAnalysis.java:251`).
+  private val Section = "section"
+  private val Article = "article"
+  private val Client = "client"
+
+  /** The product's one stateful aggregate: each parsed row becomes tagged
+    * (kind, key) rows, counted per (kind, key). A row yields its section
+    * and its article when the id is not the 0 sentinel, and its client
+    * when it carries at least one id (the reference's three count
+    * queries, `LogAnalysis.java:117-130,173-185,251`). In update mode
+    * the changelog holds each touched key's new total; [[sectionTotals]],
+    * [[articleTotals]] and [[clientTotals]] split it by kind.
     */
-  def sectionCounts(parsed: DataFrame, sectionDim: DataFrame): DataFrame =
-    parsed.filter(col("section_id") =!= 0)
-      .join(broadcast(sectionDim), col("section_id") === col("fid"))
-      .groupBy(col("section_id"), col("name"))
-      .agg(count(lit(1)).as("section_pv"))
+  def keyedCounts(parsed: DataFrame): DataFrame = {
+    def tagged(kind: String, key: Column, keep: Column): Column =
+      when(keep, struct(lit(kind).as("kind"), key.cast("string").as("key")))
+    val section = col("section_id") =!= 0
+    val article = col("article_id") =!= 0
+    parsed
+      .select(explode(array_compact(array(
+        tagged(Section, col("section_id"), section),
+        tagged(Article, col("article_id"), article),
+        tagged(Client, col("client_ip"), section || article)))).as("t"))
+      .select("t.*")
+      .groupBy("kind", "key")
+      .count()
+  }
 
-  /** Continuous per-article PV counts (`LogAnalysis.java:173-185`). */
-  def articleCounts(parsed: DataFrame, articleDim: DataFrame): DataFrame =
-    parsed.filter(col("article_id") =!= 0)
-      .join(broadcast(articleDim), col("article_id") === col("tid"))
-      .groupBy(col("article_id"), col("subject"))
-      .agg(count(lit(1)).as("article_pv"))
+  /** `(section_id, name, section_pv)` rows of a [[keyedCounts]]
+    * changelog. The dim joins the changelog, one row per touched section,
+    * not the raw rows (stream-static broadcast join — Spark's semantic for
+    * the reference's `FOR SYSTEM_TIME AS OF proctime` lookup join,
+    * `LogAnalysis.java:251`); a section with no dim row drops.
+    */
+  def sectionTotals(changes: DataFrame, sectionDim: DataFrame): DataFrame =
+    withDim(changes, Section, sectionDim, "fid", "name")
 
-  /** Continuous per-client totals (`LogAnalysis.java:117-130`). */
-  def clientCounts(parsed: DataFrame): DataFrame =
-    parsed.filter(col("article_id") =!= 0 || col("section_id") =!= 0)
-      .groupBy(col("client_ip"))
-      .agg(count(lit(1)).as("client_access_cnt"))
+  /** `(article_id, subject, article_pv)` rows of a [[keyedCounts]]
+    * changelog, joined to the dim like [[sectionTotals]].
+    */
+  def articleTotals(changes: DataFrame, articleDim: DataFrame): DataFrame =
+    withDim(changes, Article, articleDim, "tid", "subject")
+
+  /** `(client_ip, client_access_cnt)` rows of a [[keyedCounts]] changelog. */
+  def clientTotals(changes: DataFrame): DataFrame =
+    changes.filter(col("kind") === Client)
+      .select(col("key").as("client_ip"), col("count").as("client_access_cnt"))
+
+  private def withDim(changes: DataFrame, kind: String, dim: DataFrame,
+      dimKey: String, attr: String): DataFrame = {
+    val (id, pv) = (s"${kind}_id", s"${kind}_pv")
+    changes.filter(col("kind") === kind)
+      .select(col("key").cast("int").as(id), col("count").as(pv))
+      .join(broadcast(dim), col(id) === col(dimKey))
+      .select(col(id), col(attr), col(pv))
+  }
 
   /** Stream-stream interval join (attribution): each purchase matched to
     * the SAME user's views within the trailing `windowSeconds` —

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 
 /** PK-upsert sink driven from `foreachBatch` — the Spark equivalent of
   * the reference's three `PRIMARY KEY ... NOT ENFORCED` JDBC sink tables
@@ -17,40 +15,38 @@ import org.apache.spark.sql.{DataFrame, Row}
   */
 class UpsertSink(keyCols: Seq[String]) extends Serializable {
 
-  /** key values → latest row (upsert semantics). */
-  val table: TrieMap[Seq[Any], Seq[Any]] = TrieMap.empty
+  /** key values → latest row. Every write builds a whole new map and
+    * publishes it in one volatile write, so a concurrent reader sees the
+    * table before or after a batch, never a mix. Writes come from one
+    * query's `foreachBatch`, one batch at a time.
+    */
+  @volatile private var table: Map[Seq[Any], Seq[Any]] = Map.empty
 
   /** foreachBatch hook: upsert every row of the micro-batch output.
     * `collect` here mirrors the reference sink's per-record JDBC writes;
     * the batch is already the *aggregated* changelog (small: one row per
     * touched key), not raw events.
     */
-  def merge(batch: DataFrame, batchId: Long): Unit = {
-    val cols = batch.columns
-    val keyIdx = keyCols.map(cols.indexOf(_))
-    batch.collect().foreach { row =>
-      val vals = row.toSeq
-      table.put(keyIdx.map(vals(_)), vals)
-    }
-  }
+  def merge(batch: DataFrame, batchId: Long): Unit = table = table ++ keyed(batch)
 
-  /** Complete-mode hook: the batch IS the whole table. Collects the new
-    * rows first (a failure here leaves the previous good state intact),
-    * then upserts them and deletes keys absent from the batch — a
-    * concurrent snapshot reader never observes an empty or partial
-    * table, only a mix of previous/current rows per key.
+  /** Complete-mode hook: the batch IS the whole table. A batch that fails
+    * to collect leaves the previous table in place.
     */
-  def replace(batch: DataFrame, batchId: Long): Unit = {
-    val cols = batch.columns
-    val keyIdx = keyCols.map(cols.indexOf(_))
-    val rows = batch.collect().map { row =>
+  def replace(batch: DataFrame, batchId: Long): Unit = table = keyed(batch).toMap
+
+  /** Top-k hook: upsert the batch, then keep only the `k` rows that come
+    * first under `rank`.
+    */
+  def mergeTop[R: Ordering](batch: DataFrame, batchId: Long, k: Int)(rank: Seq[Any] => R): Unit =
+    table = (table ++ keyed(batch)).toSeq.sortBy(kv => rank(kv._2)).take(k).toMap
+
+  def snapshot: Map[Seq[Any], Seq[Any]] = table
+
+  private def keyed(batch: DataFrame): Seq[(Seq[Any], Seq[Any])] = {
+    val keyIdx = keyCols.map(batch.columns.indexOf(_))
+    batch.collect().toSeq.map { row =>
       val vals = row.toSeq
       keyIdx.map(vals(_)) -> vals
     }
-    val keep = rows.map(_._1).toSet
-    rows.foreach { case (k, v) => table.put(k, v) }
-    table.keys.foreach { k => if (!keep.contains(k)) table.remove(k) }
   }
-
-  def snapshot: Map[Seq[Any], Seq[Any]] = table.toMap
 }

@@ -4,15 +4,22 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** End-to-end product pipeline: files arriving in a directory → shared
-  * parse → three continuous analytics → upsert sinks (the full reference
-  * `LogAnalysis.main` shape, driven by the file source stand-in).
+/** End-to-end product pipeline: files arriving in a directory → one
+  * streaming query (parse → keyed count) → three upsert sinks (the full
+  * reference `LogAnalysis.main` shape, driven by the file source
+  * stand-in).
   */
 class LogAnalysisAppSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
 
   def line(ip: String, uri: String): String =
     s"""$ip - - [27/Aug/2020:10:20:53 +0800] "GET $uri HTTP/1.1" 200 1024 "-" "Mozilla/5.0""""
+
+  /** Section sink rows in rank order: count desc, then id asc. */
+  def sectionRanks(p: LogAnalysisApp.Pipelines): Seq[(Long, Long)] =
+    p.sectionSink.snapshot.values.toSeq
+      .map(v => (v.head.toString.toLong, v.last.asInstanceOf[Long]))
+      .sortBy { case (id, n) => (-n, id) }
 
   test("file-stream end to end: three sinks fill and upsert across batches") {
     import spark.implicits._
@@ -28,57 +35,40 @@ class LogAnalysisAppSpec extends AnyFunSuite {
       line("10.0.0.2", "/forum.php?mod=forumdisplay&fid=5"),
       "### not a log line ###").mkString("\n"))
 
+    val before = spark.streams.active.map(_.id).toSet
     val p = LogAnalysisApp.start(spark,
       graft.sources.LogSources.textStreamLines(spark, logDir.toString),
       sectionDim, articleDim, ckpt)
-    // incremental top-N parity oracle: rank rows must equal the top-10
-    // of the running section counts (count desc, item asc) after EVERY
-    // batch — the insert/retract contract of the Blink rank operator
-    def topRanks(): Seq[(Int, String, Long)] =
-      p.sectionTopSink.snapshot.toSeq
-        .map { case (k, v) => (k.head.asInstanceOf[Int], v(1).asInstanceOf[String], v(2).asInstanceOf[Long]) }
-        .sortBy(_._1)
     try {
-      p.hotSection.processAllAvailable()
-      p.hotArticle.processAllAvailable()
-      p.clientIp.processAllAvailable()
-      p.hotSectionIncr.processAllAvailable()
+      assert(spark.streams.active.map(_.id).toSet -- before == Set(p.query.id))
+      p.query.processAllAvailable()
       assert(p.sectionSink.snapshot.size == 2)
       assert(p.articleSink.snapshot.keySet == Set(Seq(9L)))
       assert(p.clientSink.snapshot(Seq("10.0.0.1")).last == 2L)
-      // b1: fid3=1, fid5=1 — tie broken by item asc
-      assert(topRanks() == Seq((1, "3", 1L), (2, "5", 1L)))
+      // b1: fid3=1, fid5=1 — tie broken by id asc
+      assert(sectionRanks(p) == Seq((3L, 1L), (5L, 1L)))
 
       Files.writeString(new java.io.File(logDir, "b2.log").toPath, Seq(
         line("10.0.0.1", "/forum.php?mod=forumdisplay&fid=3"),
         line("10.0.0.3", "/forum.php?mod=viewthread&tid=7")).mkString("\n"))
-      p.hotSection.processAllAvailable()
-      p.hotArticle.processAllAvailable()
-      p.clientIp.processAllAvailable()
-      p.hotSectionIncr.processAllAvailable()
+      p.query.processAllAvailable()
 
       val sec3 = p.sectionSink.snapshot(Seq(3L))
       assert(sec3.contains("tech") && sec3.last == 2L) // upserted count grew
       assert(p.articleSink.snapshot.keySet == Set(Seq(9L), Seq(7L)))
       assert(p.clientSink.snapshot(Seq("10.0.0.3")).last == 1L)
-      // b2: fid3=2, fid5=1
-      assert(topRanks() == Seq((1, "3", 2L), (2, "5", 1L)))
+      assert(sectionRanks(p) == Seq((3L, 2L), (5L, 1L)))
 
-      // b3: two more fid5 hits flip the ranking — the retract+insert
-      // the complete-mode path replays and the incremental path upserts
+      // b3: two more fid5 hits flip the ranking
       Files.writeString(new java.io.File(logDir, "b3.log").toPath, Seq(
         line("10.0.0.4", "/forum.php?mod=forumdisplay&fid=5"),
         line("10.0.0.5", "/forum.php?mod=forumdisplay&fid=5")).mkString("\n"))
-      p.hotSection.processAllAvailable()
-      p.hotSectionIncr.processAllAvailable()
-      // fid5=3 overtakes fid3=2 (rank flip across batch 3)
-      assert(topRanks() == Seq((1, "5", 3L), (2, "3", 2L)))
-      // and the complete-mode sink agrees on the counts
-      assert(p.sectionSink.snapshot(Seq(5L)).last == 3L)
-    } finally {
-      p.hotSection.stop(); p.hotArticle.stop(); p.clientIp.stop()
-      p.hotSectionIncr.stop()
-    }
+      p.query.processAllAvailable()
+      assert(sectionRanks(p) == Seq((5L, 3L), (3L, 2L)))
+
+      // every line written (the unparseable one included) was read once
+      assert(p.query.recentProgress.map(_.numInputRows).sum == 8L)
+    } finally p.query.stop()
   }
 
   test("checkpoint recovery: restart resumes aggregate state, no double counting") {
@@ -94,10 +84,10 @@ class LogAnalysisAppSpec extends AnyFunSuite {
     val p1 = LogAnalysisApp.start(spark,
       graft.sources.LogSources.textStreamLines(spark, logDir.toString),
       sectionDim, articleDim, ckpt)
-    p1.hotSection.processAllAvailable()
-    assert(p1.sectionSink.snapshot(Seq(3L)).last == 2L)
-    p1.hotSection.stop(); p1.hotArticle.stop(); p1.clientIp.stop()
-    p1.hotSectionIncr.stop()
+    try {
+      p1.query.processAllAvailable()
+      assert(p1.sectionSink.snapshot(Seq(3L)).last == 2L)
+    } finally p1.query.stop()
 
     // restart from the same checkpoint with fresh sinks; add one more hit
     Files.writeString(new java.io.File(logDir, "b2.log").toPath,
@@ -106,19 +96,68 @@ class LogAnalysisAppSpec extends AnyFunSuite {
       graft.sources.LogSources.textStreamLines(spark, logDir.toString),
       sectionDim, articleDim, ckpt)
     try {
-      p2.hotSection.processAllAvailable()
+      p2.query.processAllAvailable()
       // 2 (restored from StateStore) + 1 (new file); b1 not re-consumed
       assert(p2.sectionSink.snapshot(Seq(3L)).last == 3L)
-      // the incremental top-N restores its count map + buffer too
-      p2.hotSectionIncr.processAllAvailable()
-      assert(p2.sectionTopSink.snapshot(Seq(1))(2) == 3L)
-    } finally {
-      p2.hotSection.stop(); p2.hotArticle.stop(); p2.clientIp.stop()
-      p2.hotSectionIncr.stop()
-    }
+    } finally p2.query.stop()
   }
 
-  test("monitors: robust-z volume alarm + browse→read interval join off one shared parse") {
+  test("a batch that fails mid-sink and is replayed after a restart gives the uninterrupted sinks") {
+    import spark.implicits._
+    val logDir = Files.createTempDirectory("graft-logs-f").toFile
+    val ckpt = Files.createTempDirectory("graft-ckpt-f").toString
+    val sectionDim = Seq((3L, "tech"), (5L, "life"), (8L, "news")).toDF("fid", "name")
+    // the article dim throws while the flag is set; sections are
+    // written before articles, so the failing batch leaves its section
+    // rows in the sink and its article and client rows unwritten
+    val articleDim = Seq((9L, "post nine"), (7L, "post seven")).toDF("tid", "subject")
+      .select($"tid", FailingDim.subject($"subject").as("subject"))
+    val files = Seq(
+      Seq(line("10.0.0.1", "/forum.php?mod=forumdisplay&fid=3"),
+        line("10.0.0.1", "/forum.php?mod=forumdisplay&fid=3"),
+        line("10.0.0.2", "/forum.php?mod=forumdisplay&fid=5"),
+        line("10.0.0.2", "/forum.php?mod=viewthread&tid=9")),
+      // the failing batch: fid3 is not touched again after this point,
+      // so only the state seeding can put it back in a fresh sink
+      Seq(line("10.0.0.3", "/forum.php?mod=forumdisplay&fid=5"),
+        line("10.0.0.3", "/forum.php?mod=viewthread&tid=7")),
+      Seq(line("10.0.0.4", "/forum.php?mod=forumdisplay&fid=8"),
+        line("10.0.0.1", "/forum.php?mod=viewthread&tid=7")))
+    def write(dir: java.io.File, i: Int): Unit =
+      Files.writeString(new java.io.File(dir, s"b$i.log").toPath, files(i).mkString("\n"))
+    def run(dir: java.io.File, ck: String) = LogAnalysisApp.start(spark,
+      graft.sources.LogSources.textStreamLines(spark, dir.toString),
+      sectionDim, articleDim, ck)
+    def sinks(p: LogAnalysisApp.Pipelines) =
+      (p.sectionSink.snapshot, p.articleSink.snapshot, p.clientSink.snapshot)
+
+    write(logDir, 0)
+    val p1 = run(logDir, ckpt)
+    try {
+      p1.query.processAllAvailable()
+      write(logDir, 1)
+      FailingDim.fail = true
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](p1.query.processAllAvailable())
+      assert(p1.sectionSink.snapshot(Seq(5L)).last == 2L) // written before the failure
+      assert(!p1.articleSink.snapshot.contains(Seq(7L)))
+    } finally { FailingDim.fail = false; p1.query.stop() }
+
+    write(logDir, 2)
+    val p2 = run(logDir, ckpt)
+    val resumed = try { p2.query.processAllAvailable(); sinks(p2) } finally p2.query.stop()
+
+    val refDir = Files.createTempDirectory("graft-logs-f-ref").toFile
+    files.indices.foreach(write(refDir, _))
+    val ref = run(refDir, Files.createTempDirectory("graft-ckpt-f-ref").toString)
+    val uninterrupted = try { ref.query.processAllAvailable(); sinks(ref) } finally ref.query.stop()
+
+    assert(resumed == uninterrupted)
+    assert(uninterrupted._1(Seq(3L)).last == 2L)
+    assert(uninterrupted._2.keySet == Set(Seq(9L), Seq(7L)))
+    assert(uninterrupted._3(Seq("10.0.0.1")).last == 3L)
+  }
+
+  test("monitors: robust-z volume alarm + browse→read interval join") {
     import spark.implicits._
     val logDir = Files.createTempDirectory("graft-logs-m").toFile
     val ckpt = Files.createTempDirectory("graft-ckpt-m").toString
@@ -168,5 +207,14 @@ class LogAnalysisAppSpec extends AnyFunSuite {
     sys.props.put("graft.kafka.topic", "override_topic")
     try assert(GraftConfig.load().kafkaTopic == "override_topic")
     finally sys.props.remove("graft.kafka.topic")
+  }
+}
+
+/** An article-dim column that throws while `fail` is set. */
+object FailingDim {
+  @volatile var fail = false
+  val subject = org.apache.spark.sql.functions.udf { (s: String) =>
+    if (fail) throw new IllegalStateException("injected article-dim failure")
+    s
   }
 }

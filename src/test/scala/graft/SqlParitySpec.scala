@@ -98,4 +98,24 @@ class SqlParitySpec extends AnyFunSuite {
     assert(sink.snapshot.keySet == Set(Seq(2), Seq(5)))
     assert(sink.snapshot(Seq(2)) == Seq(2, "b2"))
   }
+
+  test("UpsertSink.replace publishes whole tables: a concurrent reader never sees a mix") {
+    val sink = new graft.streaming.UpsertSink(Seq("k"))
+    val a = Seq((1, "a"), (2, "b")).toDF("k", "v")
+    val b = Seq((3, "c"), (4, "d"), (5, "e")).toDF("k", "v")
+    sink.replace(a, 0L)
+    val tableA = sink.snapshot
+    sink.replace(b, 1L)
+    val tableB = sink.snapshot
+    val mixed = new java.util.concurrent.ConcurrentLinkedQueue[Map[Seq[Any], Seq[Any]]]()
+    @volatile var done = false
+    val reader = new Thread(() => while (!done) {
+      val s = sink.snapshot
+      if (s != tableA && s != tableB) mixed.add(s)
+    })
+    reader.start()
+    try (2 until 200).foreach(i => sink.replace(if (i % 2 == 0) a else b, i.toLong))
+    finally { done = true; reader.join() }
+    assert(mixed.isEmpty, s"reader saw ${mixed.size} mixed tables, e.g. ${mixed.peek()}")
+  }
 }

@@ -20,8 +20,8 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
-    val counts = LogStream.clientCounts(
-      LogStream.parsedTuples(mem.toDF().withColumnRenamed("value", "line")))
+    val counts = LogStream.clientTotals(LogStream.keyedCounts(
+      LogStream.parsedTuples(mem.toDF().withColumnRenamed("value", "line"))))
     val q = counts.writeStream.outputMode("update")
       .format("memory").queryName("client_counts").start()
     try {
@@ -50,11 +50,12 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
     val dim = Seq((3L, "tech"), (5L, "life")).toDF("fid", "name")
-    val counts = LogStream.sectionCounts(
-      LogStream.parsedTuples(mem.toDF().withColumnRenamed("value", "line")), dim)
+    val counts = LogStream.keyedCounts(
+      LogStream.parsedTuples(mem.toDF().withColumnRenamed("value", "line")))
     val sink = new UpsertSink(Seq("section_id"))
     val q = counts.writeStream.outputMode("update")
-      .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) => sink.merge(df, id))
+      .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
+        sink.merge(LogStream.sectionTotals(df, dim), id))
       .start()
     try {
       mem.addData(
