@@ -33,7 +33,7 @@ object DumpPlans {
     "q_group_cap" -> "per-group hash cap: single window exchange, WindowGroupLimit partial rank pushdown",
     "q_simhash_blocked" -> "nibble-banded simhash pairs: band equi-join candidates (never n²), structural pigeonhole recall",
     "q_pagerank" -> "iterative graph: memoized edge table scanned per round; rank joins equi; count scalar broadcast",
-    "q_triangles" -> "degree-oriented wedges (sum C(outdeg,2)); closing edge probes the broadcast edge list — wedges never shuffle",
+    "q_triangles" -> "one-row result collected inside the query's checkpoint scope, so this plan is a LocalTableScan; the counting plan (Queries.trianglesScoped): degree-oriented wedges (sum C(outdeg,2)); closing edge probes the broadcast edge list — wedges never shuffle",
     "q_tpch5" -> "six-table star: every dimension broadcasts, only orders⋈lineitem moves fact-sized data",
     "q_mad" -> "per-type medians broadcast back; exact-integer robust gate; event side never shuffles",
     "q_decontaminate" -> "benchmark gram set broadcast; corpus probed by one narrow left join",

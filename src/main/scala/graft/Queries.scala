@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.analytics.ForumAnalytics
 import graft.logs.{LogGen, LogParser}
-import graft.ops.{Aggregators, Dedup, Similarity, TextOps}
+import graft.ops.{Aggregators, Checkpoints, Dedup, Similarity, TextOps}
+import graft.ops.Checkpoints.gatedBroadcast
 import graft.sources.Tables
 
 /** Named harness queries — each is one operator/capability from
@@ -4429,7 +4430,19 @@ object Queries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  def trianglesQ(spark: SparkSession, sfDir: String): DataFrame = {
+  def trianglesQ(spark: SparkSession, sfDir: String): DataFrame =
+    trianglesScoped(spark, sfDir) { plan =>
+      spark.createDataFrame(java.util.Arrays.asList(plan.collect(): _*), plan.schema)
+    }
+
+  /** The [[trianglesQ]] counting plan, handed to `use` inside the scope
+    * of its one checkpoint (the oriented edge table), which is released
+    * when `use` returns — the leak-free form of a plan that reads a
+    * checkpoint ([[graft.ops.Curation.curateScoped]] style). `use` must
+    * consume the plan (collect, write, or explain it).
+    */
+  def trianglesScoped[T](spark: SparkSession, sfDir: String)(use: DataFrame => T): T =
+      Checkpoints.scoped { s =>
     val e = coOccurrenceEdges(spark, sfDir)
     val deg = e.select(col("x").as("node")).union(e.select(col("y").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -4453,22 +4466,21 @@ object Queries {
     // o is consumed three times (both wedge sides + the closing probe's
     // broadcast build): one |E|-row checkpoint keeps the degree
     // broadcasts and the orientation projection to a single evaluation
-    // (the hits rescale discipline); it backs the returned plan, so it
-    // stays the caller's to drop (the brandes delta-table convention).
-    val oC = o.localCheckpoint(true)
+    // (the hits rescale discipline)
+    val oC = s.checkpoint(o)
     val probe = oC.select(col("src"), col("dst"))
     // |oC| = |E| exactly (one oriented row per edge) — the broadcast
     // gate reads the checkpoint's count for free; at ~16 B/edge the
     // default 4M-edge cap keeps the broadcast under ~64 MB with slack
     // for row overhead. Past the cap: plain shuffle equi-join, no hint.
     val closing = if (oC.count() <= TriBroadcastMaxEdges) broadcast(probe) else probe
-    oC.as("o1").join(oC.as("o2"), col("o1.src") === col("o2.src") && vBeforeW)
+    use(oC.as("o1").join(oC.as("o2"), col("o1.src") === col("o2.src") && vBeforeW)
       .select(col("o1.src").as("u"), col("o1.dst").as("v"), col("o2.dst").as("w"))
       .join(closing, col("v") === col("src") && col("w") === col("dst"))
       .agg(count(lit(1)).as("n_triangles"),
         min(least(col("u"), col("v"), col("w"))).as("min_node"),
         max(greatest(col("u"), col("v"), col("w"))).as("max_node"),
-        sum(col("u") + col("v") + col("w")).as("node_sum"))
+        sum(col("u") + col("v") + col("w")).as("node_sum")))
   }
 
   /** 30-core of the part-adjacency graph via [[graft.ops.Graph.kCore]]:
@@ -8707,9 +8719,9 @@ object Queries {
     * pairwise work (CELF lazy evaluation is the documented refinement
     * when K grows). The driver holds only the K winner ids.
     */
-  def maxCoverageQ(spark: SparkSession, sfDir: String): DataFrame = {
+  def maxCoverageQ(spark: SparkSession, sfDir: String): DataFrame = Checkpoints.scoped { s =>
     val k = 8
-    val dt = Tables.documents(spark, sfDir)
+    val dt = s.persist(Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(trim(lower(col("text"))), "\\s+").as("ws"))
       .filter(size(col("ws")) >= 3)
       .select(col("doc_id"), explode(expr(
@@ -8721,20 +8733,18 @@ object Queries {
       // tables they derive from all reuse this one hash partitioning
       // (guide §2.3/2.4) instead of re-exchanging the (doc, gram) table
       // once per round
-      .repartition(col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("doc_id")))
     val totalTypes = dt.select(col("tok")).distinct().count()
     val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     var cum = 0L
     // the uncovered (doc, gram) table shrinks monotonically: maintain
     // it across rounds (one anti join against the LAST winner's
-    // remaining tokens, checkpointed with the kCore release
-    // discipline) instead of re-deriving coverage from ALL winners each
-    // round — same set by induction (a winner's tokens still in uncov
-    // ARE its uncovered tokens), with a round's anti-join build side
-    // one doc instead of a growing distinct
+    // remaining tokens, a scoped checkpoint whose predecessor — dt
+    // itself after round 1 — is released once it exists) instead of re-deriving coverage from ALL
+    // winners each round — same set by induction (a winner's tokens
+    // still in uncov ARE its uncovered tokens), with a round's anti-join
+    // build side one doc instead of a growing distinct
     var uncov: DataFrame = dt
-    var owned = false
     (1 to k).foreach { r =>
       val win = uncov.groupBy(col("doc_id")).agg(count(lit(1)).as("g"))
         .orderBy(col("g").desc, col("doc_id")).limit(1).collect()
@@ -8749,19 +8759,13 @@ object Queries {
           // shuffle join is the honest fallback
           val winToks = uncov.filter(col("doc_id") === win(0).getLong(0))
             .select(col("tok"))
-          val next = uncov.join(
-            if (win(0).getLong(1) <= 4000000L) broadcast(winToks) else winToks,
-            Seq("tok"), "left_anti").localCheckpoint(true)
-          if (owned)
-            org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(uncov)
+          val next = s.checkpoint(uncov.join(
+            gatedBroadcast(winToks, win(0).getLong(1)), Seq("tok"), "left_anti"))
+          s.release(uncov)
           uncov = next
-          owned = true
         }
       }
     }
-    if (owned)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(uncov)
-    dt.unpersist()
     import spark.implicits._
     picks.toSeq.toDF("round", "doc_id", "gain", "covered_types")
       .select(col("round"), col("doc_id"), col("gain"), col("covered_types"),
@@ -9225,22 +9229,20 @@ object Queries {
     * every activation test is a cross-multiplied integer. Output is
     * the per-round adoption curve plus the final coverage share.
     */
-  def cascadeQ(spark: SparkSession, sfDir: String): DataFrame = {
+  def cascadeQ(spark: SparkSession, sfDir: String): DataFrame = Checkpoints.scoped { s =>
     val e = partAdjacencyEdges(spark, sfDir).select(col("src"), col("dst"))
     val und = e.filter(col("src") =!= col("dst"))
     // the degree table feeds two driver actions (node count + seed
     // TakeOrdered): one |V|-sized checkpoint instead of two |E| degree
     // passes, released once the cascade (which consumes seeds eagerly)
     // has run
-    val deg = und.select(col("src").as("node"))
+    val deg = s.checkpoint(und.select(col("src").as("node"))
       .union(und.select(col("dst").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
+      .groupBy(col("node")).agg(count(lit(1)).as("d")))
     val nNodes = deg.count()
     val seeds = deg.orderBy(col("d").desc, col("node")).limit(16)
       .select(col("node"))
     val curve = graft.ops.Graph.ltmCascade(e, seeds, 4, "ltm:")
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(deg)
     import spark.implicits._
     curve.map { case (r, newly, act) =>
       (r, newly, act, act * 1000000L / nNodes)
@@ -13693,7 +13695,7 @@ object Queries {
     * forward/backward pivot decomposition, this operator's documented
     * scale path). Output: node, scc_id, component size.
     */
-  def sccQ(spark: SparkSession, sfDir: String): DataFrame = {
+  def sccQ(spark: SparkSession, sfDir: String): DataFrame = Checkpoints.scoped { s =>
     val pairs = Tables.lineitem(spark, sfDir)
       .join(Tables.supplier(spark, sfDir), col("l_suppkey") === col("s_suppkey"))
       .join(Tables.orders(spark, sfDir), col("l_orderkey") === col("o_orderkey"))
@@ -13703,24 +13705,22 @@ object Queries {
       .filter(col("src") =!= col("dst"))
     val tot = pairs.groupBy()
       .agg(sum(col("qty")).as("sq"), count(lit(1)).as("np"))
-    val e = pairs.crossJoin(broadcast(tot))
+    val e = s.persist(pairs.crossJoin(broadcast(tot))
       .filter(col("qty") * col("np") > col("sq")) // qty > mean, fraction-free
-      .select(col("src"), col("dst"))
-      .persist()
-    var r = e.localCheckpoint(true)
+      .select(col("src"), col("dst")))
+    var r = s.checkpoint(e)
     var n = r.count()
     var grew = true
     var i = 0
     while (grew && i < 10) { // doubling closure: diameter ≤ 2^10
-      val nr = r.union(
+      val nr = s.checkpoint(r.union(
           r.as("a").join(r.as("b"), col("a.dst") === col("b.src"))
             .select(col("a.src"), col("b.dst")))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
       val m = nr.count()
       grew = m != n
       n = m
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(r)
+      s.release(r)
       r = nr
       i += 1
     }
@@ -13740,10 +13740,9 @@ object Queries {
         scc.groupBy(col("scc_id")).agg(count(lit(1)).as("scc_size")), "scc_id")
       .select(col("node"), col("scc_id"), col("scc_size"))
       .orderBy(col("node"))
-    val materialized = out.localCheckpoint(true)
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(r)
-    e.unpersist(blocking = false)
-    materialized
+    // materialized before the scope releases r and e: the result's own
+    // checkpoint is the one kept past the scope
+    s.keep(s.checkpoint(out))
   }
 
   /** Allen's interval algebra census: each user-day activity interval
@@ -16754,39 +16753,16 @@ object Queries {
     * label-replay DuckDB oracle is unchanged. Emits one row per round:
     * components before, edges/weight added, cumulative forest weight.
     */
-  def boruvkaQ(spark: SparkSession, sfDir: String): DataFrame = {
-    // localCheckpoint alone is NOT enough between the self-join rounds:
-    // Spark 4 carries the checkpointed plan's originStats into the
-    // LogicalRDD, so each jump's self-join SQUARES the size estimate
-    // and by round 4 the BigInt statistic has ~2²⁴ bits — the driver
-    // disappears into BigInteger.multiply (observed: minutes/jump at
-    // sf0.01). Rebasing through createDataFrame(rdd, schema) resets
-    // the stats to the bounded default as well as the lineage.
-    // every checkpoint is tracked and released on BOTH exit paths: the
-    // output is a driver-side stats table, so nothing downstream needs
-    // the blocks (the brandes degenerate-path lesson)
-    val ckpts = collection.mutable.ListBuffer.empty[DataFrame]
-    def rebase(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(true)
-      ckpts += c
-      df.sparkSession.createDataFrame(c.rdd, df.schema)
-    }
-    // GRAFT_BORUVKA_PROF=1 → per-stage wall marks on stderr (soak triage)
-    val profOn = sys.env.contains("GRAFT_BORUVKA_PROF")
-    var tLast = System.nanoTime()
-    def mark(s: String): Unit = if (profOn) {
-      val now = System.nanoTime()
-      Console.err.println(f"[boruvka] $s%-16s ${(now - tLast) / 1e9}%7.2f s")
-      tLast = now
-    }
-    val und = partAdjacencyEdges(spark, sfDir)
+  def boruvkaQ(spark: SparkSession, sfDir: String): DataFrame = Checkpoints.scoped { s =>
+    // the self-join rounds read rebased checkpoints (Scope.rebase: a
+    // bare checkpoint's size estimate squares per jump). The output is a
+    // driver-side stats table, so the scope releases every checkpoint.
+    val und = s.checkpoint(partAdjacencyEdges(spark, sfDir)
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"), col("w").cast("long").as("c"))
       .filter(col("u") =!= col("v"))
       .groupBy(col("u"), col("v")).agg(sum(col("c")).as("cnt"))
-      .select(col("u"), col("v"), expr("1000000000 div cnt").as("w"))
-      .localCheckpoint(true)
-    mark("und")
+      .select(col("u"), col("v"), expr("1000000000 div cnt").as("w")))
     // contracted state: `edges` = surviving cross-component edges with
     // a<b COMPONENT labels (round 1: node ids ARE the labels — no join).
     // There is NO materialized component table: every edge endpoint is
@@ -16799,79 +16775,62 @@ object Queries {
     var activeBefore = 0L // round 1: every node has an incident edge
     val stats = collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     var cum = 0L
-    for (r <- 1 to 4) {
+    var converged = false
+    for (r <- 1 to 4 if !converged) {
       val minEdge0 = edges.select(col("a").as("c"), col("w"), col("a"), col("b"))
         .union(edges.select(col("b").as("c"), col("w"), col("a"), col("b")))
         .groupBy(col("c"))
         .agg(min(struct(col("w"), col("a"), col("b"))).as("m"))
-      val minEdgeR = rebase(minEdge0)
-      mark(s"r$r minEdge")
+      val minEdgeR = s.rebase(minEdge0)
       val sel = minEdgeR.select(col("m.w").as("w"), col("m.a").as("a"),
         col("m.b").as("b")).distinct()
       val nMin = minEdgeR.count()
       if (r == 1) activeBefore = nMin
       val Array(nc, ne, wa) = {
-        val s = sel.groupBy().agg(count(lit(1)), coalesce(sum(col("w")), lit(0L)))
+        val st = sel.groupBy().agg(count(lit(1)), coalesce(sum(col("w")), lit(0L)))
           .head()
-        Array(inactive + activeBefore, s.getLong(0), s.getLong(1))
+        Array(inactive + activeBefore, st.getLong(0), st.getLong(1))
       }
-      mark(s"r$r stats")
       inactive += activeBefore - nMin
       cum += wa
       stats += ((nc, ne, wa, cum))
-      if (ne == 0) {
-        // converged (or isolated remainder): later rounds select
-        // nothing and merge nothing — record them without Spark work
-        for (_ <- (r + 1) to 4) stats += ((nc, 0L, 0L, cum))
-        ckpts.foreach(_.unpersist())
-        und.unpersist()
-        val sess0 = spark
-        import sess0.implicits._
-        return stats.toSeq.zipWithIndex
-          .map { case ((c0, e0, w0, cw), i) => (i + 1L, c0, e0, w0, cw) }
-          .toDF("round", "n_comps_before", "edges_added", "weight_added",
-            "cum_weight")
-          .orderBy(col("round"))
+      // ne == 0: converged (or isolated remainder) — later rounds select
+      // nothing and merge nothing, so they are recorded below without
+      // Spark work
+      converged = ne == 0
+      if (!converged) {
+        // hook: every comp points at the other endpoint of its min edge.
+        // No join, no left-coalesce: minEdge's key set IS the active set
+        // (isolated comps have no cross edge and never hook again).
+        val hooked = minEdgeR
+          .select(col("c"), expr("if(m.a = c, m.b, m.a)").as("p"))
+        // break 2-cycles to the min endpoint, keep roots self-pointing
+        val pm = hooked.select(col("c").as("pc"), col("p").as("pp"))
+        var ptr = s.rebase(hooked.join(pm, col("p") === col("pc"))
+          .select(col("c"),
+            when(col("pp") === col("c"), least(col("c"), col("p")))
+              .otherwise(col("p")).as("p")))
+        for (_ <- 1 to 6) {
+          val m2 = ptr.select(col("c").as("pc"), col("p").as("pp"))
+          ptr = s.rebase(ptr.join(m2, col("p") === col("pc"))
+            .select(col("c"), col("pp").as("p")))
+        }
+        // contract: relabel surviving edges through the comp-sized
+        // pointer map (size-gated broadcast on nc, already in hand from
+        // the stats read) and collapse parallel (a,b) pairs to their min
+        // weight
+        def side(tag: String) =
+          gatedBroadcast(ptr.select(col("c").as(tag), col("p").as(s"p$tag")), nc)
+        edges = s.rebase(edges.join(side("a"), "a").join(side("b"), "b")
+          .filter(col("pa") =!= col("pb"))
+          .groupBy(least(col("pa"), col("pb")).as("na"),
+            greatest(col("pa"), col("pb")).as("nb"))
+          .agg(min(col("w")).as("w"))
+          .select(col("w"), col("na").as("a"), col("nb").as("b")))
+        activeBefore = ptr.select(col("p")).distinct().count()
       }
-      // hook: every comp points at the other endpoint of its min edge.
-      // No join, no left-coalesce: minEdge's key set IS the active set
-      // (isolated comps have no cross edge and never hook again).
-      val hooked = minEdgeR
-        .select(col("c"), expr("if(m.a = c, m.b, m.a)").as("p"))
-      // break 2-cycles to the min endpoint, keep roots self-pointing
-      val pm = hooked.select(col("c").as("pc"), col("p").as("pp"))
-      var ptr = hooked.join(pm, col("p") === col("pc"))
-        .select(col("c"),
-          when(col("pp") === col("c"), least(col("c"), col("p")))
-            .otherwise(col("p")).as("p"))
-      ptr = rebase(ptr)
-      for (_ <- 1 to 6) {
-        val m2 = ptr.select(col("c").as("pc"), col("p").as("pp"))
-        ptr = rebase(ptr.join(m2, col("p") === col("pc"))
-          .select(col("c"), col("pp").as("p")))
-      }
-      mark(s"r$r jumps")
-      // contract: relabel surviving edges through the comp-sized pointer
-      // map and collapse parallel (a,b) pairs to their min weight. The
-      // map is broadcast while it fits (≤10M comps ≈ 160 MB); beyond
-      // that the planner's shuffle join is the honest fallback — nc is
-      // already in hand from the stats read.
-      def side(tag: String) = {
-        val m = ptr.select(col("c").as(tag), col("p").as(s"p$tag"))
-        if (nc <= 10000000L) broadcast(m) else m
-      }
-      edges = rebase(edges.join(side("a"), "a").join(side("b"), "b")
-        .filter(col("pa") =!= col("pb"))
-        .groupBy(least(col("pa"), col("pb")).as("na"),
-          greatest(col("pa"), col("pb")).as("nb"))
-        .agg(min(col("w")).as("w"))
-        .select(col("w"), col("na").as("a"), col("nb").as("b")))
-      mark(s"r$r contract")
-      activeBefore = ptr.select(col("p")).distinct().count()
-      mark(s"r$r active")
     }
-    ckpts.foreach(_.unpersist())
-    und.unpersist()
+    while (stats.size < 4) stats += ((stats.last._1, 0L, 0L, cum))
     val sess = spark
     import sess.implicits._
     stats.toSeq.zipWithIndex
@@ -16899,25 +16858,9 @@ object Queries {
     * MIS, shipped as a column the oracle re-derives — 0 or the
     * operator is wrong.
     */
-  def misQ(spark: SparkSession, sfDir: String): DataFrame = {
-    // GRAFT_MIS_PROF=1 → per-stage wall marks on stderr (soak triage)
-    val profOn = sys.env.contains("GRAFT_MIS_PROF")
-    var tLast = System.nanoTime()
-    def mark(s: String): Unit = if (profOn) {
-      val now = System.nanoTime()
-      Console.err.println(f"[mis] $s%-16s ${(now - tLast) / 1e9}%7.2f s")
-      tLast = now
-    }
-    val ckpts = collection.mutable.ListBuffer.empty[DataFrame]
-    def rebase(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(true)
-      ckpts += c
-      df.sparkSession.createDataFrame(c.rdd, df.schema)
-    }
-    val ed = partAdjacencyEdges(spark, sfDir)
-      .select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
-      .localCheckpoint(true)
-    mark("edges ckpt")
+  def misQ(spark: SparkSession, sfDir: String): DataFrame = Checkpoints.scoped { s =>
+    val ed = s.checkpoint(partAdjacencyEdges(spark, sfDir)
+      .select(col("src"), col("dst")).filter(col("src") =!= col("dst")))
     // symmetrized view stays LAZY over the 45M-row directed checkpoint:
     // materializing the 90M-row distinct both-direction table is pure
     // memory cost — duplicates are harmless to every consumer here
@@ -16953,30 +16896,25 @@ object Queries {
     val misParts = collection.mutable.ListBuffer.empty[DataFrame]
     val stats = collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     for (r <- 1 to 3) {
-      val mn = rebase(e.groupBy(col("src"))
+      val mn = s.rebase(e.groupBy(col("src"))
         .agg(min(struct(pH(col("dst")).as("p"), col("dst").as("n"))).as("m")))
-      mark(s"r$r minNbr")
       if (r == 1) active = mn.select(col("src").as("node"))
       // active count from the round's own aggregates: |mn| in round 1,
       // the previous round's after-count later — no dedicated count job
       val before = if (r == 1) mn.count() else prevAfter
-      val misEdge = rebase(mn
+      val misEdge = s.rebase(mn
         .filter(struct(pH(col("src")).as("p"), col("src").as("n")) < col("m"))
         .select(col("src").as("node")))
-      mark(s"r$r misEdge")
       // actives with no surviving active neighbor are independent by
       // default and join unconditionally (mn's key set IS the set of
       // actives that still have one — the boruvka active-set argument);
       // round 1 has none, so its isolated anti join is skipped outright
       val mis =
         if (r == 1) misEdge
-        else rebase(misEdge.union(active.join(
+        else s.rebase(misEdge.union(active.join(
           mn.select(col("src").as("node")), Seq("node"), "left_anti")))
       misParts += mis
       val nMis = mis.count()
-      mark(s"r$r mis")
-      def gate(df: DataFrame): DataFrame =
-        if (nMis <= 10000000L) broadcast(df) else df
       // the neighbor expansion KEEPS its distinct — not for the anti
       // join's correctness (dup right-side keys are absorbed) but for
       // data motion: the aggregate dedups map-side BEFORE the shuffle,
@@ -16984,40 +16922,30 @@ object Queries {
       // r12 A/B without it regressed the x10 wall 24→31 s). Only the
       // second, outer distinct over mis ∪ nbrs is gone: both inputs
       // are already narrow and the anti join tolerates their overlap.
-      val nbrs = e.join(gate(misEdge.select(col("node").as("src"))), "src")
+      val nbrs = e.join(gatedBroadcast(misEdge.select(col("node").as("src")), nMis), "src")
         .select(col("dst").as("node")).distinct()
-      val a2 = rebase(active.join(mis.union(nbrs), Seq("node"), "left_anti"))
+      val a2 = s.rebase(active.join(mis.union(nbrs), Seq("node"), "left_anti"))
       val nAfter = a2.count()
-      mark(s"r$r shrink")
       stats += ((before, nMis, nAfter))
       active = a2
       prevAfter = nAfter
       if (r < 3) {
-        def g2(df: DataFrame): DataFrame =
-          if (nAfter <= 10000000L) broadcast(df) else df
-        e = rebase(e
-          .join(g2(a2.select(col("node").as("src"))), Seq("src"), "left_semi")
-          .join(g2(a2.select(col("node").as("dst"))), Seq("dst"), "left_semi")
+        e = s.rebase(e
+          .join(gatedBroadcast(a2.select(col("node").as("src")), nAfter), Seq("src"), "left_semi")
+          .join(gatedBroadcast(a2.select(col("node").as("dst")), nAfter), Seq("dst"), "left_semi")
           .select(col("src"), col("dst")))
-        mark(s"r$r restrict")
       }
     }
-    val misAll = misParts.reduce(_ union _).localCheckpoint(true)
-    mark("misAll ckpt")
+    val misAll = s.checkpoint(misParts.reduce(_ union _))
     // certificate join rides size-gated broadcasts of the MIS node set
     // (MIS ≤ V ≪ 2|E|): both membership probes stay map-side over the
     // lazy symmetrized union — no edge-table shuffle (was 5 s of the
     // x100 wall as two shuffle joins)
     val nMisAll = misAll.count()
-    def gAll(df: DataFrame): DataFrame =
-      if (nMisAll <= 10000000L) broadcast(df) else df
     val violations = und
-      .join(gAll(misAll.select(col("node").as("src"))), "src")
-      .join(gAll(misAll.select(col("node").as("dst"))), "dst")
+      .join(gatedBroadcast(misAll.select(col("node").as("src")), nMisAll), "src")
+      .join(gatedBroadcast(misAll.select(col("node").as("dst")), nMisAll), "dst")
       .count()
-    mark("certificate")
-    ckpts.foreach(_.unpersist())
-    ed.unpersist(); misAll.unpersist()
     val sess = spark
     import sess.implicits._
     var cum = 0L
@@ -17047,17 +16975,11 @@ object Queries {
     * covered twice — 0 or the operator is wrong) and the final
     * remaining active-edge count (maximality progress).
     */
-  def matchingQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val ckpts = collection.mutable.ListBuffer.empty[DataFrame]
-    def rebase(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(true)
-      ckpts += c
-      df.sparkSession.createDataFrame(c.rdd, df.schema)
-    }
+  def matchingQ(spark: SparkSession, sfDir: String): DataFrame = Checkpoints.scoped { s =>
     def pH(c: Column): Column =
       (c * lit(2654435761L)) % lit(2305843009213693951L)
     val ced = adjPairs(spark, sfDir)
-    var e = rebase(ced.select(col("a"), col("b"),
+    var e = s.rebase(ced.select(col("a"), col("b"),
       (pH(col("a")) + pH(col("b"))).as("p")))
     val parts = collection.mutable.ListBuffer.empty[DataFrame]
     val stats = collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
@@ -17067,27 +16989,27 @@ object Queries {
     var carried = -1L
     for (r <- 1 to 3) {
       val before = if (carried >= 0) carried else e.count()
-      val s = struct(col("p"), col("a"), col("b"))
+      val pab = struct(col("p"), col("a"), col("b"))
       // NOTE r14: an explode(array(struct,struct)) single-pass form of
       // this union measured 1.2 s faster at sf0.1 but 2.7× SLOWER at
       // the x10 soak (72 vs 26 s — per-row struct allocation in
       // Generate, the profTri HOF lesson) — reverted; the union's two
       // lazy-chain evaluations are cheap streaming maps at scale
-      val inc = e.select(col("a").as("v"), s.as("s"))
-        .union(e.select(col("b").as("v"), s.as("s")))
+      val inc = e.select(col("a").as("v"), pab.as("s"))
+        .union(e.select(col("b").as("v"), pab.as("s")))
       // an edge is min at BOTH endpoints ⟺ its struct appears TWICE
       // among the per-vertex minima (each edge is incident to exactly
       // two vertices) — one V-row aggregate instead of two |E|-row
       // local-minimality equi joins (the r12 first cut's 129 s x100
       // wall)
-      val matched = rebase(inc.groupBy(col("v")).agg(min(col("s")).as("m"))
+      val matched = s.rebase(inc.groupBy(col("v")).agg(min(col("s")).as("m"))
         .groupBy(col("m")).agg(count(lit(1)).as("c"))
         .filter(col("c") === 2)
         .select(col("m.a").as("a"), col("m.b").as("b"), col("m.p").as("p")))
       parts += matched
       val nm = matched.count()
-      def gate(df: DataFrame): DataFrame =
-        if (nm <= 5000000L) broadcast(df) else df
+      // each matched edge gives two endpoint rows
+      def gate(df: DataFrame): DataFrame = gatedBroadcast(df, 2 * nm)
       // the edge restriction stays LAZY over the single round-0
       // checkpoint: matching removes only 2·|M| vertices per round, so
       // the surviving edge list barely shrinks — re-materializing ~|E|
@@ -17103,14 +17025,13 @@ object Queries {
       carried = after
       e = e2
     }
-    val all = parts.reduce(_ union _).localCheckpoint(true)
+    val all = s.checkpoint(parts.reduce(_ union _))
     val violations = all.select(col("a").as("v"))
       .union(all.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("c"))
       .filter(col("c") > 1)
       .groupBy().agg(coalesce(sum(col("c") - 1), lit(0L)).as("x"))
       .first().getLong(0)
-    ckpts.foreach(_.unpersist()); all.unpersist()
     val remaining = stats.last._3
     val sess = spark
     import sess.implicits._

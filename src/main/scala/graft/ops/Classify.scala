@@ -256,22 +256,22 @@ object Classify {
       // The misclassified set feeds TWO readouts (the per-bucket
       // gradient join and the bias sum): one |mis|-row checkpoint keeps
       // the score pass (scan + model join + doc aggregate) to a single
-      // evaluation per training pass instead of two, released as soon
-      // as both gradients are on the driver.
-      val mis = counts.join(wDf, Seq("bucket"), "left")
-        .groupBy(col("doc_id"), col("y"))
-        .agg(sum(col("n") * coalesce(col("w"), lit(0L))).as("sw"))
-        .filter(col("y") * (col("sw") + lit(b)) <= 0)
-        .select(col("doc_id"), col("y"))
-        .localCheckpoint(true)
-      // one collect for both gradients: the bias rides the per-bucket
-      // table as a bucket = −1 row (buckets are non-negative)
-      val gs = counts.join(mis.select(col("doc_id")), Seq("doc_id"))
-        .groupBy(col("bucket")).agg(sum(col("y") * col("n")).as("g"))
-        .unionByName(mis.agg(coalesce(sum(col("y")), lit(0L)).as("g"))
-          .select(lit(-1L).as("bucket"), col("g")))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(mis)
+      // evaluation per training pass instead of two, scoped to the pass
+      // that collects both gradients.
+      val gs = Checkpoints.scoped { s =>
+        val mis = s.checkpoint(counts.join(wDf, Seq("bucket"), "left")
+          .groupBy(col("doc_id"), col("y"))
+          .agg(sum(col("n") * coalesce(col("w"), lit(0L))).as("sw"))
+          .filter(col("y") * (col("sw") + lit(b)) <= 0)
+          .select(col("doc_id"), col("y")))
+        // one collect for both gradients: the bias rides the per-bucket
+        // table as a bucket = −1 row (buckets are non-negative)
+        counts.join(mis.select(col("doc_id")), Seq("doc_id"))
+          .groupBy(col("bucket")).agg(sum(col("y") * col("n")).as("g"))
+          .unionByName(mis.agg(coalesce(sum(col("y")), lit(0L)).as("g"))
+            .select(lit(-1L).as("bucket"), col("g")))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       val grad = gs - (-1L)
       w = (w.keySet ++ grad.keySet).map(k =>
         k -> (w.getOrElse(k, 0L) + grad.getOrElse(k, 0L))).toMap

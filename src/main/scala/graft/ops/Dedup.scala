@@ -686,19 +686,18 @@ object Dedup {
   /** The distributed min-label-propagation loop — the ≥LocalCcMaxPairs
     * path, also directly testable against [[localCc]]'s output.
     */
-  def connectedComponentsDistributed(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
+  def connectedComponentsDistributed(pairs: DataFrame, maxIter: Int = 25): DataFrame =
+      Checkpoints.scoped { s =>
     // Hash-partition the edge table on the join side ONCE before caching:
     // the cached scan keeps that partitioning, so each round's edges⋈labels
     // join shuffles only the (node,lbl) table — the edge table (the big
     // side at 100 TB) never moves again.
-    val edges = pairs
+    val edges = s.persist(pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .repartition(col("src"))
-      .persist()
-    var checkpointed = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint(true)
+      .repartition(col("src")))
+    var checkpointed = s.checkpoint(edges.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")))
     var labels = checkpointed
     var converged = false
     var i = 0
@@ -725,27 +724,25 @@ object Dedup {
       // subtree twice per round. Invariant kept: a label is always the
       // id of a node in the same component, so min-reachable-label
       // semantics are unchanged.
-      val next = hop1.join(
+      val next = s.checkpoint(hop1.join(
           labels.select(col("node").as("lbl"), col("lbl").as("lbl2")), Seq("lbl"), "left")
         .select(col("node"),
           least(col("lbl"), coalesce(col("lbl2"), col("lbl"))).as("lbl"),
-          col("prev"))
-        .localCheckpoint(true)
+          col("prev")))
       converged = next.filter(col("lbl") =!= col("prev")).isEmpty
       // the old copy's last consumer was the join above — release its
       // RDD blocks now instead of waiting for the ContextCleaner
-      // (Dataset.unpersist cannot reach localCheckpoint storage)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(checkpointed)
+      s.release(checkpointed)
       checkpointed = next
       labels = next.select(col("node"), col("lbl"))
       i += 1
     }
-    // the final checkpoint backs the returned labels — leave it cached
-    edges.unpersist()
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter rounds " +
         "(component propagation distance exceeds maxIter) — raise maxIter; " +
         "returning partial labels would be silently wrong")
+    // the final checkpoint backs the returned labels
+    s.keep(checkpointed)
     labels.select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
   }
 

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Checkpoints.gatedBroadcast
+
 /** Distributed graph measures over edge tables.
   *
   * PageRank here is the fixed-iteration, declarative form: each power
@@ -37,9 +39,9 @@ object Graph {
     // checkpointed once (eager) instead of re-running the |E| union +
     // aggregate per round inside the lazy chain. The labels chain itself
     // is linear (each round references the previous exactly once), so it
-    // stays lazy — one job, no per-round barrier. The checkpoint stays
-    // reachable from the returned frame (the brandes delta-table
-    // convention: result-backing checkpoints are the caller's to drop).
+    // stays lazy — one job, no per-round barrier. The checkpoint backs
+    // the returned frame, so it is the one kind no scope may release
+    // (see [[Checkpoints]]): it lives until the ContextCleaner drops it.
     val und = edges.select(col("src"), col("dst"), col("w"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst"), col("w")))
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
@@ -74,52 +76,46 @@ object Graph {
     * connected-components cost profile. The edge table shrinks
     * monotonically; rounds needed in practice is small (degeneracy
     * peel depth, 3-6 on the test graphs). Per round the surviving edge
-    * table is localCheckpointed (superseded checkpoints released
-    * immediately) and the fixpoint probe is a cheap isEmpty on the
-    * sub-threshold degree rows — the same loop discipline as
-    * [[graft.ops.Dedup.connectedComponentsDistributed]]. Nothing is
-    * ever collected to the driver.
+    * table is a scoped checkpoint ([[Checkpoints]]; the superseded one
+    * is released at once) and the fixpoint probe is a cheap isEmpty on
+    * the sub-threshold degree rows. Nothing is ever collected to the
+    * driver.
     *
     * @param edges (src, dst) directed edge list; extra columns ignored.
     */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 30,
-      und0: Option[DataFrame] = None): DataFrame = {
+      und0: Option[DataFrame] = None): DataFrame = Checkpoints.scoped { s =>
     // und0: caller-owned round-0 symmetrized distinct table (the kTruss
-    // contract) — never released here; only loop-built checkpoints are.
+    // contract) — the scope does not track it, so it is never released
     var u = und0.getOrElse {
       val e = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
-      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .localCheckpoint(true)
+      s.checkpoint(e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct())
     }
-    var uOwned = und0.isEmpty
     var converged = false
     var i = 0
     while (!converged && i < maxRounds) {
       // ONE O(|E|) degree pass per round: both the fixpoint probe and
       // the keep set read the checkpointed O(|V|) degree table instead
       // of re-aggregating the edge table
-      val deg = u.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
+      val deg = s.checkpoint(u.groupBy(col("src")).agg(count(lit(1)).as("deg")))
       // fixpoint probe: no vertex below threshold → current u IS the core
       if (deg.filter(col("deg") < k).isEmpty) converged = true
       else {
         val keep = deg.filter(col("deg") >= k).select(col("src").as("node"))
-        val next = u
+        val next = s.checkpoint(u
           .join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
           .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))
-          .localCheckpoint(true)
-        if (uOwned) org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(u)
+          .select(col("src"), col("dst")))
+        s.release(u)
         u = next
-        uOwned = true
       }
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(deg)
+      s.release(deg)
       i += 1
     }
     if (!converged) throw new IllegalStateException(
       s"kCore: no fixpoint after $maxRounds rounds (k=$k)")
-    u.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    s.keep(u).groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
   }
 
   /** Simple-graph symmetrization WITHOUT an |E|-keyed aggregate:
@@ -157,8 +153,7 @@ object Graph {
     * @param edges UNIQUE directed pairs (the co-occurrence contract).
     */
   def coreness(edges: DataFrame, iters: Int,
-      und0: Option[DataFrame] = None,
-      broadcastMaxRows: Long = 4000000L): DataFrame = {
+      und0: Option[DataFrame] = None): DataFrame = Checkpoints.scoped { s =>
     import org.apache.spark.sql.expressions.Window
     // und0: caller-owned symmetrized distinct self-loop-free edge table,
     // pre-partitioned on src (the bfsDistances und0 contract) — never
@@ -167,31 +162,25 @@ object Graph {
     // round body — dst join, per-(node, value) count, cumulative window,
     // h-index max — then reuses hashpartitioning(src), so a round runs
     // with ZERO shuffle exchanges (two per round before).
-    val undOwned = und0.isEmpty
     val und = und0.getOrElse(
-      symmetrizeUnique(edges).repartition(col("src")).localCheckpoint(true))
-    var v = und.groupBy(col("src").as("node")).agg(count(lit(1)).as("v"))
-      .localCheckpoint(true)
+      s.checkpoint(symmetrizeUnique(edges).repartition(col("src"))))
+    var v = s.checkpoint(und.groupBy(col("src").as("node")).agg(count(lit(1)).as("v")))
     // |V| is round-invariant (every node keeps a value each round), so
-    // one count gates all per-round broadcasts; past the gate the plain
-    // join is the honest fallback (the brandes broadcastMaxRows rule).
+    // one count gates all per-round broadcasts
     val nV = v.count()
-    def bcV(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df
     (1 to iters).foreach { _ =>
       val w = Window.partitionBy(col("src")).orderBy(col("nv").desc)
-      val next = und
-        .join(bcV(v.select(col("node").as("dst"), col("v").as("nv"))), Seq("dst"))
+      val next = s.checkpoint(und
+        .join(gatedBroadcast(v.select(col("node").as("dst"), col("v").as("nv")), nV),
+          Seq("dst"))
         .groupBy(col("src"), col("nv")).agg(count(lit(1)).as("c"))
         .withColumn("cum", sum(col("c")).over(w))
         .groupBy(col("src").as("node"))
-        .agg(max(least(col("cum"), col("nv"))).as("v"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(v)
+        .agg(max(least(col("cum"), col("nv"))).as("v")))
+      s.release(v)
       v = next
     }
-    if (undOwned) org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(und)
-    v
+    s.keep(v)
   }
 
   /** Deterministic Linear Threshold cascade (Kempe, Kleinberg &
@@ -206,46 +195,39 @@ object Graph {
     * ([[symmetrizeUnique]] adjacency, in = symmetrized neighbors).
     */
   def ltmCascade(edges: DataFrame, seeds: DataFrame, rounds: Int,
-      thetaSalt: String, broadcastMaxRows: Long = 4000000L): Seq[(Long, Long, Long)] = {
+      thetaSalt: String): Seq[(Long, Long, Long)] = Checkpoints.scoped { s =>
     // The edge table is partitioned on dst — the key of every round's
     // active-in-neighbor aggregate — and the O(active) set rides
     // size-gated broadcasts into the semi/anti joins, so a round's
     // aggregate reuses hashpartitioning(dst) with ZERO shuffle exchanges
     // (guide §2.3/2.4; the coreness/und_src layout applied here). The
     // threshold table inherits the same node partitioning for free.
-    val und = symmetrizeUnique(edges).repartition(col("dst"))
-      .localCheckpoint(true)
-    def bc(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastMaxRows) broadcast(df) else df
-    val thr = und.groupBy(col("dst").as("node"))
+    val und = s.checkpoint(symmetrizeUnique(edges).repartition(col("dst")))
+    val thr = s.checkpoint(und.groupBy(col("dst").as("node"))
       .agg(count(lit(1)).as("indeg"))
       .withColumn("theta_ppm",
-        TextOps.portableHash64(concat(lit(thetaSalt), col("node"))) % 1000000)
-      .localCheckpoint(true)
-    var active = seeds.select(col("node")).localCheckpoint(true)
+        TextOps.portableHash64(concat(lit(thetaSalt), col("node"))) % 1000000))
+    var active = s.checkpoint(seeds.select(col("node")))
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     var nActive = active.count()
     out += ((0L, nActive, nActive))
     (1 to rounds).foreach { r =>
       val activeIn = und
-        .join(bc(active.withColumnRenamed("node", "src"), nActive),
+        .join(gatedBroadcast(active.withColumnRenamed("node", "src"), nActive),
           Seq("src"), "left_semi")
         .groupBy(col("dst").as("node")).agg(count(lit(1)).as("n_in"))
       val newly = activeIn
         .join(thr, "node")
-        .join(bc(active, nActive), Seq("node"), "left_anti")
+        .join(gatedBroadcast(active, nActive), Seq("node"), "left_anti")
         .filter(col("n_in") * 1000000L >= col("theta_ppm") * col("indeg"))
         .select(col("node"))
-      val nextActive = active.union(newly).localCheckpoint(true)
+      val nextActive = s.checkpoint(active.union(newly))
       val n = nextActive.count()
       out += ((r.toLong, n - nActive, n))
       nActive = n
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(active)
+      s.release(active)
       active = nextActive
     }
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(active)
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(und)
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(thr)
     out.toSeq
   }
 
@@ -270,34 +252,31 @@ object Graph {
     * on a constrained heap. One degree pass + two semi-joins per
     * round; only scalar stat triples reach the driver.
     */
-  def densestPeel(edges: DataFrame, rounds: Int): Seq[(Long, Long, Long, Long)] = {
-    var u = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .localCheckpoint(true)
+  def densestPeel(edges: DataFrame, rounds: Int): Seq[(Long, Long, Long, Long)] =
+      Checkpoints.scoped { s =>
+    var u = s.checkpoint(edges.select(col("src"), col("dst"))
+      .filter(col("src") =!= col("dst")))
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     (1 to rounds).foreach { r =>
-      val deg = u.select(col("src").as("node"))
+      val deg = s.checkpoint(u.select(col("src").as("node"))
         .union(u.select(col("dst").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
+        .groupBy(col("node")).agg(count(lit(1)).as("deg")))
       val st = deg.agg(coalesce(sum(col("deg")), lit(0L)).as("rows"),
         count(lit(1)).as("nv")).collect()(0)
       val (rows, nv) = (st.getLong(0), st.getLong(1))
       val kept = deg.filter(col("deg") * nv > lit(2L) * rows)
         .select(col("node"))
-      val next = u
+      val next = s.checkpoint(u
         .join(kept.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(kept.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true)
+        .select(col("src"), col("dst")))
       // removed-by-rule count (a kept vertex can still vanish when all
       // its neighbors are removed — that is NOT counted here)
       stats += ((r.toLong, nv, rows, nv - kept.count()))
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(u)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(deg)
+      s.release(u)
+      s.release(deg)
       u = next
     }
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(u)
     stats.toSeq
   }
 
@@ -313,24 +292,22 @@ object Graph {
     * shape, never an all-pairs), the peel is a symmetrized left-semi
     * on the keep set, and the fixpoint probe compares two counts.
     * Round count is data-bounded (support only shrinks); each round's
-    * edge set is localCheckpointed and the predecessor released, so
+    * edge set is a scoped checkpoint and the predecessor released, so
     * lineage stays flat on deep peels.
     */
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 30,
       und0: Option[DataFrame] = None,
-      support0: Option[DataFrame] = None): DataFrame = {
+      support0: Option[DataFrame] = None): DataFrame = Checkpoints.scoped { s =>
     require(k >= 3, s"kTruss needs k >= 3, got $k")
     // und0/support0: caller-owned precomputed round-0 tables (e.g. a
-    // session-memoized shared wedge pass). They are NEVER released
-    // here — only loop-built checkpoints are; correctness is identical
+    // session-memoized shared wedge pass). The scope does not track
+    // them, so they are never released here; correctness is identical
     // because round 0 would compute exactly these tables.
     var und = und0.getOrElse {
       val e = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
-      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .localCheckpoint(true)
+      s.checkpoint(e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct())
     }
-    var undOwned = und0.isEmpty
     def support(u: DataFrame): DataFrame = {
       val o = u.filter(col("src") < col("dst"))
         .select(col("src").as("a"), col("dst").as("b"))
@@ -342,35 +319,28 @@ object Graph {
     var converged = false
     var i = 0
     var sup: DataFrame = null
-    var supOwned = false
     while (!converged && i < maxRounds) {
-      if (i == 0 && support0.isDefined) { sup = support0.get; supOwned = false }
-      else { sup = support(und).localCheckpoint(true); supOwned = true }
+      sup = if (i == 0 && support0.isDefined) support0.get else s.checkpoint(support(und))
       val oriented = und.filter(col("src") < col("dst")).count()
       val kept = sup.filter(col("s") >= k - 2)
       if (kept.count() == oriented) converged = true
       else {
         val keepSym = kept.select(col("a"), col("b"))
           .union(kept.select(col("b").as("a"), col("a").as("b")))
-        val next = und
+        val next = s.checkpoint(und
           .join(keepSym.select(col("a").as("src"), col("b").as("dst")),
-            Seq("src", "dst"), "left_semi")
-          .localCheckpoint(true)
-        if (undOwned) org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(und)
-        if (supOwned) org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(sup)
+            Seq("src", "dst"), "left_semi"))
+        s.release(und)
+        s.release(sup)
         und = next
-        undOwned = true
       }
       i += 1
     }
-    // Only the returned `sup` checkpoint is needed past this point:
-    // release the final edge-set checkpoint (when loop-built) on both
-    // the convergence and the no-fixpoint exit, else its cached blocks
-    // outlive the call for the whole session.
-    if (undOwned) org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(und)
     if (!converged) throw new IllegalStateException(
       s"kTruss: no fixpoint after $maxRounds rounds (k=$k)")
-    sup.select(col("a").as("src"), col("b").as("dst"), col("s").as("support"))
+    // only the final support table backs the result; the scope releases
+    // the final edge set
+    s.keep(sup).select(col("a").as("src"), col("b").as("dst"), col("s").as("support"))
   }
 
   /** Multi-source BFS hop distances: every node reachable from the
@@ -384,51 +354,52 @@ object Graph {
     * change-detection join.
     *
     * Scale shape: one O(|E|) equi-join + one O(reached) aggregate per
-    * round, rounds = source-set eccentricity; the distance table is
-    * localCheckpointed per round with immediate release of the
-    * superseded checkpoint (the [[kCore]] loop discipline). Nothing is
-    * collected.
+    * round, rounds = source-set eccentricity; the distance table is a
+    * scoped checkpoint per round ([[Checkpoints]]) with immediate
+    * release of the superseded one. Nothing is collected.
     *
     * @param edges   (src, dst) directed; symmetrized + self-loop-
     *                stripped internally.
     * @param sources one column `node` — the seed set.
     */
   def bfsDistances(edges: DataFrame, sources: DataFrame,
-      maxRounds: Int = 20, und0: Option[DataFrame] = None): DataFrame = {
+      maxRounds: Int = 20, und0: Option[DataFrame] = None): DataFrame =
+      Checkpoints.scoped { s =>
     // und0: caller-owned symmetrized distinct self-loop-free edge table
     // (e.g. a session memo shared across the BFS-family queries) —
     // never persisted or released here; identical semantics because the
     // local build would compute exactly this table.
-    val undOwned = und0.isEmpty
-    val und = und0.getOrElse {
-      val e = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
-      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .repartition(col("src"))
-        .persist()
-    }
-    var dist = sources.select(col("node")).distinct()
-      .withColumn("d", lit(0L)).localCheckpoint(true)
+    val und = und0.getOrElse(s.persist(symmetrizedBySrc(edges)))
+    var dist = s.checkpoint(sources.select(col("node")).distinct()
+      .withColumn("d", lit(0L)))
     var reached = dist.count()
     var converged = false
     var i = 0
     while (!converged && i < maxRounds) {
-      val next = dist
+      val next = s.checkpoint(dist
         .union(und.join(dist.withColumnRenamed("node", "src"), "src")
           .select(col("dst").as("node"), (col("d") + 1L).as("d")))
-        .groupBy(col("node")).agg(min(col("d")).as("d"))
-        .localCheckpoint(true)
+        .groupBy(col("node")).agg(min(col("d")).as("d")))
       val n = next.count()
       converged = n == reached
       reached = n
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(dist)
+      s.release(dist)
       dist = next
       i += 1
     }
-    if (undOwned) und.unpersist()
     if (!converged) throw new IllegalStateException(
       s"bfsDistances: frontier still growing after $maxRounds rounds")
-    dist
+    s.keep(dist)
+  }
+
+  /** Symmetrized distinct self-loop-free edges, partitioned on src: the
+    * shape of the caller-owned `und0` tables.
+    */
+  private def symmetrizedBySrc(edges: DataFrame): DataFrame = {
+    val e = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
+    e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+      .repartition(col("src"))
   }
 
   /** Per-source BFS distances `(root, node, d)` for a bounded seed set
@@ -437,46 +408,37 @@ object Graph {
     * callers bound the seed set (the centrality queries probe ~10
     * roots); at 100 TB this is the standard sampled-centrality shape —
     * exact per-root distances, root count chosen by budget. Same loop
-    * discipline as [[bfsDistances]]: min-aggregate per round over the
-    * symmetrized edges, localCheckpoint each round with release of the
+    * as [[bfsDistances]]: min-aggregate per round over the symmetrized
+    * edges, a scoped checkpoint each round with release of the
     * superseded one, count-converged (a node's first reach is at its
     * true hop distance, so a stable (root, node) count means every d
     * is final), error on non-convergence.
     */
   def bfsDistancesPerSource(edges: DataFrame, sources: DataFrame,
-      maxRounds: Int = 20, und0: Option[DataFrame] = None): DataFrame = {
+      maxRounds: Int = 20, und0: Option[DataFrame] = None): DataFrame =
+      Checkpoints.scoped { s =>
     // und0: caller-owned shared edge table — see [[bfsDistances]]
-    val undOwned = und0.isEmpty
-    val und = und0.getOrElse {
-      val e = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
-      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .repartition(col("src"))
-        .persist()
-    }
-    var dist = sources.select(col("node")).distinct()
-      .select(col("node").as("root"), col("node"), lit(0L).as("d"))
-      .localCheckpoint(true)
+    val und = und0.getOrElse(s.persist(symmetrizedBySrc(edges)))
+    var dist = s.checkpoint(sources.select(col("node")).distinct()
+      .select(col("node").as("root"), col("node"), lit(0L).as("d")))
     var reached = dist.count()
     var converged = false
     var i = 0
     while (!converged && i < maxRounds) {
-      val next = dist
+      val next = s.checkpoint(dist
         .union(und.join(dist.withColumnRenamed("node", "src"), "src")
           .select(col("root"), col("dst").as("node"), (col("d") + 1L).as("d")))
-        .groupBy(col("root"), col("node")).agg(min(col("d")).as("d"))
-        .localCheckpoint(true)
+        .groupBy(col("root"), col("node")).agg(min(col("d")).as("d")))
       val n = next.count()
       converged = n == reached
       reached = n
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(dist)
+      s.release(dist)
       dist = next
       i += 1
     }
-    if (undOwned) und.unpersist()
     if (!converged) throw new IllegalStateException(
       s"bfsDistancesPerSource: frontier still growing after $maxRounds rounds")
-    dist
+    s.keep(dist)
   }
 
   /** Common-neighbor link features per edge: for every undirected edge
@@ -597,24 +559,23 @@ object Graph {
     * aggregate; distances are exact BIGINTs, monotonically
     * non-increasing, so the (count, sum) fixpoint probe terminates in
     * at most |V| rounds and in practice in the weighted diameter.
-    * Same loop discipline as bfsDistances: per-round localCheckpoint,
-    * superseded checkpoints released immediately, nothing collected
-    * but the two-scalar fixpoint probe.
+    * Same loop as bfsDistances: a scoped checkpoint per round, the
+    * superseded one released immediately, nothing collected but the
+    * two-scalar fixpoint probe.
     *
     * @param edges   (src, dst, w: long ≥ 0) directed; symmetrized and
     *                parallel-min-reduced internally.
     * @param sources (node) seed set, distance 0.
     */
-  def sssp(edges: DataFrame, sources: DataFrame, maxRounds: Int = 30,
-      broadcastMaxRows: Long = 4000000L): DataFrame = {
+  def sssp(edges: DataFrame, sources: DataFrame, maxRounds: Int = 30): DataFrame =
+      Checkpoints.scoped { s =>
     val e = edges.select(col("src"), col("dst"), col("w"))
       .filter(col("src") =!= col("dst"))
-    val und = e.union(e.select(col("dst").as("src"), col("src").as("dst"), col("w")))
+    val und = s.persist(e.union(e.select(col("dst").as("src"), col("src").as("dst"), col("w")))
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-      .repartition(col("src"))
-      .persist()
-    var dist = sources.select(col("node")).distinct()
-      .withColumn("d", lit(0L)).localCheckpoint(true)
+      .repartition(col("src")))
+    var dist = s.checkpoint(sources.select(col("node")).distinct()
+      .withColumn("d", lit(0L)))
     def probe(d: DataFrame): (Long, Long) = {
       val r = d.agg(count(lit(1)), sum(col("d"))).head()
       (r.getLong(0), r.getLong(1))
@@ -624,27 +585,23 @@ object Graph {
     // the relax join (reached is already in hand from the probe), so
     // the join streams the src-partitioned edge cache with no exchange;
     // past the gate the planner's shuffle join is the honest fallback
-    def bcD(df: DataFrame): DataFrame =
-      if (state._1 <= broadcastMaxRows) broadcast(df) else df
     var converged = false
     var i = 0
     while (!converged && i < maxRounds) {
-      val next = dist
-        .union(und.join(bcD(dist.withColumnRenamed("node", "src")), "src")
+      val next = s.checkpoint(dist
+        .union(und.join(gatedBroadcast(dist.withColumnRenamed("node", "src"), state._1), "src")
           .select(col("dst").as("node"), (col("d") + col("w")).as("d")))
-        .groupBy(col("node")).agg(min(col("d")).as("d"))
-        .localCheckpoint(true)
-      val s = probe(next)
-      converged = s == state
-      state = s
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(dist)
+        .groupBy(col("node")).agg(min(col("d")).as("d")))
+      val st = probe(next)
+      converged = st == state
+      state = st
+      s.release(dist)
       dist = next
       i += 1
     }
-    und.unpersist()
     if (!converged) throw new IllegalStateException(
       s"sssp: distances still improving after $maxRounds rounds")
-    dist
+    s.keep(dist)
   }
 
   /** HITS (Kleinberg hubs & authorities) with fully INTEGER arithmetic:
@@ -665,51 +622,53 @@ object Graph {
     * @param edges (src, dst, w: long) directed edge list, parallel
     *              edges pre-aggregated.
     */
-  def hits(edges: DataFrame, iters: Int, scale: Long = 1000000L,
-      broadcastMaxRows: Long = 4000000L): DataFrame = {
-    // Every half-round's score table is an eagerly-released
-    // localCheckpoint: `rescale` references its input TWICE (the round
-    // max + the join), so a lazy chain re-evaluates the previous table
-    // 2× per half-round — 2^(2·iters) recomputations of the deepest
-    // subtree (measured 8.7 s for iters = 2 at sf0.1; ~2.5 s
-    // checkpointed). The kCore loop discipline: superseded checkpoints
-    // released as soon as their successor materializes; the two final
-    // tables back the returned join.
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(true)
+  def hits(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame =
+      Checkpoints.scoped { s =>
+    // Every half-round's score table is a scoped checkpoint: `rescale`
+    // references its input TWICE (the round max + the join), so a lazy
+    // chain re-evaluates the previous table 2× per half-round —
+    // 2^(2·iters) recomputations of the deepest subtree (measured 8.7 s
+    // for iters = 2 at sf0.1; ~2.5 s checkpointed). A superseded table
+    // is released as soon as its successor materializes; the two final
+    // tables back the returned join. With no round to run, nothing is
+    // materialized at all.
+    val nodes = {
+      val n = edges.select(col("src").as("node"))
+        .union(edges.select(col("dst").as("node")))
+        .distinct()
+      if (iters >= 1) s.checkpoint(n) else n
+    }
     // |V| is fixed across rounds: one count gates every score-table
-    // broadcast (honest shuffle fallback past it). With the score side
-    // broadcast, each push join streams an edge copy PRE-PARTITIONED on
-    // its aggregate key (dst for the auth push, src for the hub push),
-    // so the half-round's |E| aggregate reuses the partitioning with no
-    // exchange (guide §2.3/2.4 — the coreness layout; two cached edge
-    // copies is the standard co-partitioning trade, released below).
-    val nV = nodes.count()
-    def bcV(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df
-    val eDst = edges.repartition(col("dst")).localCheckpoint(true)
-    val eSrc = edges.repartition(col("src")).localCheckpoint(true)
+    // broadcast. With the score side broadcast, each push join streams
+    // an edge copy PRE-PARTITIONED on its aggregate key (dst for the
+    // auth push, src for the hub push), so the half-round's |E|
+    // aggregate reuses the partitioning with no exchange (guide
+    // §2.3/2.4 — the coreness layout; two cached edge copies is the
+    // standard co-partitioning trade). Past the gate the score joins
+    // shuffle anyway, so the copies would buy nothing: plain `edges`.
+    lazy val nV = nodes.count()
+    val prePartition = iters >= 1 && nV <= Checkpoints.BroadcastMaxRows
+    def edgesBy(key: String): DataFrame =
+      if (prePartition) s.checkpoint(edges.repartition(col(key))) else edges
+    val eDst = edgesBy("dst")
+    val eSrc = edgesBy("src")
     def rescale(raw0: DataFrame, key: String, out: String): DataFrame = {
       // raw is referenced twice (round max + the rescale join): one
       // |V|-sized checkpoint keeps the |E|-join push aggregate behind it
       // to a single evaluation, released as soon as the result exists
-      val raw = raw0.localCheckpoint(true)
+      val raw = s.checkpoint(raw0)
       val mx = raw.agg(max(col("r")).as("mx"))
-      val res = nodes.join(bcV(raw.withColumnRenamed(key, "node")), Seq("node"), "left")
-        .crossJoin(broadcast(mx))
-        .select(col("node"),
-          expr(s"(cast(coalesce(r, 0) as decimal(38,0)) * $scale) div mx")
-            .as(out))
-        .localCheckpoint(true)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(raw)
+      val res = s.checkpoint(
+        nodes.join(gatedBroadcast(raw.withColumnRenamed(key, "node"), nV), Seq("node"), "left")
+          .crossJoin(broadcast(mx))
+          .select(col("node"),
+            expr(s"(cast(coalesce(r, 0) as decimal(38,0)) * $scale) div mx")
+              .as(out)))
+      s.release(raw)
       res
     }
     var hub = nodes.withColumn("hub", lit(scale))
     var auth = nodes.withColumn("auth", lit(0L))
-    var hubOwned = false
-    var authOwned = false
     for (_ <- 1 to iters) {
       // The push sum stays in LONG: scores are ≤ 10⁶ by construction,
       // so it overflows only past a 9·10¹² weighted in-degree — and
@@ -718,31 +677,21 @@ object Graph {
       // whole operator (x100 soak); only the |V|-sized rescale
       // multiply widens to decimal.
       val a2 = rescale(
-        eDst.join(bcV(hub), eDst("src") === hub("node"))
+        eDst.join(gatedBroadcast(hub, nV), eDst("src") === hub("node"))
           .groupBy(col("dst"))
           .agg(sum(col("hub") * col("w")).as("r")),
         "dst", "auth")
-      if (authOwned) org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(auth)
+      s.release(auth)
       auth = a2
-      authOwned = true
       val h2 = rescale(
-        eSrc.join(bcV(auth), eSrc("dst") === auth("node"))
+        eSrc.join(gatedBroadcast(auth, nV), eSrc("dst") === auth("node"))
           .groupBy(col("src"))
           .agg(sum(col("auth") * col("w")).as("r")),
         "src", "hub")
-      if (hubOwned) org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(hub)
+      s.release(hub)
       hub = h2
-      hubOwned = true
     }
-    // the edge copies back nothing in the returned plan — release them
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(eDst)
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(eSrc)
-    // after the last half-round the node spine is no longer reachable
-    // from the (checkpointed) hub/auth tables — release it, unless no
-    // round ran and the lazy initial tables still read it
-    if (iters >= 1)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(nodes)
-    hub.join(auth, "node")
+    s.keep(hub).join(s.keep(auth), "node")
   }
 
   def pagerank(edges: DataFrame, iters: Int, damping: Double = 0.85,
@@ -777,7 +726,7 @@ object Graph {
     * rational kept as a per-edge truncating e6 integral division so
     * every engine reproduces it bit-for-bit. Per root the work is one
     * frontier join per level (≤ maxDepth), every frontier/level table
-    * is an eagerly-released localCheckpoint, and the backward sweep
+    * is a scoped checkpoint ([[Checkpoints]]), and the backward sweep
     * joins only adjacent levels — nothing materializes beyond
     * (levels × frontier) rows. Errors if any root's BFS is still
     * growing at maxDepth (the oracle unrolls exactly that many rounds —
@@ -799,37 +748,18 @@ object Graph {
     * against the d = k slice keeps exactly the rows the anti join kept.
     */
   def brandesBetweenness(edges: DataFrame, sources: DataFrame,
-      maxDepth: Int = 8, broadcastMaxRows: Long = 4000000L,
+      maxDepth: Int = 8,
       und0: Option[DataFrame] = None,
-      dist0: Option[DataFrame] = None): DataFrame = {
-    // GRAFT_BRANDES_PROF=1 → per-stage wall marks on stderr (soak triage)
-    val profOn = sys.env.contains("GRAFT_BRANDES_PROF")
-    var tLast = System.nanoTime()
-    def mark(s: String): Unit = if (profOn) {
-      val now = System.nanoTime()
-      Console.err.println(f"[brandes] $s%-16s ${(now - tLast) / 1e9}%7.2f s")
-      tLast = now
-    }
+      dist0: Option[DataFrame] = None): DataFrame = Checkpoints.scoped { s =>
     val d38 = "decimal(38,0)"
     // Frontier/level/seen tables are (roots × reached-nodes)-sized —
     // broadcast them (size-gated, the triangle-probe discipline) so
     // each round's only exchange is the expansion's partial-aggregated
     // groupBy; past the gate every join falls back to shuffles.
-    def bc(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastMaxRows) broadcast(df) else df
     // und0: caller-owned shared edge table — see [[bfsDistances]]
-    val undOwned = und0.isEmpty
-    val und = und0.getOrElse {
-      val e = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
-      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .repartition(col("src"))
-        .persist()
-    }
-    var frontier = sources.select(col("node")).distinct()
-      .select(col("node").as("root"), col("node"), expr(s"cast(1 as $d38)").as("sigma"))
-      .localCheckpoint(true)
-    mark("frontier0")
+    val und = und0.getOrElse(s.persist(symmetrizedBySrc(edges)))
+    var frontier = s.checkpoint(sources.select(col("node")).distinct()
+      .select(col("node").as("root"), col("node"), expr(s"cast(1 as $d38)").as("sigma")))
     var frontierRows = frontier.count()
     val levels = scala.collection.mutable.ArrayBuffer(frontier)
     val levelRows = scala.collection.mutable.ArrayBuffer(frontierRows)
@@ -840,32 +770,33 @@ object Graph {
         val sizes = dist.groupBy(col("d")).agg(count(lit(1)).as("n"))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         val deepest = sizes.keys.max.toInt
-        if (deepest > maxDepth) {
-          org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(frontier)
-          if (undOwned) und.unpersist()
-          throw new IllegalStateException(
-            s"brandesBetweenness: dist0 reaches depth $deepest > maxDepth $maxDepth")
-        }
+        if (deepest > maxDepth) throw new IllegalStateException(
+          s"brandesBetweenness: dist0 reaches depth $deepest > maxDepth $maxDepth")
+        // a BFS distance table has rows at every depth up to its deepest
+        val missing = (1 until deepest).filterNot(k => sizes.contains(k.toLong))
+        if (missing.nonEmpty) throw new IllegalStateException(
+          s"brandesBetweenness: dist0 has no rows at depth ${missing.mkString(", ")} " +
+            s"below its deepest level $deepest — not the BFS distances of these sources")
         (1 to deepest).foreach { k =>
           val nxtSet = dist.filter(col("d") === k).select(col("root"), col("node"))
           // expand und through the SMALLER side: out-edges of the
           // previous level vs in-edges of this level (sizes in hand)
-          val nxt = (
+          val nxt = s.checkpoint((
             if (levelRows(k - 1) <= sizes(k.toLong))
               und
-                .join(bc(frontier.withColumnRenamed("node", "src"), frontierRows), Seq("src"))
+                .join(gatedBroadcast(frontier.withColumnRenamed("node", "src"), frontierRows),
+                  Seq("src"))
                 .select(col("root"), col("dst").as("node"), col("sigma"))
-                .join(bc(nxtSet, sizes(k.toLong)), Seq("root", "node"))
+                .join(gatedBroadcast(nxtSet, sizes(k.toLong)), Seq("root", "node"))
             else
               und
-                .join(bc(nxtSet.withColumnRenamed("node", "dst"), sizes(k.toLong)), Seq("dst"))
+                .join(gatedBroadcast(nxtSet.withColumnRenamed("node", "dst"), sizes(k.toLong)),
+                  Seq("dst"))
                 .select(col("root"), col("src").as("node"), col("dst"))
-                .join(bc(frontier, frontierRows), Seq("root", "node"))
+                .join(gatedBroadcast(frontier, frontierRows), Seq("root", "node"))
                 .select(col("root"), col("dst").as("node"), col("sigma")))
             .groupBy(col("root"), col("node"))
-            .agg(sum(col("sigma")).as("sigma"))
-            .localCheckpoint(true)
-          mark(s"fwd level $k (${sizes(k.toLong)} rows)")
+            .agg(sum(col("sigma")).as("sigma")))
           levels += nxt
           levelRows += sizes(k.toLong)
           frontier = nxt
@@ -883,17 +814,16 @@ object Graph {
           // update per row — dropped rows are whole (root, node) keys,
           // so surviving σ sums are identical.
           val seen = levels.map(_.select(col("root"), col("node"))).reduce(_ union _)
-          val nxt = und
-            .join(bc(frontier.withColumnRenamed("node", "src"), frontierRows), Seq("src"))
+          val nxt = s.checkpoint(und
+            .join(gatedBroadcast(frontier.withColumnRenamed("node", "src"), frontierRows),
+              Seq("src"))
             .select(col("root"), col("dst").as("node"), col("sigma"))
-            .join(bc(seen, seenRows), Seq("root", "node"), "left_anti")
+            .join(gatedBroadcast(seen, seenRows), Seq("root", "node"), "left_anti")
             .groupBy(col("root"), col("node"))
-            .agg(sum(col("sigma")).as("sigma"))
-            .localCheckpoint(true)
+            .agg(sum(col("sigma")).as("sigma")))
           val n = nxt.count()
-          mark(s"fwd level ${levels.size} ($n rows)")
           if (n == 0) {
-            org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(nxt)
+            s.release(nxt)
             done = true
           } else {
             levels += nxt
@@ -903,73 +833,57 @@ object Graph {
             frontierRows = n
           }
         }
-        if (!done) {
-          levels.foreach(org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint)
-          if (undOwned) und.unpersist()
-          throw new IllegalStateException(
-            s"brandesBetweenness: frontier still growing after $maxDepth rounds")
-        }
+        if (!done) throw new IllegalStateException(
+          s"brandesBetweenness: frontier still growing after $maxDepth rounds")
     }
     // Backward sweep: deepest level seeds delta = 0; each level's delta
     // aggregates the truncating per-edge term over its successor level.
+    // Every delta table is its own checkpoint, kept past the scope; the
+    // level tables and und are released with it.
     val maxLevel = levels.size - 1
     if (maxLevel == 0) {
-      // Degenerate: no root reaches any neighbor. Capture the result
-      // schema lazily (no job runs), release EVERY checkpoint before
-      // returning — the general path below would otherwise leak both
-      // levels(0) and a never-consumed dAbove checkpoint for the whole
-      // session (LEAKCHECK) — and hand back a lineage-free empty frame.
+      // Degenerate: no root reaches any neighbor — a lineage-free empty
+      // frame with the result schema (capturing it runs no job)
       val outSchema = levels(0)
         .select(col("root"), col("node"), lit(0L).as("delta")).schema
-      levels.foreach(org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint)
-      if (undOwned) und.unpersist()
       val ss = edges.sparkSession
-      return ss.createDataFrame(
-        ss.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
+      ss.createDataFrame(ss.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
+    } else {
+      var dAbove = s.checkpoint(levels(maxLevel)
+        .select(col("root"), col("node"), lit(0L).as("delta")))
+      val deltaTabs = scala.collection.mutable.ArrayBuffer[DataFrame](dAbove)
+      var lev = maxLevel - 1
+      while (lev >= 1) {
+        val wTab = levels(lev + 1)
+          .join(gatedBroadcast(dAbove, levelRows(lev + 1)), Seq("root", "node"))
+          .select(col("root"), col("node").as("dst"),
+            col("sigma").as("wsigma"), col("delta").as("wdelta"))
+        // nodes without successors contribute zero rows via the union, so
+        // one aggregate replaces the left-join-with-zeros shape. The two
+        // inner joins commute — expand und through the SMALLER level side
+        // first (level sizes are already in hand), so the intermediate is
+        // Σ deg over the small side instead of the big one (50× here when
+        // the deepest level is thin).
+        val undN = und.withColumnRenamed("src", "node")
+        val terms = (
+          if (levelRows(lev) <= levelRows(lev + 1))
+            undN.join(gatedBroadcast(levels(lev), levelRows(lev)), Seq("node"))
+              .join(gatedBroadcast(wTab, levelRows(lev + 1)), Seq("root", "dst"))
+          else
+            undN.join(gatedBroadcast(wTab, levelRows(lev + 1)), Seq("dst"))
+              .join(gatedBroadcast(levels(lev), levelRows(lev)), Seq("root", "node")))
+          .select(col("root"), col("node"),
+            expr("(sigma * (1000000 + wdelta)) div wsigma").as("t"))
+        val dl = s.checkpoint(levels(lev)
+          .select(col("root"), col("node"), lit(0L).as("t"))
+          .union(terms)
+          .groupBy(col("root"), col("node"))
+          .agg(sum(col("t")).as("delta")))
+        deltaTabs += dl
+        dAbove = dl
+        lev -= 1
+      }
+      deltaTabs.map(s.keep).reduce(_ union _)
     }
-    var dAbove = levels(maxLevel)
-      .select(col("root"), col("node"), lit(0L).as("delta"))
-      .localCheckpoint(true)
-    val deltaTabs = scala.collection.mutable.ArrayBuffer[DataFrame](dAbove)
-    var lev = maxLevel - 1
-    while (lev >= 1) {
-      val wTab = levels(lev + 1).join(bc(dAbove, levelRows(lev + 1)), Seq("root", "node"))
-        .select(col("root"), col("node").as("dst"),
-          col("sigma").as("wsigma"), col("delta").as("wdelta"))
-      // nodes without successors contribute zero rows via the union, so
-      // one aggregate replaces the left-join-with-zeros shape. The two
-      // inner joins commute — expand und through the SMALLER level side
-      // first (level sizes are already in hand), so the intermediate is
-      // Σ deg over the small side instead of the big one (50× here when
-      // the deepest level is thin).
-      val undN = und.withColumnRenamed("src", "node")
-      val terms = (
-        if (levelRows(lev) <= levelRows(lev + 1))
-          undN.join(bc(levels(lev), levelRows(lev)), Seq("node"))
-            .join(bc(wTab, levelRows(lev + 1)), Seq("root", "dst"))
-        else
-          undN.join(bc(wTab, levelRows(lev + 1)), Seq("dst"))
-            .join(bc(levels(lev), levelRows(lev)), Seq("root", "node")))
-        .select(col("root"), col("node"),
-          expr("(sigma * (1000000 + wdelta)) div wsigma").as("t"))
-      val dl = levels(lev)
-        .select(col("root"), col("node"), lit(0L).as("t"))
-        .union(terms)
-        .groupBy(col("root"), col("node"))
-        .agg(sum(col("t")).as("delta"))
-        .localCheckpoint(true)
-      mark(s"bwd level $lev")
-      deltaTabs += dl
-      dAbove = dl
-      lev -= 1
-    }
-    if (undOwned) und.unpersist()
-    // Every delta table is its own checkpoint, so the level tables
-    // (forward σ frontiers) are no longer reachable from the result —
-    // release them here rather than letting the blocks outlive the call
-    // (the kTruss final-checkpoint discipline). The degenerate
-    // maxLevel==0 path returned above, so deltaTabs is non-empty here.
-    levels.foreach(org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint)
-    deltaTabs.reduce(_ union _)
   }
 }

@@ -237,6 +237,15 @@ class GraphSpec extends AnyFunSuite {
     assert(got == Map(1L -> 0L, 2L -> 2L), got)
   }
 
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("HITS: iters = 0 materializes nothing; every node scores (scale, 0)") {
+    val before = persisted
+    val got = hubsAuths(Seq((1L, 2L, 1L), (2L, 3L, 4L)), iters = 0)
+    assert((persisted -- before).isEmpty)
+    assert(got == Map(1L -> (1000000L, 0L), 2L -> (1000000L, 0L), 3L -> (1000000L, 0L)), got)
+  }
+
   test("HITS: bit-deterministic across runs") {
     val edges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (1L, 3L, 1L), (4L, 2L, 5L))
     assert(hubsAuths(edges) == hubsAuths(edges))
@@ -292,5 +301,20 @@ class GraphSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       Graph.brandesBetweenness(e, r, maxDepth = 2, dist0 = Some(dist)).count()
     }
+  }
+
+  test("Brandes: dist0 with a missing level errors by name and leaks nothing") {
+    val path = (1L to 5L).sliding(2).map(s => (s(0), s(1))).toSeq
+    val e = path.toDF("src", "dst")
+    val r = Seq(1L).toDF("node")
+    // path 1-2-3-4-5 from root 1: depths 0..4, depth 2 cut out
+    val truncated = Graph.bfsDistancesPerSource(e, r).filter(col("d") =!= 2)
+    val before = persisted
+    val err = intercept[IllegalStateException] {
+      Graph.brandesBetweenness(e, r, dist0 = Some(truncated))
+    }
+    assert(err.getMessage.contains("dist0 has no rows at depth 2 below its deepest level 4"),
+      err.getMessage)
+    assert((persisted -- before).isEmpty)
   }
 }

@@ -279,9 +279,9 @@ class PlanSpec extends AnyFunSuite {
     try {
       def shuffleJoins(p: String): Int =
         "SortMergeJoin|ShuffledHashJoin".r.findAllIn(p).size
-      val b = formatted(Queries.trianglesQ(spark, sf))
+      val b = Queries.trianglesScoped(spark, sf)(formatted)
       sys.props("graft.tri.broadcastMaxEdges") = "0"
-      val s = formatted(Queries.trianglesQ(spark, sf))
+      val s = Queries.trianglesScoped(spark, sf)(formatted)
       // broadcast path: the wedge self-join is the only shuffle join;
       // gated path: wedge self-join + the closing probe. Formatted
       // explain prints each node twice (tree + detail) → diff of 2.
@@ -363,7 +363,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("triangles: wedge and closing joins are equi — no cartesian anywhere") {
-    val plan = formatted(Queries.trianglesQ(spark, sf))
+    val plan = Queries.trianglesScoped(spark, sf)(formatted)
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
