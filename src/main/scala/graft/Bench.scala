@@ -82,6 +82,38 @@ object Bench {
     Pass(times, memo.toMap, failed.result())
   }
 
+  /** Compact final line: seconds at ms precision; the previous round's
+    * comparison set first (so the driver's round-over-round view keeps
+    * every query it compared last round, fast or slow), then the
+    * heaviest of the rest, while the line fits `budget`. Truncation is
+    * noted on stderr, and a pinned name that did not fit is warned by
+    * name: the pinned set is what the budget is sized for.
+    */
+  def compactLine(header: String, results: Map[String, Double],
+      budget: Int = CompactBudget): String = {
+    val byTime = results.toSeq.sortBy { case (k, v) =>
+      (!PinnedNames.contains(k), -v)
+    }
+    val footer = "}}"
+    val sb = new StringBuilder(header)
+    var first = true
+    val dropped = Seq.newBuilder[String]
+    byTime.foreach { case (k, v) =>
+      val entry = (if (first) "" else ",") + "\"" + k + "\":" + f"$v%.3f"
+      if (sb.length + entry.length + footer.length <= budget) {
+        sb.append(entry); first = false
+      } else dropped += k
+    }
+    sb.append(footer)
+    val lost = dropped.result()
+    if (lost.nonEmpty)
+      Console.err.println(s"bench: compact line kept ${results.size - lost.size}/${results.size} heaviest queries (full map on the prior line)")
+    val lostPinned = lost.filter(PinnedNames.contains)
+    if (lostPinned.nonEmpty)
+      Console.err.println(s"bench: WARNING compact line dropped pinned ${lostPinned.mkString(", ")} (over the $budget-char budget)")
+    sb.toString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -206,29 +238,8 @@ object Bench {
     val winsJson = winCounts.mkString("[", ",", "]")
     val failedJson = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     println(s"""{"queries":$qsFull,"failed":$failedJson,"memo_builds":$memoFull,"memo_total":${f"$memoTotal%.3f"},"sf":"$sfDir","unit":"sec","n_queries":${results.size},"passes":${allPasses.size},"extra_passes":$extraPasses,"pass_totals":$rawTotals,"pass_win_counts":$winsJson,"loadavg":$loadsJson,"pass_disagreement_pct":${f"$passDisagreementPct%.1f"},"metric":"total","value":$total}""")
-    // Compact final line: seconds at ms precision; the previous round's
-    // comparison set first (so the driver's round-over-round view keeps
-    // every query it compared last round, fast or slow), then the
-    // heaviest of the rest — if the budget forces truncation, only
-    // unpinned trivia drops out.
-    val byTime = results.toSeq.sortBy { case (k, v) =>
-      (!PinnedNames.contains(k), -v)
-    }
     val header = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","memo_total":$memoTotal%.3f,"pass_disagreement_pct":$passDisagreementPct%.1f,"queries":{"""
-    val footer = "}}"
-    val sb = new StringBuilder(header)
-    var first = true
-    var kept = 0
-    byTime.foreach { case (k, v) =>
-      val entry = (if (first) "" else ",") + "\"" + k + "\":" + f"$v%.3f"
-      if (sb.length + entry.length + footer.length <= CompactBudget) {
-        sb.append(entry); first = false; kept += 1
-      }
-    }
-    sb.append(footer)
-    if (kept < results.size)
-      Console.err.println(s"bench: compact line kept $kept/${results.size} heaviest queries (full map on the prior line)")
-    println(sb.toString)
+    println(compactLine(header, results))
     spark.stop()
   }
 }

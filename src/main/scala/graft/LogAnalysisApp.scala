@@ -47,11 +47,7 @@ object LogAnalysisApp {
   def start(spark: SparkSession, lines: DataFrame,
       sectionDim: DataFrame, articleDim: DataFrame,
       checkpointRoot: String): Pipelines = {
-    // RocksDB: off-heap state with changelog checkpointing, the provider
-    // the per-client state needs at scale. Set before the query starts
-    // so the checkpoint records it.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    useRocksDbState(spark)
     val checkpoint = s"$checkpointRoot/product"
     val sectionSink = new UpsertSink(Seq("section_id"))
     val articleSink = new UpsertSink(Seq("article_id"))
@@ -88,6 +84,18 @@ object LogAnalysisApp {
     Pipelines(query, sectionSink, articleSink, clientSink)
   }
 
+  /** Every stateful query here keeps its state in RocksDB (off-heap, the
+    * provider the per-client state needs at scale) with changelog
+    * checkpointing: a batch commit uploads that batch's changelog, not a
+    * full snapshot of the store. Set before a query starts, so its
+    * checkpoint records the provider.
+    */
+  private def useRocksDbState(spark: SparkSession): Unit = {
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+  }
+
   private def hasCommittedBatch(spark: SparkSession, checkpoint: String): Boolean = {
     val commits = new Path(checkpoint, "commits")
     val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -95,25 +103,27 @@ object LogAnalysisApp {
   }
 
   final case class Monitors(
-      volumeAlarm: StreamingQuery,
       funnel: StreamingQuery,
       alarms: scala.collection.concurrent.TrieMap[Long, (Long, Option[Long], Boolean)],
       funnelSink: UpsertSink)
 
-  /** The extension sinks over the same `line` stream as the product
-    * pipeline. Each monitor is its own streaming query that reads and
-    * parses the source itself (the funnel reads it for both join sides):
+  /** The extension monitors over the same `line` stream as the product
+    * pipeline, in ONE streaming query (the funnel), which reads and parses
+    * the source itself, once for each join side:
     *
-    *   - **volume alarm**: each micro-batch's row count robust-z'd
-    *     against `refVolumes` (historical per-period volumes, an `x:
-    *     long` column) via [[graft.streaming.AnomalyStream]] — the
-    *     ingest-side pager that fires BEFORE a surge reaches the
-    *     aggregates. Alarms land in `Monitors.alarms` keyed by batch id.
     *   - **browse→read funnel**: the stream-stream interval join
     *     ([[graft.streaming.EventJoinStream]]) between section browses
     *     (fid hits) and article reads (tid hits) by the SAME client
     *     within `maxGapSec` — both sides watermarked on the log's event
     *     time, so the symmetric join state stays O(rate × window) forever.
+    *   - **volume alarm**: each funnel batch's parsed-row count, observed
+    *     on the browse side before its section filter, robust-z'd against
+    *     `refVolumes` (historical per-period volumes, an `x: long`
+    *     column) via [[graft.streaming.AnomalyStream.volumeAlarm]] — the
+    *     ingest-side pager that fires BEFORE a surge reaches the
+    *     aggregates. Alarms land in `Monitors.alarms` keyed by the funnel's
+    *     batch id, once the listener has seen that batch's progress;
+    *     no-data (watermark) batches raise none.
     *
     * Scale note: everything here is per-micro-batch narrow work plus one
     * watermark-bounded join keyed on client_ip; no unbounded state.
@@ -125,27 +135,24 @@ object LogAnalysisApp {
       .withColumn("ts", to_timestamp(col("access_date")))
 
     val alarms = scala.collection.concurrent.TrieMap[Long, (Long, Option[Long], Boolean)]()
-    val volumeAlarm = graft.streaming.AnomalyStream.volumeMonitor(
-        parsed, refVolumes, Some(s"$checkpointRoot/volume_alarm")) { (id, df) =>
-      val r = df.collect().head
-      alarms.put(id, (r.getLong(0),
-        if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getBoolean(2)))
-    }
-
-    val views = parsed.filter(col("section_id") =!= 0)
-      .select(col("client_ip").as("user_id"), col("ts"))
-    val reads = parsed.filter(col("article_id") =!= 0)
-      .select(col("client_ip").as("user_id"), col("ts"),
-        col("article_id").as("value"))
     val funnelSink = new UpsertSink(Seq("user_id", "view_ts", "purchase_ts"))
-    val funnel = graft.streaming.EventJoinStream
-      .viewToPurchase(views, reads, maxGapSec, watermarkSec)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/funnel")
-      .foreachBatch { (df: DataFrame, id: Long) => funnelSink.merge(df, id) }
-      .start()
-
-    Monitors(volumeAlarm, funnel, alarms, funnelSink)
+    useRocksDbState(spark)
+    val funnel = graft.streaming.AnomalyStream.volumeAlarm(parsed, refVolumes) {
+      (id, x, z, fired) => alarms.put(id, (x, z, fired))
+    } { counted =>
+      val views = counted.filter(col("section_id") =!= 0)
+        .select(col("client_ip").as("user_id"), col("ts"))
+      val reads = parsed.filter(col("article_id") =!= 0)
+        .select(col("client_ip").as("user_id"), col("ts"),
+          col("article_id").as("value"))
+      graft.streaming.EventJoinStream
+        .viewToPurchase(views, reads, maxGapSec, watermarkSec)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", s"$checkpointRoot/funnel")
+        .foreachBatch { (df: DataFrame, id: Long) => funnelSink.merge(df, id) }
+        .start()
+    }
+    Monitors(funnel, alarms, funnelSink)
   }
 
   /** CLI: `LogAnalysisApp <logDir> <sfDir>` — file-arrival stream over

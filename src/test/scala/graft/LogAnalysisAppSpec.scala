@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 /** End-to-end product pipeline: files arriving in a directory → one
   * streaming query (parse → keyed count) → three upsert sinks (the full
@@ -14,6 +18,9 @@ class LogAnalysisAppSpec extends AnyFunSuite {
 
   def line(ip: String, uri: String): String =
     s"""$ip - - [27/Aug/2020:10:20:53 +0800] "GET $uri HTTP/1.1" 200 1024 "-" "Mozilla/5.0""""
+
+  def tline(ip: String, time: String, uri: String): String =
+    s"""$ip - - [27/Aug/2020:$time +0800] "GET $uri HTTP/1.1" 200 1024 "-" "Mozilla/5.0""""
 
   /** Section sink rows in rank order: count desc, then id asc. */
   def sectionRanks(p: LogAnalysisApp.Pipelines): Seq[(Long, Long)] =
@@ -161,8 +168,6 @@ class LogAnalysisAppSpec extends AnyFunSuite {
     import spark.implicits._
     val logDir = Files.createTempDirectory("graft-logs-m").toFile
     val ckpt = Files.createTempDirectory("graft-ckpt-m").toString
-    def tline(ip: String, time: String, uri: String): String =
-      s"""$ip - - [27/Aug/2020:$time +0800] "GET $uri HTTP/1.1" 200 1024 "-" "Mozilla/5.0""""
     // historical per-period volumes: med=14 → m2=28, mad4=8
     val ref = Seq(10L, 12L, 14L, 16L, 18L).toDF("x")
 
@@ -173,24 +178,61 @@ class LogAnalysisAppSpec extends AnyFunSuite {
       tline("10.0.0.1", "10:40:00", "/forum.php?mod=viewthread&tid=7")  // 1200 s > maxGap → drop
     ).mkString("\n"))
 
-    val m = LogAnalysisApp.startMonitors(spark,
-      graft.sources.LogSources.textStreamLines(spark, logDir.toString), ref, ckpt)
+    val lines = graft.sources.LogSources.textStreamLines(spark, logDir.toString)
+    val before = spark.streams.active.map(_.id).toSet
+    val p = LogAnalysisApp.start(spark, lines,
+      Seq((3L, "tech")).toDF("fid", "name"), Seq((9L, "post nine")).toDF("tid", "subject"), ckpt)
+    val m = LogAnalysisApp.startMonitors(spark, lines, ref, ckpt)
     try {
-      m.volumeAlarm.processAllAvailable()
+      // the product query and the funnel; the alarm rides the funnel
+      assert(spark.streams.active.map(_.id).toSet -- before == Set(p.query.id, m.funnel.id))
       m.funnel.processAllAvailable()
       // batch 0: 4 parsed rows → z = 1349·|8−28|·1000/8 = 3372500 (< 3.5) — quiet
-      assert(m.alarms(0L) == ((4L, Some(3372500L), false)))
+      eventually(timeout(Span(30, Seconds))) {
+        assert(m.alarms.get(0L).contains((4L, Some(3372500L), false)), m.alarms)
+      }
       val rows = m.funnelSink.snapshot.values.toSeq
       assert(rows.size == 1, s"expected exactly one funnel match, got $rows")
       assert(rows.head.head == "10.0.0.1" && rows.head.last == 9L)
 
-      // batch 1: ONE row — 1349·|2−28| = 35074 > 3500·8 → the alarm fires
+      // the next data batch: ONE row — 1349·|2−28| = 35074 > 3500·8 → the
+      // alarm fires. A no-data watermark batch may run first, so the
+      // alarm is the entry with the largest batch id.
       Files.writeString(new java.io.File(logDir, "b2.log").toPath,
         tline("10.0.0.9", "11:00:00", "/forum.php?mod=forumdisplay&fid=5"))
-      m.volumeAlarm.processAllAvailable()
-      val (x, z, fired) = m.alarms(1L)
-      assert(x == 1L && z == Some(4384250L) && fired)
-    } finally { m.volumeAlarm.stop(); m.funnel.stop() }
+      m.funnel.processAllAvailable()
+      eventually(timeout(Span(30, Seconds))) {
+        assert(m.alarms.size == 2, m.alarms)
+        assert(m.alarms(m.alarms.keys.max) == ((1L, Some(4384250L), true)))
+      }
+    } finally { p.query.stop(); m.funnel.stop() }
+  }
+
+  test("the product query and the funnel keep RocksDB state with changelog checkpoints") {
+    import spark.implicits._
+    val logDir = Files.createTempDirectory("graft-logs-c").toFile
+    val ckpt = Files.createTempDirectory("graft-ckpt-c").toString
+    Files.writeString(new java.io.File(logDir, "b1.log").toPath, Seq(
+      tline("10.0.0.1", "10:20:00", "/forum.php?mod=forumdisplay&fid=3"),
+      tline("10.0.0.1", "10:25:00", "/forum.php?mod=viewthread&tid=9")).mkString("\n"))
+    // the session default: each entry point must set the provider itself
+    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    spark.conf.unset("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    val lines = graft.sources.LogSources.textStreamLines(spark, logDir.toString)
+    val m = LogAnalysisApp.startMonitors(spark, lines, Seq(10L, 12L).toDF("x"), ckpt)
+    val p = LogAnalysisApp.start(spark, lines,
+      Seq((3L, "tech")).toDF("fid", "name"), Seq((9L, "post nine")).toDF("tid", "subject"), ckpt)
+    try {
+      m.funnel.processAllAvailable()
+      p.query.processAllAvailable()
+    } finally { p.query.stop(); m.funnel.stop() }
+    def changelogs(query: String): Seq[java.nio.file.Path] = {
+      val stream = Files.walk(java.nio.file.Paths.get(ckpt, query, "state"))
+      try stream.iterator().asScala.filter(_.getFileName.toString.endsWith(".changelog")).toSeq
+      finally stream.close()
+    }
+    assert(changelogs("funnel").nonEmpty)
+    assert(changelogs("product").nonEmpty)
   }
 
   test("jdbc upsert SQL is the MySQL ON DUPLICATE KEY UPDATE form") {

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
+import graft.functions.ParseCombinedLog
 import graft.logs.LogParser
 
 /** Property tests (pure scalacheck): render a random combined-format line
@@ -66,6 +68,32 @@ object LogParserPropertySpec extends Properties("LogParser") {
           r.getAs[String]("user_agent") == f.ua &&
           r.getAs[java.sql.Timestamp]("access_ts") != null
       }
+    }
+  }
+
+  /** The ASCII fast path of `ParseCombinedLog.parse` slices groups by
+    * byte offset; on every ASCII line it must give the groups a `String`
+    * match gives, field for field, and null where that match fails.
+    * Empty quoted groups and `-` fields included, and lines broken by
+    * dropping or doubling one character.
+    */
+  val emptyOr = (g: Gen[String]) => Gen.frequency(1 -> Gen.const(""), 3 -> g)
+  val asciiLineGen: Gen[String] = for {
+    f <- fieldsGen; req <- emptyOr(requestGen); ref <- emptyOr(refererGen); ua <- emptyOr(uaGen)
+    line = render(f.copy(request = req, referer = ref, ua = ua))
+    at <- Gen.choose(0, line.length - 1)
+    broken <- Gen.frequency(3 -> Gen.const(line), 1 -> Gen.const(line.patch(at, "", 1)),
+      1 -> Gen.const(line.patch(at, line.substring(at, at + 1) * 2, 1)), 1 -> quoteFree)
+  } yield broken
+
+  property("asciiSlicesEqualStringGroups") = Prop.forAll(Gen.listOfN(50, asciiLineGen)) { ls =>
+    val pattern = java.util.regex.Pattern.compile(ParseCombinedLog.LogRegex)
+    ls.forall { l =>
+      val m = pattern.matcher(l)
+      val want = if (m.matches()) Some((1 to 9).map(m.group)) else None
+      val got = Option(ParseCombinedLog.parse(UTF8String.fromString(l)))
+        .map(r => (0 until 9).map(r.getUTF8String(_).toString))
+      got == want
     }
   }
 
