@@ -3,12 +3,17 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Regenerates PLANS.md: the formatted physical plan of each flagship
-  * query, with a one-line note on the scale property the plan shape
-  * carries. Run: `sbt "runMain graft.DumpPlans [sfDir] [outFile]"`.
+/** Formatted physical plans of registry queries, two ways:
+  *  - `sbt "runMain graft.DumpPlans [sfDir] [outFile]"` regenerates
+  *    PLANS.md: each flagship query's plan with a one-line note on the
+  *    scale property its shape carries;
+  *  - `sbt "runMain graft.DumpPlans files <outDir> <suffix> q_a,q_b [sfDir]"`
+  *    writes one `<outDir>/<q>_<suffix>.txt` per named query — the
+  *    before/after evidence trail of an optimization (`plans/r13/`).
+  * AQE is disabled in both: plan SHAPE is what is recorded; production
+  * re-plans at runtime on top of these shapes.
   */
 object DumpPlans {
 
@@ -109,23 +114,46 @@ object DumpPlans {
     "q_team_draft" -> "team-draft interleave: two TakeOrdered shortlists collapse to one row; the 20-step draft is a single HOF fold — zero joins past the shortlists",
     "q_index_size" -> "posting compression audit: distinct-posting aggregate, broadcast top-20 shortlist join, per-token lag window (never singleton), bit-length integer arithmetic")
 
-  def main(args: Array[String]): Unit = {
+  /** Runs `f` with a printer of a named query's formatted physical
+    * plan over an AQE-off local session on `sfDir`.
+    */
+  private def withPlans(sfDir: String)(f: (String => String) => Unit): Unit = {
+    val spark = GraftSession.local("4", aqe = Some(false), logLevel = "ERROR")
+    try f(name => SparkEntry.queries(name)(spark, sfDir)
+      .queryExecution.explainString(ExplainMode.fromString("formatted")))
+    finally spark.stop()
+  }
+
+  def main(argv: Array[String]): Unit = {
+    // `files <outDir> <suffix> q_a,q_b` selects the per-query mode; the
+    // optional sfDir follows either mode's own arguments
+    val files = argv.headOption.contains("files")
+    val args = if (files) argv.drop(4) else argv
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = GraftSession.local("4", logLevel = "ERROR")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the flagship queries\n\n")
-    sb.append(s"Generated by `graft.DumpPlans` on `$sfDir` (plan SHAPE is scale-\n")
-    sb.append("factor-independent; AQE disabled in this dump for readability —\n")
-    sb.append("production runs re-plan at runtime on top of these shapes).\n")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    Flagships.foreach { case (name, note) =>
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $name\n\n$note\n\n```\n$plan```\n")
+    if (files) {
+      val Array(_, outDir, suffix, names) = argv.take(4)
+      Files.createDirectories(Paths.get(outDir))
+      withPlans(sfDir) { plan =>
+        names.split(",").foreach { name =>
+          val out = Paths.get(outDir, s"${name}_$suffix.txt")
+          Files.write(out, plan(name).getBytes(StandardCharsets.UTF_8))
+          println(s"wrote $out")
+        }
+      }
+    } else {
+      val out = if (args.length > 1) args(1) else "PLANS.md"
+      val sb = new StringBuilder
+      sb.append("# PLANS — formatted physical plans of the flagship queries\n\n")
+      sb.append(s"Generated by `graft.DumpPlans` on `$sfDir` (plan SHAPE is scale-\n")
+      sb.append("factor-independent; AQE disabled in this dump for readability —\n")
+      sb.append("production runs re-plan at runtime on top of these shapes).\n")
+      withPlans(sfDir) { plan =>
+        Flagships.foreach { case (name, note) =>
+          sb.append(s"\n## $name\n\n$note\n\n```\n${plan(name)}```\n")
+        }
+      }
+      Files.write(Paths.get(out), sb.toString.getBytes(StandardCharsets.UTF_8))
+      println(s"wrote $out")
     }
-    Files.write(Paths.get(out), sb.toString.getBytes(StandardCharsets.UTF_8))
-    println(s"wrote $out")
-    spark.stop()
   }
 }

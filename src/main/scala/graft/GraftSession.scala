@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's session posture, in ONE place. Every entry point (Bench,
-  * Verify, Soak, Prof, DumpPlans, LogAnalysisApp) builds here, so a
+  * Verify, Soak, SoakScale, DumpPlans, LogAnalysisApp) builds here, so a
   * parity-critical conf — UTC timezone, GraftExtensions, UI off — cannot
   * drift between the shipped engine and the harness that grades it.
   */

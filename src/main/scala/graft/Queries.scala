@@ -114,6 +114,37 @@ object Queries {
   private def probeSlice(df: DataFrame, k: Int, idCol: String = "vec_id"): DataFrame =
     df.filter(col(idCol) < k).orderBy(col(idCol)).limit(k)
 
+  /** Daily event volume: (d = epoch day, `name` = events that day). */
+  private def dailyCounts(spark: SparkSession, sfDir: String,
+      name: String = "x"): DataFrame =
+    Tables.events(spark, sfDir)
+      .select(expr("unix_micros(ts) div 86400000000").as("d"))
+      .groupBy(col("d")).agg(count(lit(1)).as(name))
+
+  /** Unit-normalized double embeddings (vec_id, label, embedding). */
+  private def normEmbeddings(spark: SparkSession, sfDir: String): DataFrame =
+    Similarity.normalized(Similarity.asDouble(Tables.embeddings(spark, sfDir)))
+
+  /** The ranked-retrieval probe preamble of [[ndcgQ]], [[mrrQ]],
+    * [[mapAtKQ]] and [[errQ]] over normalized embeddings `e`: the first
+    * 50 vectors as queries (query_id, true_label, qv), broadcast against
+    * every other vector (neighbor_id, n_label, cv), with cosine `cos`
+    * and per-query rank `rnk` (cos desc, neighbor id asc).
+    */
+  private def probeRanks(e: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val q = probeSlice(e, 50)
+      .select(col("vec_id").as("query_id"), col("label").cast("long").as("true_label"),
+        col("embedding").as("qv"))
+    val c = e.select(col("vec_id").as("neighbor_id"), col("label").cast("long").as("n_label"),
+      col("embedding").as("cv"))
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
+    c.crossJoin(broadcast(q))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos", Similarity.dot(col("qv"), col("cv")))
+      .withColumn("rnk", row_number().over(w))
+  }
+
   /** Exact decimal sum of a double product expression, rounded to 2dp.
     * (Products of 2dp values are up to 6dp decimals — their double sums
     * can land on half-cent boundaries too; DECIMAL summing is exact and
@@ -1315,7 +1346,7 @@ object Queries {
     * plan structurally instead of via an allowlist attestation.
     */
   def knnCosine(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Similarity.normalized(Similarity.asDouble(Tables.embeddings(spark, sfDir)))
+    val e = normEmbeddings(spark, sfDir)
     Similarity.bruteForceTopK(e.orderBy(col("vec_id")).limit(10), e, 5)
       .orderBy(col("query_id"), col("rnk"))
   }
@@ -1559,7 +1590,7 @@ object Queries {
     */
   def annLsh(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = Similarity.normalized(Similarity.asDouble(Tables.embeddings(spark, sfDir)))
+    val e = normEmbeddings(spark, sfDir)
     val bucket = LshPlanes.zipWithIndex.map { case (plane, p) =>
       when(graft.functions.GraftFunctions.dot_product(
         col("embedding"), typedLit(plane)) > 0, lit(1 << p)).otherwise(lit(0))
@@ -1658,6 +1689,30 @@ object Queries {
       .orderBy(col("query_id"), col("rnk"))
   }
 
+  /** Exact re-rank of an ANN `shortlist` (query_id, neighbor_id,
+    * adc_e6): each candidate's raw vector from `raw` and its query's
+    * from `qs`, both by broadcast join, e6-floored squared Euclidean
+    * distance d2_e6, top 3 per query. The refine step of
+    * [[annPqRefine]] and [[annIvfPqRefine]].
+    */
+  private def exactRerank(raw: DataFrame, qs: DataFrame,
+      shortlist: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val qv = qs.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val nv = raw.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
+    val w = Window.partitionBy(col("query_id")).orderBy(col("d2_e6"), col("neighbor_id"))
+    nv.join(broadcast(shortlist), "neighbor_id")
+      .join(broadcast(qv), "query_id")
+      .withColumn("d2_e6", floor((Similarity.dot(col("nv"), col("nv"))
+        - lit(2.0) * Similarity.dot(col("qv"), col("nv"))
+        + Similarity.dot(col("qv"), col("qv"))) * lit(1000000.0)).cast("long"))
+      .withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= 3)
+      .select(col("query_id"), col("neighbor_id"), col("rnk"),
+        col("adc_e6"), col("d2_e6"))
+      .orderBy(col("query_id"), col("rnk"))
+  }
+
   /** PQ/ADC with an exact refine stage (the FAISS `RFlat` shape,
     * Jégou et al. §VII): the compressed-corpus ADC scan shortlists
     * k'=10 candidates per query, then ONLY those candidates' raw
@@ -1672,7 +1727,6 @@ object Queries {
     * corpus).
     */
   def annPqRefine(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val m = 4
     val raw = Similarity.asDouble(Tables.embeddings(spark, sfDir))
     val books = pqBooks(spark, sfDir, 0)
@@ -1680,19 +1734,7 @@ object Queries {
     val qs = probeSlice(raw, 10)
     val shortlist = Similarity.pqAdcTopK(qs, codes, books, 10, m)
       .select(col("query_id"), col("neighbor_id"), col("adc_e6"))
-    val qv = qs.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val nv = raw.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("d2_e6"), col("neighbor_id"))
-    nv.join(broadcast(shortlist), "neighbor_id")
-      .join(broadcast(qv), "query_id")
-      .withColumn("d2_e6", floor((Similarity.dot(col("nv"), col("nv"))
-        - lit(2.0) * Similarity.dot(col("qv"), col("nv"))
-        + Similarity.dot(col("qv"), col("qv"))) * lit(1000000.0)).cast("long"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        col("adc_e6"), col("d2_e6"))
-      .orderBy(col("query_id"), col("rnk"))
+    exactRerank(raw, qs, shortlist)
   }
 
   private val IvfPqM = 8
@@ -1803,26 +1845,13 @@ object Queries {
     * visible per row; recall@3 measured in COVERAGE.md.
     */
   def annIvfPqRefine(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val raw = Similarity.asDouble(Tables.embeddings(spark, sfDir))
     val (cents, books, codes) = ivfPqParts(spark, sfDir)
     val qs = probeSlice(raw, 10)
     val shortlist = Similarity.ivfPqTopK(qs, codes, cents, books,
         12, IvfPqM, IvfPqNprobe)
       .select(col("query_id"), col("neighbor_id"), col("adc_e6"))
-    val qv = qs.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val nv = raw.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("d2_e6"), col("neighbor_id"))
-    nv.join(broadcast(shortlist), "neighbor_id")
-      .join(broadcast(qv), "query_id")
-      .withColumn("d2_e6", floor((Similarity.dot(col("nv"), col("nv"))
-        - lit(2.0) * Similarity.dot(col("qv"), col("nv"))
-        + Similarity.dot(col("qv"), col("qv"))) * lit(1000000.0)).cast("long"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        col("adc_e6"), col("d2_e6"))
-      .orderBy(col("query_id"), col("rnk"))
+    exactRerank(raw, qs, shortlist)
   }
 
   /** The 32×6 code table shared by [[annMultiTable]] and [[annRecall]]
@@ -1856,7 +1885,7 @@ object Queries {
     * user can swap single-code search for the recall-bearing variant.
     */
   def annMultiTable(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Similarity.normalized(Similarity.asDouble(Tables.embeddings(spark, sfDir)))
+    val e = normEmbeddings(spark, sfDir)
     annMtTopK(spark, sfDir, e, 3).orderBy(col("query_id"), col("rnk"))
   }
 
@@ -1880,7 +1909,7 @@ object Queries {
     */
   def annRecall(spark: SparkSession, sfDir: String): DataFrame = {
     val k = 3
-    val e = Similarity.normalized(Similarity.asDouble(Tables.embeddings(spark, sfDir)))
+    val e = normEmbeddings(spark, sfDir)
     // the EXACT pipeline q_ann_multitable serves — one shared definition
     val approx = annMtTopK(spark, sfDir, e, k)
       .select(col("query_id"), col("neighbor_id"))
@@ -2521,6 +2550,33 @@ object Queries {
     graft.ops.Curation.curate(base, spanStage = true).orderBy(col("doc_id"))
   }
 
+  /** The covered-span plant corpus of [[curationSpanCovQ]] and
+    * [[curationStripQ]] (doc_id, text): documents, every third doc
+    * copied (id+10000), and per eligible source `a` (every 11th doc
+    * of >= 40 tokens whose `a+3` has >= 60) a HOST (id+70000, the
+    * vowel-rotated text of `a+3` + a 30-token quote of `a`) and the
+    * PURE-QUOTE doc (id+80000).
+    */
+  private def coverPlantBase(spark: SparkSession, sfDir: String): DataFrame = {
+    val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+    def slice30(c: Column) =
+      array_join(slice(split(trim(lower(c)), "\\s+"), 11, 30), " ")
+    val eligible = d.as("a")
+      .join(d.as("b"), col("b.doc_id") === col("a.doc_id") + 3)
+      .filter(col("a.doc_id") % 11 === 0 &&
+        size(split(trim(lower(col("a.text"))), "\\s+")) >= 40 &&
+        size(split(trim(lower(col("b.text"))), "\\s+")) >= 60)
+    val hosts = eligible.select((col("a.doc_id") + 70000).as("doc_id"),
+      concat(translate(lower(col("b.text")), "aeiou", "eioua"),
+        lit(" "), slice30(col("a.text"))).as("text"))
+    val quotes = eligible.select((col("a.doc_id") + 80000).as("doc_id"),
+      slice30(col("a.text")).as("text"))
+    d
+      .union(d.filter(col("doc_id") % 3 === 0)
+        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
+      .union(hosts).union(quotes)
+  }
+
   /** Curation with the COVERED span policy (gates → exact → LSH →
     * coverage-gated span dedup → split): drop a doc only when the
     * shared span is ≥ half of ITS OWN fingerprints. Two contrasting
@@ -2535,23 +2591,7 @@ object Queries {
     * is bounded below SpanMinCoverage by construction.
     */
   def curationSpanCovQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    def slice30(c: Column) =
-      array_join(slice(split(trim(lower(c)), "\\s+"), 11, 30), " ")
-    val eligible = d.as("a")
-      .join(d.as("b"), col("b.doc_id") === col("a.doc_id") + 3)
-      .filter(col("a.doc_id") % 11 === 0 &&
-        size(split(trim(lower(col("a.text"))), "\\s+")) >= 40 &&
-        size(split(trim(lower(col("b.text"))), "\\s+")) >= 60)
-    val hosts = eligible.select((col("a.doc_id") + 70000).as("doc_id"),
-      concat(translate(lower(col("b.text")), "aeiou", "eioua"),
-        lit(" "), slice30(col("a.text"))).as("text"))
-    val quotes = eligible.select((col("a.doc_id") + 80000).as("doc_id"),
-      slice30(col("a.text")).as("text"))
-    val base = d
-      .union(d.filter(col("doc_id") % 3 === 0)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      .union(hosts).union(quotes)
+    val base = coverPlantBase(spark, sfDir)
     graft.ops.Curation.curate(base, spanStage = true, spanPolicy = "covered")
       .orderBy(col("doc_id"))
   }
@@ -2568,23 +2608,7 @@ object Queries {
     * CONTENT VOLUME, not document identity.
     */
   def curationStripQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    def slice30(c: Column) =
-      array_join(slice(split(trim(lower(c)), "\\s+"), 11, 30), " ")
-    val eligible = d.as("a")
-      .join(d.as("b"), col("b.doc_id") === col("a.doc_id") + 3)
-      .filter(col("a.doc_id") % 11 === 0 &&
-        size(split(trim(lower(col("a.text"))), "\\s+")) >= 40 &&
-        size(split(trim(lower(col("b.text"))), "\\s+")) >= 60)
-    val hosts = eligible.select((col("a.doc_id") + 70000).as("doc_id"),
-      concat(translate(lower(col("b.text")), "aeiou", "eioua"),
-        lit(" "), slice30(col("a.text"))).as("text"))
-    val quotes = eligible.select((col("a.doc_id") + 80000).as("doc_id"),
-      slice30(col("a.text")).as("text"))
-    val base = d
-      .union(d.filter(col("doc_id") % 3 === 0)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      .union(hosts).union(quotes)
+    val base = coverPlantBase(spark, sfDir)
     val curated = graft.ops.Curation.curate(base)
     val stripped = Dedup.stripDuplicateSpans(
       curated.join(base, "doc_id").select(col("doc_id"), col("text")), k = 8)
@@ -3511,7 +3535,7 @@ object Queries {
     */
   def mmrQ(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = Similarity.normalized(Similarity.asDouble(Tables.embeddings(spark, sfDir)))
+    val e = normEmbeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val q = e.filter(col("vec_id") < 10)
     val w = Window.partitionBy(col("query_id"))
@@ -3597,7 +3621,7 @@ object Queries {
     * certified, not exact.
     */
   def mmrAnnQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Similarity.normalized(Similarity.asDouble(Tables.embeddings(spark, sfDir)))
+    val e = normEmbeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val cand = graft.sources.SessionMemo(spark, ("mmr_ann_cand", sfDir)) {
       annMtTopK(spark, sfDir, e, 8)
@@ -3783,6 +3807,36 @@ object Queries {
       .orderBy(col("level"))
   }
 
+  /** Two-sample value support over `documents`, per language: the
+    * n_chars values v with A-side (even doc_id) count ca and B-side
+    * count cb. The shared base of the EDF tests ([[ksDriftQ]],
+    * [[cvmQ]], [[andersonDarlingQ]]) and [[energyDistQ]].
+    */
+  private def langValueSupport(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.documents(spark, sfDir)
+      .select(col("lang"), (col("doc_id") % 2 === 0).as("a"), col("n_chars").as("v"))
+      .groupBy(col("lang"), col("v"))
+      .agg(sum(when(col("a"), 1L).otherwise(0L)).as("ca"),
+        sum(when(!col("a"), 1L).otherwise(0L)).as("cb"))
+
+  /** Per-language side totals (lang, na, nb) of a [[langValueSupport]]. */
+  private def langValueTotals(pv: DataFrame): DataFrame =
+    pv.groupBy(col("lang"))
+      .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
+
+  /** [[langValueSupport]] with the inclusive cumulative counts fa/fb
+    * walked over the value support and the side totals na/nb joined on.
+    */
+  private def langValueCdf(spark: SparkSession, sfDir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val pv = langValueSupport(spark, sfDir)
+    val w = Window.partitionBy(col("lang")).orderBy(col("v"))
+      .rowsBetween(Window.unboundedPreceding, 0)
+    pv.withColumn("fa", sum(col("ca")).over(w))
+      .withColumn("fb", sum(col("cb")).over(w))
+      .join(langValueTotals(pv), "lang")
+  }
+
   /** Exact two-sample Kolmogorov–Smirnov drift statistic per language:
     * sample A = even doc_ids, sample B = odd, value = n_chars. The KS
     * distance sup|F_A − F_B| is computed entirely in integers by
@@ -3800,19 +3854,7 @@ object Queries {
     * deterministic min-struct (max diff, then smallest value).
     */
   def ksDriftQ(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pv = Tables.documents(spark, sfDir)
-      .select(col("lang"), (col("doc_id") % 2 === 0).as("a"), col("n_chars").as("v"))
-      .groupBy(col("lang"), col("v"))
-      .agg(sum(when(col("a"), 1L).otherwise(0L)).as("ca"),
-        sum(when(!col("a"), 1L).otherwise(0L)).as("cb"))
-    val w = Window.partitionBy(col("lang")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val tot = pv.groupBy(col("lang"))
-      .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
-    pv.withColumn("fa", sum(col("ca")).over(w))
-      .withColumn("fb", sum(col("cb")).over(w))
-      .join(tot, "lang")
+    langValueCdf(spark, sfDir)
       .withColumn("diff", abs(col("fa") * col("nb") - col("fb") * col("na")))
       .groupBy(col("lang"), col("na"), col("nb"))
       .agg(min(struct((-col("diff")).as("nd"), col("v"))).as("best"))
@@ -5323,13 +5365,13 @@ object Queries {
       .orderBy(col("o_orderkey"))
   }
 
-  /** BM25 scoring (Lucene form, k1=1.2 b=0.75) of a fixed 3-term query
-    * over the corpus — the lexical-retrieval complement to the dense
-    * kNN path. One tokenize pass feeds doc lengths and term counts;
-    * N/avgdl broadcast as a 1-row scalar; per-doc score sums ≤3 terms
-    * with the arithmetic written identically in the oracle (round-6).
+  /** The BM25 inputs for the fixed query terms (hash, join, vector),
+    * shared by [[bm25Q]] and [[bm25SweepQ]]: corpus `stats` (n_docs,
+    * avgdl), `tf` rows (doc_id, dl, token, tf > 0) and `dfreq` (token,
+    * df).
     */
-  def bm25Q(spark: SparkSession, sfDir: String): DataFrame = {
+  private def bm25Terms(spark: SparkSession,
+      sfDir: String): (DataFrame, DataFrame, DataFrame) = {
     // genuinely ONE tokenize pass: the per-doc agg carries dl AND the
     // three fixed-term tfs as columns (stack() widens them back to
     // (doc, token, tf) rows), and the doc-sized result is materialized
@@ -5352,6 +5394,17 @@ object Queries {
         "stack(3, 'hash', tf_hash, 'join', tf_join, 'vector', tf_vector) AS (token, tf)"))
       .filter(col("tf") > 0)
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
+    (stats, tf, dfreq)
+  }
+
+  /** BM25 scoring (Lucene form, k1=1.2 b=0.75) of a fixed 3-term query
+    * over the corpus — the lexical-retrieval complement to the dense
+    * kNN path. One tokenize pass feeds doc lengths and term counts;
+    * N/avgdl broadcast as a 1-row scalar; per-doc score sums ≤3 terms
+    * with the arithmetic written identically in the oracle (round-6).
+    */
+  def bm25Q(spark: SparkSession, sfDir: String): DataFrame = {
+    val (stats, tf, dfreq) = bm25Terms(spark, sfDir)
     val idf = expr("ln(1 + (n_docs - df + 0.5) / (df + 0.5))")
     val tfn = expr("tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))")
     tf.join(broadcast(dfreq), "token")
@@ -5371,7 +5424,7 @@ object Queries {
     */
   def confusionQ(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = Similarity.normalized(Similarity.asDouble(Tables.embeddings(spark, sfDir)))
+    val e = normEmbeddings(spark, sfDir)
     val q = probeSlice(e, 500)
       .select(col("vec_id").as("query_id"), col("label").cast("long").as("true_label"),
         col("embedding").as("qv"))
@@ -5399,18 +5452,7 @@ object Queries {
     * aggregate (binary relevance ⇒ ideal ranking = all hits first).
     */
   def ndcgQ(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = Similarity.normalized(Similarity.asDouble(Tables.embeddings(spark, sfDir)))
-    val q = probeSlice(e, 50)
-      .select(col("vec_id").as("query_id"), col("label").cast("long").as("true_label"),
-        col("embedding").as("qv"))
-    val c = e.select(col("vec_id").as("neighbor_id"), col("label").cast("long").as("n_label"),
-      col("embedding").as("cv"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", Similarity.dot(col("qv"), col("cv")))
-      .withColumn("rnk", row_number().over(w))
+    probeRanks(normEmbeddings(spark, sfDir))
       .filter(col("rnk") <= 5)
       .withColumn("rel", when(col("n_label") === col("true_label"), 1.0).otherwise(0.0))
       .groupBy(col("query_id"))
@@ -6205,9 +6247,7 @@ object Queries {
     */
   def acfQ(spark: SparkSession, sfDir: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     val g = daily.groupBy().agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
       sum((expr("cast(x as decimal(38,0))") * col("x"))).as("sxx"))
     val spine = broadcast(
@@ -6240,9 +6280,7 @@ object Queries {
     */
   def cusumQ(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     val g = daily.groupBy().agg(count(lit(1)).as("n"), sum(col("x")).as("s"))
     val w = Window.partitionBy(
         graft.functions.GraftFunctions.singleton_key(col("d")))
@@ -6432,16 +6470,7 @@ object Queries {
     */
   def lifeTableQ(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val u = Tables.events(spark, sfDir)
-      .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("user_id")).agg(min(col("d")).as("f"), max(col("d")).as("l"))
-    val md = u.groupBy().agg(max(col("l")).as("maxd"))
-    val byT = u.crossJoin(broadcast(md))
-      .select((col("l") - col("f")).as("t"),
-        (col("l") >= col("maxd") - 2).as("cens"))
-      .groupBy(col("t"))
-      .agg(sum(when(!col("cens"), 1L).otherwise(0L)).as("d_churn"),
-        sum(when(col("cens"), 1L).otherwise(0L)).as("c_cens"))
+    val byT = survivalByT(spark, sfDir, "d_churn", "c_cens")
     val w = Window.partitionBy(
         graft.functions.GraftFunctions.singleton_key(col("t")))
       .orderBy(col("t").desc)
@@ -6450,6 +6479,72 @@ object Queries {
       .select(col("t"), col("n_risk"), col("d_churn"), col("c_cens"),
         expr("d_churn * 1000000 div n_risk").as("hazard_e6"))
       .orderBy(col("t"))
+  }
+
+  /** Per-user lifetimes for the survival family: `u` = (user_id, first
+    * day f, last day l) over `events`, with `md` = the last observed
+    * day; a user whose last day is within 2 of it is censored.
+    */
+  private def survivalUsers(spark: SparkSession,
+      sfDir: String): (DataFrame, DataFrame) = {
+    val u = Tables.events(spark, sfDir)
+      .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("d"))
+      .groupBy(col("user_id")).agg(min(col("d")).as("f"), max(col("d")).as("l"))
+    (u, u.groupBy().agg(max(col("l")).as("maxd")))
+  }
+
+  /** Churn and censor counts per lifetime t (duration support), named
+    * `dName` and `cName`.
+    */
+  private def survivalByT(spark: SparkSession, sfDir: String,
+      dName: String, cName: String): DataFrame = {
+    val (u, md) = survivalUsers(spark, sfDir)
+    u.crossJoin(broadcast(md))
+      .select((col("l") - col("f")).as("t"),
+        (col("l") >= col("maxd") - 2).as("cens"))
+      .groupBy(col("t"))
+      .agg(sum(when(!col("cens"), 1L).otherwise(0L)).as(dName),
+        sum(when(col("cens"), 1L).otherwise(0L)).as(cName))
+  }
+
+  /** The Kaplan-Meier-family fold input: one row with `arr` = the
+    * t-sorted (t, dd, cc) support and `total` = the user count.
+    */
+  private def survivalArr(spark: SparkSession, sfDir: String): DataFrame =
+    survivalByT(spark, sfDir, "dd", "cc")
+      .groupBy()
+      .agg(sort_array(collect_list(struct(col("t"), col("dd"), col("cc"))))
+        .as("arr"))
+      .select(col("arr"),
+        expr("aggregate(arr, 0L, (a, e) -> a + e.dd + e.cc)").as("total"))
+
+  /** The two-arm (even/odd user) event-time walk shared by [[logrankQ]]
+    * and [[coxQ]]: per event time t with deaths (d1 + d2 > 0), each
+    * arm's deaths d1/d2, censored c1/c2, and at-risk-before counts via
+    * the time-support running sums cl1/cl2 against arm totals t1/t2.
+    */
+  private def armEventTimes(spark: SparkSession, sfDir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val (u, md) = survivalUsers(spark, sfDir)
+    val per = u.crossJoin(broadcast(md))
+      .select((col("user_id") % 2).as("g"), (col("l") - col("f")).as("t"),
+        (col("l") >= col("maxd") - 2).as("cens"))
+    val sup = per.groupBy(col("t"))
+      .agg(sum(when(col("g") === 0 && !col("cens"), 1L).otherwise(0L)).as("d1"),
+        sum(when(col("g") === 0 && col("cens"), 1L).otherwise(0L)).as("c1"),
+        sum(when(col("g") === 1 && !col("cens"), 1L).otherwise(0L)).as("d2"),
+        sum(when(col("g") === 1 && col("cens"), 1L).otherwise(0L)).as("c2"))
+    val w = Window.partitionBy(
+        graft.functions.GraftFunctions.singleton_key(col("t")))
+      .orderBy(col("t"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val walked = sup
+      .withColumn("cl1", coalesce(sum(col("d1") + col("c1")).over(w), lit(0L)))
+      .withColumn("cl2", coalesce(sum(col("d2") + col("c2")).over(w), lit(0L)))
+    val tot = sup.groupBy()
+      .agg(sum(col("d1") + col("c1")).as("t1"), sum(col("d2") + col("c2")).as("t2"))
+    walked.crossJoin(broadcast(tot))
+      .filter(col("d1") + col("d2") > 0)
   }
 
   /** Deterministic Poisson-ish bootstrap of mean event value: 32
@@ -6564,9 +6659,7 @@ object Queries {
     * smooth ships per day — the drift readout.
     */
   def ewmaQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     daily
       .groupBy()
       .agg(sort_array(collect_list(struct(col("d"), col("x")))).as("arr"))
@@ -6662,6 +6755,21 @@ object Queries {
       .orderBy(col("exact").desc, col("term"))
   }
 
+  /** [[adjPairs]] edges (a, b) with both endpoints' part brands (ba,
+    * bb) — the community readouts [[modularityQ]] and [[conductanceQ]]
+    * score brands as communities over this table.
+    */
+  private def brandEdges(spark: SparkSession, sfDir: String): DataFrame = {
+    val raw = adjPairs(spark, sfDir)
+    val brand = Tables.part(spark, sfDir)
+      .select(col("p_partkey"), col("p_brand"))
+    raw
+      .join(broadcast(brand.select(col("p_partkey").as("a"),
+        col("p_brand").as("ba"))), "a")
+      .join(broadcast(brand.select(col("p_partkey").as("b"),
+        col("p_brand").as("bb"))), "b")
+  }
+
   /** Newman modularity of the p_brand partition over the undirected
     * part-adjacency graph, fraction-free per community: with m
     * undirected edges, intra-community edge count e_c and community
@@ -6674,14 +6782,7 @@ object Queries {
     * of the edge list.
     */
   def modularityQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = adjPairs(spark, sfDir)
-    val brand = Tables.part(spark, sfDir)
-      .select(col("p_partkey"), col("p_brand"))
-    val e = raw
-      .join(broadcast(brand.select(col("p_partkey").as("a"),
-        col("p_brand").as("ba"))), "a")
-      .join(broadcast(brand.select(col("p_partkey").as("b"),
-        col("p_brand").as("bb"))), "b")
+    val e = brandEdges(spark, sfDir)
     val m = e.groupBy().agg(count(lit(1)).as("m"))
     val ec = e.filter(col("ba") === col("bb"))
       .groupBy(col("ba").as("brand")).agg(count(lit(1)).as("e_c"))
@@ -6741,9 +6842,7 @@ object Queries {
     * runs once over the calendar-bounded day array.
     */
   def holtQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     daily
       .groupBy()
       .agg(sort_array(collect_list(struct(col("d"), col("x")))).as("arr"))
@@ -6806,9 +6905,7 @@ object Queries {
          |        'b', $bNew,
          |        'ss', $ssNew)
          |    end))""".stripMargin
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     daily
       .groupBy()
       .agg(sort_array(collect_list(struct(col("d"), col("x")))).as("arr"))
@@ -6869,22 +6966,7 @@ object Queries {
     * aggregate, one bounded fold.
     */
   def kaplanMeierQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val u = Tables.events(spark, sfDir)
-      .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("user_id")).agg(min(col("d")).as("f"), max(col("d")).as("l"))
-    val md = u.groupBy().agg(max(col("l")).as("maxd"))
-    val byT = u.crossJoin(broadcast(md))
-      .select((col("l") - col("f")).as("t"),
-        (col("l") >= col("maxd") - 2).as("cens"))
-      .groupBy(col("t"))
-      .agg(sum(when(!col("cens"), 1L).otherwise(0L)).as("dd"),
-        sum(when(col("cens"), 1L).otherwise(0L)).as("cc"))
-    byT
-      .groupBy()
-      .agg(sort_array(collect_list(struct(col("t"), col("dd"), col("cc"))))
-        .as("arr"))
-      .select(col("arr"),
-        expr("aggregate(arr, 0L, (a, e) -> a + e.dd + e.cc)").as("total"))
+    survivalArr(spark, sfDir)
       .select(explode(expr(
         """aggregate(arr,
           |  named_struct('n', total, 's', 1000000L,
@@ -6912,9 +6994,7 @@ object Queries {
     * readout that CUSUM's changepoint scan doesn't give.
     */
   def mannKendallQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     val a = daily.select(col("d").as("da"), col("x").as("xa"))
     val b = daily.select(col("d").as("db"), col("x").as("xb"))
     val pairs = broadcast(a).join(b, col("da") < col("db"))
@@ -6938,44 +7018,10 @@ object Queries {
     * dropping the independence assumption.
     */
   def benjaminiYekutieliQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val u = Tables.events(spark, sfDir)
-      .groupBy(col("event_type"), col("user_id"))
-      .agg(sum(cents(col("value")).cast("long")).as("cts"))
-    val diffE3 =
-      """abs(1000 * (cast(sA as decimal(38,0)) * nB - cast(sB as decimal(38,0)) * nA)
-        |    div (cast(nA as decimal(38,0)) * nB))""".stripMargin
-    val obs = u.groupBy(col("event_type"))
-      .agg(sum(when(col("user_id") % 2 === 0, col("cts"))).as("sA"),
-        sum(when(col("user_id") % 2 === 1, col("cts"))).as("sB"),
-        sum(when(col("user_id") % 2 === 0, 1L)).as("nA"),
-        sum(when(col("user_id") % 2 === 1, 1L)).as("nB"))
-      .select(col("event_type"), expr(diffE3).as("obs_e3"))
-    val spine = u.sparkSession.range(1, 201).select(col("id").as("r"))
-    val perm = u.crossJoin(broadcast(spine))
-      .select(col("event_type"), col("r"),
-        (graft.ops.TextOps.portableHash64(
-          concat(col("user_id").cast("string"), lit(":"), col("r").cast("string"))) % 2)
-          .as("g"),
-        col("cts"))
-      .groupBy(col("event_type"), col("r"))
-      .agg(sum(when(col("g") === 0, col("cts"))).as("sA"),
-        sum(when(col("g") === 1, col("cts"))).as("sB"),
-        sum(when(col("g") === 0, 1L)).as("nA"),
-        sum(when(col("g") === 1, 1L)).as("nB"))
-      .select(col("event_type"), col("r"), expr(diffE3).as("d_e3"))
-    val p = perm.join(broadcast(obs), "event_type")
-      .groupBy(col("event_type"), col("obs_e3"))
-      .agg(sum(when(col("d_e3") >= col("obs_e3"), 1L).otherwise(0L)).as("n_ge"))
+    val p = eventPermCounts(spark, sfDir)
       .select(col("event_type"), col("obs_e3"),
         expr("1000000 * (1 + n_ge) div 201").as("p_e6"))
-    val pk = p.select(col("event_type").as("et2"), col("p_e6").as("p2"))
-    val ranked = p.as("x").join(pk.as("y"),
-        col("y.p2") < col("x.p_e6")
-          || (col("y.p2") === col("x.p_e6") && col("y.et2") < col("x.event_type")),
-        "left")
-      .groupBy(col("x.event_type").as("event_type"), col("x.obs_e3").as("obs_e3"),
-        col("x.p_e6").as("p_e6"))
-      .agg((count(col("y.et2")) + 1L).as("rnk"))
+    val ranked = rankByP(p)
     val mc = ranked.groupBy()
       .agg(count(lit(1)).as("m"), sum(expr("1000000 div rnk")).as("cm_e6"))
     val rc = ranked.crossJoin(broadcast(mc))
@@ -7226,9 +7272,7 @@ object Queries {
     * work on the ≤⌈days/7⌉² weekday supports.
     */
   def seasonalMkQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
       .withColumn("dow", col("d") % 7)
     val a = daily.select(col("dow"), col("d").as("da"), col("x").as("xa"))
     val b = daily.select(col("dow"), col("d").as("db"), col("x").as("xb"))
@@ -7261,24 +7305,8 @@ object Queries {
     * pool size, all exact integers.
     */
   def bm25SweepQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val perDoc = graft.sources.SessionMemo(spark, ("bm25_perdoc", sfDir)) {
-      Tables.documents(spark, sfDir)
-        .select(col("doc_id"), explode(split(trim(lower(col("text"))), "\\s+")).as("token"))
-        .filter(length(col("token")) >= 2)
-        .groupBy(col("doc_id")).agg(
-          count(lit(1)).as("dl"),
-          sum(when(col("token") === "hash", 1L).otherwise(0L)).as("tf_hash"),
-          sum(when(col("token") === "join", 1L).otherwise(0L)).as("tf_join"),
-          sum(when(col("token") === "vector", 1L).otherwise(0L)).as("tf_vector"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
     import org.apache.spark.sql.expressions.Window
-    val stats = perDoc.agg(count(lit(1)).cast("double").as("n_docs"),
-      (sum(col("dl")) / count(lit(1))).as("avgdl"))
-    val tf = perDoc.select(col("doc_id"), col("dl"), expr(
-        "stack(3, 'hash', tf_hash, 'join', tf_join, 'vector', tf_vector) AS (token, tf)"))
-      .filter(col("tf") > 0)
-    val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
+    val (stats, tf, dfreq) = bm25Terms(spark, sfDir)
     val grid = broadcast(tf.sparkSession.range(0, 6)
       .select(expr("element_at(array(60L, 60L, 120L, 120L, 180L, 180L), cast(id + 1 as int))")
         .as("k1_e2"),
@@ -7535,10 +7563,6 @@ object Queries {
     * build, each of which was re-running the same symmetrize +
     * distinct + repartition.
     */
-  /** Prof-only accessor for the und_src memo (stage profiling). */
-  private[graft] def callUndSrcEdges(spark: SparkSession, sfDir: String): DataFrame =
-    undSrcEdges(spark, sfDir)
-
   private def undSrcEdges(spark: SparkSession, sfDir: String): DataFrame =
     graft.sources.SessionMemo(spark, ("und_src", sfDir)) {
       undEdges(spark, sfDir).repartition(col("src"))
@@ -7602,14 +7626,7 @@ object Queries {
     * actually isolate; one edge scan, two bounded aggregates.
     */
   def conductanceQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = adjPairs(spark, sfDir)
-    val brand = Tables.part(spark, sfDir)
-      .select(col("p_partkey"), col("p_brand"))
-    val e = raw
-      .join(broadcast(brand.select(col("p_partkey").as("a"),
-        col("p_brand").as("ba"))), "a")
-      .join(broadcast(brand.select(col("p_partkey").as("b"),
-        col("p_brand").as("bb"))), "b")
+    val e = brandEdges(spark, sfDir)
     val m = e.groupBy().agg(count(lit(1)).as("m"))
     val cut = e.filter(col("ba") =!= col("bb"))
       .select(col("ba").as("brand"))
@@ -8015,8 +8032,22 @@ object Queries {
     * windows (Dósa 2007), so pack_eff_e6 is a certified-near-optimal
     * readout, not a heuristic guess.
     */
-  def packFfdQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val W = 2048L
+  def packFfdQ(spark: SparkSession, sfDir: String): DataFrame =
+    packQ(spark, sfDir, s"b2 + t <= $PackWindow")
+
+  /** Token window size of the sequence-packing queries. */
+  private val PackWindow = 2048L
+
+  /** Sequence packing shared by [[packFfdQ]] and [[packBestFitQ]]:
+    * docs over [[PackWindow]] tokens are counted aside, the rest salted
+    * into 32 buckets and folded per bucket in decreasing token order.
+    * `fits` is the placement rule, a predicate over a window's load
+    * `b2`, the doc's tokens `t` and all loads `bins`: the doc goes to
+    * the first window for which it holds.
+    */
+  private def packQ(spark: SparkSession, sfDir: String,
+      fits: String): DataFrame = {
+    val W = PackWindow
     val B = 32
     // tokenize ONCE: without the checkpoint, the oversize count and the
     // packable filter each re-run the token regex over the corpus
@@ -8039,14 +8070,14 @@ object Queries {
           col("doc_id").as("id")))).as("s"))
       .select(col("bucket"), col("cnt"), col("toks"),
         expr("transform(s, x -> -x.negn)").as("toks_desc"))
-    // the FFD fold: state = per-window loads; each doc goes to the
-    // FIRST window with room (positional update via the indexed
-    // transform), else opens a new window
+    // the fold: state = per-window loads; each doc goes to the FIRST
+    // window whose load passes `fits` (positional update via the
+    // indexed transform), else opens a new window
     val packed = lists.withColumn("bins", expr(
       s"""aggregate(toks_desc, cast(array() as array<bigint>),
          |  (bins, t) -> if(exists(bins, b -> b + t <= $W),
          |    transform(bins, (b, i) -> if(i = element_at(filter(
-         |        transform(bins, (b2, i2) -> if(b2 + t <= $W, i2, -1)),
+         |        transform(bins, (b2, i2) -> if($fits, i2, -1)),
          |        x -> x >= 0), 1), b + t, b)),
          |    concat(bins, array(t))))""".stripMargin))
       .select(col("cnt"), col("toks"), size(col("bins")).cast("long").as("nb"))
@@ -8074,47 +8105,9 @@ object Queries {
     * packing-efficiency readout into a measured A/B instead of a
     * single point.
     */
-  def packBestFitQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val W = 2048L
-    val B = 32
-    val d = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), TextOps.bpeTokenCount(col("text")).as("n"))
-      .localCheckpoint(true)
-    val sized = d.groupBy()
-      .agg(sum(when(col("n") > W, 1L).otherwise(0L)).as("n_oversize"))
-    val lists = d.filter(col("n") <= W)
-      .withColumn("bucket",
-        pmod(TextOps.portableHash64(concat(lit("pack:"), col("doc_id"))), lit(B)))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("cnt"), sum(col("n")).as("toks"),
-        sort_array(collect_list(struct((-col("n")).as("negn"),
-          col("doc_id").as("id")))).as("s"))
-      .select(col("bucket"), col("cnt"), col("toks"),
-        expr("transform(s, x -> -x.negn)").as("toks_desc"))
-    // best-fit fold: place into the FULLEST window that still fits
-    // (array_max over the fitting loads; first index on ties)
-    val packed = lists.withColumn("bins", expr(
-      s"""aggregate(toks_desc, cast(array() as array<bigint>),
-         |  (bins, t) -> if(exists(bins, b -> b + t <= $W),
-         |    transform(bins, (b, i) -> if(i = element_at(filter(
-         |        transform(bins, (b2, i2) -> if(b2 + t <= $W and
-         |          b2 = array_max(filter(bins, b3 -> b3 + t <= $W)),
-         |          i2, -1)),
-         |        x -> x >= 0), 1), b + t, b)),
-         |    concat(bins, array(t))))""".stripMargin))
-      .select(col("cnt"), col("toks"), size(col("bins")).cast("long").as("nb"))
-    packed.groupBy()
-      .agg(sum(col("cnt")).as("n_docs_packed"), sum(col("toks")).as("total_tokens"),
-        sum(col("nb")).as("n_windows"))
-      .crossJoin(broadcast(sized))
-      .select(col("n_docs_packed"), col("n_oversize"), col("total_tokens"),
-        col("n_windows"),
-        expr(s"cast(cast(total_tokens as decimal(38,0)) * 1000000" +
-          s" div (n_windows * $W) as bigint)").as("pack_eff_e6"),
-        expr(s"cast(cast(total_tokens as decimal(38,0)) * 1000000" +
-          s" div (n_docs_packed * $W) as bigint)").as("naive_eff_e6"),
-        (col("n_docs_packed") - col("n_windows")).as("windows_saved"))
-  }
+  def packBestFitQ(spark: SparkSession, sfDir: String): DataFrame =
+    packQ(spark, sfDir, s"b2 + t <= $PackWindow and" +
+      s" b2 = array_max(filter(bins, b3 -> b3 + t <= $PackWindow))")
 
   /** Deterministic training order (see [[ops.TrainOrder.epochOrder]]) —
     * the canonical pipeline stage after packing: 2 epochs over the
@@ -9936,18 +9929,7 @@ object Queries {
     * certified ANN front, this is its measuring stick.
     */
   def mrrQ(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = Similarity.normalized(Similarity.asDouble(Tables.embeddings(spark, sfDir)))
-    val q = probeSlice(e, 50)
-      .select(col("vec_id").as("query_id"), col("label").cast("long").as("true_label"),
-        col("embedding").as("qv"))
-    val c = e.select(col("vec_id").as("neighbor_id"), col("label").cast("long").as("n_label"),
-      col("embedding").as("cv"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", Similarity.dot(col("qv"), col("cv")))
-      .withColumn("rnk", row_number().over(w))
+    probeRanks(normEmbeddings(spark, sfDir))
       .filter(col("n_label") === col("true_label"))
       .groupBy(col("query_id"), col("true_label"))
       .agg(min(col("rnk")).cast("long").as("first_rel_rank"))
@@ -10079,9 +10061,7 @@ object Queries {
   private def dailyOlsStats(spark: SparkSession, sfDir: String,
       filter: Column = lit(true)): DataFrame = {
     val d38 = "decimal(38,0)"
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("y"))
+    val daily = dailyCounts(spark, sfDir, "y")
     val d0 = daily.groupBy().agg(min(col("d")).as("d0"))
     daily.crossJoin(broadcast(d0))
       .select((col("d") - col("d0")).as("t"), col("y"))
@@ -10113,9 +10093,7 @@ object Queries {
     * aggregate; zero windows.
     */
   def chowTestQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("y"))
+    val daily = dailyCounts(spark, sfDir, "y")
     val span = daily.groupBy().agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
       .select(col("d0"), expr("(d1 - d0) div 2").as("mid"))
     // den = 0 on a degenerate half (single day / gapped calendar):
@@ -10170,9 +10148,7 @@ object Queries {
     */
   def breuschPaganQ(spark: SparkSession, sfDir: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("y"))
+    val daily = dailyCounts(spark, sfDir, "y")
     val d0 = daily.groupBy().agg(min(col("d")).as("d0"))
     val ty = daily.crossJoin(broadcast(d0))
       .select((col("d") - col("d0")).as("t"), col("y"))
@@ -10222,9 +10198,7 @@ object Queries {
     */
   def cooksDistanceQ(spark: SparkSession, sfDir: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("y"))
+    val daily = dailyCounts(spark, sfDir, "y")
     val d0 = daily.groupBy().agg(min(col("d")).as("d0"))
     val ty = daily.crossJoin(broadcast(d0))
       .select((col("d") - col("d0")).as("t"), col("y"))
@@ -10324,9 +10298,7 @@ object Queries {
     */
   def neweyWestQ(spark: SparkSession, sfDir: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     val g = daily.groupBy().agg(count(lit(1)).as("n"), sum(col("x")).as("s"))
     val y = daily.crossJoin(broadcast(g))
       .select(col("d"), (col("n") * col("x") - col("s")).as("y"))
@@ -10396,9 +10368,7 @@ object Queries {
     */
   def ar1Q(spark: SparkSession, sfDir: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     val pairs = daily.as("a")
       .join(daily.as("b"), col("a.d") + 1 === col("b.d"))
       .select(col("a.x").cast(d38).as("x"), col("b.x").cast(d38).as("y"))
@@ -10419,6 +10389,22 @@ object Queries {
         expr("intercept_e6 + phi_e6 * x_last").as("forecast_e6"))
   }
 
+  /** Per-arm (g = user_id % 2) purchase-value moments in cents as
+    * decimal(38): n, sum s, sum of squares ssq, and the e6 variance of
+    * the mean vn_e6 — the base of [[welchTtestQ]] and [[tostQ]].
+    */
+  private def purchaseArmMoments(spark: SparkSession, sfDir: String): DataFrame = {
+    val d38 = "decimal(38,0)"
+    val ev = Tables.events(spark, sfDir)
+      .filter(col("event_type") === "purchase")
+      .select((col("user_id") % 2).as("g"), cents(col("value")).cast("long").as("cts"))
+    ev.groupBy(col("g"))
+      .agg(count(lit(1)).cast(d38).as("n"),
+        sum(col("cts").cast(d38)).as("s"),
+        sum(col("cts").cast(d38) * col("cts")).as("ssq"))
+      .withColumn("vn_e6", expr("(1000000 * (n * ssq - s * s)) div (n * n * (n - 1))"))
+  }
+
   /** Welch's unequal-variance t² on purchase spend between even/odd
     * user cohorts — the parametric sibling of [[mannWhitneyQ]], done
     * entirely as staged integer arithmetic: per-group sufficient
@@ -10431,15 +10417,7 @@ object Queries {
     * under decimal(38,0) far past 10⁹ rows per group).
     */
   def welchTtestQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val ev = Tables.events(spark, sfDir)
-      .filter(col("event_type") === "purchase")
-      .select((col("user_id") % 2).as("g"), cents(col("value")).cast("long").as("cts"))
-    val per = ev.groupBy(col("g"))
-      .agg(count(lit(1)).cast(d38).as("n"),
-        sum(col("cts").cast(d38)).as("s"),
-        sum(col("cts").cast(d38) * col("cts")).as("ssq"))
-      .withColumn("vn_e6", expr("(1000000 * (n * ssq - s * s)) div (n * n * (n - 1))"))
+    val per = purchaseArmMoments(spark, sfDir)
       .withColumn("m_e6", expr("s * 10000 div n"))
     per.groupBy()
       .agg(max(when(col("g") === 0, col("n"))).as("n0"),
@@ -10455,6 +10433,70 @@ object Queries {
         col("m0").as("m_even_e6"), col("m1").as("m_odd_e6"), col("diff_e3"),
         expr("""cast((cast(1000000 as decimal(38,0)) * diff_e3 * diff_e3)
                 div nullif(vn0 + vn1, 0) as bigint)""").as("t2_e6"))
+  }
+
+  /** The two-arm permutation machinery shared by the permutation-test
+    * family, per group of `keys`: users' total spend in cents (`u`),
+    * the observed odd-vs-even-user |mean gap| at e3 (`obs`: keys,
+    * obs_e3) and its 200 hash-relabelled replicates (`perm`: keys, r,
+    * d_e3). See [[permutationTestQ]] for why the relabel hash is
+    * full-width.
+    */
+  private def permDiffs(spark: SparkSession, sfDir: String,
+      keys: Seq[String]): (DataFrame, DataFrame) = {
+    val u = Tables.events(spark, sfDir)
+      .groupBy((keys :+ "user_id").map(col): _*)
+      .agg(sum(cents(col("value")).cast("long")).as("cts"))
+    val diffE3 =
+      """abs(1000 * (cast(sA as decimal(38,0)) * nB - cast(sB as decimal(38,0)) * nA)
+        |    div (cast(nA as decimal(38,0)) * nB))""".stripMargin
+    val obs = u.groupBy(keys.map(col): _*)
+      .agg(sum(when(col("user_id") % 2 === 0, col("cts"))).as("sA"),
+        sum(when(col("user_id") % 2 === 1, col("cts"))).as("sB"),
+        sum(when(col("user_id") % 2 === 0, 1L)).as("nA"),
+        sum(when(col("user_id") % 2 === 1, 1L)).as("nB"))
+      .select(keys.map(col) :+ expr(diffE3).as("obs_e3"): _*)
+    val spine = spark.range(1, 201).select(col("id").as("r"))
+    val perm = u.crossJoin(broadcast(spine))
+      .select(keys.map(col) ++ Seq(col("r"),
+        (graft.ops.TextOps.portableHash64(
+          concat(col("user_id").cast("string"), lit(":"), col("r").cast("string"))) % 2)
+          .as("g"),
+        col("cts")): _*)
+      .groupBy((keys :+ "r").map(col): _*)
+      .agg(sum(when(col("g") === 0, col("cts"))).as("sA"),
+        sum(when(col("g") === 1, col("cts"))).as("sB"),
+        sum(when(col("g") === 0, 1L)).as("nA"),
+        sum(when(col("g") === 1, 1L)).as("nB"))
+      .select((keys :+ "r").map(col) :+ expr(diffE3).as("d_e3"): _*)
+    (obs, perm)
+  }
+
+  /** Per-event-type permutation counts (event_type, obs_e3, n_ge =
+    * replicates at least as extreme as observed) for the
+    * multiple-testing corrections ([[fdrBhQ]], [[holmBonferroniQ]],
+    * [[benjaminiYekutieliQ]]).
+    */
+  private def eventPermCounts(spark: SparkSession, sfDir: String): DataFrame = {
+    val (obs, perm) = permDiffs(spark, sfDir, Seq("event_type"))
+    perm.join(broadcast(obs), "event_type")
+      .groupBy(col("event_type"), col("obs_e3"))
+      .agg(sum(when(col("d_e3") >= col("obs_e3"), 1L).otherwise(0L)).as("n_ge"))
+  }
+
+  /** Ascending p-value rank (ties by event type) of (event_type,
+    * obs_e3, p_e6) rows via a bounded left self-join: rnk = 1 + the
+    * number of rows ranked before.
+    */
+  private def rankByP(p: DataFrame): DataFrame = {
+    val pk = p.select(col("event_type").as("et2"), col("p_e6").as("p2"))
+    p.as("x").join(pk.as("y"),
+        col("y.p2") < col("x.p_e6")
+          || (col("y.p2") === col("x.p_e6") && col("y.et2") < col("x.event_type")),
+        "left")
+      .groupBy(col("x.event_type").as("event_type"), col("x.obs_e3").as("obs_e3"),
+        col("x.p_e6").as("p_e6"))
+      .agg((count(col("y.et2")) + 1L).as("rnk"))
   }
 
   /** Permutation test of per-user total spend between even/odd user
@@ -10475,31 +10517,7 @@ object Queries {
     * of map-side work, no shuffle wider than 200 groups.
     */
   def permutationTestQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val u = Tables.events(spark, sfDir)
-      .groupBy(col("user_id"))
-      .agg(sum(cents(col("value")).cast("long")).as("cts"))
-    val diffE3 =
-      """abs(1000 * (cast(sA as decimal(38,0)) * nB - cast(sB as decimal(38,0)) * nA)
-        |    div (cast(nA as decimal(38,0)) * nB))""".stripMargin
-    val obs = u.groupBy()
-      .agg(sum(when(col("user_id") % 2 === 0, col("cts"))).as("sA"),
-        sum(when(col("user_id") % 2 === 1, col("cts"))).as("sB"),
-        sum(when(col("user_id") % 2 === 0, 1L)).as("nA"),
-        sum(when(col("user_id") % 2 === 1, 1L)).as("nB"))
-      .select(expr(diffE3).as("obs_e3"))
-    val spine = spark.range(1, 201).select(col("id").as("r"))
-    val perm = u.crossJoin(broadcast(spine))
-      .select(col("r"),
-        (graft.ops.TextOps.portableHash64(
-          concat(col("user_id").cast("string"), lit(":"), col("r").cast("string"))) % 2)
-          .as("g"),
-        col("cts"))
-      .groupBy(col("r"))
-      .agg(sum(when(col("g") === 0, col("cts"))).as("sA"),
-        sum(when(col("g") === 1, col("cts"))).as("sB"),
-        sum(when(col("g") === 0, 1L)).as("nA"),
-        sum(when(col("g") === 1, 1L)).as("nB"))
-      .select(col("r"), expr(diffE3).as("d_e3"))
+    val (obs, perm) = permDiffs(spark, sfDir, Seq())
     perm.crossJoin(broadcast(obs))
       .groupBy(col("obs_e3"))
       .agg(sum(when(col("d_e3") >= col("obs_e3"), 1L).otherwise(0L)).as("n_ge"))
@@ -10522,30 +10540,7 @@ object Queries {
     * calendar, never by |users|.
     */
   def logrankQ(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val u = Tables.events(spark, sfDir)
-      .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("user_id")).agg(min(col("d")).as("f"), max(col("d")).as("l"))
-    val md = u.groupBy().agg(max(col("l")).as("maxd"))
-    val per = u.crossJoin(broadcast(md))
-      .select((col("user_id") % 2).as("g"), (col("l") - col("f")).as("t"),
-        (col("l") >= col("maxd") - 2).as("cens"))
-    val sup = per.groupBy(col("t"))
-      .agg(sum(when(col("g") === 0 && !col("cens"), 1L).otherwise(0L)).as("d1"),
-        sum(when(col("g") === 0 && col("cens"), 1L).otherwise(0L)).as("c1"),
-        sum(when(col("g") === 1 && !col("cens"), 1L).otherwise(0L)).as("d2"),
-        sum(when(col("g") === 1 && col("cens"), 1L).otherwise(0L)).as("c2"))
-    val w = Window.partitionBy(
-        graft.functions.GraftFunctions.singleton_key(col("t")))
-      .orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val walked = sup
-      .withColumn("cl1", coalesce(sum(col("d1") + col("c1")).over(w), lit(0L)))
-      .withColumn("cl2", coalesce(sum(col("d2") + col("c2")).over(w), lit(0L)))
-    val tot = sup.groupBy()
-      .agg(sum(col("d1") + col("c1")).as("t1"), sum(col("d2") + col("c2")).as("t2"))
-    val terms = walked.crossJoin(broadcast(tot))
-      .filter(col("d1") + col("d2") > 0)
+    val terms = armEventTimes(spark, sfDir)
       .select(col("d1"), col("d2"), (col("d1") + col("d2")).as("dd"),
         (col("t1") - col("cl1")).as("n1"), (col("t2") - col("cl2")).as("n2"))
       .withColumn("n", col("n1") + col("n2"))
@@ -10575,30 +10570,7 @@ object Queries {
     * one time-support walk (WindowLint: time-support contract).
     */
   def coxQ(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val u = Tables.events(spark, sfDir)
-      .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("user_id")).agg(min(col("d")).as("f"), max(col("d")).as("l"))
-    val md = u.groupBy().agg(max(col("l")).as("maxd"))
-    val per = u.crossJoin(broadcast(md))
-      .select((col("user_id") % 2).as("g"), (col("l") - col("f")).as("t"),
-        (col("l") >= col("maxd") - 2).as("cens"))
-    val sup = per.groupBy(col("t"))
-      .agg(sum(when(col("g") === 0 && !col("cens"), 1L).otherwise(0L)).as("d1"),
-        sum(when(col("g") === 0 && col("cens"), 1L).otherwise(0L)).as("c1"),
-        sum(when(col("g") === 1 && !col("cens"), 1L).otherwise(0L)).as("d2"),
-        sum(when(col("g") === 1 && col("cens"), 1L).otherwise(0L)).as("c2"))
-    val w = Window.partitionBy(
-        graft.functions.GraftFunctions.singleton_key(col("t")))
-      .orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val walked = sup
-      .withColumn("cl1", coalesce(sum(col("d1") + col("c1")).over(w), lit(0L)))
-      .withColumn("cl2", coalesce(sum(col("d2") + col("c2")).over(w), lit(0L)))
-    val tot = sup.groupBy()
-      .agg(sum(col("d1") + col("c1")).as("t1"), sum(col("d2") + col("c2")).as("t2"))
-    val terms = walked.crossJoin(broadcast(tot))
-      .filter(col("d1") + col("d2") > 0)
+    val terms = armEventTimes(spark, sfDir)
       .select(col("d1"), (col("d1") + col("d2")).as("dd"),
         (col("t1") - col("cl1")).as("n1"), (col("t2") - col("cl2")).as("n2"))
       .withColumn("n", col("n1") + col("n2"))
@@ -11054,9 +11026,7 @@ object Queries {
     * recurring weekly shape; rare word = anomalous stretch).
     */
   def saxQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     val d0 = daily.groupBy().agg(min(col("d")).as("d0"))
     val paa = daily.crossJoin(broadcast(d0))
       .groupBy(expr("(d - d0) div 4").as("seg"))
@@ -11150,9 +11120,7 @@ object Queries {
     * raw events.
     */
   def dtwQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     val d0 = daily.groupBy().agg(min(col("d")).as("d0"))
     val wk = daily.crossJoin(broadcast(d0))
       .select(expr("(d - d0) div 7").as("w"), expr("(d - d0) % 7").as("dow"), col("x"))
@@ -11228,9 +11196,7 @@ object Queries {
   def changepointQ(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val d38 = "decimal(38,0)"
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     val w = Window.partitionBy(
         graft.functions.GraftFunctions.singleton_key(col("d")))
       .orderBy(col("d"))
@@ -11531,19 +11497,11 @@ object Queries {
     */
   def mapAtKQ(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = Similarity.normalized(Similarity.asDouble(Tables.embeddings(spark, sfDir)))
-    val q = probeSlice(e, 50)
-      .select(col("vec_id").as("query_id"), col("label").cast("long").as("true_label"),
-        col("embedding").as("qv"))
-    val c = e.select(col("vec_id").as("neighbor_id"), col("label").cast("long").as("n_label"),
-      col("embedding").as("cv"))
+    val e = normEmbeddings(spark, sfDir)
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
     val relTotal = e.groupBy(col("label").cast("long").as("true_label"))
       .agg(count(lit(1)).as("n_lab"))
-    c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", Similarity.dot(col("qv"), col("cv")))
-      .withColumn("rnk", row_number().over(w))
+    probeRanks(e)
       .filter(col("rnk") <= 10)
       .withColumn("rel", when(col("n_label") === col("true_label"), 1L).otherwise(0L))
       .withColumn("cumrel",
@@ -11688,9 +11646,7 @@ object Queries {
     val k = s"($pp) * 1000000L div (($pp) + 400000000L)"
     val xNew = s"$prev.xe + ($k) * (e.x * 1000000L - $prev.xe) div 1000000L"
     val pNew = s"(1000000L - ($k)) * ($pp) div 1000000L"
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     daily
       .groupBy()
       .agg(sort_array(collect_list(struct(col("d"), col("x")))).as("arr"))
@@ -11722,9 +11678,7 @@ object Queries {
     */
   def pageHinkleyQ(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     val w = Window
       .partitionBy(graft.functions.GraftFunctions.singleton_key(col("d")))
       .orderBy(col("d"))
@@ -11804,15 +11758,7 @@ object Queries {
     * division.
     */
   def tostQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val ev = Tables.events(spark, sfDir)
-      .filter(col("event_type") === "purchase")
-      .select((col("user_id") % 2).as("g"), cents(col("value")).cast("long").as("cts"))
-    val per = ev.groupBy(col("g"))
-      .agg(count(lit(1)).cast(d38).as("n"),
-        sum(col("cts").cast(d38)).as("s"),
-        sum(col("cts").cast(d38) * col("cts")).as("ssq"))
-      .withColumn("vn_e6", expr("(1000000 * (n * ssq - s * s)) div (n * n * (n - 1))"))
+    val per = purchaseArmMoments(spark, sfDir)
     per.groupBy()
       .agg(max(when(col("g") === 0, col("n"))).as("n0"),
         max(when(col("g") === 1, col("n"))).as("n1"),
@@ -11927,6 +11873,58 @@ object Queries {
       .orderBy(col("d"))
   }
 
+  /** The planted embedding corpus of [[dbscanQ]] and [[singleLinkageQ]]:
+    * every vector plus near copies (ids +10000/+20000 of every 7th,
+    * one dim nudged by ±0.008) and looser chains (+30000/+40000 of
+    * every 11th), normalized (vec_id, label, embedding).
+    */
+  private def plantedEmbeddings(spark: SparkSession, sfDir: String): DataFrame = {
+    val e0 = Similarity.asDouble(Tables.embeddings(spark, sfDir))
+      .select(col("vec_id"), col("label"), col("embedding"))
+    def plant(idMod: Int, rem: Int, off: Long, dim: Int, delta: Double) =
+      e0.filter(col("vec_id") % idMod === rem).select(
+        (col("vec_id") + off).as("vec_id"), col("label"),
+        transform(col("embedding"), (x, i) =>
+          when(i === dim, x + delta).otherwise(x)).as("embedding"))
+    val planted = e0
+      .union(plant(7, 0, 10000L, 0, 0.008))
+      .union(plant(7, 0, 20000L, 1, -0.008))
+      .union(plant(11, 3, 30000L, 0, 0.07))
+      .union(plant(11, 3, 40000L, 0, 0.14))
+    Similarity.normalized(planted)
+  }
+
+  /** `base` with two 4-bit sign-LSH band codes (label, vec_id,
+    * embedding, c0, c1).
+    */
+  private def bandCodes(base: DataFrame): DataFrame = {
+    // sub-block the label cell with 2 bands of 4 sign-LSH bits each:
+    // close pairs (cos >= eps) collide in >= 1 band w.h.p. (planted
+    // pairs at cos ~0.9999 collide with prob ~0.9997), while the
+    // within-label candidate volume drops ~16x per band — the x100
+    // soak showed the bare label block going quadratic. Pairs are
+    // deduped AFTER the cosine gate, so the band fan-out never
+    // shuffles the pre-filter candidate stream twice.
+    def bandCode(lo: Int): Column = LshPlanes.slice(lo, lo + 4).zipWithIndex
+      .map { case (plane, p) =>
+        when(graft.functions.GraftFunctions.dot_product(
+          col("embedding"), typedLit(plane)) > 0, lit(1 << p)).otherwise(lit(0))
+      }.reduce(_ + _)
+    base.select(col("label"), col("vec_id"), col("embedding"),
+      bandCode(0).as("c0"), bandCode(4).as("c1"))
+  }
+
+  /** Same-label pairs va < vb of [[bandCodes]] rows that share
+    * band code column `c`, with both embeddings (va, vb, ea, eb, ...).
+    */
+  private def bandPairs(withCodes: DataFrame, c: String): DataFrame = {
+    val a = withCodes.select(col("label"), col(c).as("code"),
+      col("vec_id").as("va"), col("embedding").as("ea"))
+    val b = withCodes.select(col("label"), col(c).as("code"),
+      col("vec_id").as("vb"), col("embedding").as("eb"))
+    a.join(b, Seq("label", "code")).filter(col("va") < col("vb"))
+  }
+
   /** DBSCAN density clustering over the embedding corpus with planted
     * structure: tight triples (vec_id % 7 == 0 — all three mutually
     * within eps → a 3-core cluster) and chains (vec_id % 11 == 3 —
@@ -11945,39 +11943,10 @@ object Queries {
     * the soaked hybrid — the density sibling of [[Similarity.kmeans]].
     */
   def dbscanQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val e0 = Similarity.asDouble(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("label"), col("embedding"))
-    def plant(idMod: Int, rem: Int, off: Long, dim: Int, delta: Double) =
-      e0.filter(col("vec_id") % idMod === rem).select(
-        (col("vec_id") + off).as("vec_id"), col("label"),
-        transform(col("embedding"), (x, i) =>
-          when(i === dim, x + delta).otherwise(x)).as("embedding"))
-    val planted = e0
-      .union(plant(7, 0, 10000L, 0, 0.008))
-      .union(plant(7, 0, 20000L, 1, -0.008))
-      .union(plant(11, 3, 30000L, 0, 0.07))
-      .union(plant(11, 3, 40000L, 0, 0.14))
-    val base = Similarity.normalized(planted)
-    // sub-block the label cell with 2 bands of 4 sign-LSH bits each:
-    // close pairs (cos >= eps) collide in >= 1 band w.h.p. (planted
-    // pairs at cos ~0.9999 collide with prob ~0.9997), while the
-    // within-label candidate volume drops ~16x per band — the x100
-    // soak showed the bare label block going quadratic. Pairs are
-    // deduped AFTER the cosine gate, so the band fan-out never
-    // shuffles the pre-filter candidate stream twice.
-    def bandCode(lo: Int): Column = LshPlanes.slice(lo, lo + 4).zipWithIndex
-      .map { case (plane, p) =>
-        when(graft.functions.GraftFunctions.dot_product(
-          col("embedding"), typedLit(plane)) > 0, lit(1 << p)).otherwise(lit(0))
-      }.reduce(_ + _)
-    val withCodes = base.select(col("label"), col("vec_id"), col("embedding"),
-      bandCode(0).as("c0"), bandCode(4).as("c1"))
+    val base = plantedEmbeddings(spark, sfDir)
+    val withCodes = bandCodes(base)
     val pairs = Seq("c0", "c1").map { c =>
-      val a = withCodes.select(col("label"), col(c).as("code"),
-        col("vec_id").as("va"), col("embedding").as("ea"))
-      val b = withCodes.select(col("label"), col(c).as("code"),
-        col("vec_id").as("vb"), col("embedding").as("eb"))
-      a.join(b, Seq("label", "code")).filter(col("va") < col("vb"))
+      bandPairs(withCodes, c)
         .withColumn("cs", Similarity.dot(col("ea"), col("eb")))
         .filter(col("cs") >= 0.995)
         .select(col("va"), col("vb"))
@@ -12722,6 +12691,22 @@ object Queries {
       .orderBy(col("probe_id"))
   }
 
+  /** The 3-pass perceptron's scores cut into 10 equal-width buckets
+    * over [min, max]: (bucket, n_docs, n_pos) — the calibration base of
+    * [[brierQ]] and [[liftGainsQ]].
+    */
+  private def perceptronScoreBuckets(spark: SparkSession, sfDir: String): DataFrame = {
+    val (w, b) = pcptModel(spark, sfDir, 3)
+    val scored = graft.ops.Classify.perceptronScoreOnCounts(
+      pcptCounts(spark, sfDir), w, b, "doc_id", Seq("lang", "y"), Seq("y"))
+    val mm = scored.agg(min(col("score")).as("mn"), max(col("score")).as("mx"))
+    scored.crossJoin(broadcast(mm))
+      .select(col("y"), expr("(score - mn) * 10 div (mx - mn + 1)").as("bucket"))
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(when(col("y") === 1L, 1L).otherwise(0L)).as("n_pos"))
+  }
+
   /** Brier score of the bucket-calibrated perceptron language
     * classifier ([[calibrationQ]]'s reliability table turned into ONE
     * number): with per-bucket p̂ = n_pos/n_docs as an exact e6
@@ -12732,15 +12717,7 @@ object Queries {
     */
   def brierQ(spark: SparkSession, sfDir: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val (w, b) = pcptModel(spark, sfDir, 3)
-    val scored = graft.ops.Classify.perceptronScoreOnCounts(
-      pcptCounts(spark, sfDir), w, b, "doc_id", Seq("lang", "y"), Seq("y"))
-    val mm = scored.agg(min(col("score")).as("mn"), max(col("score")).as("mx"))
-    val bk = scored.crossJoin(broadcast(mm))
-      .select(col("y"), expr("(score - mn) * 10 div (mx - mn + 1)").as("bucket"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("y") === 1L, 1L).otherwise(0L)).as("n_pos"))
+    val bk = perceptronScoreBuckets(spark, sfDir)
       .withColumn("p_e6", expr("n_pos * 1000000 div n_docs"))
     bk.select(col("n_docs"), col("n_pos"), expr(
       s"""  cast(n_pos as $d38) * (1000000 - p_e6) * (1000000 - p_e6)
@@ -12762,15 +12739,7 @@ object Queries {
     */
   def liftGainsQ(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (w, b) = pcptModel(spark, sfDir, 3)
-    val scored = graft.ops.Classify.perceptronScoreOnCounts(
-      pcptCounts(spark, sfDir), w, b, "doc_id", Seq("lang", "y"), Seq("y"))
-    val mm = scored.agg(min(col("score")).as("mn"), max(col("score")).as("mx"))
-    val bk = scored.crossJoin(broadcast(mm))
-      .select(col("y"), expr("(score - mn) * 10 div (mx - mn + 1)").as("bucket"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("y") === 1L, 1L).otherwise(0L)).as("n_pos"))
+    val bk = perceptronScoreBuckets(spark, sfDir)
     val tot = bk.groupBy().agg(sum(col("n_docs")).as("nn"), sum(col("n_pos")).as("pp"))
     val wd = Window
       .partitionBy(graft.functions.GraftFunctions.singleton_key(col("bucket")))
@@ -12796,32 +12765,9 @@ object Queries {
     * cluster, clustered mass.
     */
   def singleLinkageQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val e0 = Similarity.asDouble(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("label"), col("embedding"))
-    def plant(idMod: Int, rem: Int, off: Long, dim: Int, delta: Double) =
-      e0.filter(col("vec_id") % idMod === rem).select(
-        (col("vec_id") + off).as("vec_id"), col("label"),
-        transform(col("embedding"), (x, i) =>
-          when(i === dim, x + delta).otherwise(x)).as("embedding"))
-    val planted = e0
-      .union(plant(7, 0, 10000L, 0, 0.008))
-      .union(plant(7, 0, 20000L, 1, -0.008))
-      .union(plant(11, 3, 30000L, 0, 0.07))
-      .union(plant(11, 3, 40000L, 0, 0.14))
-    val base = Similarity.normalized(planted)
-    def bandCode(lo: Int): Column = LshPlanes.slice(lo, lo + 4).zipWithIndex
-      .map { case (plane, p) =>
-        when(graft.functions.GraftFunctions.dot_product(
-          col("embedding"), typedLit(plane)) > 0, lit(1 << p)).otherwise(lit(0))
-      }.reduce(_ + _)
-    val withCodes = base.select(col("label"), col("vec_id"), col("embedding"),
-      bandCode(0).as("c0"), bandCode(4).as("c1"))
+    val withCodes = bandCodes(plantedEmbeddings(spark, sfDir))
     val cand0 = Seq("c0", "c1").map { c =>
-      val a = withCodes.select(col("label"), col(c).as("code"),
-        col("vec_id").as("va"), col("embedding").as("ea"))
-      val b = withCodes.select(col("label"), col(c).as("code"),
-        col("vec_id").as("vb"), col("embedding").as("eb"))
-      a.join(b, Seq("label", "code")).filter(col("va") < col("vb"))
+      bandPairs(withCodes, c)
         .select(col("va"), col("vb"), col("ea"), col("eb"))
     }.reduce(_ union _)
     val cand = cand0
@@ -12872,6 +12818,28 @@ object Queries {
       .orderBy(col("lift_e6"))
   }
 
+  /** Per-user first-7 event-type sequences (users < 8), every user
+    * pair (user_a < user_b, arrays a and b), and the unrolled DP
+    * lattice `cells` (d_i_j columns) over a/b — the base of
+    * [[needlemanQ]] and [[lcsSimQ]].
+    */
+  private def userPairDp(spark: SparkSession, sfDir: String,
+      cells: Seq[(String, String)]): DataFrame = {
+    val seqs = Tables.events(spark, sfDir)
+      .filter(col("user_id") < 8)
+      .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"),
+        col("event_type").as("et"))
+      .groupBy(col("user_id"))
+      .agg(expr("""slice(transform(array_sort(collect_list(
+        struct(us, event_id, et))), s -> s.et), 1, 7)""").as("arr"))
+      .filter(size(col("arr")) === 7)
+    val pairs = seqs.as("p")
+      .join(seqs.as("q"), col("q.user_id") > col("p.user_id"))
+      .select(col("p.user_id").as("user_a"), col("q.user_id").as("user_b"),
+        col("p.arr").as("a"), col("q.arr").as("b"))
+    cells.foldLeft(pairs) { case (df, (n, e)) => df.withColumn(n, expr(e)) }
+  }
+
   /** Needleman-Wunsch global alignment between user event-type
     * sequences (match +2, mismatch −1, gap −1): how similar are two
     * users' first-7-event journeys ALLOWING insertions/deletions —
@@ -12884,21 +12852,9 @@ object Queries {
     * pairs are probe-bounded (users 0–7).
     */
   def needlemanQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val seqs = Tables.events(spark, sfDir)
-      .filter(col("user_id") < 8)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"),
-        col("event_type").as("et"))
-      .groupBy(col("user_id"))
-      .agg(expr("""slice(transform(array_sort(collect_list(
-        struct(us, event_id, et))), s -> s.et), 1, 7)""").as("arr"))
-      .filter(size(col("arr")) === 7)
-    var df = seqs.as("p")
-      .join(seqs.as("q"), col("q.user_id") > col("p.user_id"))
-      .select(col("p.user_id").as("user_a"), col("q.user_id").as("user_b"),
-        col("p.arr").as("a"), col("q.arr").as("b"))
-    for ((n, e) <- nwCells(i => s"element_at(a, $i)", j => s"element_at(b, $j)", 7))
-      df = df.withColumn(n, expr(e))
-    df.select(col("user_a"), col("user_b"),
+    userPairDp(spark, sfDir,
+        nwCells(i => s"element_at(a, $i)", j => s"element_at(b, $j)", 7))
+      .select(col("user_a"), col("user_b"),
         col("d_7_7").cast("long").as("nw_score"))
       .orderBy(col("user_a"), col("user_b"))
   }
@@ -13488,6 +13444,28 @@ object Queries {
       .orderBy(col("region"))
   }
 
+  /** Per-region 2×2 table of BUILDING-segment exposure vs having an
+    * URGENT order (region, a, b, c, d: exposed/unexposed × with/without)
+    * — the input of [[oddsRatioQ]] and [[evalueQ]].
+    */
+  private def regionUrgentTable(spark: SparkSession, sfDir: String): DataFrame = {
+    val urgent = Tables.orders(spark, sfDir)
+      .filter(col("o_orderpriority") === "1-URGENT")
+      .select(col("o_custkey").as("c_custkey")).distinct()
+    val c = Tables.customer(spark, sfDir)
+      .join(broadcast(Tables.nation(spark, sfDir)),
+        col("c_nationkey") === col("n_nationkey"))
+      .join(urgent.withColumn("outc", lit(1L)), Seq("c_custkey"), "left")
+      .select(col("n_regionkey").as("region"),
+        (col("c_mktsegment") === "BUILDING").as("exp"),
+        coalesce(col("outc"), lit(0L)).as("outc"))
+    c.groupBy(col("region"))
+      .agg(sum(when(col("exp") && col("outc") === 1L, 1L).otherwise(0L)).as("a"),
+        sum(when(col("exp") && col("outc") === 0L, 1L).otherwise(0L)).as("b"),
+        sum(when(!col("exp") && col("outc") === 1L, 1L).otherwise(0L)).as("c"),
+        sum(when(!col("exp") && col("outc") === 0L, 1L).otherwise(0L)).as("d"))
+  }
+
   /** Odds ratio (with Haldane–Anscombe correction), risk ratio and
     * Yule's Q per region for exposure = BUILDING market segment,
     * outcome = the customer placed ≥ 1 URGENT order — the 2×2
@@ -13499,20 +13477,7 @@ object Queries {
     * conditional counts in a single region-bounded aggregate.
     */
   def oddsRatioQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val urgent = Tables.orders(spark, sfDir)
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_custkey").as("c_custkey")).distinct()
-    val c = Tables.customer(spark, sfDir)
-      .join(broadcast(Tables.nation(spark, sfDir)), col("c_nationkey") === col("n_nationkey"))
-      .join(urgent.withColumn("outc", lit(1L)), Seq("c_custkey"), "left")
-      .select(col("n_regionkey").as("region"),
-        (col("c_mktsegment") === "BUILDING").as("exp"),
-        coalesce(col("outc"), lit(0L)).as("outc"))
-    c.groupBy(col("region"))
-      .agg(sum(when(col("exp") && col("outc") === 1L, 1L).otherwise(0L)).as("a"),
-        sum(when(col("exp") && col("outc") === 0L, 1L).otherwise(0L)).as("b"),
-        sum(when(!col("exp") && col("outc") === 1L, 1L).otherwise(0L)).as("c"),
-        sum(when(!col("exp") && col("outc") === 0L, 1L).otherwise(0L)).as("d"))
+    regionUrgentTable(spark, sfDir)
       .select(col("region"), col("a"), col("b"), col("c"), col("d"),
         expr("(2*a+1) * (2*d+1) * 1000000 div ((2*b+1) * (2*c+1))").as("or_haldane_e6"),
         expr("""case when c > 0 and a + b > 0
@@ -13792,18 +13757,7 @@ object Queries {
     * pass shared with the other rank metrics.
     */
   def errQ(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = Similarity.normalized(Similarity.asDouble(Tables.embeddings(spark, sfDir)))
-    val q = probeSlice(e, 50)
-      .select(col("vec_id").as("query_id"), col("label").cast("long").as("true_label"),
-        col("embedding").as("qv"))
-    val c = e.select(col("vec_id").as("neighbor_id"), col("label").cast("long").as("n_label"),
-      col("embedding").as("cv"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    val graded = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", Similarity.dot(col("qv"), col("cv")))
-      .withColumn("rnk", row_number().over(w))
+    val graded = probeRanks(normEmbeddings(spark, sfDir))
       .filter(col("rnk") <= 5)
       .withColumn("g", expr("""case when n_label = true_label then 3
         when abs(n_label - true_label) = 1 then 1 else 0 end"""))
@@ -14010,9 +13964,7 @@ object Queries {
     */
   def pacfQ(spark: SparkSession, sfDir: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     val g = daily.groupBy().agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
       sum(expr("cast(x as decimal(38,0))") * col("x")).as("sxx"))
     val spine = broadcast(
@@ -14126,34 +14078,7 @@ object Queries {
     * via a bounded self-join (no singleton window).
     */
   def fdrBhQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val u = Tables.events(spark, sfDir)
-      .groupBy(col("event_type"), col("user_id"))
-      .agg(sum(cents(col("value")).cast("long")).as("cts"))
-    val diffE3 =
-      """abs(1000 * (cast(sA as decimal(38,0)) * nB - cast(sB as decimal(38,0)) * nA)
-        |    div (cast(nA as decimal(38,0)) * nB))""".stripMargin
-    val obs = u.groupBy(col("event_type"))
-      .agg(sum(when(col("user_id") % 2 === 0, col("cts"))).as("sA"),
-        sum(when(col("user_id") % 2 === 1, col("cts"))).as("sB"),
-        sum(when(col("user_id") % 2 === 0, 1L)).as("nA"),
-        sum(when(col("user_id") % 2 === 1, 1L)).as("nB"))
-      .select(col("event_type"), expr(diffE3).as("obs_e3"))
-    val spine = spark.range(1, 201).select(col("id").as("r"))
-    val perm = u.crossJoin(broadcast(spine))
-      .select(col("event_type"), col("r"),
-        (graft.ops.TextOps.portableHash64(
-          concat(col("user_id").cast("string"), lit(":"), col("r").cast("string"))) % 2)
-          .as("g"),
-        col("cts"))
-      .groupBy(col("event_type"), col("r"))
-      .agg(sum(when(col("g") === 0, col("cts"))).as("sA"),
-        sum(when(col("g") === 1, col("cts"))).as("sB"),
-        sum(when(col("g") === 0, 1L)).as("nA"),
-        sum(when(col("g") === 1, 1L)).as("nB"))
-      .select(col("event_type"), col("r"), expr(diffE3).as("d_e3"))
-    val p = perm.join(broadcast(obs), "event_type")
-      .groupBy(col("event_type"), col("obs_e3"))
-      .agg(sum(when(col("d_e3") >= col("obs_e3"), 1L).otherwise(0L)).as("n_ge"))
+    val p = eventPermCounts(spark, sfDir)
       .select(col("event_type"), col("obs_e3"), col("n_ge"),
         expr("1000000 * (1 + n_ge) div 201").as("p_e6"))
     val m = p.groupBy().agg(count(lit(1)).as("m"))
@@ -14242,45 +14167,11 @@ object Queries {
     * value-support-sized), capped at 1. Rejection at α = 0.05.
     */
   def holmBonferroniQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val u = Tables.events(spark, sfDir)
-      .groupBy(col("event_type"), col("user_id"))
-      .agg(sum(cents(col("value")).cast("long")).as("cts"))
-    val diffE3 =
-      """abs(1000 * (cast(sA as decimal(38,0)) * nB - cast(sB as decimal(38,0)) * nA)
-        |    div (cast(nA as decimal(38,0)) * nB))""".stripMargin
-    val obs = u.groupBy(col("event_type"))
-      .agg(sum(when(col("user_id") % 2 === 0, col("cts"))).as("sA"),
-        sum(when(col("user_id") % 2 === 1, col("cts"))).as("sB"),
-        sum(when(col("user_id") % 2 === 0, 1L)).as("nA"),
-        sum(when(col("user_id") % 2 === 1, 1L)).as("nB"))
-      .select(col("event_type"), expr(diffE3).as("obs_e3"))
-    val spine = u.sparkSession.range(1, 201).select(col("id").as("r"))
-    val perm = u.crossJoin(broadcast(spine))
-      .select(col("event_type"), col("r"),
-        (graft.ops.TextOps.portableHash64(
-          concat(col("user_id").cast("string"), lit(":"), col("r").cast("string"))) % 2)
-          .as("g"),
-        col("cts"))
-      .groupBy(col("event_type"), col("r"))
-      .agg(sum(when(col("g") === 0, col("cts"))).as("sA"),
-        sum(when(col("g") === 1, col("cts"))).as("sB"),
-        sum(when(col("g") === 0, 1L)).as("nA"),
-        sum(when(col("g") === 1, 1L)).as("nB"))
-      .select(col("event_type"), col("r"), expr(diffE3).as("d_e3"))
-    val p = perm.join(broadcast(obs), "event_type")
-      .groupBy(col("event_type"), col("obs_e3"))
-      .agg(sum(when(col("d_e3") >= col("obs_e3"), 1L).otherwise(0L)).as("n_ge"))
+    val p = eventPermCounts(spark, sfDir)
       .select(col("event_type"), col("obs_e3"),
         expr("1000000 * (1 + n_ge) div 201").as("p_e6"))
     val m = p.groupBy().agg(count(lit(1)).as("m"))
-    val pk = p.select(col("event_type").as("et2"), col("p_e6").as("p2"))
-    val ranked = p.as("x").join(pk.as("y"),
-        col("y.p2") < col("x.p_e6")
-          || (col("y.p2") === col("x.p_e6") && col("y.et2") < col("x.event_type")),
-        "left")
-      .groupBy(col("x.event_type").as("event_type"), col("x.obs_e3").as("obs_e3"),
-        col("x.p_e6").as("p_e6"))
-      .agg((count(col("y.et2")) + 1L).as("rnk"))
+    val ranked = rankByP(p)
       .crossJoin(broadcast(m))
     // step-down adjusted p: running max of (m−rnk+1)·p over the prefix
     val rk = ranked.select(col("event_type").as("et3"), col("p_e6").as("p3"),
@@ -14306,21 +14197,7 @@ object Queries {
     * the same 2×2 cells.
     */
   def evalueQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val urgent = Tables.orders(spark, sfDir)
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_custkey").as("c_custkey")).distinct()
-    val c = Tables.customer(spark, sfDir)
-      .join(broadcast(Tables.nation(spark, sfDir)),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(urgent.withColumn("outc", lit(1L)), Seq("c_custkey"), "left")
-      .select(col("n_regionkey").as("region"),
-        (col("c_mktsegment") === "BUILDING").as("exp"),
-        coalesce(col("outc"), lit(0L)).as("outc"))
-    c.groupBy(col("region"))
-      .agg(sum(when(col("exp") && col("outc") === 1L, 1L).otherwise(0L)).as("a"),
-        sum(when(col("exp") && col("outc") === 0L, 1L).otherwise(0L)).as("b"),
-        sum(when(!col("exp") && col("outc") === 1L, 1L).otherwise(0L)).as("c"),
-        sum(when(!col("exp") && col("outc") === 0L, 1L).otherwise(0L)).as("d"))
+    regionUrgentTable(spark, sfDir)
       .select(col("region"),
         expr("(2*a+1) * (2*d+1) * 1000000 div ((2*b+1) * (2*c+1))")
           .as("or_haldane_e6"))
@@ -14680,19 +14557,7 @@ object Queries {
     * statistic survives 10⁵-per-side samples.
     */
   def cvmQ(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pv = Tables.documents(spark, sfDir)
-      .select(col("lang"), (col("doc_id") % 2 === 0).as("a"), col("n_chars").as("v"))
-      .groupBy(col("lang"), col("v"))
-      .agg(sum(when(col("a"), 1L).otherwise(0L)).as("ca"),
-        sum(when(!col("a"), 1L).otherwise(0L)).as("cb"))
-    val w = Window.partitionBy(col("lang")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val tot = pv.groupBy(col("lang"))
-      .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
-    pv.withColumn("fa", sum(col("ca")).over(w))
-      .withColumn("fb", sum(col("cb")).over(w))
-      .join(tot, "lang")
+    langValueCdf(spark, sfDir)
       .withColumn("d", col("fa") * col("nb") - col("fb") * col("na"))
       .groupBy(col("lang"), col("na"), col("nb"))
       .agg(sum(expr("cast(d as decimal(38,0)) * d * (ca + cb)")).as("num"))
@@ -14718,19 +14583,7 @@ object Queries {
     * O(n²).
     */
   def andersonDarlingQ(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pv = Tables.documents(spark, sfDir)
-      .select(col("lang"), (col("doc_id") % 2 === 0).as("a"), col("n_chars").as("v"))
-      .groupBy(col("lang"), col("v"))
-      .agg(sum(when(col("a"), 1L).otherwise(0L)).as("ca"),
-        sum(when(!col("a"), 1L).otherwise(0L)).as("cb"))
-    val w = Window.partitionBy(col("lang")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val tot = pv.groupBy(col("lang"))
-      .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
-    pv.withColumn("fa", sum(col("ca")).over(w))
-      .withColumn("fb", sum(col("cb")).over(w))
-      .join(tot, "lang")
+    langValueCdf(spark, sfDir)
       .withColumn("jj", col("fa") + col("fb"))
       .withColumn("nn", col("na") + col("nb"))
       .filter(col("jj") < col("nn"))
@@ -14755,15 +14608,10 @@ object Queries {
     */
   def energyDistQ(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pv = Tables.documents(spark, sfDir)
-      .select(col("lang"), (col("doc_id") % 2 === 0).as("a"), col("n_chars").as("v"))
-      .groupBy(col("lang"), col("v"))
-      .agg(sum(when(col("a"), 1L).otherwise(0L)).as("ca"),
-        sum(when(!col("a"), 1L).otherwise(0L)).as("cb"))
+    val pv = langValueSupport(spark, sfDir)
     val w = Window.partitionBy(col("lang")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1) // EXCLUSIVE cumulative
-    val tot = pv.groupBy(col("lang"))
-      .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
+    val tot = langValueTotals(pv)
     // distinct names for the cumulatives: withColumn("cA", ...) would
     // case-insensitively OVERWRITE the ca count column
     val cum = pv
@@ -14886,9 +14734,7 @@ object Queries {
   def weRulesQ(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val d38 = "decimal(38,0)"
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     val g = daily.groupBy().agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
       sum(expr(s"cast(x as $d38)") * col("x")).as("sxx"))
     val base = daily.crossJoin(broadcast(g))
@@ -15075,21 +14921,7 @@ object Queries {
     */
   def rmstQ(spark: SparkSession, sfDir: String): DataFrame = {
     val tau = 14L
-    val u = Tables.events(spark, sfDir)
-      .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("user_id")).agg(min(col("d")).as("f"), max(col("d")).as("l"))
-    val md = u.groupBy().agg(max(col("l")).as("maxd"))
-    val byT = u.crossJoin(broadcast(md))
-      .select((col("l") - col("f")).as("t"),
-        (col("l") >= col("maxd") - 2).as("cens"))
-      .groupBy(col("t"))
-      .agg(sum(when(!col("cens"), 1L).otherwise(0L)).as("dd"),
-        sum(when(col("cens"), 1L).otherwise(0L)).as("cc"))
-    byT.groupBy()
-      .agg(sort_array(collect_list(struct(col("t"), col("dd"), col("cc"))))
-        .as("arr"))
-      .select(col("arr"),
-        expr("aggregate(arr, 0L, (a, e) -> a + e.dd + e.cc)").as("total"))
+    survivalArr(spark, sfDir)
       .select(col("total").as("n_users"), expr(
         s"""aggregate(arr,
            |  named_struct('n', total, 's', 1000000L, 'pt', 0L, 'rmst', 0L),
@@ -15316,22 +15148,7 @@ object Queries {
     * per-user reduce, one support aggregate, one bounded fold.
     */
   def nelsonAalenQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val u = Tables.events(spark, sfDir)
-      .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("user_id")).agg(min(col("d")).as("f"), max(col("d")).as("l"))
-    val md = u.groupBy().agg(max(col("l")).as("maxd"))
-    val byT = u.crossJoin(broadcast(md))
-      .select((col("l") - col("f")).as("t"),
-        (col("l") >= col("maxd") - 2).as("cens"))
-      .groupBy(col("t"))
-      .agg(sum(when(!col("cens"), 1L).otherwise(0L)).as("dd"),
-        sum(when(col("cens"), 1L).otherwise(0L)).as("cc"))
-    byT
-      .groupBy()
-      .agg(sort_array(collect_list(struct(col("t"), col("dd"), col("cc"))))
-        .as("arr"))
-      .select(col("arr"),
-        expr("aggregate(arr, 0L, (a, e) -> a + e.dd + e.cc)").as("total"))
+    survivalArr(spark, sfDir)
       .select(explode(expr(
         """aggregate(arr,
           |  named_struct('n', total, 'h', 0L,
@@ -15565,20 +15382,13 @@ object Queries {
       .orderBy(col("nat"))
   }
 
-  /** Schuster periodogram of the daily event volume — spectral power
-    * at each candidate period p ∈ 2..10 days, the "is there a weekly
-    * cycle" detector that [[decomposeQ]]'s fixed-7 seasonal split
-    * assumes an answer to. The series is mean-centered EXACTLY by
-    * n-scaling (y_d = n·x_d − S, the [[cusumQ]] device), each cos/sin
-    * weight is e9-floored per (day, period) cell before the integer
-    * dot products, and power = (Σy·c)² + (Σy·s)² runs in decimal(38).
-    * Day spine × 9 periods — everything after the daily aggregate is
-    * support-bounded.
+  /** Schuster power per candidate period p ∈ 2..10 days of the daily
+    * event volume (p, power) — the grid [[periodogramQ]] and
+    * [[spectralEntropyQ]] read: n-scaled exact centering, e9-floored
+    * cos/sin weights per (day, period) cell, decimal(38) dot products.
     */
-  def periodogramQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+  private def periodPower(spark: SparkSession, sfDir: String): DataFrame = {
+    val daily = dailyCounts(spark, sfDir)
     val g = daily.groupBy()
       .agg(count(lit(1)).as("n"), sum(col("x")).as("s"), min(col("d")).as("d0"))
     val grid = broadcast(
@@ -15593,13 +15403,27 @@ object Queries {
     // descale the e9 weight factor BEFORE squaring — sc² at full e9²
     // scale would pass decimal(38) here but not at a 100 TB daily
     // volume; (sc div 1e9)² keeps ~10 more decades of headroom
-    val pw = cells.groupBy(col("p"), col("n"))
+    cells.groupBy(col("p"), col("n"))
       .agg(sum(expr("cast(y as decimal(38,0)) * c")).as("sc"),
         sum(expr("cast(y as decimal(38,0)) * sn")).as("ss"))
       .select(col("p"),
         expr("""cast((sc div 1000000000) * (sc div 1000000000)
                 + (ss div 1000000000) * (ss div 1000000000) as bigint)""")
           .as("power"))
+  }
+
+  /** Schuster periodogram of the daily event volume — spectral power
+    * at each candidate period p ∈ 2..10 days, the "is there a weekly
+    * cycle" detector that [[decomposeQ]]'s fixed-7 seasonal split
+    * assumes an answer to. The series is mean-centered EXACTLY by
+    * n-scaling (y_d = n·x_d − S, the [[cusumQ]] device), each cos/sin
+    * weight is e9-floored per (day, period) cell before the integer
+    * dot products, and power = (Σy·c)² + (Σy·s)² runs in decimal(38).
+    * Day spine × 9 periods — everything after the daily aggregate is
+    * support-bounded.
+    */
+  def periodogramQ(spark: SparkSession, sfDir: String): DataFrame = {
+    val pw = periodPower(spark, sfDir)
     val mx = pw.groupBy().agg(max(col("power")).as("max_power"))
     pw.crossJoin(broadcast(mx))
       .select(col("p"), col("power"),
@@ -15619,27 +15443,7 @@ object Queries {
     * the daily aggregate is a 9-row grid.
     */
   def spectralEntropyQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
-    val g = daily.groupBy()
-      .agg(count(lit(1)).as("n"), sum(col("x")).as("s"), min(col("d")).as("d0"))
-    val grid = broadcast(
-      daily.sparkSession.range(2, 11).select(col("id").as("p")))
-    val cells = daily.crossJoin(broadcast(g)).crossJoin(grid)
-      .select(col("p"), col("n"),
-        (col("n") * col("x") - col("s")).as("y"),
-        floor(cos(lit(2.0) * acos(lit(-1.0)) * (col("d") - col("d0")) / col("p"))
-          * 1000000000.0 + 0.5).cast("long").as("c"),
-        floor(sin(lit(2.0) * acos(lit(-1.0)) * (col("d") - col("d0")) / col("p"))
-          * 1000000000.0 + 0.5).cast("long").as("sn"))
-    val pw = cells.groupBy(col("p"), col("n"))
-      .agg(sum(expr("cast(y as decimal(38,0)) * c")).as("sc"),
-        sum(expr("cast(y as decimal(38,0)) * sn")).as("ss"))
-      .select(col("p"),
-        expr("""cast((sc div 1000000000) * (sc div 1000000000)
-                + (ss div 1000000000) * (ss div 1000000000) as bigint)""")
-          .as("power"))
+    val pw = periodPower(spark, sfDir)
     val tot = pw.groupBy()
       .agg(sum(col("power")).as("tp"), max(col("power")).as("mp"),
         count(lit(1)).as("kk"))
@@ -15670,9 +15474,7 @@ object Queries {
     */
   def yuleWalkerQ(spark: SparkSession, sfDir: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     val g = daily.groupBy().agg(count(lit(1)).as("n"), sum(col("x")).as("s"))
     val y = daily.crossJoin(broadcast(g))
       .select(col("d"), (col("n") * col("x") - col("s")).as("y"), col("n"))
@@ -16209,9 +16011,7 @@ object Queries {
     * aggregate.
     */
   def trackingSignalQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, sfDir)
     daily
       .groupBy()
       .agg(sort_array(collect_list(struct(col("d"), col("x")))).as("arr"))
@@ -16529,22 +16329,7 @@ object Queries {
     */
   def greenwoodQ(spark: SparkSession, sfDir: String): DataFrame = {
     val z = 1959964L // 1.959964 at e6
-    val u = Tables.events(spark, sfDir)
-      .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("user_id")).agg(min(col("d")).as("f"), max(col("d")).as("l"))
-    val md = u.groupBy().agg(max(col("l")).as("maxd"))
-    val byT = u.crossJoin(broadcast(md))
-      .select((col("l") - col("f")).as("t"),
-        (col("l") >= col("maxd") - 2).as("cens"))
-      .groupBy(col("t"))
-      .agg(sum(when(!col("cens"), 1L).otherwise(0L)).as("dd"),
-        sum(when(col("cens"), 1L).otherwise(0L)).as("cc"))
-    byT
-      .groupBy()
-      .agg(sort_array(collect_list(struct(col("t"), col("dd"), col("cc"))))
-        .as("arr"))
-      .select(col("arr"),
-        expr("aggregate(arr, 0L, (a, e) -> a + e.dd + e.cc)").as("total"))
+    survivalArr(spark, sfDir)
       .select(explode(expr(
         """aggregate(arr,
           |  named_struct('n', total, 's', 1000000L, 'g', 0L,
@@ -17054,21 +16839,9 @@ object Queries {
     * the normalized e6 similarity.
     */
   def lcsSimQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val seqs = Tables.events(spark, sfDir)
-      .filter(col("user_id") < 8)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"),
-        col("event_type").as("et"))
-      .groupBy(col("user_id"))
-      .agg(expr("""slice(transform(array_sort(collect_list(
-        struct(us, event_id, et))), s -> s.et), 1, 7)""").as("arr"))
-      .filter(size(col("arr")) === 7)
-    var df = seqs.as("p")
-      .join(seqs.as("q"), col("q.user_id") > col("p.user_id"))
-      .select(col("p.user_id").as("user_a"), col("q.user_id").as("user_b"),
-        col("p.arr").as("a"), col("q.arr").as("b"))
-    for ((n, e) <- lcsCells(i => s"element_at(a, $i)", j => s"element_at(b, $j)", 7))
-      df = df.withColumn(n, expr(e))
-    df.select(col("user_a"), col("user_b"),
+    userPairDp(spark, sfDir,
+        lcsCells(i => s"element_at(a, $i)", j => s"element_at(b, $j)", 7))
+      .select(col("user_a"), col("user_b"),
         col("d_7_7").cast("long").as("lcs"),
         expr("cast(d_7_7 as bigint) * 1000000 div 7").as("lcs_sim_e6"))
       .orderBy(col("user_a"), col("user_b"))
@@ -17215,6 +16988,32 @@ object Queries {
       .orderBy(col("lam_e6"))
   }
 
+  /** The rater grid of the agreement queries: each event type rates
+    * articles 1..40 by its event counts (`cnt` per (rater, article)),
+    * zero-filled over every (rater, article) cell into column `value`.
+    */
+  private def raterGrid(spark: SparkSession, sfDir: String,
+      value: String): DataFrame = {
+    val cnt = Tables.events(spark, sfDir)
+      .groupBy(col("event_type").as("rater"),
+        (expr("event_id % 40") + 1).as("article"))
+      .agg(count(lit(1)).as("cnt"))
+    cnt.select(col("rater")).distinct()
+      .crossJoin(cnt.sparkSession.range(1, 41).select(col("id").as("article")))
+      .join(cnt, Seq("rater", "article"), "left")
+      .withColumn(value, coalesce(col("cnt"), lit(0L)))
+  }
+
+  /** [[raterGrid]] ranked per rater by (count desc, article) in `rnk` —
+    * the scaffold of [[kendallWQ]] and [[copelandQ]].
+    */
+  private def raterRanks(spark: SparkSession, sfDir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    raterGrid(spark, sfDir, "cnt").withColumn("rnk", row_number().over(
+      Window.partitionBy(col("rater"))
+        .orderBy(col("cnt").desc, col("article"))))
+  }
+
   /** Kendall's W concordance among the five event-type "raters"
     * ranking the 40 articles by volume — do click, view, purchase,
     * signup and error traffic AGREE on which articles matter (the
@@ -17226,20 +17025,8 @@ object Queries {
     * fact aggregate.
     */
   def kendallWQ(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val d38 = "decimal(38,0)"
-    val cnt = Tables.events(spark, sfDir)
-      .groupBy(col("event_type").as("rater"),
-        (expr("event_id % 40") + 1).as("article"))
-      .agg(count(lit(1)).as("cnt"))
-    val raters = cnt.select(col("rater")).distinct()
-    val grid = raters
-      .crossJoin(cnt.sparkSession.range(1, 41).select(col("id").as("article")))
-      .join(cnt, Seq("rater", "article"), "left")
-      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-    val ranked = grid.withColumn("rnk", row_number().over(
-      Window.partitionBy(col("rater"))
-        .orderBy(col("cnt").desc, col("article"))))
+    val ranked = raterRanks(spark, sfDir)
     val sums = ranked.groupBy(col("article"))
       .agg(sum(col("rnk")).as("r_sum"), count(lit(1)).as("m"))
     val nRow = sums.groupBy().agg(count(lit(1)).as("n"), max(col("m")).as("m"))
@@ -17274,15 +17061,7 @@ object Queries {
     */
   def krippendorffQ(spark: SparkSession, sfDir: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val cnt = Tables.events(spark, sfDir)
-      .groupBy(col("event_type").as("rater"),
-        (expr("event_id % 40") + 1).as("article"))
-      .agg(count(lit(1)).as("cnt"))
-    val raters = cnt.select(col("rater")).distinct()
-    val grid = raters
-      .crossJoin(cnt.sparkSession.range(1, 41).select(col("id").as("article")))
-      .join(cnt, Seq("rater", "article"), "left")
-      .withColumn("x", coalesce(col("cnt"), lit(0L)))
+    val grid = raterGrid(spark, sfDir, "x")
     val item = grid.groupBy(col("article"))
       .agg(count(lit(1)).as("m"), sum(col("x")).as("sx"),
         sum(expr(s"cast(x as $d38) * x")).as("sxx"))
@@ -18176,19 +17955,7 @@ object Queries {
     * rater×article-bounded after one fact aggregate.
     */
   def copelandQ(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cnt = Tables.events(spark, sfDir)
-      .groupBy(col("event_type").as("rater"),
-        (expr("event_id % 40") + 1).as("article"))
-      .agg(count(lit(1)).as("cnt"))
-    val raters = cnt.select(col("rater")).distinct()
-    val grid = raters
-      .crossJoin(cnt.sparkSession.range(1, 41).select(col("id").as("article")))
-      .join(cnt, Seq("rater", "article"), "left")
-      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-    val ranked = grid.withColumn("rnk", row_number().over(
-      Window.partitionBy(col("rater"))
-        .orderBy(col("cnt").desc, col("article"))))
+    val ranked = raterRanks(spark, sfDir)
     val m = ranked.groupBy().agg(countDistinct(col("rater")).as("m"))
     val contests = ranked.select(col("rater"), col("article").as("a"),
         col("rnk").as("ra"))

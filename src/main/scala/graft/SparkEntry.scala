@@ -931,6 +931,319 @@ object SparkEntry {
        |  WHERE NOT coalesce(prev_ap, FALSE))""".stripMargin
   }
 
+  /** Per-user survival CTEs over `events`: `u` = (user_id, first day
+    * f, last day l), `md` = the last observed day (users whose last day
+    * is within 2 of it are censored).
+    */
+  private def survivalUsersCtes: String =
+    """u AS (
+      |  SELECT user_id,
+      |    min(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS f,
+      |    max(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS l
+      |  FROM events GROUP BY user_id),
+      |md AS (SELECT max(l) AS maxd FROM u)""".stripMargin
+
+  /** [[survivalUsersCtes]] plus the duration support the Kaplan-Meier
+    * family folds over: `byt` = (t, churned dd, censored cc), `d2` =
+    * byt numbered by t (rn), `tot` = the user total.
+    */
+  private def survivalTimesCtes: String =
+    s"""$survivalUsersCtes,
+       |byt AS (SELECT l - f AS t,
+       |    CAST(sum(CASE WHEN l >= maxd - 2 THEN 0 ELSE 1 END) AS BIGINT) AS dd,
+       |    CAST(sum(CASE WHEN l >= maxd - 2 THEN 1 ELSE 0 END) AS BIGINT) AS cc
+       |  FROM u, md GROUP BY 1),
+       |d2 AS (SELECT t, dd, cc, row_number() OVER (ORDER BY t) AS rn FROM byt),
+       |tot AS (SELECT CAST(sum(dd + cc) AS BIGINT) AS total FROM byt)""".stripMargin
+
+  /** Undirected co-purchase part graph over `lineitem`: `bp` = each
+    * line's part paired with the next line's part in the same order,
+    * `be` = distinct directed non-loop edges, `bu` = both directions.
+    */
+  private def partEdgeCtes: String =
+    """bp AS (SELECT l_partkey AS src,
+      |    lead(l_partkey) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS dst
+      |  FROM lineitem),
+      |be AS (SELECT DISTINCT src, dst FROM bp WHERE dst IS NOT NULL AND src <> dst),
+      |bu AS MATERIALIZED (SELECT DISTINCT src, dst FROM
+      |  (SELECT src, dst FROM be UNION ALL SELECT dst, src FROM be) t)""".stripMargin
+
+  /** `rounds` unrolled multi-source BFS relaxations over [[partEdgeCtes]]'
+    * `bu`: `${p}i` = min hop distance (root, node, d) after i rounds,
+    * read from `${p}0`.
+    */
+  private def rootedBfsCtes(p: String, rounds: Int): String =
+    (1 to rounds).map { i =>
+      s"""$p$i AS MATERIALIZED (SELECT root, node, min(d) AS d FROM (
+         |  SELECT root, node, d FROM $p${i - 1}
+         |  UNION ALL
+         |  SELECT p.root, e.dst, p.d + 1 FROM bu e JOIN $p${i - 1} p ON e.src = p.node) t
+         |  GROUP BY root, node)""".stripMargin
+    }.mkString(",\n")
+
+  /** The 8-round BFS from the 10 lowest part ids (`hd8`), with the
+    * `fixguard` flag that is 1 when round 8 added nothing — the
+    * harmonic-centrality and betweenness oracles error out otherwise.
+    */
+  private def partRootBfsCtes: String =
+    s"""roots AS (SELECT DISTINCT src AS node FROM bu ORDER BY node LIMIT 10),
+       |hd0 AS (SELECT node AS root, node, CAST(0 AS BIGINT) AS d FROM roots),
+       |${rootedBfsCtes("hd", 8)},
+       |fixguard AS (SELECT CASE WHEN (SELECT count(*) FROM hd8)
+       |    = (SELECT count(*) FROM hd7) THEN 1 ELSE 0 END AS at_fixpoint)""".stripMargin
+
+  /** Per-event-type 200-replicate permutation test of the odd-vs-even
+    * user difference in mean spend (cents): `obs` = observed |diff| at
+    * e3 per event type, `d` = each hash-relabelled replicate's |diff|,
+    * `p` = (event_type, obs_e3, n_ge replicates at least as extreme).
+    * Shared by the FDR, Holm and Benjamini-Yekutieli oracles.
+    */
+  private def eventPermCtes: String =
+    s"""u AS (SELECT event_type, user_id,
+       |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS cts
+       |  FROM events GROUP BY 1, 2),
+       |o1 AS (SELECT event_type,
+       |    sum(CASE WHEN user_id % 2 = 0 THEN CAST(cts AS HUGEINT) END) AS sA,
+       |    sum(CASE WHEN user_id % 2 = 1 THEN CAST(cts AS HUGEINT) END) AS sB,
+       |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS nA,
+       |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS nB
+       |  FROM u GROUP BY event_type),
+       |obs AS (SELECT event_type,
+       |    abs(1000 * (sA * nB - sB * nA) // (nA * nB)) AS obs_e3 FROM o1),
+       |spine AS (SELECT unnest(range(1, 201)) AS r),
+       |pg AS (SELECT event_type, r, ${hSql("user_id || ':' || r")} % 2 AS g, cts
+       |  FROM u CROSS JOIN spine),
+       |ps AS (SELECT event_type, r,
+       |    sum(CASE WHEN g = 0 THEN CAST(cts AS HUGEINT) END) AS sA,
+       |    sum(CASE WHEN g = 1 THEN CAST(cts AS HUGEINT) END) AS sB,
+       |    CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS nA,
+       |    CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS nB
+       |  FROM pg GROUP BY event_type, r),
+       |d AS (SELECT event_type, r,
+       |    abs(1000 * (sA * nB - sB * nA) // (nA * nB)) AS d_e3 FROM ps),
+       |p AS (SELECT d.event_type, obs.obs_e3,
+       |    CAST(sum(CASE WHEN d_e3 >= obs_e3 THEN 1 ELSE 0 END) AS BIGINT) AS n_ge
+       |  FROM d JOIN obs ON d.event_type = obs.event_type
+       |  GROUP BY d.event_type, obs.obs_e3)""".stripMargin
+
+  /** Sequence-packing replay: tokens per doc, oversize (> 2048) docs
+    * counted aside, the rest salted into 32 buckets and folded per
+    * bucket in FFD order (length desc, doc_id) by a recursive CTE.
+    * `placement` is the `idx` column: the 1-based bin the next doc goes
+    * into, NULL to open a new bin. q_pack_ffd and q_pack_bestfit differ
+    * only there.
+    */
+  private def packSql(placement: String): String =
+    s"""WITH RECURSIVE d AS (SELECT doc_id, CAST(len(regexp_extract_all(
+       |    text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')) AS BIGINT) AS n
+       |  FROM documents),
+       |sized AS (SELECT CAST(sum(CASE WHEN n > 2048 THEN 1 ELSE 0 END)
+       |    AS BIGINT) AS n_oversize FROM d),
+       |b AS (SELECT doc_id, n,
+       |    ${hSql("concat('pack:', CAST(doc_id AS VARCHAR))")} % 32 AS bucket
+       |  FROM d WHERE n <= 2048),
+       |ord AS (SELECT bucket, n, row_number() OVER (PARTITION BY bucket
+       |    ORDER BY n DESC, doc_id) AS rn FROM b),
+       |sz AS (SELECT bucket, CAST(count(*) AS BIGINT) AS cnt,
+       |    CAST(sum(n) AS BIGINT) AS toks FROM ord GROUP BY 1),
+       |pack AS (
+       |  SELECT bucket, CAST(0 AS BIGINT) AS step,
+       |    CAST([] AS BIGINT[]) AS bins FROM sz
+       |  UNION ALL
+       |  SELECT bucket, step,
+       |    CASE WHEN idx IS NULL THEN list_append(bins, n)
+       |      ELSE list_transform(range(1, 1 + len(bins)),
+       |        i -> CASE WHEN i = idx THEN bins[i] + n ELSE bins[i] END)
+       |    END AS bins
+       |  FROM (SELECT p.bucket, p.step + 1 AS step, p.bins, o.n,
+       |      $placement
+       |    FROM pack p JOIN ord o
+       |      ON o.bucket = p.bucket AND o.rn = p.step + 1) s),
+       |fin AS (SELECT p.bucket, CAST(len(p.bins) AS BIGINT) AS nb,
+       |    sz.cnt, sz.toks
+       |  FROM pack p JOIN sz ON p.bucket = sz.bucket AND p.step = sz.cnt)
+       |SELECT CAST(sum(cnt) AS BIGINT) AS n_docs_packed, n_oversize,
+       |  CAST(sum(toks) AS BIGINT) AS total_tokens,
+       |  CAST(sum(nb) AS BIGINT) AS n_windows,
+       |  CAST(sum(toks) * 1000000 // (sum(nb) * 2048) AS BIGINT)
+       |    AS pack_eff_e6,
+       |  CAST(sum(toks) * 1000000 // (sum(cnt) * 2048) AS BIGINT)
+       |    AS naive_eff_e6,
+       |  CAST(sum(cnt) - sum(nb) AS BIGINT) AS windows_saved
+       |FROM fin CROSS JOIN sized GROUP BY n_oversize""".stripMargin
+
+  /** The planted embedding corpus of the DBSCAN and single-linkage
+    * oracles: `e` = the embeddings as DOUBLE[], `raw` = e plus near
+    * copies (ids +10000/+20000 of every 7th, one dim nudged by ±0.008)
+    * and looser chains (+30000/+40000 of every 11th).
+    */
+  private def plantedEmbeddingCtes: String =
+    """e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
+      |  FROM embeddings),
+      |raw AS (SELECT vec_id, label, v FROM e
+      |  UNION ALL SELECT vec_id + 10000, label, list_transform(range(len(v)),
+      |    i -> CASE WHEN i = 0 THEN v[1] + 0.008 ELSE v[CAST(i AS INT)+1] END)
+      |  FROM e WHERE vec_id % 7 = 0
+      |  UNION ALL SELECT vec_id + 20000, label, list_transform(range(len(v)),
+      |    i -> CASE WHEN i = 1 THEN v[2] + -0.008 ELSE v[CAST(i AS INT)+1] END)
+      |  FROM e WHERE vec_id % 7 = 0
+      |  UNION ALL SELECT vec_id + 30000, label, list_transform(range(len(v)),
+      |    i -> CASE WHEN i = 0 THEN v[1] + 0.07 ELSE v[CAST(i AS INT)+1] END)
+      |  FROM e WHERE vec_id % 11 = 3
+      |  UNION ALL SELECT vec_id + 40000, label, list_transform(range(len(v)),
+      |    i -> CASE WHEN i = 0 THEN v[1] + 0.14 ELSE v[CAST(i AS INT)+1] END)
+      |  FROM e WHERE vec_id % 11 = 3)""".stripMargin
+
+  /** Same-label pairs va < vb sharing either band code (c0 or c1) of
+    * the `codes` CTE — the DBSCAN / single-linkage candidate SELECT.
+    */
+  private val codesBandPairsSql: String =
+    """SELECT a.vec_id AS va, b.vec_id AS vb
+      |    FROM codes a JOIN codes b
+      |      ON a.label = b.label AND a.c0 = b.c0 AND a.vec_id < b.vec_id
+      |  UNION SELECT a.vec_id, b.vec_id
+      |    FROM codes a JOIN codes b
+      |      ON a.label = b.label AND a.c1 = b.c1 AND a.vec_id < b.vec_id""".stripMargin
+
+  /** The BPE training replay shared by the q_bpe_* oracles: `bwords` =
+    * word-type frequencies, `bseq0` = each type as char symbols plus
+    * `</w>`, then the 8 unrolled merge iterations to `bseq8`
+    * ([[bpeIterCtes]]).
+    */
+  private def bpeChainCtes: String =
+    s"""bwords AS (
+       |  SELECT word, count(*) AS freq FROM (
+       |    SELECT unnest(${wordsSql("lower(text)")}) AS word FROM documents) u
+       |  WHERE length(word) >= 1 GROUP BY word),
+       |bseq0 AS (
+       |  SELECT word, freq, pos, ws[pos + 1] AS s FROM (
+       |    SELECT word, freq,
+       |      list_append(list_transform(range(length(word)), j -> substr(word, CAST(j + 1 AS INT), 1)), '</w>') AS ws
+       |    FROM bwords) t,
+       |    LATERAL (SELECT unnest(range(len(ws))) AS pos) p),
+       |${(1 to 8).map(bpeIterCtes).mkString(",\n")}""".stripMargin
+
+  /** The Gopher-rule per-doc metric columns over a word list `ws`
+    * (n_words, sum_len, n_alpha, n_stop, tot_bg, dup_bg), exact
+    * integers off one list projection.
+    */
+  private val gopherMetricsSql: String =
+    """    CAST(len(ws) AS BIGINT) AS n_words,
+      |    CAST(list_aggregate(list_transform(ws, x -> length(x)), 'sum')
+      |      AS BIGINT) AS sum_len,
+      |    CAST(len(list_filter(ws, x -> regexp_matches(x, '[a-z]')))
+      |      AS BIGINT) AS n_alpha,
+      |    CAST(len(list_filter(ws, x -> list_contains(
+      |      ['the','be','to','of','and','that','have','with'], x)))
+      |      AS BIGINT) AS n_stop,
+      |    CAST(greatest(len(ws) - 1, 0) AS BIGINT) AS tot_bg,
+      |    CAST(greatest(len(ws) - 1, 0) - len(list_distinct(list_transform(
+      |      range(len(ws) - 1), i -> ws[i+1] || ' ' || ws[i+2])))
+      |      AS BIGINT) AS dup_bg""".stripMargin
+
+  /** Exact re-rank of the ANN shortlist `sl` (query_id, neighbor_id,
+    * adc_e6) against the raw vectors `pqe0`: e6-floored squared L2,
+    * top 3 per query — the refine step of q_ann_pq_refine and
+    * q_ann_ivfpq_refine.
+    */
+  private def exactRerankSql: String =
+    s"""re AS (
+       |  SELECT s.query_id, s.neighbor_id, s.adc_e6,
+       |    CAST(floor((${dotSql("n.v", "n.v")} - 2.0 * ${dotSql("q.v", "n.v")}
+       |      + ${dotSql("q.v", "q.v")}) * 1000000.0) AS BIGINT) AS d2_e6
+       |  FROM sl s JOIN pqe0 q ON s.query_id = q.vec_id
+       |       JOIN pqe0 n ON s.neighbor_id = n.vec_id)
+       |SELECT query_id, neighbor_id, rnk, adc_e6, d2_e6 FROM (
+       |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
+       |    ORDER BY d2_e6, neighbor_id) AS BIGINT) AS rnk
+       |  FROM re)
+       |WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin
+
+  /** IVFADC top-3 over the nprobe=3 cells — q_ann_ivfpq, and
+    * q_ann_ivfpq_pruned, whose partition-pruned layout returns
+    * bit-identical rows.
+    */
+  private def ivfPqTop3Sql: String =
+    s"""WITH pqe0 AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |$ivfPqCtes
+       |SELECT query_id, neighbor_id, rnk, adc_e6 FROM (
+       |  SELECT query_id, neighbor_id, adc_e6,
+       |    CAST(row_number() OVER (PARTITION BY query_id
+       |      ORDER BY adc_e6, neighbor_id) AS BIGINT) AS rnk
+       |  FROM ivadc WHERE cell_rn <= 3)
+       |WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin
+
+  /** Three PageRank iterations over a weighted edge CTE `ed` (src,
+    * dst, w): damping 0.85 over 1000 total mass, each round's ranks
+    * rounded to 6 places on both engines (the unrolled-kmeans device),
+    * ending at `pr3` (node, pr). Shared by q_pagerank and q_textrank.
+    */
+  private def pagerankCtes: String = {
+    def iter(prev: String, out: String): String =
+      s"""$out AS (
+         |  SELECT node, round(150.0 / nn + 0.85 * coalesce(c, 0.0), 6) AS pr
+         |  FROM nodes CROSS JOIN n LEFT JOIN (
+         |    SELECT dst, sum(pr * share) AS c
+         |    FROM e2 JOIN $prev ON e2.src = $prev.node GROUP BY dst) t
+         |  ON nodes.node = t.dst)""".stripMargin
+    s"""nodes AS (SELECT DISTINCT node FROM (SELECT src AS node FROM ed UNION ALL SELECT dst FROM ed)),
+       |n AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM nodes),
+       |ow AS (SELECT src, sum(w) AS outw FROM ed GROUP BY src),
+       |e2 AS (SELECT ed.src, ed.dst, ed.w / ow.outw AS share FROM ed JOIN ow USING (src)),
+       |pr0 AS (SELECT node, round(1000.0 / nn, 6) AS pr FROM nodes CROSS JOIN n),
+       |${iter("pr0", "pr1")},
+       |${iter("pr1", "pr2")},
+       |${iter("pr2", "pr3")}""".stripMargin
+  }
+
+  /** Per-user first-7 event-type sequences (`seqs`, users < 8), every
+    * user pair (`pairs`: user_a < user_b with arrays a, b), and the 7×7
+    * DP lattice `cells` over a/b re-rowed by [[dpRowCtes]] up to `dp7`
+    * (final cell `ca7`) — the q_needleman / q_lcs_sim base.
+    */
+  private def userPairDpCtes(cells: Seq[(String, String)]): String =
+    s"""s0 AS (SELECT user_id,
+       |    list_slice(list(event_type ORDER BY epoch_us(CAST(ts AS TIMESTAMP)),
+       |      event_id), 1, 7) AS arr
+       |  FROM events WHERE user_id < 8 GROUP BY user_id),
+       |seqs AS (SELECT user_id, arr FROM s0 WHERE len(arr) = 7),
+       |pairs AS (SELECT p.user_id AS user_a, q.user_id AS user_b,
+       |    p.arr AS a, q.arr AS b
+       |  FROM seqs p JOIN seqs q ON q.user_id > p.user_id),
+       |${dpRowCtes(cells, 7, 7, "user_a, user_b, a, b", "pairs", "dp")}""".stripMargin
+
+  /** The rater-rank scaffold of the Kendall-W and Copeland oracles:
+    * each event type rates articles 1..40 by its event counts (`grid`,
+    * zero-filled), ranked per rater by (count desc, article) in `rk`.
+    */
+  private val raterRankCtes: String =
+    """cnt AS (SELECT event_type AS rater, event_id % 40 + 1 AS article,
+      |    CAST(count(*) AS BIGINT) AS cnt
+      |  FROM events GROUP BY 1, 2),
+      |raters AS (SELECT DISTINCT rater FROM cnt),
+      |grid AS (SELECT r.rater, g.article, coalesce(cnt.cnt, 0) AS cnt
+      |  FROM raters r
+      |  CROSS JOIN (SELECT CAST(unnest(range(1, 41)) AS BIGINT) AS article) g
+      |  LEFT JOIN cnt ON cnt.rater = r.rater AND cnt.article = g.article),
+      |rk AS (SELECT *, row_number() OVER (PARTITION BY rater
+      |    ORDER BY cnt DESC, article) AS rnk FROM grid)""".stripMargin
+
+  /** MinHash-LSH candidate chain over relation `base` (doc_id, text):
+    * `sh` (hashed shingles) → `hx` → `sig` → `bands` → `cand` = DISTINCT
+    * (doc_a < doc_b) pairs sharing a band. Shared by [[lshPairsCtes]]
+    * and the curation near-dup stage ([[curationCtes]]).
+    */
+  private def lshCandCtes(base: String): String =
+    s"""sh AS (SELECT doc_id, $hashedShinglesSql AS shingles
+       |       FROM (SELECT doc_id, ${wordsSql("lower(text)")} AS w FROM $base)),
+       |hx AS (SELECT doc_id, unnest(shingles) AS h FROM sh),
+       |sig AS (SELECT doc_id, $minhashSigSql FROM hx GROUP BY doc_id),
+       |bands AS (SELECT doc_id, unnest([
+       |    concat_ws(':', '0', s0, s1), concat_ws(':', '1', s2, s3),
+       |    concat_ws(':', '2', s4, s5), concat_ws(':', '3', s6, s7)]) AS band FROM sig),
+       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |         FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id)""".stripMargin
+
   /** Shared CTE chain for the MinHash-LSH pipeline over documents plus
     * planted near copies; `scored` = candidate pairs with exact Jaccard.
     * Used by q_minhash_lsh and q_dedup_clusters.
@@ -940,20 +1253,27 @@ object SparkEntry {
        |  SELECT doc_id, text FROM documents
        |  UNION ALL
        |  SELECT doc_id + 10000, replace(text, 'data', 'info') FROM documents WHERE doc_id % 5 = 0),
-       |sh AS (SELECT doc_id, $hashedShinglesSql AS shingles
-       |       FROM (SELECT doc_id, ${wordsSql("lower(text)")} AS w FROM base)),
-       |hx AS (SELECT doc_id, unnest(shingles) AS h FROM sh),
-       |sig AS (SELECT doc_id, $minhashSigSql FROM hx GROUP BY doc_id),
-       |bands AS (SELECT doc_id, unnest([
-       |    concat_ws(':', '0', s0, s1), concat_ws(':', '1', s2, s3),
-       |    concat_ws(':', '2', s4, s5), concat_ws(':', '3', s6, s7)]) AS band FROM sig),
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |         FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
+       |${lshCandCtes("base")},
        |scored AS (
        |  SELECT doc_a, doc_b,
        |    round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
        |      / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 6) AS jaccard
        |  FROM cand JOIN sh sa ON cand.doc_a = sa.doc_id JOIN sh sb ON cand.doc_b = sb.doc_id)""".stripMargin
+
+  /** [[lshPairsCtes]] plus the near-dup cluster closure: `pairs` at
+    * Jaccard >= 0.5, symmetrized `edges`, and the recursive `cc` whose
+    * per-node min(m) is the cluster label (the smallest doc_id in the
+    * component). Needs WITH RECURSIVE.
+    */
+  private def lshClusterCtes: String =
+    s"""$lshPairsCtes,
+       |pairs AS (SELECT doc_a, doc_b FROM scored WHERE jaccard >= 0.5),
+       |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+       |          UNION SELECT doc_b, doc_a FROM pairs),
+       |nodes AS (SELECT DISTINCT src AS node FROM edges),
+       |cc AS (SELECT node, node AS m FROM nodes
+       |       UNION
+       |       SELECT e.dst AS node, cc.m FROM cc JOIN edges e ON e.src = cc.node)""".stripMargin
 
   /** shingle/signature/band CTE triple for one doc source — the
     * per-side building block of the incremental-dedup oracle (suffix
@@ -973,6 +1293,68 @@ object SparkEntry {
 
   private def langScoreSql(lang: String): String =
     graft.ops.TextOps.LangStopwords.toMap.apply(lang).map(occSql).mkString(" + ")
+
+  /** The curation gate chain over the caller's `base` CTE (doc_id,
+    * text), generated from the same constants as the Spark stages
+    * (TextOps / Dedup / Curation): language + quality gates → `gated`,
+    * md5 exact dedup → `ek`, LSH near-dup → `neardrop` (the doc_b of
+    * every candidate pair at Jaccard >= JaccardMin). Shared by the five
+    * q_curation* oracles.
+    */
+  private def curationCtes: String =
+    s"""b0 AS (SELECT doc_id, text, ' ' || lower(text) || ' ' AS pt, ${wordsSql("text")} AS w FROM base),
+       |s AS (SELECT doc_id, text,
+       |        ${langScoreSql("en")} AS s_en, ${langScoreSql("es")} AS s_es,
+       |        ${langScoreSql("de")} AS s_de, ${langScoreSql("zh")} AS s_zh,
+       |        round(least(CAST(len(w) AS DOUBLE) / 100.0, 1.0) * 0.5
+       |          + (1.0 - CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS DOUBLE) / length(text)) * 0.3
+       |          + CAST(len(list_distinct(w)) AS DOUBLE) / len(w) * 0.2, 6) AS quality
+       |      FROM b0),
+       |gated AS (SELECT doc_id, text, quality FROM s
+       |          WHERE s_en >= s_es AND s_en >= s_de AND s_en >= s_zh AND s_en > 0
+       |            AND quality >= ${graft.ops.Curation.QualityMin}),
+       |ex AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY md5(text)),
+       |ek AS (SELECT g.* FROM gated g WHERE g.doc_id IN (SELECT doc_id FROM ex)),
+       |${lshCandCtes("ek")},
+       |neardrop AS (SELECT DISTINCT doc_b AS doc_id FROM (
+       |    SELECT doc_a, doc_b,
+       |      round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
+       |        / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 6) AS j
+       |    FROM cand JOIN sh sa ON cand.doc_a = sa.doc_id JOIN sh sb ON cand.doc_b = sb.doc_id)
+       |  WHERE j >= ${graft.ops.Curation.JaccardMin})""".stripMargin
+
+  /** The curation split tail over relation `kept` (doc_id, quality):
+    * md5-bucket hash split, 80/10/10 train/val/test, ordered by doc_id.
+    */
+  private def curationSplitSql(kept: String): String =
+    s"""d AS (SELECT doc_id, quality,
+       |        ${hSql("concat('split:', CAST(doc_id AS VARCHAR))")} % 100 AS b FROM $kept)
+       |SELECT doc_id, quality,
+       |  CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
+       |FROM d ORDER BY doc_id""".stripMargin
+
+  /** The covered-span plant corpus shared by q_curation_spancov and
+    * q_curation_strip: documents, every third doc copied (id+10000),
+    * vowel-rotated hosts carrying a 30-token quote (id+70000) and the
+    * pure quotes (id+80000). Defines `dsrc`, `elig` and `base`.
+    */
+  private def coverPlantBaseCtes: String =
+    s"""dsrc AS (SELECT doc_id, text FROM documents),
+       |elig AS (SELECT a.doc_id AS aid,
+       |    array_to_string(string_split_regex(trim(lower(a.text)), '\\s+')[11:40], ' ') AS quote,
+       |    translate(lower(b.text), 'aeiou', 'eioua') AS rb
+       |  FROM dsrc a JOIN dsrc b ON b.doc_id = a.doc_id + 3
+       |  WHERE a.doc_id % 11 = 0
+       |    AND len(string_split_regex(trim(lower(a.text)), '\\s+')) >= 40
+       |    AND len(string_split_regex(trim(lower(b.text)), '\\s+')) >= 60),
+       |base AS (
+       |  SELECT doc_id, text FROM dsrc
+       |  UNION ALL
+       |  SELECT doc_id + 10000, text FROM dsrc WHERE doc_id % 3 = 0
+       |  UNION ALL
+       |  SELECT aid + 70000, rb || ' ' || quote FROM elig
+       |  UNION ALL
+       |  SELECT aid + 80000, quote FROM elig)""".stripMargin
 
   /** Sequential-fold dot product — matches graft.functions.DotProduct
     * (same left fold, same op order).
@@ -2050,14 +2432,7 @@ object SparkEntry {
     // doc_id per node via recursive CTE == the min-label-propagation
     // fixpoint of Dedup.connectedComponents.
     "q_dedup_clusters" ->
-      s"""WITH RECURSIVE $lshPairsCtes,
-         |pairs AS (SELECT doc_a, doc_b FROM scored WHERE jaccard >= 0.5),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |cc AS (SELECT node, node AS m FROM nodes
-         |       UNION
-         |       SELECT e.dst AS node, cc.m FROM cc JOIN edges e ON e.src = cc.node)
+      s"""WITH RECURSIVE $lshClusterCtes
          |SELECT node AS doc_id, min(m) AS cluster_id
          |FROM cc GROUP BY node ORDER BY doc_id""".stripMargin,
 
@@ -2139,14 +2514,7 @@ object SparkEntry {
     // Cluster-size-histogram replay: CC recursion, per-cluster sizes,
     // count-of-counts with the descending docs-in-families tail.
     "q_cluster_sizes" ->
-      s"""WITH RECURSIVE $lshPairsCtes,
-         |pairs AS (SELECT doc_a, doc_b FROM scored WHERE jaccard >= 0.5),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |cc AS (SELECT node, node AS m FROM nodes
-         |       UNION
-         |       SELECT e.dst AS node, cc.m FROM cc JOIN edges e ON e.src = cc.node),
+      s"""WITH RECURSIVE $lshClusterCtes,
          |lab AS (SELECT node AS doc_id, min(m) AS cluster_id FROM cc GROUP BY node),
          |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS sz FROM lab GROUP BY cluster_id),
          |pv AS (SELECT sz, CAST(count(*) AS BIGINT) AS n_families FROM sz GROUP BY sz)
@@ -2268,14 +2636,7 @@ object SparkEntry {
     // recursion) + distinct-token quality, argmax by (quality desc,
     // doc_id) via row_number.
     "q_canonical_keeper" ->
-      s"""WITH RECURSIVE $lshPairsCtes,
-         |pairs AS (SELECT doc_a, doc_b FROM scored WHERE jaccard >= 0.5),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |cc AS (SELECT node, node AS m FROM nodes
-         |       UNION
-         |       SELECT e.dst AS node, cc.m FROM cc JOIN edges e ON e.src = cc.node),
+      s"""WITH RECURSIVE $lshClusterCtes,
          |lab AS (SELECT node AS doc_id, min(m) AS cluster_id FROM cc GROUP BY node),
          |qual AS (
          |  SELECT doc_id,
@@ -2322,14 +2683,7 @@ object SparkEntry {
     // curation split hash runs on the REPRESENTATIVE — near-dups can
     // never straddle train/val.
     "q_cluster_split" ->
-      s"""WITH RECURSIVE $lshPairsCtes,
-         |pairs AS (SELECT doc_a, doc_b FROM scored WHERE jaccard >= 0.5),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |cc AS (SELECT node, node AS m FROM nodes
-         |       UNION
-         |       SELECT e.dst AS node, cc.m FROM cc JOIN edges e ON e.src = cc.node),
+      s"""WITH RECURSIVE $lshClusterCtes,
          |lab AS (SELECT node AS doc_id, min(m) AS cluster_id FROM cc GROUP BY node),
          |wrep AS (SELECT b.doc_id, coalesce(l.cluster_id, b.doc_id) AS rep
          |         FROM base b LEFT JOIN lab l USING (doc_id)),
@@ -2955,17 +3309,7 @@ object SparkEntry {
          |      ORDER BY adc_e6, neighbor_id) AS arn
          |    FROM pq0adc)
          |  WHERE arn <= 10),
-         |re AS (
-         |  SELECT s.query_id, s.neighbor_id, s.adc_e6,
-         |    CAST(floor((${dotSql("n.v", "n.v")} - 2.0 * ${dotSql("q.v", "n.v")}
-         |      + ${dotSql("q.v", "q.v")}) * 1000000.0) AS BIGINT) AS d2_e6
-         |  FROM sl s JOIN pqe0 q ON s.query_id = q.vec_id
-         |       JOIN pqe0 n ON s.neighbor_id = n.vec_id)
-         |SELECT query_id, neighbor_id, rnk, adc_e6, d2_e6 FROM (
-         |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY d2_e6, neighbor_id) AS BIGINT) AS rnk
-         |  FROM re)
-         |WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin,
+         |$exactRerankSql""".stripMargin,
 
     // Same contract over the 2-round-Lloyd-refined codebooks (both
     // assign/recompute rounds unrolled per subspace).
@@ -2981,28 +3325,14 @@ object SparkEntry {
     // IVFADC replay (coarse pruning + residual-PQ ADC; see ivfPqCtes —
     // the nprobe=3 cap applies as the cell_rn filter).
     "q_ann_ivfpq" ->
-      s"""WITH pqe0 AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |$ivfPqCtes
-         |SELECT query_id, neighbor_id, rnk, adc_e6 FROM (
-         |  SELECT query_id, neighbor_id, adc_e6,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY adc_e6, neighbor_id) AS BIGINT) AS rnk
-         |  FROM ivadc WHERE cell_rn <= 3)
-         |WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin,
+      ivfPqTop3Sql,
 
     // Pruned-layout IVFADC: same pipeline, the code table served from
     // a parquet layout partitioned by ivf_cell with a probed-cell
     // PartitionFilter — results are bit-identical to q_ann_ivfpq, so
     // the replay is the same SQL.
     "q_ann_ivfpq_pruned" ->
-      s"""WITH pqe0 AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |$ivfPqCtes
-         |SELECT query_id, neighbor_id, rnk, adc_e6 FROM (
-         |  SELECT query_id, neighbor_id, adc_e6,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY adc_e6, neighbor_id) AS BIGINT) AS rnk
-         |  FROM ivadc WHERE cell_rn <= 3)
-         |WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin,
+      ivfPqTop3Sql,
 
     // IVFADC + exact refine replay: the nprobe=3 ADC table shortlisted
     // to k'=12 per query, candidates joined back to raw vectors, exact
@@ -3018,17 +3348,7 @@ object SparkEntry {
          |        ORDER BY adc_e6, neighbor_id) AS arn
          |    FROM ivadc WHERE cell_rn <= 3)
          |  WHERE arn <= 12),
-         |re AS (
-         |  SELECT s.query_id, s.neighbor_id, s.adc_e6,
-         |    CAST(floor((${dotSql("n.v", "n.v")} - 2.0 * ${dotSql("q.v", "n.v")}
-         |      + ${dotSql("q.v", "q.v")}) * 1000000.0) AS BIGINT) AS d2_e6
-         |  FROM sl s JOIN pqe0 q ON s.query_id = q.vec_id
-         |       JOIN pqe0 n ON s.neighbor_id = n.vec_id)
-         |SELECT query_id, neighbor_id, rnk, adc_e6, d2_e6 FROM (
-         |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY d2_e6, neighbor_id) AS BIGINT) AS rnk
-         |  FROM re)
-         |WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin,
+         |$exactRerankSql""".stripMargin,
 
     // IVFADC recall-vs-nprobe curve: every pair ADC-scored once with
     // its cell rank; each nprobe's top-3 is a filter + rank; hit
@@ -3374,40 +3694,9 @@ object SparkEntry {
          |  SELECT doc_id + 10000, text FROM documents WHERE doc_id % 3 = 0
          |  UNION ALL
          |  SELECT doc_id + 20000, replace(text, 'data', 'info') FROM documents WHERE doc_id % 5 = 0),
-         |b0 AS (SELECT doc_id, text, ' ' || lower(text) || ' ' AS pt, ${wordsSql("text")} AS w FROM base),
-         |s AS (SELECT doc_id, text,
-         |        ${langScoreSql("en")} AS s_en, ${langScoreSql("es")} AS s_es,
-         |        ${langScoreSql("de")} AS s_de, ${langScoreSql("zh")} AS s_zh,
-         |        round(least(CAST(len(w) AS DOUBLE) / 100.0, 1.0) * 0.5
-         |          + (1.0 - CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS DOUBLE) / length(text)) * 0.3
-         |          + CAST(len(list_distinct(w)) AS DOUBLE) / len(w) * 0.2, 6) AS quality
-         |      FROM b0),
-         |gated AS (SELECT doc_id, text, quality FROM s
-         |          WHERE s_en >= s_es AND s_en >= s_de AND s_en >= s_zh AND s_en > 0
-         |            AND quality >= ${graft.ops.Curation.QualityMin}),
-         |ex AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY md5(text)),
-         |ek AS (SELECT g.* FROM gated g WHERE g.doc_id IN (SELECT doc_id FROM ex)),
-         |sh AS (SELECT doc_id, $hashedShinglesSql AS shingles
-         |       FROM (SELECT doc_id, ${wordsSql("lower(text)")} AS w FROM ek)),
-         |hx AS (SELECT doc_id, unnest(shingles) AS h FROM sh),
-         |sig AS (SELECT doc_id, $minhashSigSql FROM hx GROUP BY doc_id),
-         |bands AS (SELECT doc_id, unnest([
-         |    concat_ws(':', '0', s0, s1), concat_ws(':', '1', s2, s3),
-         |    concat_ws(':', '2', s4, s5), concat_ws(':', '3', s6, s7)]) AS band FROM sig),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |         FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
-         |neardrop AS (SELECT DISTINCT doc_b AS doc_id FROM (
-         |    SELECT doc_a, doc_b,
-         |      round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-         |        / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 6) AS j
-         |    FROM cand JOIN sh sa ON cand.doc_a = sa.doc_id JOIN sh sb ON cand.doc_b = sb.doc_id)
-         |  WHERE j >= ${graft.ops.Curation.JaccardMin}),
+         |$curationCtes,
          |kept AS (SELECT doc_id, quality FROM ek WHERE doc_id NOT IN (SELECT doc_id FROM neardrop)),
-         |d AS (SELECT doc_id, quality,
-         |        ${hSql("concat('split:', CAST(doc_id AS VARCHAR))")} % 100 AS b FROM kept)
-         |SELECT doc_id, quality,
-         |  CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-         |FROM d ORDER BY doc_id""".stripMargin,
+         |${curationSplitSql("kept")}""".stripMargin,
 
     // Curation + span-dedup stage: the q_curation chain (kept carries
     // text forward), plus quote plants (two 30-token slices), then the
@@ -3429,34 +3718,7 @@ object SparkEntry {
          |  WHERE a.doc_id % 11 = 0
          |    AND len(string_split_regex(trim(lower(a.text)), '\\s+')) >= 40
          |    AND len(string_split_regex(trim(lower(b.text)), '\\s+')) >= 40),
-         |b0 AS (SELECT doc_id, text, ' ' || lower(text) || ' ' AS pt, ${wordsSql("text")} AS w FROM base),
-         |s AS (SELECT doc_id, text,
-         |        ${langScoreSql("en")} AS s_en, ${langScoreSql("es")} AS s_es,
-         |        ${langScoreSql("de")} AS s_de, ${langScoreSql("zh")} AS s_zh,
-         |        round(least(CAST(len(w) AS DOUBLE) / 100.0, 1.0) * 0.5
-         |          + (1.0 - CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS DOUBLE) / length(text)) * 0.3
-         |          + CAST(len(list_distinct(w)) AS DOUBLE) / len(w) * 0.2, 6) AS quality
-         |      FROM b0),
-         |gated AS (SELECT doc_id, text, quality FROM s
-         |          WHERE s_en >= s_es AND s_en >= s_de AND s_en >= s_zh AND s_en > 0
-         |            AND quality >= ${graft.ops.Curation.QualityMin}),
-         |ex AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY md5(text)),
-         |ek AS (SELECT g.* FROM gated g WHERE g.doc_id IN (SELECT doc_id FROM ex)),
-         |sh AS (SELECT doc_id, $hashedShinglesSql AS shingles
-         |       FROM (SELECT doc_id, ${wordsSql("lower(text)")} AS w FROM ek)),
-         |hx AS (SELECT doc_id, unnest(shingles) AS h FROM sh),
-         |sig AS (SELECT doc_id, $minhashSigSql FROM hx GROUP BY doc_id),
-         |bands AS (SELECT doc_id, unnest([
-         |    concat_ws(':', '0', s0, s1), concat_ws(':', '1', s2, s3),
-         |    concat_ws(':', '2', s4, s5), concat_ws(':', '3', s6, s7)]) AS band FROM sig),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |         FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
-         |neardrop AS (SELECT DISTINCT doc_b AS doc_id FROM (
-         |    SELECT doc_a, doc_b,
-         |      round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-         |        / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 6) AS j
-         |    FROM cand JOIN sh sa ON cand.doc_a = sa.doc_id JOIN sh sb ON cand.doc_b = sb.doc_id)
-         |  WHERE j >= ${graft.ops.Curation.JaccardMin}),
+         |$curationCtes,
          |kept AS (SELECT doc_id, text, quality FROM ek
          |         WHERE doc_id NOT IN (SELECT doc_id FROM neardrop)),
          |${winnowFpsCtes("cw", "kept")},
@@ -3469,11 +3731,7 @@ object SparkEntry {
          |             HAVING count(*) >= ${graft.ops.Curation.SpanMinShared}),
          |kept2 AS (SELECT doc_id, quality FROM kept
          |          WHERE doc_id NOT IN (SELECT doc_id FROM spandrop)),
-         |d AS (SELECT doc_id, quality,
-         |        ${hSql("concat('split:', CAST(doc_id AS VARCHAR))")} % 100 AS b FROM kept2)
-         |SELECT doc_id, quality,
-         |  CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-         |FROM d ORDER BY doc_id""".stripMargin,
+         |${curationSplitSql("kept2")}""".stripMargin,
 
     // Curation + COVERED span policy: the q_curation_spans chain, but
     // spandrop keeps a doc unless the shared span is >= SpanMinCoverage
@@ -3482,50 +3740,8 @@ object SparkEntry {
     // (id+80000) must drop; vowel-rotated HOSTS carrying a short quote
     // (id+70000) must survive.
     "q_curation_spancov" ->
-      s"""WITH dsrc AS (SELECT doc_id, text FROM documents),
-         |elig AS (SELECT a.doc_id AS aid,
-         |    array_to_string(string_split_regex(trim(lower(a.text)), '\\s+')[11:40], ' ') AS quote,
-         |    translate(lower(b.text), 'aeiou', 'eioua') AS rb
-         |  FROM dsrc a JOIN dsrc b ON b.doc_id = a.doc_id + 3
-         |  WHERE a.doc_id % 11 = 0
-         |    AND len(string_split_regex(trim(lower(a.text)), '\\s+')) >= 40
-         |    AND len(string_split_regex(trim(lower(b.text)), '\\s+')) >= 60),
-         |base AS (
-         |  SELECT doc_id, text FROM dsrc
-         |  UNION ALL
-         |  SELECT doc_id + 10000, text FROM dsrc WHERE doc_id % 3 = 0
-         |  UNION ALL
-         |  SELECT aid + 70000, rb || ' ' || quote FROM elig
-         |  UNION ALL
-         |  SELECT aid + 80000, quote FROM elig),
-         |b0 AS (SELECT doc_id, text, ' ' || lower(text) || ' ' AS pt, ${wordsSql("text")} AS w FROM base),
-         |s AS (SELECT doc_id, text,
-         |        ${langScoreSql("en")} AS s_en, ${langScoreSql("es")} AS s_es,
-         |        ${langScoreSql("de")} AS s_de, ${langScoreSql("zh")} AS s_zh,
-         |        round(least(CAST(len(w) AS DOUBLE) / 100.0, 1.0) * 0.5
-         |          + (1.0 - CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS DOUBLE) / length(text)) * 0.3
-         |          + CAST(len(list_distinct(w)) AS DOUBLE) / len(w) * 0.2, 6) AS quality
-         |      FROM b0),
-         |gated AS (SELECT doc_id, text, quality FROM s
-         |          WHERE s_en >= s_es AND s_en >= s_de AND s_en >= s_zh AND s_en > 0
-         |            AND quality >= ${graft.ops.Curation.QualityMin}),
-         |ex AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY md5(text)),
-         |ek AS (SELECT g.* FROM gated g WHERE g.doc_id IN (SELECT doc_id FROM ex)),
-         |sh AS (SELECT doc_id, $hashedShinglesSql AS shingles
-         |       FROM (SELECT doc_id, ${wordsSql("lower(text)")} AS w FROM ek)),
-         |hx AS (SELECT doc_id, unnest(shingles) AS h FROM sh),
-         |sig AS (SELECT doc_id, $minhashSigSql FROM hx GROUP BY doc_id),
-         |bands AS (SELECT doc_id, unnest([
-         |    concat_ws(':', '0', s0, s1), concat_ws(':', '1', s2, s3),
-         |    concat_ws(':', '2', s4, s5), concat_ws(':', '3', s6, s7)]) AS band FROM sig),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |         FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
-         |neardrop AS (SELECT DISTINCT doc_b AS doc_id FROM (
-         |    SELECT doc_a, doc_b,
-         |      round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-         |        / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 6) AS j
-         |    FROM cand JOIN sh sa ON cand.doc_a = sa.doc_id JOIN sh sb ON cand.doc_b = sb.doc_id)
-         |  WHERE j >= ${graft.ops.Curation.JaccardMin}),
+      s"""WITH $coverPlantBaseCtes,
+         |$curationCtes,
          |kept AS (SELECT doc_id, text, quality FROM ek
          |         WHERE doc_id NOT IN (SELECT doc_id FROM neardrop)),
          |${winnowFpsCtes("cv", "kept")},
@@ -3550,61 +3766,15 @@ object SparkEntry {
          |    AND cov_b < ${graft.ops.Curation.SpanMinCoverage}),
          |kept2 AS (SELECT doc_id, quality FROM kept
          |          WHERE doc_id NOT IN (SELECT doc_id FROM spandrop)),
-         |d AS (SELECT doc_id, quality,
-         |        ${hSql("concat('split:', CAST(doc_id AS VARCHAR))")} % 100 AS b FROM kept2)
-         |SELECT doc_id, quality,
-         |  CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-         |FROM d ORDER BY doc_id""".stripMargin,
+         |${curationSplitSql("kept2")}""".stripMargin,
 
     // Curation + the volume-preserving strip mode: the spancov chain up
     // to `kept` (text carried), then the q_dedup_strip replay (8-gram
     // first-occurrence marks, running-max coverage, md5'd rebuild) over
     // the SURVIVING corpus; keep_doc = n_kept >= 8.
     "q_curation_strip" ->
-      s"""WITH dsrc AS (SELECT doc_id, text FROM documents),
-         |elig AS (SELECT a.doc_id AS aid,
-         |    array_to_string(string_split_regex(trim(lower(a.text)), '\\s+')[11:40], ' ') AS quote,
-         |    translate(lower(b.text), 'aeiou', 'eioua') AS rb
-         |  FROM dsrc a JOIN dsrc b ON b.doc_id = a.doc_id + 3
-         |  WHERE a.doc_id % 11 = 0
-         |    AND len(string_split_regex(trim(lower(a.text)), '\\s+')) >= 40
-         |    AND len(string_split_regex(trim(lower(b.text)), '\\s+')) >= 60),
-         |base AS (
-         |  SELECT doc_id, text FROM dsrc
-         |  UNION ALL
-         |  SELECT doc_id + 10000, text FROM dsrc WHERE doc_id % 3 = 0
-         |  UNION ALL
-         |  SELECT aid + 70000, rb || ' ' || quote FROM elig
-         |  UNION ALL
-         |  SELECT aid + 80000, quote FROM elig),
-         |b0 AS (SELECT doc_id, text, ' ' || lower(text) || ' ' AS pt, ${wordsSql("text")} AS w FROM base),
-         |s AS (SELECT doc_id, text,
-         |        ${langScoreSql("en")} AS s_en, ${langScoreSql("es")} AS s_es,
-         |        ${langScoreSql("de")} AS s_de, ${langScoreSql("zh")} AS s_zh,
-         |        round(least(CAST(len(w) AS DOUBLE) / 100.0, 1.0) * 0.5
-         |          + (1.0 - CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS DOUBLE) / length(text)) * 0.3
-         |          + CAST(len(list_distinct(w)) AS DOUBLE) / len(w) * 0.2, 6) AS quality
-         |      FROM b0),
-         |gated AS (SELECT doc_id, text, quality FROM s
-         |          WHERE s_en >= s_es AND s_en >= s_de AND s_en >= s_zh AND s_en > 0
-         |            AND quality >= ${graft.ops.Curation.QualityMin}),
-         |ex AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY md5(text)),
-         |ek AS (SELECT g.* FROM gated g WHERE g.doc_id IN (SELECT doc_id FROM ex)),
-         |sh AS (SELECT doc_id, $hashedShinglesSql AS shingles
-         |       FROM (SELECT doc_id, ${wordsSql("lower(text)")} AS w FROM ek)),
-         |hx AS (SELECT doc_id, unnest(shingles) AS h FROM sh),
-         |sig AS (SELECT doc_id, $minhashSigSql FROM hx GROUP BY doc_id),
-         |bands AS (SELECT doc_id, unnest([
-         |    concat_ws(':', '0', s0, s1), concat_ws(':', '1', s2, s3),
-         |    concat_ws(':', '2', s4, s5), concat_ws(':', '3', s6, s7)]) AS band FROM sig),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |         FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
-         |neardrop AS (SELECT DISTINCT doc_b AS doc_id FROM (
-         |    SELECT doc_a, doc_b,
-         |      round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-         |        / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 6) AS j
-         |    FROM cand JOIN sh sa ON cand.doc_a = sa.doc_id JOIN sh sb ON cand.doc_b = sb.doc_id)
-         |  WHERE j >= ${graft.ops.Curation.JaccardMin}),
+      s"""WITH $coverPlantBaseCtes,
+         |$curationCtes,
          |kept AS (SELECT doc_id, text, quality FROM ek
          |         WHERE doc_id NOT IN (SELECT doc_id FROM neardrop)),
          |${gram8Ctes("z", "kept")},
@@ -3900,40 +4070,18 @@ object SparkEntry {
     // Per-iteration round(·, 6) quantization on BOTH engines (the
     // unrolled-kmeans device) — each iteration's input is bit-identical,
     // so accumulation-order noise cannot compound across rounds.
-    "q_pagerank" -> {
-      def iter(prev: String, out: String): String =
-        s"""$out AS (
-           |  SELECT node, round(150.0 / nn + 0.85 * coalesce(c, 0.0), 6) AS pr
-           |  FROM nodes CROSS JOIN n LEFT JOIN (
-           |    SELECT dst, sum(pr * share) AS c
-           |    FROM e2 JOIN $prev ON e2.src = $prev.node GROUP BY dst) t
-           |  ON nodes.node = t.dst)""".stripMargin
+    "q_pagerank" ->
       s"""WITH p AS (SELECT l_partkey AS src,
          |    lead(l_partkey) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS dst
          |  FROM lineitem),
          |ed AS (SELECT src, dst, CAST(count(*) AS DOUBLE) AS w FROM p WHERE dst IS NOT NULL GROUP BY src, dst),
-         |nodes AS (SELECT DISTINCT node FROM (SELECT src AS node FROM ed UNION ALL SELECT dst FROM ed)),
-         |n AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM nodes),
-         |ow AS (SELECT src, sum(w) AS outw FROM ed GROUP BY src),
-         |e2 AS (SELECT ed.src, ed.dst, ed.w / ow.outw AS share FROM ed JOIN ow USING (src)),
-         |pr0 AS (SELECT node, round(1000.0 / nn, 6) AS pr FROM nodes CROSS JOIN n),
-         |${iter("pr0", "pr1")},
-         |${iter("pr1", "pr2")},
-         |${iter("pr2", "pr3")}
-         |SELECT node, pr FROM pr3 ORDER BY node""".stripMargin
-    },
+         |$pagerankCtes
+         |SELECT node, pr FROM pr3 ORDER BY node""".stripMargin,
 
     // TextRank replay: the q_decontaminate tokenization (kept-position
     // lead adjacency), symmetrized weighted edges, then the exact
     // q_pagerank iteration CTEs over the vocab graph.
-    "q_textrank" -> {
-      def iter(prev: String, out: String): String =
-        s"""$out AS (
-           |  SELECT node, round(150.0 / nn + 0.85 * coalesce(c, 0.0), 6) AS pr
-           |  FROM nodes CROSS JOIN n LEFT JOIN (
-           |    SELECT dst, sum(pr * share) AS c
-           |    FROM e2 JOIN $prev ON e2.src = $prev.node GROUP BY dst) t
-           |  ON nodes.node = t.dst)""".stripMargin
+    "q_textrank" ->
       s"""WITH tok AS (SELECT doc_id, unnest(l) AS token, generate_subscripts(l, 1) AS pos
          |             FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS l FROM documents)),
          |t2 AS (SELECT doc_id, pos, token FROM tok WHERE length(token) >= 2),
@@ -3942,19 +4090,11 @@ object SparkEntry {
          |ed AS (SELECT src, dst, CAST(count(*) AS DOUBLE) AS w FROM (
          |    SELECT token AS src, nxt AS dst FROM pp
          |    UNION ALL SELECT nxt, token FROM pp) u GROUP BY src, dst),
-         |nodes AS (SELECT DISTINCT node FROM (SELECT src AS node FROM ed UNION ALL SELECT dst FROM ed)),
-         |n AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM nodes),
-         |ow AS (SELECT src, sum(w) AS outw FROM ed GROUP BY src),
-         |e2 AS (SELECT ed.src, ed.dst, ed.w / ow.outw AS share FROM ed JOIN ow USING (src)),
-         |pr0 AS (SELECT node, round(1000.0 / nn, 6) AS pr FROM nodes CROSS JOIN n),
-         |${iter("pr0", "pr1")},
-         |${iter("pr1", "pr2")},
-         |${iter("pr2", "pr3")}
+         |$pagerankCtes
          |SELECT rnk, node AS token, pr FROM (
          |  SELECT node, pr, CAST(row_number() OVER (ORDER BY pr DESC, node) AS BIGINT) AS rnk
          |  FROM pr3)
-         |WHERE rnk <= 20 ORDER BY rnk""".stripMargin
-    },
+         |WHERE rnk <= 20 ORDER BY rnk""".stripMargin,
 
     // Winsorize replay: decile boundaries from the same support walk,
     // clamp, one integral division.
@@ -4513,12 +4653,7 @@ object SparkEntry {
            |  UNION ALL
            |  SELECT e.dst, bd${i - 1}.d + 1 FROM bu e JOIN bd${i - 1} ON e.src = bd${i - 1}.node) t
            |  GROUP BY node)""".stripMargin
-      s"""WITH bp AS (SELECT l_partkey AS src,
-         |    lead(l_partkey) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS dst
-         |  FROM lineitem),
-         |be AS (SELECT DISTINCT src, dst FROM bp WHERE dst IS NOT NULL AND src <> dst),
-         |bu AS MATERIALIZED (SELECT DISTINCT src, dst FROM
-         |  (SELECT src, dst FROM be UNION ALL SELECT dst, src FROM be) t),
+      s"""WITH $partEdgeCtes,
          |bd0 AS (SELECT min(src) AS node, CAST(0 AS BIGINT) AS d FROM bu),
          |${(1 to 6).map(iter).mkString(",\n")}
          |SELECT node, d FROM bd6 ORDER BY node""".stripMargin
@@ -5564,34 +5699,7 @@ object SparkEntry {
          |    ${chunksSql(s"md5($mid || 'x')")} || ' of ' ||
          |    ${chunksSql(s"md5($mid || 'y')")} || ' to a'
          |  FROM documents WHERE doc_id % 17 = 0),
-         |b0 AS (SELECT doc_id, text, ' ' || lower(text) || ' ' AS pt, ${wordsSql("text")} AS w FROM base),
-         |s AS (SELECT doc_id, text,
-         |        ${langScoreSql("en")} AS s_en, ${langScoreSql("es")} AS s_es,
-         |        ${langScoreSql("de")} AS s_de, ${langScoreSql("zh")} AS s_zh,
-         |        round(least(CAST(len(w) AS DOUBLE) / 100.0, 1.0) * 0.5
-         |          + (1.0 - CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS DOUBLE) / length(text)) * 0.3
-         |          + CAST(len(list_distinct(w)) AS DOUBLE) / len(w) * 0.2, 6) AS quality
-         |      FROM b0),
-         |gated AS (SELECT doc_id, text, quality FROM s
-         |          WHERE s_en >= s_es AND s_en >= s_de AND s_en >= s_zh AND s_en > 0
-         |            AND quality >= ${graft.ops.Curation.QualityMin}),
-         |ex AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY md5(text)),
-         |ek AS (SELECT g.* FROM gated g WHERE g.doc_id IN (SELECT doc_id FROM ex)),
-         |sh AS (SELECT doc_id, $hashedShinglesSql AS shingles
-         |       FROM (SELECT doc_id, ${wordsSql("lower(text)")} AS w FROM ek)),
-         |hx AS (SELECT doc_id, unnest(shingles) AS h FROM sh),
-         |sig AS (SELECT doc_id, $minhashSigSql FROM hx GROUP BY doc_id),
-         |bands AS (SELECT doc_id, unnest([
-         |    concat_ws(':', '0', s0, s1), concat_ws(':', '1', s2, s3),
-         |    concat_ws(':', '2', s4, s5), concat_ws(':', '3', s6, s7)]) AS band FROM sig),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |         FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
-         |neardrop AS (SELECT DISTINCT doc_b AS doc_id FROM (
-         |    SELECT doc_a, doc_b,
-         |      round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-         |        / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 6) AS j
-         |    FROM cand JOIN sh sa ON cand.doc_a = sa.doc_id JOIN sh sb ON cand.doc_b = sb.doc_id)
-         |  WHERE j >= ${graft.ops.Curation.JaccardMin}),
+         |$curationCtes,
          |kept AS (SELECT doc_id, text, quality FROM ek
          |         WHERE doc_id NOT IN (SELECT doc_id FROM neardrop)),
          |entr AS (SELECT doc_id, text FROM documents WHERE lang = 'en'),
@@ -5599,32 +5707,17 @@ object SparkEntry {
          |kept2 AS (SELECT k.doc_id, k.quality FROM kept k
          |          LEFT JOIN clscores sc USING (doc_id)
          |          WHERE coalesce(sc.keep, TRUE)),
-         |d AS (SELECT doc_id, quality,
-         |        ${hSql("concat('split:', CAST(doc_id AS VARCHAR))")} % 100 AS b FROM kept2)
-         |SELECT doc_id, quality,
-         |  CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-         |FROM d ORDER BY doc_id""".stripMargin
+         |${curationSplitSql("kept2")}""".stripMargin
     },
 
     // BPE replay: word-type dict, char symbols + </w>, then 8 unrolled
     // merge iterations (pair count → lexicographic argmax → run-parity
     // apply) — the same all-relational recipe Bpe.train runs.
     "q_bpe_merges" -> {
-      val iters = (1 to 8).map(bpeIterCtes).mkString(",\n")
       val ranks = (1 to 8).map(i =>
         s"SELECT $i AS merge_rank, l AS lhs, r AS rhs, c AS pair_count FROM bbest$i")
         .mkString("\n  UNION ALL ")
-      s"""WITH bwords AS (
-         |  SELECT word, count(*) AS freq FROM (
-         |    SELECT unnest(${wordsSql("lower(text)")}) AS word FROM documents) u
-         |  WHERE length(word) >= 1 GROUP BY word),
-         |bseq0 AS (
-         |  SELECT word, freq, pos, ws[pos + 1] AS s FROM (
-         |    SELECT word, freq,
-         |      list_append(list_transform(range(length(word)), j -> substr(word, CAST(j + 1 AS INT), 1)), '</w>') AS ws
-         |    FROM bwords) t,
-         |    LATERAL (SELECT unnest(range(len(ws))) AS pos) p),
-         |$iters
+      s"""WITH $bpeChainCtes
          |SELECT * FROM (
          |  $ranks)
          |ORDER BY merge_rank""".stripMargin
@@ -5633,19 +5726,8 @@ object SparkEntry {
     // BPE encode replay: same 8 unrolled merge iterations to bseq8,
     // per-TYPE subword counts, then a word-keyed join of the corpus'
     // word occurrences — per-doc totals as exact integers.
-    "q_bpe_encode" -> {
-      val iters = (1 to 8).map(bpeIterCtes).mkString(",\n")
-      s"""WITH bwords AS (
-         |  SELECT word, count(*) AS freq FROM (
-         |    SELECT unnest(${wordsSql("lower(text)")}) AS word FROM documents) u
-         |  WHERE length(word) >= 1 GROUP BY word),
-         |bseq0 AS (
-         |  SELECT word, freq, pos, ws[pos + 1] AS s FROM (
-         |    SELECT word, freq,
-         |      list_append(list_transform(range(length(word)), j -> substr(word, CAST(j + 1 AS INT), 1)), '</w>') AS ws
-         |    FROM bwords) t,
-         |    LATERAL (SELECT unnest(range(len(ws))) AS pos) p),
-         |$iters,
+    "q_bpe_encode" ->
+      s"""WITH $bpeChainCtes,
          |enc AS (SELECT word, CAST(count(*) AS BIGINT) AS n_subwords FROM bseq8 GROUP BY word),
          |dw AS (SELECT doc_id, word FROM (
          |    SELECT doc_id, unnest(${wordsSql("lower(text)")}) AS word FROM documents) u
@@ -5653,8 +5735,7 @@ object SparkEntry {
          |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
          |  CAST(sum(n_subwords) AS BIGINT) AS n_subwords
          |FROM dw JOIN enc USING (word)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     // Mann-Whitney replay: shared value-support walk (2×-midranks over
     // distinct values), per-type rank sums, 2U = Σmr2 − n(n+1), AUC at
@@ -5927,12 +6008,7 @@ object SparkEntry {
     // 3 days, duration support, descending at-risk cumulative, hazard
     // at 1e-6.
     "q_life_table" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    min(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS f,
-        |    max(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS l
-        |  FROM events GROUP BY user_id),
-        |md AS (SELECT max(l) AS maxd FROM u),
+      s"""WITH $survivalUsersCtes,
         |byt AS (
         |  SELECT l - f AS t,
         |    sum(CASE WHEN l >= maxd - 2 THEN 0 ELSE 1 END) AS d_churn,
@@ -6188,18 +6264,7 @@ object SparkEntry {
     // Kaplan-Meier replay: same duration support, the at-risk carry
     // and truncating survival product via a recursive CTE.
     "q_kaplan_meier" ->
-      """WITH RECURSIVE u AS (
-        |  SELECT user_id,
-        |    min(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS f,
-        |    max(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS l
-        |  FROM events GROUP BY user_id),
-        |md AS (SELECT max(l) AS maxd FROM u),
-        |byt AS (SELECT l - f AS t,
-        |    CAST(sum(CASE WHEN l >= maxd - 2 THEN 0 ELSE 1 END) AS BIGINT) AS dd,
-        |    CAST(sum(CASE WHEN l >= maxd - 2 THEN 1 ELSE 0 END) AS BIGINT) AS cc
-        |  FROM u, md GROUP BY 1),
-        |d2 AS (SELECT t, dd, cc, row_number() OVER (ORDER BY t) AS rn FROM byt),
-        |tot AS (SELECT CAST(sum(dd + cc) AS BIGINT) AS total FROM byt),
+      s"""WITH RECURSIVE $survivalTimesCtes,
         |r AS (
         |  SELECT rn, t, dd, cc, total AS n,
         |    1000000 * (total - dd) // total AS s
@@ -6846,23 +6911,8 @@ object SparkEntry {
     // still grew any root's reach (the q_ktruss explicit-assumption
     // discipline), so an insufficient unroll can never silently hash.
     "q_harmonic_centrality" -> {
-      def iter(i: Int): String =
-        s"""hd$i AS MATERIALIZED (SELECT root, node, min(d) AS d FROM (
-           |  SELECT root, node, d FROM hd${i - 1}
-           |  UNION ALL
-           |  SELECT p.root, e.dst, p.d + 1 FROM bu e JOIN hd${i - 1} p ON e.src = p.node) t
-           |  GROUP BY root, node)""".stripMargin
-      s"""WITH bp AS (SELECT l_partkey AS src,
-         |    lead(l_partkey) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS dst
-         |  FROM lineitem),
-         |be AS (SELECT DISTINCT src, dst FROM bp WHERE dst IS NOT NULL AND src <> dst),
-         |bu AS MATERIALIZED (SELECT DISTINCT src, dst FROM
-         |  (SELECT src, dst FROM be UNION ALL SELECT dst, src FROM be) t),
-         |roots AS (SELECT DISTINCT src AS node FROM bu ORDER BY node LIMIT 10),
-         |hd0 AS (SELECT node AS root, node, CAST(0 AS BIGINT) AS d FROM roots),
-         |${(1 to 8).map(iter).mkString(",\n")},
-         |fixguard AS (SELECT CASE WHEN (SELECT count(*) FROM hd8)
-         |    = (SELECT count(*) FROM hd7) THEN 1 ELSE 0 END AS at_fixpoint)
+      s"""WITH $partEdgeCtes,
+         |$partRootBfsCtes
          |SELECT root, CAST(count(*) AS BIGINT) AS n_reached,
          |  CAST(sum(d) AS BIGINT) AS sum_d,
          |  CAST(CASE WHEN at_fixpoint = 1 THEN sum(1000000 // d) ELSE error(
@@ -7444,12 +7494,6 @@ object SparkEntry {
     // delta sweep with the same truncating e6 per-edge division, summed
     // per node, TakeOrdered top-20.
     "q_betweenness" -> {
-      def dIter(i: Int): String =
-        s"""hd$i AS MATERIALIZED (SELECT root, node, min(d) AS d FROM (
-           |  SELECT root, node, d FROM hd${i - 1}
-           |  UNION ALL
-           |  SELECT p.root, e.dst, p.d + 1 FROM bu e JOIN hd${i - 1} p ON e.src = p.node) t
-           |  GROUP BY root, node)""".stripMargin
       def sIter(i: Int): String =
         s"""sg$i AS MATERIALIZED (SELECT p.root, e.dst AS node, sum(p.sigma) AS sigma
            |  FROM bu e JOIN sg${i - 1} p ON e.src = p.node
@@ -7465,17 +7509,8 @@ object SparkEntry {
            |dl$i AS MATERIALIZED (SELECT v.root, v.node,
            |    coalesce(t.delta, CAST(0 AS HUGEINT)) AS delta
            |  FROM sg$i v LEFT JOIN dt$i t ON t.root = v.root AND t.node = v.node)""".stripMargin
-      s"""WITH bp AS (SELECT l_partkey AS src,
-         |    lead(l_partkey) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS dst
-         |  FROM lineitem),
-         |be AS (SELECT DISTINCT src, dst FROM bp WHERE dst IS NOT NULL AND src <> dst),
-         |bu AS MATERIALIZED (SELECT DISTINCT src, dst FROM
-         |  (SELECT src, dst FROM be UNION ALL SELECT dst, src FROM be) t),
-         |roots AS (SELECT DISTINCT src AS node FROM bu ORDER BY node LIMIT 10),
-         |hd0 AS (SELECT node AS root, node, CAST(0 AS BIGINT) AS d FROM roots),
-         |${(1 to 8).map(dIter).mkString(",\n")},
-         |fixguard AS (SELECT CASE WHEN (SELECT count(*) FROM hd8)
-         |    = (SELECT count(*) FROM hd7) THEN 1 ELSE 0 END AS at_fixpoint),
+      s"""WITH $partEdgeCtes,
+         |$partRootBfsCtes,
          |sg0 AS (SELECT node AS root, node, CAST(1 AS HUGEINT) AS sigma FROM roots),
          |${(1 to 8).map(sIter).mkString(",\n")},
          |dl8 AS MATERIALIZED (SELECT root, node, CAST(0 AS HUGEINT) AS delta FROM sg8),
@@ -8141,30 +8176,11 @@ object SparkEntry {
     // min-label components over core-core edges, border attachment,
     // noise remainder.
     "q_dbscan" ->
-      s"""WITH RECURSIVE e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-         |  FROM embeddings),
-         |raw AS (SELECT vec_id, label, v FROM e
-         |  UNION ALL SELECT vec_id + 10000, label, list_transform(range(len(v)),
-         |    i -> CASE WHEN i = 0 THEN v[1] + 0.008 ELSE v[CAST(i AS INT)+1] END)
-         |  FROM e WHERE vec_id % 7 = 0
-         |  UNION ALL SELECT vec_id + 20000, label, list_transform(range(len(v)),
-         |    i -> CASE WHEN i = 1 THEN v[2] + -0.008 ELSE v[CAST(i AS INT)+1] END)
-         |  FROM e WHERE vec_id % 7 = 0
-         |  UNION ALL SELECT vec_id + 30000, label, list_transform(range(len(v)),
-         |    i -> CASE WHEN i = 0 THEN v[1] + 0.07 ELSE v[CAST(i AS INT)+1] END)
-         |  FROM e WHERE vec_id % 11 = 3
-         |  UNION ALL SELECT vec_id + 40000, label, list_transform(range(len(v)),
-         |    i -> CASE WHEN i = 0 THEN v[1] + 0.14 ELSE v[CAST(i AS INT)+1] END)
-         |  FROM e WHERE vec_id % 11 = 3),
+      s"""WITH RECURSIVE $plantedEmbeddingCtes,
          |base AS (SELECT vec_id, label, ${normSql("v")} AS v FROM raw),
          |codes AS (SELECT vec_id, label, v, ${dbscanBand(0)} AS c0,
          |    ${dbscanBand(4)} AS c1 FROM base),
-         |cand AS (SELECT a.vec_id AS va, b.vec_id AS vb
-         |    FROM codes a JOIN codes b
-         |      ON a.label = b.label AND a.c0 = b.c0 AND a.vec_id < b.vec_id
-         |  UNION SELECT a.vec_id, b.vec_id
-         |    FROM codes a JOIN codes b
-         |      ON a.label = b.label AND a.c1 = b.c1 AND a.vec_id < b.vec_id),
+         |cand AS ($codesBandPairsSql),
          |pairs AS (SELECT DISTINCT va, vb FROM cand
          |  JOIN base ba ON cand.va = ba.vec_id JOIN base bb ON cand.vb = bb.vec_id
          |  WHERE ${dotSql("ba.v", "bb.v")} >= 0.995),
@@ -8566,23 +8582,12 @@ object SparkEntry {
     // Closeness replay: the harmonic BFS chain + Wasserman-Faust
     // normalization against the global node count.
     "q_closeness" -> {
-      def iter(i: Int): String =
-        s"""cd$i AS MATERIALIZED (SELECT root, node, min(d) AS d FROM (
-           |  SELECT root, node, d FROM cd${i - 1}
-           |  UNION ALL
-           |  SELECT p.root, e.dst, p.d + 1 FROM bu e JOIN cd${i - 1} p ON e.src = p.node) t
-           |  GROUP BY root, node)""".stripMargin
-      s"""WITH bp AS (SELECT l_partkey AS src,
-         |    lead(l_partkey) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS dst
-         |  FROM lineitem),
-         |be AS (SELECT DISTINCT src, dst FROM bp WHERE dst IS NOT NULL AND src <> dst),
-         |bu AS MATERIALIZED (SELECT DISTINCT src, dst FROM
-         |  (SELECT src, dst FROM be UNION ALL SELECT dst, src FROM be) t),
+      s"""WITH $partEdgeCtes,
          |allnodes AS (SELECT DISTINCT src AS node FROM bu),
          |nt AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM allnodes),
          |roots AS (SELECT node FROM allnodes ORDER BY node LIMIT 10),
          |cd0 AS (SELECT node AS root, node, CAST(0 AS BIGINT) AS d FROM roots),
-         |${(1 to 8).map(iter).mkString(",\n")},
+         |${rootedBfsCtes("cd", 8)},
          |fixguard AS (SELECT CASE WHEN (SELECT count(*) FROM cd8)
          |    = (SELECT count(*) FROM cd7) THEN 1 ELSE 0 END AS at_fixpoint)
          |SELECT root, CAST(count(*) AS BIGINT) AS n_reached,
@@ -8717,30 +8722,11 @@ object SparkEntry {
            |  CAST(count(*) AS BIGINT) AS n_clusters,
            |  coalesce(max(sz), 0) AS max_size,
            |  CAST(coalesce(sum(sz), 0) AS BIGINT) AS n_clustered FROM s$tag)""".stripMargin
-      s"""WITH RECURSIVE e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-         |  FROM embeddings),
-         |raw AS (SELECT vec_id, label, v FROM e
-         |  UNION ALL SELECT vec_id + 10000, label, list_transform(range(len(v)),
-         |    i -> CASE WHEN i = 0 THEN v[1] + 0.008 ELSE v[CAST(i AS INT)+1] END)
-         |  FROM e WHERE vec_id % 7 = 0
-         |  UNION ALL SELECT vec_id + 20000, label, list_transform(range(len(v)),
-         |    i -> CASE WHEN i = 1 THEN v[2] + -0.008 ELSE v[CAST(i AS INT)+1] END)
-         |  FROM e WHERE vec_id % 7 = 0
-         |  UNION ALL SELECT vec_id + 30000, label, list_transform(range(len(v)),
-         |    i -> CASE WHEN i = 0 THEN v[1] + 0.07 ELSE v[CAST(i AS INT)+1] END)
-         |  FROM e WHERE vec_id % 11 = 3
-         |  UNION ALL SELECT vec_id + 40000, label, list_transform(range(len(v)),
-         |    i -> CASE WHEN i = 0 THEN v[1] + 0.14 ELSE v[CAST(i AS INT)+1] END)
-         |  FROM e WHERE vec_id % 11 = 3),
+      s"""WITH RECURSIVE $plantedEmbeddingCtes,
          |base AS MATERIALIZED (SELECT vec_id, label, ${normSql("v")} AS v FROM raw),
          |codes AS MATERIALIZED (SELECT vec_id, label, v, ${dbscanBand(0)} AS c0,
          |    ${dbscanBand(4)} AS c1 FROM base),
-         |cand0 AS (SELECT a.vec_id AS va, b.vec_id AS vb
-         |    FROM codes a JOIN codes b
-         |      ON a.label = b.label AND a.c0 = b.c0 AND a.vec_id < b.vec_id
-         |  UNION SELECT a.vec_id, b.vec_id
-         |    FROM codes a JOIN codes b
-         |      ON a.label = b.label AND a.c1 = b.c1 AND a.vec_id < b.vec_id),
+         |cand0 AS ($codesBandPairsSql),
          |cand AS MATERIALIZED (SELECT va, vb, ${dotSql("ba.v", "bb.v")} AS cs FROM cand0
          |  JOIN base ba ON cand0.va = ba.vec_id JOIN base bb ON cand0.vb = bb.vec_id
          |  WHERE ${dotSql("ba.v", "bb.v")} >= 0.98),
@@ -8774,21 +8760,10 @@ object SparkEntry {
     // Needleman-Wunsch replay: per-user ordered first-7 event types,
     // the same 49 unrolled DP cells re-rowed into MATERIALIZED per-row
     // CTEs (the rouge_l device — lateral form planned ~38 s).
-    "q_needleman" -> {
-      val rows = dpRowCtes(Queries.nwCells(i => s"a[$i]", j => s"b[$j]", 7),
-        7, 7, "user_a, user_b, a, b", "pairs", "dp")
-      s"""WITH s0 AS (SELECT user_id,
-         |    list_slice(list(event_type ORDER BY epoch_us(CAST(ts AS TIMESTAMP)),
-         |      event_id), 1, 7) AS arr
-         |  FROM events WHERE user_id < 8 GROUP BY user_id),
-         |seqs AS (SELECT user_id, arr FROM s0 WHERE len(arr) = 7),
-         |pairs AS (SELECT p.user_id AS user_a, q.user_id AS user_b,
-         |    p.arr AS a, q.arr AS b
-         |  FROM seqs p JOIN seqs q ON q.user_id > p.user_id),
-         |$rows
+    "q_needleman" ->
+      s"""WITH ${userPairDpCtes(Queries.nwCells(i => s"a[$i]", j => s"b[$j]", 7))}
          |SELECT user_a, user_b, CAST(ca7 AS BIGINT) AS nw_score
-         |FROM dp7 ORDER BY user_a, user_b""".stripMargin
-    },
+         |FROM dp7 ORDER BY user_a, user_b""".stripMargin,
 
     // Forecast-backtest replay: one recursive chain carrying
     // (ses, l, b, first, last, n) over the train prefix, the same four
@@ -9102,22 +9077,11 @@ object SparkEntry {
     // guard), readout = per-root max distance + scalar radius/diameter
     // over the 10-root sample.
     "q_eccentricity" -> {
-      def iter(i: Int): String =
-        s"""ed$i AS MATERIALIZED (SELECT root, node, min(d) AS d FROM (
-           |  SELECT root, node, d FROM ed${i - 1}
-           |  UNION ALL
-           |  SELECT p.root, e.dst, p.d + 1 FROM bu e JOIN ed${i - 1} p ON e.src = p.node) t
-           |  GROUP BY root, node)""".stripMargin
-      s"""WITH bp AS (SELECT l_partkey AS src,
-         |    lead(l_partkey) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS dst
-         |  FROM lineitem),
-         |be AS (SELECT DISTINCT src, dst FROM bp WHERE dst IS NOT NULL AND src <> dst),
-         |bu AS MATERIALIZED (SELECT DISTINCT src, dst FROM
-         |  (SELECT src, dst FROM be UNION ALL SELECT dst, src FROM be) t),
+      s"""WITH $partEdgeCtes,
          |allnodes AS (SELECT DISTINCT src AS node FROM bu),
          |roots AS (SELECT node FROM allnodes ORDER BY node LIMIT 10),
          |ed0 AS (SELECT node AS root, node, CAST(0 AS BIGINT) AS d FROM roots),
-         |${(1 to 8).map(iter).mkString(",\n")},
+         |${rootedBfsCtes("ed", 8)},
          |fixguard AS (SELECT CASE WHEN (SELECT count(*) FROM ed8)
          |    = (SELECT count(*) FROM ed7) THEN 1 ELSE 0 END AS at_fixpoint),
          |pr AS (SELECT root, CAST(count(*) AS BIGINT) AS n_reached,
@@ -9606,32 +9570,7 @@ object SparkEntry {
     // machinery keyed by event_type), bounded self-join rank, integer
     // Bonferroni + BH step-up at alpha_e6 = 50000.
     "q_fdr_bh" ->
-      s"""WITH u AS (SELECT event_type, user_id,
-         |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS cts
-         |  FROM events GROUP BY 1, 2),
-         |o1 AS (SELECT event_type,
-         |    sum(CASE WHEN user_id % 2 = 0 THEN CAST(cts AS HUGEINT) END) AS sA,
-         |    sum(CASE WHEN user_id % 2 = 1 THEN CAST(cts AS HUGEINT) END) AS sB,
-         |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS nA,
-         |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS nB
-         |  FROM u GROUP BY event_type),
-         |obs AS (SELECT event_type,
-         |    abs(1000 * (sA * nB - sB * nA) // (nA * nB)) AS obs_e3 FROM o1),
-         |spine AS (SELECT unnest(range(1, 201)) AS r),
-         |pg AS (SELECT event_type, r, ${hSql("user_id || ':' || r")} % 2 AS g, cts
-         |  FROM u CROSS JOIN spine),
-         |ps AS (SELECT event_type, r,
-         |    sum(CASE WHEN g = 0 THEN CAST(cts AS HUGEINT) END) AS sA,
-         |    sum(CASE WHEN g = 1 THEN CAST(cts AS HUGEINT) END) AS sB,
-         |    CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS nA,
-         |    CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS nB
-         |  FROM pg GROUP BY event_type, r),
-         |d AS (SELECT event_type, r,
-         |    abs(1000 * (sA * nB - sB * nA) // (nA * nB)) AS d_e3 FROM ps),
-         |p AS (SELECT d.event_type, obs.obs_e3,
-         |    CAST(sum(CASE WHEN d_e3 >= obs_e3 THEN 1 ELSE 0 END) AS BIGINT) AS n_ge
-         |  FROM d JOIN obs ON d.event_type = obs.event_type
-         |  GROUP BY d.event_type, obs.obs_e3),
+      s"""WITH $eventPermCtes,
          |pp AS (SELECT event_type, CAST(obs_e3 AS BIGINT) AS obs_e3, n_ge,
          |    CAST(1000000 * (1 + n_ge) // 201 AS BIGINT) AS p_e6 FROM p),
          |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM pp),
@@ -9651,32 +9590,7 @@ object SparkEntry {
     // BY replay: the fdr_bh permutation p machinery with the exact
     // floor-summed harmonic factor and both step-up thresholds.
     "q_benjamini_yekutieli" ->
-      s"""WITH u AS (SELECT event_type, user_id,
-         |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS cts
-         |  FROM events GROUP BY 1, 2),
-         |o1 AS (SELECT event_type,
-         |    sum(CASE WHEN user_id % 2 = 0 THEN CAST(cts AS HUGEINT) END) AS sA,
-         |    sum(CASE WHEN user_id % 2 = 1 THEN CAST(cts AS HUGEINT) END) AS sB,
-         |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS nA,
-         |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS nB
-         |  FROM u GROUP BY event_type),
-         |obs AS (SELECT event_type,
-         |    abs(1000 * (sA * nB - sB * nA) // (nA * nB)) AS obs_e3 FROM o1),
-         |spine AS (SELECT unnest(range(1, 201)) AS r),
-         |pg AS (SELECT event_type, r, ${hSql("user_id || ':' || r")} % 2 AS g, cts
-         |  FROM u CROSS JOIN spine),
-         |ps AS (SELECT event_type, r,
-         |    sum(CASE WHEN g = 0 THEN CAST(cts AS HUGEINT) END) AS sA,
-         |    sum(CASE WHEN g = 1 THEN CAST(cts AS HUGEINT) END) AS sB,
-         |    CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS nA,
-         |    CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS nB
-         |  FROM pg GROUP BY event_type, r),
-         |d AS (SELECT event_type, r,
-         |    abs(1000 * (sA * nB - sB * nA) // (nA * nB)) AS d_e3 FROM ps),
-         |p AS (SELECT d.event_type, obs.obs_e3,
-         |    CAST(sum(CASE WHEN d_e3 >= obs_e3 THEN 1 ELSE 0 END) AS BIGINT) AS n_ge
-         |  FROM d JOIN obs ON d.event_type = obs.event_type
-         |  GROUP BY d.event_type, obs.obs_e3),
+      s"""WITH $eventPermCtes,
          |pp AS (SELECT event_type, CAST(obs_e3 AS BIGINT) AS obs_e3,
          |    CAST(1000000 * (1 + n_ge) // 201 AS BIGINT) AS p_e6 FROM p),
          |ranked AS (SELECT x.event_type, x.obs_e3, x.p_e6,
@@ -9944,32 +9858,7 @@ object SparkEntry {
     // Holm replay: the fdr_bh permutation p machinery, step-down
     // adjusted p by a prefix self-join running max, capped at 1.
     "q_holm_bonferroni" ->
-      s"""WITH u AS (SELECT event_type, user_id,
-         |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS cts
-         |  FROM events GROUP BY 1, 2),
-         |o1 AS (SELECT event_type,
-         |    sum(CASE WHEN user_id % 2 = 0 THEN CAST(cts AS HUGEINT) END) AS sA,
-         |    sum(CASE WHEN user_id % 2 = 1 THEN CAST(cts AS HUGEINT) END) AS sB,
-         |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS nA,
-         |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS nB
-         |  FROM u GROUP BY event_type),
-         |obs AS (SELECT event_type,
-         |    abs(1000 * (sA * nB - sB * nA) // (nA * nB)) AS obs_e3 FROM o1),
-         |spine AS (SELECT unnest(range(1, 201)) AS r),
-         |pg AS (SELECT event_type, r, ${hSql("user_id || ':' || r")} % 2 AS g, cts
-         |  FROM u CROSS JOIN spine),
-         |ps AS (SELECT event_type, r,
-         |    sum(CASE WHEN g = 0 THEN CAST(cts AS HUGEINT) END) AS sA,
-         |    sum(CASE WHEN g = 1 THEN CAST(cts AS HUGEINT) END) AS sB,
-         |    CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS nA,
-         |    CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS nB
-         |  FROM pg GROUP BY event_type, r),
-         |d AS (SELECT event_type, r,
-         |    abs(1000 * (sA * nB - sB * nA) // (nA * nB)) AS d_e3 FROM ps),
-         |p AS (SELECT d.event_type, obs.obs_e3,
-         |    CAST(sum(CASE WHEN d_e3 >= obs_e3 THEN 1 ELSE 0 END) AS BIGINT) AS n_ge
-         |  FROM d JOIN obs ON d.event_type = obs.event_type
-         |  GROUP BY d.event_type, obs.obs_e3),
+      s"""WITH $eventPermCtes,
          |pp AS (SELECT event_type, CAST(obs_e3 AS BIGINT) AS obs_e3,
          |    CAST(1000000 * (1 + n_ge) // 201 AS BIGINT) AS p_e6 FROM p),
          |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM pp),
@@ -10516,18 +10405,7 @@ object SparkEntry {
     // RMST replay: the KM recursive CTE extended with (prev t, running
     // S·Δt) accumulators, tail rectangle to τ = 14.
     "q_rmst" ->
-      """WITH RECURSIVE u AS (
-        |  SELECT user_id,
-        |    min(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS f,
-        |    max(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS l
-        |  FROM events GROUP BY user_id),
-        |md AS (SELECT max(l) AS maxd FROM u),
-        |byt AS (SELECT l - f AS t,
-        |    CAST(sum(CASE WHEN l >= maxd - 2 THEN 0 ELSE 1 END) AS BIGINT) AS dd,
-        |    CAST(sum(CASE WHEN l >= maxd - 2 THEN 1 ELSE 0 END) AS BIGINT) AS cc
-        |  FROM u, md GROUP BY 1),
-        |d2 AS (SELECT t, dd, cc, row_number() OVER (ORDER BY t) AS rn FROM byt),
-        |tot AS (SELECT CAST(sum(dd + cc) AS BIGINT) AS total FROM byt),
+      s"""WITH RECURSIVE $survivalTimesCtes,
         |r AS (
         |  SELECT rn, t, dd, cc, total AS n_prev,
         |    1000000 * (total - dd) // total AS s,
@@ -10701,18 +10579,7 @@ object SparkEntry {
     // Nelson-Aalen replay: KM lifetime contract, recursive fold
     // accumulating the e6 hazard, Breslow survival from the integer H.
     "q_nelson_aalen" ->
-      """WITH RECURSIVE u AS (
-        |  SELECT user_id,
-        |    min(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS f,
-        |    max(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS l
-        |  FROM events GROUP BY user_id),
-        |md AS (SELECT max(l) AS maxd FROM u),
-        |byt AS (SELECT l - f AS t,
-        |    CAST(sum(CASE WHEN l >= maxd - 2 THEN 0 ELSE 1 END) AS BIGINT) AS dd,
-        |    CAST(sum(CASE WHEN l >= maxd - 2 THEN 1 ELSE 0 END) AS BIGINT) AS cc
-        |  FROM u, md GROUP BY 1),
-        |d2 AS (SELECT t, dd, cc, row_number() OVER (ORDER BY t) AS rn FROM byt),
-        |tot AS (SELECT CAST(sum(dd + cc) AS BIGINT) AS total FROM byt),
+      s"""WITH RECURSIVE $survivalTimesCtes,
         |r AS (
         |  SELECT rn, t, dd, cc, total AS n, dd * 1000000 // total AS h
         |  FROM d2, tot WHERE rn = 1
@@ -11501,18 +11368,7 @@ object SparkEntry {
     // Greenwood replay: the KM recursion additionally carrying the
     // e12 variance sum, double sqrt per output row, clamped z bands.
     "q_greenwood" ->
-      """WITH RECURSIVE u AS (
-        |  SELECT user_id,
-        |    min(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS f,
-        |    max(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS l
-        |  FROM events GROUP BY user_id),
-        |md AS (SELECT max(l) AS maxd FROM u),
-        |byt AS (SELECT l - f AS t,
-        |    CAST(sum(CASE WHEN l >= maxd - 2 THEN 0 ELSE 1 END) AS BIGINT) AS dd,
-        |    CAST(sum(CASE WHEN l >= maxd - 2 THEN 1 ELSE 0 END) AS BIGINT) AS cc
-        |  FROM u, md GROUP BY 1),
-        |d2 AS (SELECT t, dd, cc, row_number() OVER (ORDER BY t) AS rn FROM byt),
-        |tot AS (SELECT CAST(sum(dd + cc) AS BIGINT) AS total FROM byt),
+      s"""WITH RECURSIVE $survivalTimesCtes,
         |r AS (
         |  SELECT rn, t, dd, cc, total AS n,
         |    1000000 * (total - dd) // total AS s,
@@ -11816,22 +11672,11 @@ object SparkEntry {
 
     // LCS replay: the needleman pair base with the gap-free DP cells,
     // re-rowed into MATERIALIZED per-row CTEs (the rouge_l device).
-    "q_lcs_sim" -> {
-      val rows = dpRowCtes(Queries.lcsCells(i => s"a[$i]", j => s"b[$j]", 7),
-        7, 7, "user_a, user_b, a, b", "pairs", "dp")
-      s"""WITH s0 AS (SELECT user_id,
-         |    list_slice(list(event_type ORDER BY epoch_us(CAST(ts AS TIMESTAMP)),
-         |      event_id), 1, 7) AS arr
-         |  FROM events WHERE user_id < 8 GROUP BY user_id),
-         |seqs AS (SELECT user_id, arr FROM s0 WHERE len(arr) = 7),
-         |pairs AS (SELECT p.user_id AS user_a, q.user_id AS user_b,
-         |    p.arr AS a, q.arr AS b
-         |  FROM seqs p JOIN seqs q ON q.user_id > p.user_id),
-         |$rows
+    "q_lcs_sim" ->
+      s"""WITH ${userPairDpCtes(Queries.lcsCells(i => s"a[$i]", j => s"b[$j]", 7))}
          |SELECT user_a, user_b, CAST(ca7 AS BIGINT) AS lcs,
          |  CAST(CAST(ca7 AS BIGINT) * 1000000 // 7 AS BIGINT) AS lcs_sim_e6
-         |FROM dp7 ORDER BY user_a, user_b""".stripMargin
-    },
+         |FROM dp7 ORDER BY user_a, user_b""".stripMargin,
 
     // ROUGE-L replay: the 8x10 LCS lattice as MATERIALIZED per-row
     // CTEs — a single-select lateral-alias form inlines each cell's 3
@@ -12002,16 +11847,7 @@ object SparkEntry {
     // Kendall-W replay: margin-cross rank scaffold, deterministic
     // (count desc, article) ranks, exact integral W.
     "q_kendall_w" ->
-      """WITH cnt AS (SELECT event_type AS rater, event_id % 40 + 1 AS article,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |raters AS (SELECT DISTINCT rater FROM cnt),
-        |grid AS (SELECT r.rater, g.article, coalesce(cnt.cnt, 0) AS cnt
-        |  FROM raters r
-        |  CROSS JOIN (SELECT CAST(unnest(range(1, 41)) AS BIGINT) AS article) g
-        |  LEFT JOIN cnt ON cnt.rater = r.rater AND cnt.article = g.article),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY rater
-        |    ORDER BY cnt DESC, article) AS rnk FROM grid),
+      s"""WITH $raterRankCtes,
         |sums AS (SELECT article, CAST(sum(rnk) AS BIGINT) AS r_sum,
         |    CAST(count(*) AS BIGINT) AS m FROM rk GROUP BY 1),
         |nr AS (SELECT CAST(count(*) AS BIGINT) AS n, max(m) AS mm FROM sums),
@@ -12185,89 +12021,17 @@ object SparkEntry {
     // FFD packing replay: same salted buckets, same (n desc, id asc)
     // order, the sequential first-fit fold as a recursive CTE that
     // consumes one doc per bucket per step (bins as a LIST column).
-    "q_pack_ffd" ->
-      s"""WITH RECURSIVE d AS (SELECT doc_id, CAST(len(regexp_extract_all(
-        |    text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')) AS BIGINT) AS n
-        |  FROM documents),
-        |sized AS (SELECT CAST(sum(CASE WHEN n > 2048 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_oversize FROM d),
-        |b AS (SELECT doc_id, n,
-        |    ${hSql("concat('pack:', CAST(doc_id AS VARCHAR))")} % 32 AS bucket
-        |  FROM d WHERE n <= 2048),
-        |ord AS (SELECT bucket, n, row_number() OVER (PARTITION BY bucket
-        |    ORDER BY n DESC, doc_id) AS rn FROM b),
-        |sz AS (SELECT bucket, CAST(count(*) AS BIGINT) AS cnt,
-        |    CAST(sum(n) AS BIGINT) AS toks FROM ord GROUP BY 1),
-        |pack AS (
-        |  SELECT bucket, CAST(0 AS BIGINT) AS step,
-        |    CAST([] AS BIGINT[]) AS bins FROM sz
-        |  UNION ALL
-        |  SELECT bucket, step,
-        |    CASE WHEN idx IS NULL THEN list_append(bins, n)
-        |      ELSE list_transform(range(1, 1 + len(bins)),
-        |        i -> CASE WHEN i = idx THEN bins[i] + n ELSE bins[i] END)
-        |    END AS bins
-        |  FROM (SELECT p.bucket, p.step + 1 AS step, p.bins, o.n,
-        |      list_filter(range(1, 1 + len(p.bins)),
-        |        i -> p.bins[i] + o.n <= 2048)[1] AS idx
-        |    FROM pack p JOIN ord o
-        |      ON o.bucket = p.bucket AND o.rn = p.step + 1) s),
-        |fin AS (SELECT p.bucket, CAST(len(p.bins) AS BIGINT) AS nb,
-        |    sz.cnt, sz.toks
-        |  FROM pack p JOIN sz ON p.bucket = sz.bucket AND p.step = sz.cnt)
-        |SELECT CAST(sum(cnt) AS BIGINT) AS n_docs_packed, n_oversize,
-        |  CAST(sum(toks) AS BIGINT) AS total_tokens,
-        |  CAST(sum(nb) AS BIGINT) AS n_windows,
-        |  CAST(sum(toks) * 1000000 // (sum(nb) * 2048) AS BIGINT)
-        |    AS pack_eff_e6,
-        |  CAST(sum(toks) * 1000000 // (sum(cnt) * 2048) AS BIGINT)
-        |    AS naive_eff_e6,
-        |  CAST(sum(cnt) - sum(nb) AS BIGINT) AS windows_saved
-        |FROM fin CROSS JOIN sized GROUP BY n_oversize""".stripMargin,
+    "q_pack_ffd" -> packSql(
+      """list_filter(range(1, 1 + len(p.bins)),
+        |        i -> p.bins[i] + o.n <= 2048)[1] AS idx""".stripMargin),
 
     // BFD packing replay: the q_pack_ffd recursive fold with the
     // best-fit choice rule (fullest fitting bin; first index on ties).
-    "q_pack_bestfit" ->
-      s"""WITH RECURSIVE d AS (SELECT doc_id, CAST(len(regexp_extract_all(
-        |    text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')) AS BIGINT) AS n
-        |  FROM documents),
-        |sized AS (SELECT CAST(sum(CASE WHEN n > 2048 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_oversize FROM d),
-        |b AS (SELECT doc_id, n,
-        |    ${hSql("concat('pack:', CAST(doc_id AS VARCHAR))")} % 32 AS bucket
-        |  FROM d WHERE n <= 2048),
-        |ord AS (SELECT bucket, n, row_number() OVER (PARTITION BY bucket
-        |    ORDER BY n DESC, doc_id) AS rn FROM b),
-        |sz AS (SELECT bucket, CAST(count(*) AS BIGINT) AS cnt,
-        |    CAST(sum(n) AS BIGINT) AS toks FROM ord GROUP BY 1),
-        |pack AS (
-        |  SELECT bucket, CAST(0 AS BIGINT) AS step,
-        |    CAST([] AS BIGINT[]) AS bins FROM sz
-        |  UNION ALL
-        |  SELECT bucket, step,
-        |    CASE WHEN idx IS NULL THEN list_append(bins, n)
-        |      ELSE list_transform(range(1, 1 + len(bins)),
-        |        i -> CASE WHEN i = idx THEN bins[i] + n ELSE bins[i] END)
-        |    END AS bins
-        |  FROM (SELECT p.bucket, p.step + 1 AS step, p.bins, o.n,
-        |      list_filter(range(1, 1 + len(p.bins)),
+    "q_pack_bestfit" -> packSql(
+      """list_filter(range(1, 1 + len(p.bins)),
         |        i -> p.bins[i] + o.n <= 2048 AND p.bins[i] =
         |          list_max(list_filter(p.bins, bb -> bb + o.n <= 2048)))[1]
-        |        AS idx
-        |    FROM pack p JOIN ord o
-        |      ON o.bucket = p.bucket AND o.rn = p.step + 1) s),
-        |fin AS (SELECT p.bucket, CAST(len(p.bins) AS BIGINT) AS nb,
-        |    sz.cnt, sz.toks
-        |  FROM pack p JOIN sz ON p.bucket = sz.bucket AND p.step = sz.cnt)
-        |SELECT CAST(sum(cnt) AS BIGINT) AS n_docs_packed, n_oversize,
-        |  CAST(sum(toks) AS BIGINT) AS total_tokens,
-        |  CAST(sum(nb) AS BIGINT) AS n_windows,
-        |  CAST(sum(toks) * 1000000 // (sum(nb) * 2048) AS BIGINT)
-        |    AS pack_eff_e6,
-        |  CAST(sum(toks) * 1000000 // (sum(cnt) * 2048) AS BIGINT)
-        |    AS naive_eff_e6,
-        |  CAST(sum(cnt) - sum(nb) AS BIGINT) AS windows_saved
-        |FROM fin CROSS JOIN sized GROUP BY n_oversize""".stripMargin,
+        |        AS idx""".stripMargin),
 
     // Training-order replay: same salted mix/order hashes, same CASE
     // weight chain, same (epoch, shard) row_number — bit-identical
@@ -12522,18 +12286,7 @@ object SparkEntry {
         |${lmCtes("fl", "flentr", "documents", graft.ops.Curation.LmPerBigramMicro)},
         |faw0 AS (SELECT doc_id, ${wordsSql("lower(text)")} AS ws FROM documents),
         |fam AS (SELECT doc_id,
-        |    CAST(len(ws) AS BIGINT) AS n_words,
-        |    CAST(list_aggregate(list_transform(ws, x -> length(x)), 'sum')
-        |      AS BIGINT) AS sum_len,
-        |    CAST(len(list_filter(ws, x -> regexp_matches(x, '[a-z]')))
-        |      AS BIGINT) AS n_alpha,
-        |    CAST(len(list_filter(ws, x -> list_contains(
-        |      ['the','be','to','of','and','that','have','with'], x)))
-        |      AS BIGINT) AS n_stop,
-        |    CAST(greatest(len(ws) - 1, 0) AS BIGINT) AS tot_bg,
-        |    CAST(greatest(len(ws) - 1, 0) - len(list_distinct(list_transform(
-        |      range(len(ws) - 1), i -> ws[i+1] || ' ' || ws[i+2])))
-        |      AS BIGINT) AS dup_bg
+        |$gopherMetricsSql
         |  FROM faw0),
         |fagop AS (SELECT doc_id, NOT (
         |    n_words BETWEEN 50 AND 100000
@@ -12558,7 +12311,6 @@ object SparkEntry {
     // IS the k-th intermediate bseq state, so each curve row is one
     // aggregate over bseq{0,2,4,6,8}.
     "q_bpe_curve" -> {
-      val iters = (1 to 8).map(bpeIterCtes).mkString(",\n")
       val rows = Seq(0, 2, 4, 6, 8).map { k =>
         s"""SELECT CAST($k AS BIGINT) AS k_merges, CAST(sum(freq) AS BIGINT) AS n_words,
            |    CAST(sum(freq * length(word)) AS BIGINT) AS n_chars,
@@ -12566,17 +12318,7 @@ object SparkEntry {
            |  SELECT word, freq, CAST(count(*) AS BIGINT) AS ns
            |  FROM bseq$k GROUP BY word, freq)""".stripMargin
       }.mkString("\n  UNION ALL ")
-      s"""WITH bwords AS (
-         |  SELECT word, count(*) AS freq FROM (
-         |    SELECT unnest(${wordsSql("lower(text)")}) AS word FROM documents) u
-         |  WHERE length(word) >= 1 GROUP BY word),
-         |bseq0 AS (
-         |  SELECT word, freq, pos, ws[pos + 1] AS s FROM (
-         |    SELECT word, freq,
-         |      list_append(list_transform(range(length(word)), j -> substr(word, CAST(j + 1 AS INT), 1)), '</w>') AS ws
-         |    FROM bwords) t,
-         |    LATERAL (SELECT unnest(range(len(ws))) AS pos) p),
-         |$iters,
+      s"""WITH $bpeChainCtes,
          |curve AS (
          |  $rows)
          |SELECT k_merges, n_words, n_chars, n_subwords,
@@ -12870,19 +12612,8 @@ object SparkEntry {
 
     // BPE-compression replay: the q_bpe_encode 8-iteration chain with
     // a per-source rollup instead of per-doc.
-    "q_bpe_compression" -> {
-      val iters = (1 to 8).map(bpeIterCtes).mkString(",\n")
-      s"""WITH bwords AS (
-         |  SELECT word, count(*) AS freq FROM (
-         |    SELECT unnest(${wordsSql("lower(text)")}) AS word FROM documents) u
-         |  WHERE length(word) >= 1 GROUP BY word),
-         |bseq0 AS (
-         |  SELECT word, freq, pos, ws[pos + 1] AS s FROM (
-         |    SELECT word, freq,
-         |      list_append(list_transform(range(length(word)), j -> substr(word, CAST(j + 1 AS INT), 1)), '</w>') AS ws
-         |    FROM bwords) t,
-         |    LATERAL (SELECT unnest(range(len(ws))) AS pos) p),
-         |$iters,
+    "q_bpe_compression" ->
+      s"""WITH $bpeChainCtes,
          |enc AS (SELECT word, CAST(count(*) AS BIGINT) AS n_subwords FROM bseq8 GROUP BY word),
          |dw AS (SELECT source, word, CAST(length(word) AS BIGINT) AS wlen FROM (
          |    SELECT source, unnest(${wordsSql("lower(text)")}) AS word FROM documents) u
@@ -12895,8 +12626,7 @@ object SparkEntry {
          |  CAST(sum(n_subwords) * 1000 // count(*) AS BIGINT)
          |    AS subwords_per_word_e3
          |FROM dw JOIN enc USING (word)
-         |GROUP BY source ORDER BY source""".stripMargin
-    },
+         |GROUP BY source ORDER BY source""".stripMargin,
 
     // Shuffle-runs replay: the train-order CTEs, one lead window per
     // (epoch, shard), exact pooled adjacency expectation.
@@ -12947,18 +12677,7 @@ object SparkEntry {
     "q_gopher_rules" ->
       s"""WITH w0 AS (SELECT source, ${wordsSql("lower(text)")} AS ws FROM documents),
         |m AS (SELECT source,
-        |    CAST(len(ws) AS BIGINT) AS n_words,
-        |    CAST(list_aggregate(list_transform(ws, x -> length(x)), 'sum')
-        |      AS BIGINT) AS sum_len,
-        |    CAST(len(list_filter(ws, x -> regexp_matches(x, '[a-z]')))
-        |      AS BIGINT) AS n_alpha,
-        |    CAST(len(list_filter(ws, x -> list_contains(
-        |      ['the','be','to','of','and','that','have','with'], x)))
-        |      AS BIGINT) AS n_stop,
-        |    CAST(greatest(len(ws) - 1, 0) AS BIGINT) AS tot_bg,
-        |    CAST(greatest(len(ws) - 1, 0) - len(list_distinct(list_transform(
-        |      range(len(ws) - 1), i -> ws[i+1] || ' ' || ws[i+2])))
-        |      AS BIGINT) AS dup_bg
+        |$gopherMetricsSql
         |  FROM w0),
         |r AS (SELECT source,
         |    n_words BETWEEN 50 AND 100000 AS r_wc,
@@ -13842,16 +13561,7 @@ object SparkEntry {
     // Copeland replay: the kendall_w rank scaffold, majority verdicts
     // over 40x40 contests, wins - losses.
     "q_copeland" ->
-      """WITH cnt AS (SELECT event_type AS rater, event_id % 40 + 1 AS article,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |raters AS (SELECT DISTINCT rater FROM cnt),
-        |grid AS (SELECT r.rater, g.article, coalesce(cnt.cnt, 0) AS cnt
-        |  FROM raters r
-        |  CROSS JOIN (SELECT CAST(unnest(range(1, 41)) AS BIGINT) AS article) g
-        |  LEFT JOIN cnt ON cnt.rater = r.rater AND cnt.article = g.article),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY rater
-        |    ORDER BY cnt DESC, article) AS rnk FROM grid),
+      s"""WITH $raterRankCtes,
         |m AS (SELECT CAST(count(DISTINCT rater) AS BIGINT) AS m FROM rk),
         |con AS (SELECT x.article AS a, y.article AS b,
         |    CAST(sum(CASE WHEN x.rnk < y.rnk THEN 1 ELSE 0 END) AS BIGINT)

@@ -22,6 +22,17 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
+    // Keep the oracle dump consistent with what was actually dumped:
+    // with the name filter active, a fresh outDir would otherwise make
+    // compare.py fail every undumped query on a missing parquet dir.
+    writeOracleJson(outDir, k => only.forall(_.contains(k)))
+    spark.stop()
+  }
+
+  /** Writes `outDir/oracle_sql.json`: the `SparkEntry.oracleSql`
+    * entries whose name passes `keep`, as one JSON object.
+    */
+  def writeOracleJson(outDir: String, keep: String => Boolean): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -34,14 +45,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // Keep the oracle dump consistent with what was actually dumped:
-    // with the name filter active, a fresh outDir would otherwise make
-    // compare.py fail every undumped query on a missing parquet dir.
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => keep(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }
 
@@ -54,18 +61,7 @@ object DumpOracleSql {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/oracle_dump")
     new java.io.File(outDir).mkdirs()
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Verify.writeOracleJson(outDir, _ => true)
     System.err.println(s"[dump] ${SparkEntry.oracleSql.size} oracle SQLs -> $outDir/oracle_sql.json")
   }
 }

@@ -85,4 +85,16 @@ class QueriesSmokeSpec extends AnyFunSuite {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, orphans)
   }
+
+  test("no oracle SQL line starts with a lone '|' (a twice-stripped margin)") {
+    // Builder text interpolated into a caller's s"""...""".stripMargin
+    // is margin-stripped a second time: a line like `      || ' ' ||`
+    // loses one bar and string concatenation silently becomes DuckDB's
+    // bitwise OR. A leading single `|` is that residue.
+    val loneBar = "^\\s*\\|(?!\\|)".r
+    val hits = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (name, sql) =>
+      sql.split("\n").filter(loneBar.findFirstIn(_).isDefined).map(l => s"$name: $l")
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }
