@@ -1,4 +1,10 @@
 package graft
+
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bench main — driver contract: print ONE JSON line
@@ -22,6 +28,11 @@ object Bench {
     * still leaves 150+ chars of headroom.
     */
   private val CompactBudget = 1700
+
+  /** Extra passes Bench runs, at most, while its best two pass totals
+    * disagree by more than 15%.
+    */
+  private val MaxExtraPasses = 2
 
   /** The previous round's parsed comparison set (BENCH_r13 compact-line
     * queries). Optimization rounds move queries BELOW the heaviest-N
@@ -50,36 +61,81 @@ object Bench {
     "q_holm_bonferroni", "q_borda", "q_label_noise", "q_hot_section",
     "q_margin_sample", "q_doremi_weights", "q_median_polish", "q_ppr")
 
-  /** One pass over `queries`: each query's `count()` timed, minus the
-    * memo builds it triggered (summed per memo in `memo`). A query that
-    * throws gets no time; it is named in `failed` and on stderr.
+  /** The entries of `entries` named in `only` (a comma list), in
+    * `entries`' order; all of them when `only` is None. A name that is
+    * not an entry fails the whole selection, naming every unknown name:
+    * a typo must not run nothing and still print a result.
     */
-  final case class Pass(times: Map[String, Double], memo: Map[String, Double],
-      failed: Set[String]) {
+  def select[A](entries: Seq[(String, A)], only: Option[String]): Seq[(String, A)] =
+    only.fold(entries) { list =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- entries.map(_._1)
+      require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+      entries.filter { case (name, _) => names.contains(name) }
+    }
+
+  /** [[runEach]]'s outcome: each result in input order, and who threw. */
+  final case class Ran[B](results: Seq[(String, B)], failed: Seq[String])
+
+  /** Runs `run` on each entry and catches per entry: an entry that throws
+    * is printed as `FAILED <name>: <exception>` on stderr and counted in
+    * `failed`, and the run goes on. With `threads` > 1 the entries run
+    * concurrently on that many daemon threads (a query that deadlocks
+    * cannot pin the JVM open) and the run waits at most `timeout`.
+    */
+  def runEach[A, B](entries: Seq[(String, A)], threads: Int = 1,
+      timeout: Duration = Duration.Inf)(run: (String, A) => B): Ran[B] = {
+    def attempt(name: String, a: A): Either[String, (String, B)] =
+      try Right(name -> run(name, a))
+      catch {
+        case e: Throwable =>
+          Console.err.println(s"FAILED $name: $e")
+          Left(name)
+      }
+    val outcomes =
+      if (threads <= 1) entries.map { case (name, a) => attempt(name, a) }
+      else {
+        val pool = Executors.newFixedThreadPool(threads, r => {
+          val t = new Thread(r); t.setDaemon(true); t
+        })
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        try Await.result(Future.traverse(entries) { case (name, a) => Future(attempt(name, a)) }, timeout)
+        finally pool.shutdownNow()
+      }
+    Ran(outcomes.collect { case Right(r) => r }, outcomes.collect { case Left(name) => name })
+  }
+
+  /** One pass over `queries`: each query's `count()` timed, minus the
+    * memo builds it triggered (summed per memo in `memo`; none unless
+    * `SessionMemo.record` is on). A query that throws gets no time and
+    * no row count; it is named in `failed`. Each timed query is printed
+    * on stderr as `name seconds (n rows)`.
+    */
+  final case class Pass(times: Map[String, Double], rows: Map[String, Long],
+      memo: Map[String, Double], failed: Set[String]) {
     def total: Double = times.values.sum + memo.values.sum
   }
 
   def timePass(spark: SparkSession, sfDir: String,
-      queries: Iterable[(String, (SparkSession, String) => DataFrame)]): Pass = {
+      queries: Seq[(String, (SparkSession, String) => DataFrame)]): Pass = {
     val memo = scala.collection.mutable.Map[String, Double]()
-    val failed = Set.newBuilder[String]
-    val times = queries.flatMap { case (name, fn) =>
+    val ran = runEach(queries) { (name, fn) =>
       graft.sources.SessionMemo.drainBuildLog()
+      var memoSeconds = 0.0
       val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch {
-          case e: Throwable =>
-            Console.err.println(s"bench: FAILED $name: $e")
-            failed += name
-            false
+      val n =
+        try fn(spark, sfDir).count()
+        finally graft.sources.SessionMemo.drainBuildLog().foreach { case (k, s) =>
+          memo(k) = memo.getOrElse(k, 0.0) + s
+          memoSeconds += s
         }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      val builds = graft.sources.SessionMemo.drainBuildLog()
-      builds.foreach { case (k, s) => memo(k) = memo.getOrElse(k, 0.0) + s }
-      if (ok) Some(name -> math.max(elapsed - builds.map(_._2).sum, 0.0)) else None
-    }.toMap
-    Pass(times, memo.toMap, failed.result())
+      val seconds = math.max((System.nanoTime() - t0) / 1e9 - memoSeconds, 0.0)
+      Console.err.println(f"$name%-20s $seconds%8.3f s  ($n rows)")
+      (seconds, n)
+    }
+    Pass(ran.results.map { case (name, (s, _)) => name -> s }.toMap,
+      ran.results.map { case (name, (_, n)) => name -> n }.toMap,
+      memo.toMap, ran.failed.toSet)
   }
 
   /** Compact final line: seconds at ms precision; the previous round's
@@ -117,10 +173,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE on by default (the 100 TB posture: runtime re-planning,
-    // skew splitting); GRAFT_AQE=false to measure its fixed overhead.
-    val spark = GraftSession.local(cpus,
-      aqe = Some(sys.env.getOrElse("GRAFT_AQE", "true").toBoolean))
+    // GRAFT_BENCH_ONLY=q_a,q_b times a subset (A/B a fix without paying
+    // the full suite); the official protocol never sets it. An unknown
+    // name fails here, before the session starts.
+    val queries = select(SparkEntry.queries.toSeq, sys.env.get("GRAFT_BENCH_ONLY"))
+    // AQE on (the 100 TB posture: runtime re-planning, skew splitting)
+    val spark = GraftSession.local(cpus, aqe = Some(true))
     // Warm shared infrastructure once (JIT, Janino codegen compiler,
     // parquet reader, shuffle + broadcast machinery) so per-query timings
     // measure the queries rather than first-use class loading.
@@ -142,9 +200,6 @@ object Bench {
     // (JIT/codegen warmth does carry over; that is the same shared
     // infrastructure the pre-suite warmup primes.)
     val passes = sys.env.getOrElse("GRAFT_BENCH_PASSES", "2").toInt.max(1)
-    // GRAFT_BENCH_ONLY=q_a,q_b times a subset (A/B a fix without paying
-    // the full suite); the official protocol never sets it
-    val only = sys.env.get("GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     // Memo-build attribution: SessionMemo records each shared table's
     // first materialization (eager count at build) and Bench subtracts
     // those seconds from the query that happened to trigger it, reporting
@@ -153,8 +208,6 @@ object Bench {
     // whichever consumer runs first. The headline total still INCLUDES
     // memo seconds (same work, honest attribution).
     graft.sources.SessionMemo.record(true)
-    def runPass(): Pass = timePass(spark, sfDir,
-      SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) })
     // Host telemetry: 1/5/15-min loadavg sampled immediately before each
     // pass. A loaded host inflates a pass; recording the load state makes
     // a contaminated official run self-documenting instead of a judging
@@ -173,7 +226,7 @@ object Bench {
         spark.catalog.clearCache()
       }
       passLoads += loadavg()
-      allPasses += runPass()
+      allPasses += timePass(spark, sfDir, queries)
     }
     (1 to passes).foreach(_ => nextPass())
     // Pass agreement: (second−best)/best over the BEST TWO raw pass
@@ -181,20 +234,19 @@ object Bench {
     // observations, so agreement of the best two is what certifies the
     // headline). >15% means the host was not quiet — the r11 official
     // run shipped a 26.1% number with the WARNING ignored, so Bench now
-    // ACTS on its own telemetry: run up to GRAFT_BENCH_MAX_EXTRA
-    // (default 2) additional passes until the best two agree.
+    // ACTS on its own telemetry: run up to MaxExtraPasses additional
+    // passes until the best two agree.
     def bestTwoDisagreementPct(): Double = {
       val totals = allPasses.map(_.total).sorted
       if (totals.size > 1 && totals.head > 0)
         (totals(1) - totals.head) / totals.head * 100.0
       else 0.0
     }
-    val maxExtra = sys.env.getOrElse("GRAFT_BENCH_MAX_EXTRA", "2").toInt.max(0)
     var extraPasses = 0
-    while (passes > 1 && bestTwoDisagreementPct() > 15.0 && extraPasses < maxExtra) {
+    while (passes > 1 && bestTwoDisagreementPct() > 15.0 && extraPasses < MaxExtraPasses) {
       Console.err.println(
         f"bench: best-two pass totals disagree by ${bestTwoDisagreementPct()}%.1f%% — " +
-          s"running extra pass ${extraPasses + 1}/$maxExtra to restore agreement")
+          s"running extra pass ${extraPasses + 1}/$MaxExtraPasses to restore agreement")
       nextPass()
       extraPasses += 1
     }
@@ -226,8 +278,7 @@ object Bench {
       k -> allPasses.map(_.memo.getOrElse(k, 0.0)).min
     }.filter(_._2 >= 0.05).toMap
     val memoTotal = memoBuilds.values.sum
-    val total =
-      (if (results.nonEmpty) results.values.sum else 0.0) + memoTotal
+    val total = results.values.sum + memoTotal
     val qsFull = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // Full-precision record: queries first, headline last (tail-survivable).

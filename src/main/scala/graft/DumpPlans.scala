@@ -3,6 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Formatted physical plans of registry queries, two ways:
@@ -114,15 +115,16 @@ object DumpPlans {
     "q_team_draft" -> "team-draft interleave: two TakeOrdered shortlists collapse to one row; the 20-step draft is a single HOF fold — zero joins past the shortlists",
     "q_index_size" -> "posting compression audit: distinct-posting aggregate, broadcast top-20 shortlist join, per-token lag window (never singleton), bit-length integer arithmetic")
 
-  /** Runs `f` with a printer of a named query's formatted physical
-    * plan over an AQE-off local session on `sfDir`.
+  /** `name`'s formatted physical plan on `sfDir`, with JVM object
+    * identities masked (`Foo@6acedf54`, `Foo$$Lambda$4038/0x00007f3e…`):
+    * typed aggregators and Dataset maps print them, and they differ
+    * between builds of the same plan.
     */
-  private def withPlans(sfDir: String)(f: (String => String) => Unit): Unit = {
-    val spark = GraftSession.local("4", aqe = Some(false), logLevel = "ERROR")
-    try f(name => SparkEntry.queries(name)(spark, sfDir)
-      .queryExecution.explainString(ExplainMode.fromString("formatted")))
-    finally spark.stop()
-  }
+  def plan(spark: SparkSession, sfDir: String, name: String): String =
+    SparkEntry.queries(name)(spark, sfDir).queryExecution
+      .explainString(ExplainMode.fromString("formatted"))
+      .replaceAll("""\$\$Lambda(\$\d+)?/0x[0-9a-f]+""", "\\$\\$Lambda\\$<n>/0x<hex>")
+      .replaceAll("@[0-9a-f]+\\b", "@<hex>")
 
   def main(argv: Array[String]): Unit = {
     // `files <outDir> <suffix> q_a,q_b` selects the per-query mode; the
@@ -130,15 +132,15 @@ object DumpPlans {
     val files = argv.headOption.contains("files")
     val args = if (files) argv.drop(4) else argv
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    if (files) {
-      val Array(_, outDir, suffix, names) = argv.take(4)
+    val queries = if (files) Bench.select(SparkEntry.queries.toSeq, Some(argv(3))) else Nil
+    val spark = GraftSession.local("4", aqe = Some(false), logLevel = "ERROR")
+    try if (files) {
+      val Array(_, outDir, suffix, _) = argv.take(4)
       Files.createDirectories(Paths.get(outDir))
-      withPlans(sfDir) { plan =>
-        names.split(",").foreach { name =>
-          val out = Paths.get(outDir, s"${name}_$suffix.txt")
-          Files.write(out, plan(name).getBytes(StandardCharsets.UTF_8))
-          println(s"wrote $out")
-        }
+      Bench.runEach(queries) { (name, _) =>
+        val out = Paths.get(outDir, s"${name}_$suffix.txt")
+        Files.write(out, plan(spark, sfDir, name).getBytes(StandardCharsets.UTF_8))
+        println(s"wrote $out")
       }
     } else {
       val out = if (args.length > 1) args(1) else "PLANS.md"
@@ -147,13 +149,11 @@ object DumpPlans {
       sb.append(s"Generated by `graft.DumpPlans` on `$sfDir` (plan SHAPE is scale-\n")
       sb.append("factor-independent; AQE disabled in this dump for readability —\n")
       sb.append("production runs re-plan at runtime on top of these shapes).\n")
-      withPlans(sfDir) { plan =>
-        Flagships.foreach { case (name, note) =>
-          sb.append(s"\n## $name\n\n$note\n\n```\n${plan(name)}```\n")
-        }
+      Flagships.foreach { case (name, note) =>
+        sb.append(s"\n## $name\n\n$note\n\n```\n${plan(spark, sfDir, name)}```\n")
       }
       Files.write(Paths.get(out), sb.toString.getBytes(StandardCharsets.UTF_8))
       println(s"wrote $out")
-    }
+    } finally spark.stop()
   }
 }

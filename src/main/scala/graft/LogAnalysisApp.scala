@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -88,12 +91,27 @@ object LogAnalysisApp {
     * provider the per-client state needs at scale) with changelog
     * checkpointing: a batch commit uploads that batch's changelog, not a
     * full snapshot of the store. Set before a query starts, so its
-    * checkpoint records the provider.
+    * checkpoint records the provider. The session's context also gets
+    * [[CloseStateStores]], once.
     */
   private def useRocksDbState(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    if (closingContexts.add(spark.sparkContext)) spark.sparkContext.addSparkListener(CloseStateStores)
+  }
+
+  private val closingContexts = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[SparkContext, java.lang.Boolean]()))
+
+  /** Closes every state store provider loaded in this JVM, and stops
+    * their maintenance, when the application ends: stopping a query
+    * leaves its providers (native RocksDB instances) open until a
+    * maintenance pass unloads them, and `spark.stop()` alone never does.
+    * Listener events are drained before `spark.stop()` returns.
+    */
+  private[graft] object CloseStateStores extends SparkListener {
+    override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = StateStore.stop()
   }
 
   private def hasCommittedBatch(spark: SparkSession, checkpoint: String): Boolean = {
@@ -132,7 +150,6 @@ object LogAnalysisApp {
       refVolumes: DataFrame, checkpointRoot: String,
       maxGapSec: Int = 600, watermarkSec: Int = 300): Monitors = {
     val parsed = LogStream.parsedTuples(lines)
-      .withColumn("ts", to_timestamp(col("access_date")))
 
     val alarms = scala.collection.concurrent.TrieMap[Long, (Long, Option[Long], Boolean)]()
     val funnelSink = new UpsertSink(Seq("user_id", "view_ts", "purchase_ts"))

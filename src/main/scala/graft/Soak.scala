@@ -1,5 +1,7 @@
 package graft
 
+import scala.concurrent.duration._
+
 /** Determinism soak (not part of the driver contract): run every harness
   * query N times in ONE session and fail on any run-to-run difference.
   * The DuckDB oracle gate compares one Spark run against DuckDB; this
@@ -11,8 +13,9 @@ package graft
   * sfDir may appear in any order: an integer sets the round count
   * (default 2), the literal `par` adds an 8-way-concurrent round run
   * against a CLEARED memo/cache (so concurrent FIRST builds — the
-  * deadlock-prone path — are actually exercised). Exits non-zero on any
-  * instability.
+  * deadlock-prone path — are actually exercised). A query that throws
+  * is named and the run goes on. Exits non-zero on any instability or
+  * failed query.
   */
 object Soak {
   def main(args: Array[String]): Unit = {
@@ -29,53 +32,39 @@ object Soak {
     val rounds = rest.find(a => a.nonEmpty && a.forall(_.isDigit)).map(_.toInt).getOrElse(2)
     val par = rest.contains("par")
     val spark = GraftSession.local("8", aqe = Some(true))
-    def fingerprint(name: String): String = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      // order-insensitive, value-exact: sorted row renderings
-      df.collect().map(_.toString).sorted.mkString("\n")
-    }
-    var unstable = List.empty[String]
-    val first = SparkEntry.queries.keys.toSeq.sorted.map(n => n -> fingerprint(n)).toMap
-    for (r <- 2 to rounds; n <- first.keys.toSeq.sorted) {
-      if (fingerprint(n) != first(n)) {
-        unstable ::= s"$n (round $r)"
-        println(s"[soak] UNSTABLE $n round $r")
-      }
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    // order-insensitive, value-exact: sorted row renderings
+    def fingerprints(threads: Int = 1) = Bench.runEach(queries, threads, 20.minutes) {
+      (_, fn) => fn(spark, sfDir).collect().map(_.toString).sorted.mkString("\n")
     }
     // Concurrency round: all queries at once from separate threads (the
     // BI-concurrency shape) — thread safety of the shared session,
     // SessionMemo, and persisted intermediates, and result parity with
     // the sequential fingerprints. Memo + cache are cleared first so the
     // par round performs concurrent FIRST builds, not warmed-cache hits.
-    if (par) {
+    def parallel() = {
       graft.sources.SessionMemo.release(spark) // unpersists memoized frames too
       spark.catalog.clearCache()
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration._
-      // daemon threads: a query that deadlocks (the failure this round
-      // hunts) must not be able to pin the JVM open past the timeout
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8, r => {
-        val t = new Thread(r); t.setDaemon(true); t
-      })
-      try {
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val results = Await.result(
-          Future.sequence(first.keys.toSeq.sorted.map(n => Future(n -> fingerprint(n)))),
-          20.minutes).toMap
-        val parBad = results.filter { case (n, fp) => fp != first(n) }.keys.toSeq.sorted
-        parBad.foreach(n => println(s"[soak] UNSTABLE $n (parallel)"))
-        unstable :::= parBad.map(n => s"$n (parallel)").toList
-        if (parBad.isEmpty)
-          println(s"[soak] all ${first.size} queries stable under 8-way concurrency (cold memo)")
-      } catch {
+      try fingerprints(threads = 8)
+      catch {
         case e: java.util.concurrent.TimeoutException =>
           println(s"[soak] UNSTABLE parallel round TIMED OUT (possible deadlock): $e")
-          pool.shutdownNow()
           sys.exit(1) // stuck threads are daemons; exit is not blocked
-      } finally pool.shutdown()
+      }
     }
-    if (unstable.isEmpty) println(s"[soak] all ${first.size} queries stable over $rounds runs")
+    val first = fingerprints()
+    val later = (2 to rounds).map(r => s"round $r" -> fingerprints()) ++
+      (if (par) Seq("parallel" -> parallel()) else Nil)
+    val baseline = first.results.toMap
+    val unstable = for ((round, ran) <- later; (n, fp) <- ran.results
+      if baseline.get(n).exists(_ != fp)) yield s"$n ($round)"
+    val failed = (first +: later.map(_._2)).flatMap(_.failed).distinct.sorted
+    unstable.foreach(u => println(s"[soak] UNSTABLE $u"))
+    if (failed.nonEmpty) println(s"[soak] ${failed.size} queries FAILED: ${failed.mkString(", ")}")
+    if (unstable.isEmpty && failed.isEmpty)
+      println(s"[soak] all ${baseline.size} queries stable over $rounds runs" +
+        (if (par) " and under 8-way concurrency (cold memo)" else ""))
     spark.stop()
-    if (unstable.nonEmpty) sys.exit(1)
+    if (unstable.nonEmpty || failed.nonEmpty) sys.exit(1)
   }
 }

@@ -6,26 +6,21 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional 3rd arg: comma-separated query names to dump (fast local iteration).
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus)
+    // Optional 3rd arg: comma-separated query names to dump (fast local
+    // iteration); an unknown name fails before the session starts.
+    val queries = Bench.select(SparkEntry.queries.toSeq, args.lift(2))
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val ran = Bench.runEach(queries) { (name, fn) =>
       System.err.println(s"[verify] running $name")
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
     // Keep the oracle dump consistent with what was actually dumped:
     // with the name filter active, a fresh outDir would otherwise make
     // compare.py fail every undumped query on a missing parquet dir.
-    writeOracleJson(outDir, k => only.forall(_.contains(k)))
+    writeOracleJson(outDir, queries.map(_._1).toSet)
+    if (ran.failed.nonEmpty)
+      System.err.println(s"[verify] ${ran.failed.size} failed: ${ran.failed.mkString(", ")}")
     spark.stop()
   }
 

@@ -67,8 +67,10 @@ case class ParseCombinedLog(child: Expression) extends UnaryExpression
 
 object ParseCombinedLog {
 
-  /** Flat-group combined-format regex — see graft.logs.LogParser.LogRegex
-    * (intended-semantics version of reference `LogParse.java:25-26`).
+  /** Flat-group version of the reference regex (`LogParse.java:25-26`),
+    * anchored, group per field:
+    * 1 ip, 2 identity, 3 user, 4 datetime (no brackets), 5 request
+    * (no quotes), 6 status, 7 bytes, 8 referer, 9 user-agent.
     */
   val LogRegex: String =
     """^(\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}) (\S+) (\S+) \[(.+?)\] "(.*?)" (\d{3}) (\S+) "(.*?)" "(.*?)"$"""

@@ -26,14 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object LogParser {
 
-  /** Flat-group version of the reference regex (`LogParse.java:25-26`),
-    * anchored, group per field:
-    * 1 ip, 2 identity, 3 user, 4 datetime (no brackets), 5 request
-    * (no quotes), 6 status, 7 bytes, 8 referer, 9 user-agent.
-    */
-  val LogRegex: String =
-    """^(\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}) (\S+) (\S+) \[(.+?)\] "(.*?)" (\d{3}) (\S+) "(.*?)" "(.*?)"$"""
-
   /** Discuz URL id patterns (`LogParse.java:114,117`): anchored on the
     * exact `mod=` value so e.g. `?mod=ajax&...&fid=40` yields NO section.
     */
@@ -125,12 +117,19 @@ object LogParser {
     * parse → drop unparseable → keep 200. `access_date` is the formatted
     * string exactly as the reference carries it.
     */
-  def accessTuples(lines: DataFrame, lineCol: String = "line"): DataFrame = {
+  def accessTuples(lines: DataFrame, lineCol: String = "line"): DataFrame =
+    accessEvents(lines, lineCol).drop("ts")
+
+  /** [[accessTuples]] plus `ts`, the parsed event time `access_date` is
+    * formatted from — what watermarks and interval joins read.
+    */
+  def accessEvents(lines: DataFrame, lineCol: String = "line"): DataFrame = {
     val parsed = keepStatus200(dropUnparseable(parseFull(lines, lineCol)))
     parsed.select(
       col("client_ip"),
       date_format(col("access_ts"), "yyyy-MM-dd HH:mm:ss").as("access_date"),
       col("section_id"),
-      col("article_id"))
+      col("article_id"),
+      col("access_ts").as("ts"))
   }
 }

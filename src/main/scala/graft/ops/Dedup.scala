@@ -622,11 +622,9 @@ object Dedup {
     * that size. Verified near-dup pairs are SPARSE relative to the
     * corpus (Jaccard-verified dups, not candidates), so even 100 TB
     * corpora often land under this; the distributed path stays the
-    * general case. Override via `-Dgraft.cc.localMaxPairs=N` (0 forces
-    * the distributed loop everywhere).
+    * general case.
     */
-  val LocalCcMaxPairs: Long =
-    sys.props.get("graft.cc.localMaxPairs").map(_.toLong).getOrElse(1L << 20)
+  val LocalCcMaxPairs: Long = 1L << 20
 
   /** Driver-side union-find with min-id labels — exact same output
     * contract as the distributed loop: every node labeled with the
@@ -677,7 +675,7 @@ object Dedup {
     val longIds = Seq("doc_a", "doc_b").forall(c =>
       pairs.schema.find(_.name == c).exists(_.dataType ==
         org.apache.spark.sql.types.LongType))
-    if (longIds && LocalCcMaxPairs > 0 &&
+    if (longIds &&
         pairs.limit((LocalCcMaxPairs + 1).toInt).count() <= LocalCcMaxPairs)
       return localCc(pairs)
     connectedComponentsDistributed(pairs, maxIter)

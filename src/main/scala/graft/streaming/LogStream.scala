@@ -12,7 +12,6 @@ import graft.logs.LogParser
   * Reference ⇄ Spark mapping (SURVEY.md §1.3):
   *   - Kafka `DataStream<String>`      → `readStream` lines (kafka/file/
   *     MemoryStream — the transforms below are source-agnostic)
-  *   - proctime temp view               → `current_timestamp()` per batch
   *   - continuous `count(1) GROUP BY`   → update-mode streaming aggregate
   *     (state in Spark's StateStore, keyed exchange on the group key)
   *   - `PRIMARY KEY ... NOT ENFORCED` JDBC upsert sink (`LogAnalysis
@@ -33,11 +32,11 @@ import graft.logs.LogParser
   */
 object LogStream {
 
-  /** Parse an unbounded `line` column into the analytics 4-tuple; narrow
-    * (stateless) — chains into the source micro-batch with no shuffle.
+  /** Parse an unbounded `line` column into the analytics 4-tuple plus
+    * its event time `ts`; narrow (stateless) — chains into the source
+    * micro-batch with no shuffle.
     */
-  def parsedTuples(lines: DataFrame): DataFrame =
-    LogParser.accessTuples(lines).withColumn("proctime", current_timestamp())
+  def parsedTuples(lines: DataFrame): DataFrame = LogParser.accessEvents(lines)
 
   private val Section = "section"
   private val Article = "article"
@@ -111,19 +110,8 @@ object LogStream {
     */
   def attributionJoin(
       views: DataFrame, purchases: DataFrame,
-      watermarkDelay: String, windowSeconds: Long): DataFrame = {
-    val v = views
-      .select(col("event_id").as("view_id"), col("user_id").as("v_user"), col("ts").as("v_ts"))
-      .withWatermark("v_ts", watermarkDelay)
-    val p = purchases
-      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", watermarkDelay)
-    p.join(v, expr(
-      s"""user_id = v_user AND
-         |v_ts <= p_ts AND
-         |v_ts >= p_ts - INTERVAL $windowSeconds SECONDS""".stripMargin))
-      .select(col("purchase_id"), col("user_id"), col("p_ts"), col("view_id"), col("v_ts"))
-  }
+      watermarkDelay: String, windowSeconds: Long): DataFrame =
+    attribution(views, purchases, watermarkDelay, windowSeconds, "inner")
 
   /** LEFT OUTER variant of [[attributionJoin]]: unattributed purchases
     * still emit (null view columns) — but only once the watermark
@@ -134,7 +122,11 @@ object LogStream {
     */
   def attributionJoinOuter(
       views: DataFrame, purchases: DataFrame,
-      watermarkDelay: String, windowSeconds: Long): DataFrame = {
+      watermarkDelay: String, windowSeconds: Long): DataFrame =
+    attribution(views, purchases, watermarkDelay, windowSeconds, "left_outer")
+
+  private def attribution(views: DataFrame, purchases: DataFrame,
+      watermarkDelay: String, windowSeconds: Long, joinType: String): DataFrame = {
     val v = views
       .select(col("event_id").as("view_id"), col("user_id").as("v_user"), col("ts").as("v_ts"))
       .withWatermark("v_ts", watermarkDelay)
@@ -144,7 +136,7 @@ object LogStream {
     p.join(v, expr(
       s"""user_id = v_user AND
          |v_ts <= p_ts AND
-         |v_ts >= p_ts - INTERVAL $windowSeconds SECONDS""".stripMargin), "left_outer")
+         |v_ts >= p_ts - INTERVAL $windowSeconds SECONDS""".stripMargin), joinType)
       .select(col("purchase_id"), col("user_id"), col("p_ts"), col("view_id"), col("v_ts"))
   }
 

@@ -235,6 +235,28 @@ class LogAnalysisAppSpec extends AnyFunSuite {
     assert(changelogs("product").nonEmpty)
   }
 
+  test("the application-end hook closes the stopped queries' state stores") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreId, StateStoreProviderId}
+    val logDir = Files.createTempDirectory("graft-logs-s").toFile
+    val ckpt = Files.createTempDirectory("graft-ckpt-s").toString
+    Files.writeString(new java.io.File(logDir, "b1.log").toPath,
+      tline("10.0.0.1", "10:20:00", "/forum.php?mod=forumdisplay&fid=3"))
+    val p = LogAnalysisApp.start(spark,
+      graft.sources.LogSources.textStreamLines(spark, logDir.toString),
+      Seq((3L, "tech")).toDF("fid", "name"), Seq((9L, "post nine")).toDF("tid", "subject"), ckpt)
+    try p.query.processAllAvailable() finally p.query.stop()
+    // the keyed count is operator 0; one store per shuffle partition
+    val root = new org.apache.hadoop.fs.Path(s"file:$ckpt/product/state").toString
+    val ids = (0 until spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .map(part => StateStoreProviderId(StateStoreId(root, 0, part), p.query.runId))
+    assert(ids.exists(StateStore.isLoaded), s"no provider loaded under $root")
+    LogAnalysisApp.CloseStateStores.onApplicationEnd(
+      org.apache.spark.scheduler.SparkListenerApplicationEnd(System.currentTimeMillis()))
+    assert(!ids.exists(StateStore.isLoaded))
+    assert(!StateStore.isMaintenanceRunning)
+  }
+
   test("jdbc upsert SQL is the MySQL ON DUPLICATE KEY UPDATE form") {
     val u = new graft.sources.JdbcUpsert(
       "hot_section", Seq("section_id", "name", "section_pv"), Seq("section_id"),

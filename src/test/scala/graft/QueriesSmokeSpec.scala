@@ -97,4 +97,13 @@ class QueriesSmokeSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("a dumped plan masks JVM object identities, so two builds compare equal") {
+    val plan = DumpPlans.plan(spark, sf, "q_knn_class")
+    assert(plan.contains("@<hex>"), plan) // the typed aggregator's identity, masked
+    assert("@[0-9a-f]+\\b".r.findFirstIn(plan).isEmpty, plan)
+    // expression and exchange ids count up per build; they are not identities
+    def ids(p: String) = p.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+    assert(ids(DumpPlans.plan(spark, sf, "q_knn_class")) == ids(plan))
+  }
 }
