@@ -120,6 +120,10 @@ object LogAnalysisApp {
     fs.exists(commits) && fs.listStatus(commits).exists(_.getPath.getName.forall(_.isDigit))
   }
 
+  /** The funnel query, which also carries the volume alarm; the alarms by
+    * funnel batch id; and the funnel's matches, keyed by
+    * (user_id, view_ts, purchase_ts).
+    */
   final case class Monitors(
       funnel: StreamingQuery,
       alarms: scala.collection.concurrent.TrieMap[Long, (Long, Option[Long], Boolean)],
@@ -127,43 +131,41 @@ object LogAnalysisApp {
 
   /** The extension monitors over the same `line` stream as the product
     * pipeline, in ONE streaming query (the funnel), which reads and parses
-    * the source itself, once for each join side:
+    * the source itself, once per line:
     *
-    *   - **browse→read funnel**: the stream-stream interval join
-    *     ([[graft.streaming.EventJoinStream]]) between section browses
-    *     (fid hits) and article reads (tid hits) by the SAME client
-    *     within `maxGapSec` — both sides watermarked on the log's event
-    *     time, so the symmetric join state stays O(rate × window) forever.
+    *   - **browse→read funnel**: section browses (fid hits) paired with
+    *     article reads (tid hits) by the SAME client within `maxGapSec`,
+    *     by one keyed stateful operator over the parsed rows
+    *     ([[graft.streaming.EventJoinStream.browseToRead]]). Its
+    *     watermark is the max event time of the parsed rows minus
+    *     `watermarkSec`, and it bounds the buffered state to
+    *     O(rate × window) forever. (The stream-stream join this replaces
+    *     took the minimum of its two sides' watermarks; for lines in
+    *     event-time order the matches are identical.) A `funnel`
+    *     checkpoint written by that join cannot be resumed here: its
+    *     state belongs to a different operator.
     *   - **volume alarm**: each funnel batch's parsed-row count, observed
-    *     on the browse side before its section filter, robust-z'd against
-    *     `refVolumes` (historical per-period volumes, an `x: long`
-    *     column) via [[graft.streaming.AnomalyStream.volumeAlarm]] — the
-    *     ingest-side pager that fires BEFORE a surge reaches the
-    *     aggregates. Alarms land in `Monitors.alarms` keyed by the funnel's
-    *     batch id, once the listener has seen that batch's progress;
-    *     no-data (watermark) batches raise none.
+    *     before any filter, robust-z'd against `refVolumes` (historical
+    *     per-period volumes, an `x: long` column) via
+    *     [[graft.streaming.AnomalyStream.volumeAlarm]] — the ingest-side
+    *     pager that fires BEFORE a surge reaches the aggregates. Alarms
+    *     land in `Monitors.alarms` keyed by the funnel's batch id, once
+    *     the listener has seen that batch's progress; no-data
+    *     (watermark) batches raise none.
     *
     * Scale note: everything here is per-micro-batch narrow work plus one
-    * watermark-bounded join keyed on client_ip; no unbounded state.
+    * watermark-bounded state keyed on client_ip; no unbounded state.
     */
   def startMonitors(spark: SparkSession, lines: DataFrame,
       refVolumes: DataFrame, checkpointRoot: String,
       maxGapSec: Int = 600, watermarkSec: Int = 300): Monitors = {
-    val parsed = LogStream.parsedTuples(lines)
-
     val alarms = scala.collection.concurrent.TrieMap[Long, (Long, Option[Long], Boolean)]()
     val funnelSink = new UpsertSink(Seq("user_id", "view_ts", "purchase_ts"))
     useRocksDbState(spark)
-    val funnel = graft.streaming.AnomalyStream.volumeAlarm(parsed, refVolumes) {
+    val funnel = graft.streaming.AnomalyStream.volumeAlarm(LogStream.parsedTuples(lines), refVolumes) {
       (id, x, z, fired) => alarms.put(id, (x, z, fired))
     } { counted =>
-      val views = counted.filter(col("section_id") =!= 0)
-        .select(col("client_ip").as("user_id"), col("ts"))
-      val reads = parsed.filter(col("article_id") =!= 0)
-        .select(col("client_ip").as("user_id"), col("ts"),
-          col("article_id").as("value"))
-      graft.streaming.EventJoinStream
-        .viewToPurchase(views, reads, maxGapSec, watermarkSec)
+      graft.streaming.EventJoinStream.browseToRead(counted, maxGapSec, watermarkSec).toDF()
         .writeStream.outputMode("append")
         .option("checkpointLocation", s"$checkpointRoot/funnel")
         .foreachBatch { (df: DataFrame, id: Long) => funnelSink.merge(df, id) }

@@ -208,6 +208,102 @@ class LogAnalysisAppSpec extends AnyFunSuite {
     } finally { p.query.stop(); m.funnel.stop() }
   }
 
+  /** A file-arrival stream over `dir` that takes one file per trigger. */
+  def oneFilePerTrigger(dir: java.io.File) =
+    spark.readStream.schema(graft.sources.LogSources.LineSchema)
+      .option("maxFilesPerTrigger", "1").text(dir.toString).toDF("line")
+
+  /** Write `files` into `dir` as b0.log, b1.log, … with increasing
+    * modification times, so a stream takes them in order.
+    */
+  def writeInOrder(dir: java.io.File, files: Seq[Seq[String]], from: Int = 0): Unit =
+    files.zipWithIndex.foreach { case (lines, i) =>
+      val f = new java.io.File(dir, s"b${from + i}.log")
+      Files.writeString(f.toPath, lines.mkString("\n"))
+      f.setLastModified(1600000000000L + (from + i) * 1000L)
+    }
+
+  def funnelRows(m: LogAnalysisApp.Monitors): Set[Seq[Any]] = m.funnelSink.snapshot.values.toSet
+
+  test("the funnel reads each line once: one source per progress, input rows equal the lines") {
+    import spark.implicits._
+    val logDir = Files.createTempDirectory("graft-logs-once").toFile
+    val ckpt = Files.createTempDirectory("graft-ckpt-once").toString
+    val files = Seq(
+      Seq(tline("10.0.0.1", "10:20:00", "/forum.php?mod=forumdisplay&fid=3"),
+        tline("10.0.0.1", "10:21:00", "/forum.php?mod=viewthread&tid=9"),
+        "### not a log line ###"),
+      Seq(tline("10.0.0.2", "10:22:00", "/forum.php?mod=forumdisplay&fid=5"),
+        tline("10.0.0.2", "10:23:00", "/index.php")))
+    writeInOrder(logDir, files)
+    val m = LogAnalysisApp.startMonitors(spark, oneFilePerTrigger(logDir), Seq(10L, 12L).toDF("x"), ckpt)
+    try {
+      m.funnel.processAllAvailable()
+      val progress = m.funnel.recentProgress.toSeq
+      assert(progress.nonEmpty && progress.forall(_.sources.length == 1), progress.map(_.prettyJson))
+      assert(progress.map(_.numInputRows).sum == files.flatten.size.toLong)
+      assert(funnelRows(m).map(_.last) == Set(9))
+    } finally m.funnel.stop()
+  }
+
+  test("the funnel over event-ordered generated lines equals a batch self-join of the same lines") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val lines = graft.logs.LogGen.logLines(spark, "/root/testdata/sf0.001")
+      .orderBy("ts", "event_id").select("line").as[String].collect().toSeq
+    val logDir = Files.createTempDirectory("graft-logs-gen").toFile
+    writeInOrder(logDir, lines.grouped((lines.size + 2) / 3).toSeq)
+    val m = LogAnalysisApp.startMonitors(spark, oneFilePerTrigger(logDir), Seq(10L, 12L).toDF("x"),
+      Files.createTempDirectory("graft-ckpt-gen").toString)
+    val streamed = try { m.funnel.processAllAvailable(); funnelRows(m) } finally m.funnel.stop()
+
+    val events = graft.logs.LogParser.accessEvents(lines.toDF("line"))
+    val views = events.filter($"section_id" =!= 0).select($"client_ip".as("user_id"), $"ts".as("view_ts"))
+    val reads = events.filter($"article_id" =!= 0)
+      .select($"client_ip", $"ts".as("purchase_ts"), $"article_id".as("value"))
+    val batch = views.join(reads, $"user_id" === $"client_ip" && $"purchase_ts" > $"view_ts" &&
+        $"purchase_ts" <= $"view_ts" + expr("interval 600 seconds"))
+      .select("user_id", "view_ts", "purchase_ts", "value").collect().toSeq.map(_.toSeq)
+    // the sink is keyed by (user_id, view_ts, purchase_ts): no two pairs share a key
+    assert(batch.map(_.take(3)).distinct.size == batch.size)
+    assert(batch.nonEmpty)
+    assert(streamed == batch.toSet)
+  }
+
+  test("a funnel restarted on its checkpoint keeps a buffered browse and pairs it with a later read") {
+    import spark.implicits._
+    val ref = Seq(10L, 12L).toDF("x")
+    val files = Seq(
+      Seq(tline("10.0.0.1", "10:20:00", "/forum.php?mod=forumdisplay&fid=3"),
+        tline("10.0.0.2", "10:20:10", "/forum.php?mod=viewthread&tid=7")),
+      Seq(tline("10.0.0.1", "10:24:00", "/forum.php?mod=viewthread&tid=9")))
+    def run(dir: java.io.File, ck: String) = LogAnalysisApp.startMonitors(spark, oneFilePerTrigger(dir), ref, ck)
+
+    val logDir = Files.createTempDirectory("graft-logs-fr").toFile
+    val ckpt = Files.createTempDirectory("graft-ckpt-fr").toString
+    writeInOrder(logDir, files.take(1))
+    val m1 = run(logDir, ckpt)
+    try {
+      m1.funnel.processAllAvailable()
+      assert(funnelRows(m1).isEmpty) // the browse is buffered, nothing to pair yet
+    } finally m1.funnel.stop()
+
+    val m2 = run(logDir, ckpt) // a fresh sink on the same checkpoint
+    val resumed = try {
+      writeInOrder(logDir, files.drop(1), from = 1)
+      m2.funnel.processAllAvailable()
+      funnelRows(m2)
+    } finally m2.funnel.stop()
+
+    val refDir = Files.createTempDirectory("graft-logs-fr-ref").toFile
+    writeInOrder(refDir, files)
+    val m3 = run(refDir, Files.createTempDirectory("graft-ckpt-fr-ref").toString)
+    val uninterrupted = try { m3.funnel.processAllAvailable(); funnelRows(m3) } finally m3.funnel.stop()
+
+    assert(resumed.map(r => (r.head, r.last)) == Set(("10.0.0.1", 9)))
+    assert(resumed == uninterrupted)
+  }
+
   test("the product query and the funnel keep RocksDB state with changelog checkpoints") {
     import spark.implicits._
     val logDir = Files.createTempDirectory("graft-logs-c").toFile
