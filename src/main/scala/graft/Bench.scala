@@ -138,7 +138,12 @@ object Bench {
       memo.toMap, ran.failed.toSet)
   }
 
-  /** Compact final line: seconds at ms precision; the previous round's
+  /** The full-precision line's `queries` map: every time exact. */
+  def exactQueries(results: Map[String, Double]): String =
+    results.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** Compact final line: seconds at ms precision, floored at 0.001 so a
+    * query that ran never reads as a dropped 0.000; the previous round's
     * comparison set first (so the driver's round-over-round view keeps
     * every query it compared last round, fast or slow), then the
     * heaviest of the rest, while the line fits `budget`. Truncation is
@@ -155,7 +160,7 @@ object Bench {
     var first = true
     val dropped = Seq.newBuilder[String]
     byTime.foreach { case (k, v) =>
-      val entry = (if (first) "" else ",") + "\"" + k + "\":" + f"$v%.3f"
+      val entry = (if (first) "" else ",") + "\"" + k + "\":" + f"${math.max(v, 0.001)}%.3f"
       if (sb.length + entry.length + footer.length <= budget) {
         sb.append(entry); first = false
       } else dropped += k
@@ -279,8 +284,6 @@ object Bench {
     }.filter(_._2 >= 0.05).toMap
     val memoTotal = memoBuilds.values.sum
     val total = results.values.sum + memoTotal
-    val qsFull = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     // Full-precision record: queries first, headline last (tail-survivable).
     val rawTotals = passTotals.map(t => f"$t%.3f").mkString("[", ",", "]")
     val memoFull = memoBuilds.map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }
@@ -288,7 +291,7 @@ object Bench {
     val loadsJson = passLoads.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
     val winsJson = winCounts.mkString("[", ",", "]")
     val failedJson = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"queries":$qsFull,"failed":$failedJson,"memo_builds":$memoFull,"memo_total":${f"$memoTotal%.3f"},"sf":"$sfDir","unit":"sec","n_queries":${results.size},"passes":${allPasses.size},"extra_passes":$extraPasses,"pass_totals":$rawTotals,"pass_win_counts":$winsJson,"loadavg":$loadsJson,"pass_disagreement_pct":${f"$passDisagreementPct%.1f"},"metric":"total","value":$total}""")
+    println(s"""{"queries":${exactQueries(results)},"failed":$failedJson,"memo_builds":$memoFull,"memo_total":${f"$memoTotal%.3f"},"sf":"$sfDir","unit":"sec","n_queries":${results.size},"passes":${allPasses.size},"extra_passes":$extraPasses,"pass_totals":$rawTotals,"pass_win_counts":$winsJson,"loadavg":$loadsJson,"pass_disagreement_pct":${f"$passDisagreementPct%.1f"},"metric":"total","value":$total}""")
     val header = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","memo_total":$memoTotal%.3f,"pass_disagreement_pct":$passDisagreementPct%.1f,"queries":{"""
     println(compactLine(header, results))
     spark.stop()

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.logs.LogParser
 import graft.streaming.{LogStream, UpsertSink}
 
 /** The product pipeline — the rebuild of the reference's
@@ -79,7 +80,7 @@ object LogAnalysisApp {
       publish(spark.read.format("statestore").load(checkpoint)
         .select(col("key.kind"), col("key.key"), col("value.count")), -1L)
 
-    val query = LogStream.keyedCounts(LogStream.parsedTuples(lines))
+    val query = LogStream.keyedCounts(LogParser.accessEvents(lines))
       .writeStream.outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch(publish _)
@@ -162,7 +163,7 @@ object LogAnalysisApp {
     val alarms = scala.collection.concurrent.TrieMap[Long, (Long, Option[Long], Boolean)]()
     val funnelSink = new UpsertSink(Seq("user_id", "view_ts", "purchase_ts"))
     useRocksDbState(spark)
-    val funnel = graft.streaming.AnomalyStream.volumeAlarm(LogStream.parsedTuples(lines), refVolumes) {
+    val funnel = graft.streaming.AnomalyStream.volumeAlarm(LogParser.accessEvents(lines), refVolumes) {
       (id, x, z, fired) => alarms.put(id, (x, z, fired))
     } { counted =>
       graft.streaming.EventJoinStream.browseToRead(counted, maxGapSec, watermarkSec).toDF()

@@ -6,45 +6,21 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Stream-stream interval join — the attribution primitive the
-  * stream-static lookups (LogStream) cannot express: BOTH sides arrive
-  * continuously, and a purchase must match a view by the same user
-  * within a bounded gap after it.
+/** The browse→read funnel: each browse paired with the same client's
+  * reads that follow it within a bounded gap, both sides taken from ONE
+  * stream of parsed log rows. A pair is a browse at `view_ts` and a read
+  * at `purchase_ts` with `view_ts < purchase_ts ≤ view_ts + maxGapSec`.
   *
-  * Scale contract: the time-bound predicate plus watermarks on both
-  * sides is what keeps the symmetric join state finite — Spark's
-  * StreamingSymmetricHashJoin buffers each side only until the other
-  * side's watermark passes `view_ts + maxGapSec`, so state is
-  * O(arrival rate × window), never O(history). Without the interval
-  * condition the same join would accumulate both streams forever; the
-  * spec asserts both the match semantics and the physical operator.
-  *
-  * When both sides are rows of ONE stream, [[browseToRead]] pairs them
-  * with one keyed stateful operator instead: one scan, one parse and one
-  * state store per partition, where the join reads its source once per
-  * side and keeps four.
+  * Scale contract: watermarks bound the buffered state. A browse stays
+  * only until the watermark passes `view_ts + maxGapSec` and a read until
+  * it passes `purchase_ts`, so state is O(arrival rate × window), never
+  * O(history). The pairing runs as one keyed stateful operator: one scan,
+  * one parse and one state store per partition, where a stream-stream
+  * join of the stream with itself reads its source once per side and
+  * keeps four. Two independently paced streams join with
+  * [[LogStream.attributionJoin]] / [[LogStream.attributionJoinOuter]].
   */
 object EventJoinStream {
-
-  /** Join views to same-user purchases within (0, maxGapSec] after the
-    * view. Inner join: matches emit as soon as both rows arrived;
-    * watermarks bound the buffered state, delayed rows past them drop.
-    */
-  def viewToPurchase(views: DataFrame, purchases: DataFrame,
-      maxGapSec: Int = 600, watermarkSec: Int = 300): DataFrame = {
-    val v = views
-      .select(col("user_id"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", s"$watermarkSec seconds")
-    val p = purchases
-      .select(col("user_id").as("p_user_id"), col("ts").as("purchase_ts"),
-        col("value"))
-      .withWatermark("purchase_ts", s"$watermarkSec seconds")
-    v.join(p,
-      expr(s"""user_id = p_user_id
-               AND purchase_ts > view_ts
-               AND purchase_ts <= view_ts + interval $maxGapSec seconds"""))
-      .select(col("user_id"), col("view_ts"), col("purchase_ts"), col("value"))
-  }
 
   final case class Hit(user_id: String, ts: Timestamp, browse: Boolean, read: Int)
   final case class Read(ts: Long, value: Int)
@@ -55,9 +31,9 @@ object EventJoinStream {
   /** The browse→read funnel over one stream of parsed log rows
     * (`client_ip`, `ts`, `section_id`, `article_id`): each browse
     * (`section_id` ≠ 0) paired with the same client's reads
-    * (`article_id` ≠ 0, the read's article as `value`) in
-    * (0, maxGapSec] after it — [[viewToPurchase]]'s predicate and output
-    * columns, with both sides taken from the same rows.
+    * (`article_id` ≠ 0, the read's article as `value`) with
+    * `view_ts < purchase_ts ≤ view_ts + maxGapSec`, one
+    * `(user_id, view_ts, purchase_ts, value)` row per pair.
     *
     * One `flatMapGroupsWithState` keyed by `client_ip` buffers each
     * browse's and each read's event time. A batch's reads pair with every

@@ -4,12 +4,13 @@ import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Streaming heavy hitters with BOUNDED state: a SpaceSaving (Metwally
-  * et al.) summary per hash shard on the state API v2 — the third
-  * transformWithState state shape in the library (ValueState:
-  * TwsClientCounts, ListState+timers: SessionTimers, MapState: here).
+  * et al.) summary per hash shard on the state API v2 — the library's
+  * MapState shape of transformWithState (ValueState: EwmaStream,
+  * SprtStream, QuantileStream; MapState: here).
   *
-  * Exact per-key streaming counts (the TwsClientCounts shape) keep one
-  * state row per DISTINCT key — unbounded on an open vocabulary. This
+  * Exact per-key streaming counts (the product's
+  * [[LogStream.keyedCounts]]) keep one state row per DISTINCT key —
+  * unbounded on an open vocabulary. This
   * processor keys by `hash(term) % shards` instead and keeps at most k
   * counters per shard in a MapState: a present term increments; an
   * absent term with room starts at (1, 0); an absent term with the

@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.logs.LogParser
-
 /** Structured-Streaming form of the reference pipeline
   * (`LogAnalysis.java:34-94`): unbounded lines → parse → filter →
   * continuously-updating aggregates → upsert sink.
@@ -31,12 +29,6 @@ import graft.logs.LogParser
   * gives for free, as the extension surface.
   */
 object LogStream {
-
-  /** Parse an unbounded `line` column into the analytics 4-tuple plus
-    * its event time `ts`; narrow (stateless) — chains into the source
-    * micro-batch with no shuffle.
-    */
-  def parsedTuples(lines: DataFrame): DataFrame = LogParser.accessEvents(lines)
 
   private val Section = "section"
   private val Article = "article"

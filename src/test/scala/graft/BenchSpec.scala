@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The harness mains' shared pieces. Bench's timing loop: a query that
   * throws is reported by name and never timed as a result. Its compact
-  * line names every pinned query it has to drop. The name selection
+  * line names every pinned query it has to drop and prints no time below
+  * 0.001, while the full line keeps it exact. The name selection
   * rejects a typo, and the per-query loop goes on past a throwing query.
   */
 class BenchSpec extends AnyFunSuite {
@@ -31,6 +32,12 @@ class BenchSpec extends AnyFunSuite {
     assert(warned.contains("kept 1/3"), warned)
     assert(warned.contains("dropped pinned q_coreness"), warned)
     assert(!warned.contains("pinned q_unpinned") && !warned.contains("q_triangles"), warned)
+  }
+
+  test("a sub-millisecond time prints 0.001 on the compact line and stays exact on the full line") {
+    val results = Map("q_bpe_curve" -> 0.0004)
+    assert(Bench.compactLine("{\"queries\":{", results) == "{\"queries\":{\"q_bpe_curve\":0.001}}")
+    assert(Bench.exactQueries(results) == "{\"q_bpe_curve\":4.0E-4}")
   }
 
   test("the name selection rejects an unknown name, naming it") {

@@ -5,62 +5,68 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.EventJoinStream
+import graft.streaming.{EventJoinStream, LogStream}
 
-/** Stream-stream interval join semantics: same-user purchases within
-  * the gap window match, outside-gap and cross-user purchases do not,
-  * and the physical plan is the symmetric stateful join (bounded state),
-  * not a static join. The one-stream funnel ([[EventJoinStream.browseToRead]])
-  * pairs like a brute-force pairing of every row it kept, drops rows at or
-  * below its watermark, and empties its state once the watermark passes
-  * every buffered row.
+/** The two interval-join idioms. Two independently paced streams join
+  * with [[LogStream.attributionJoin]]: same-user purchases within the
+  * window match, outside-window and cross-user purchases do not, a side
+  * that arrives in a later batch still matches, and the physical plan is
+  * the symmetric stateful join (bounded state), not a static join. The
+  * one-stream funnel ([[EventJoinStream.browseToRead]]) pairs like a
+  * brute-force pairing of every row it kept, drops rows at or below its
+  * watermark, and empties its state once the watermark passes every
+  * buffered row.
   */
 class EventJoinStreamSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
 
   private def t(sec: Long) = new Timestamp(sec * 1000L)
 
-  test("views match same-user purchases inside the gap; outside-gap and cross-user do not") {
+  // (event_id, user_id, ts): the columns attributionJoin reads on each side
+  private type Event = (Long, Long, Timestamp)
+
+  /** Start `attributionJoin` (window 600 s, watermark delay 300 s) on two
+    * memory streams into a memory sink named `name`.
+    */
+  private def attribution(name: String) = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[(Long, Timestamp)]
-    val buys = MemoryStream[(Long, Timestamp, Double)]
-    val joined = EventJoinStream.viewToPurchase(
-      views.toDF().toDF("user_id", "ts"),
-      buys.toDF().toDF("user_id", "ts", "value"),
-      maxGapSec = 600)
-    val q = joined.writeStream.format("memory").queryName("ej").outputMode("append").start()
+    val views = MemoryStream[Event]
+    val buys = MemoryStream[Event]
+    val q = LogStream.attributionJoin(
+        views.toDF().toDF("event_id", "user_id", "ts"),
+        buys.toDF().toDF("event_id", "user_id", "ts"),
+        watermarkDelay = "300 seconds", windowSeconds = 600)
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    (views, buys, q)
+  }
+
+  private def pairs(name: String): Seq[(Long, Long)] =
+    spark.sql(s"SELECT purchase_id, view_id FROM $name").collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1))).sorted
+
+  test("views match same-user purchases inside the gap; outside-gap and cross-user do not") {
+    val (views, buys, q) = attribution("ej")
     try {
-      views.addData((1L, t(1000)), (2L, t(1000)))
+      views.addData((1L, 1L, t(1000)), (2L, 2L, t(1000)))
       buys.addData(
-        (1L, t(1100), 9.5),   // inside gap, same user -> match
-        (1L, t(2000), 3.0),   // 1000s after the view -> outside gap
-        (3L, t(1100), 7.0))   // no view for user 3
+        (10L, 1L, t(1100)),   // inside the window, same user -> match
+        (11L, 1L, t(2000)),   // 1000s after the view -> outside the window
+        (12L, 3L, t(1100)))   // no view for user 3
       q.processAllAvailable()
-      val rows = spark.sql("SELECT user_id, value FROM ej ORDER BY user_id")
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(rows == Seq((1L, 9.5)), rows)
+      assert(pairs("ej") == Seq((10L, 1L)))
       // second round: the other stream side arrives later, still matches
-      buys.addData((2L, t(1500), 4.25))
+      buys.addData((13L, 2L, t(1500)))
       q.processAllAvailable()
-      val rows2 = spark.sql("SELECT user_id, value FROM ej ORDER BY user_id")
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(rows2 == Seq((1L, 9.5), (2L, 4.25)), rows2)
+      assert(pairs("ej") == Seq((10L, 1L), (13L, 2L)))
     } finally q.stop()
   }
 
   test("the plan is a symmetric stateful stream-stream join, state bounded by watermarks") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[(Long, Timestamp)]
-    val buys = MemoryStream[(Long, Timestamp, Double)]
-    val joined = EventJoinStream.viewToPurchase(
-      views.toDF().toDF("user_id", "ts"),
-      buys.toDF().toDF("user_id", "ts", "value"))
-    val q = joined.writeStream.format("memory").queryName("ejplan").outputMode("append").start()
+    val (views, buys, q) = attribution("ejplan")
     try {
-      views.addData((1L, t(100)))
-      buys.addData((1L, t(150), 1.0))
+      views.addData((1L, 1L, t(100)))
+      buys.addData((10L, 1L, t(150)))
       q.processAllAvailable()
       // public progress API: the stateful operator is the symmetric
       // stream-stream join, and its buffered state is row-bounded

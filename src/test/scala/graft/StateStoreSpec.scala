@@ -67,43 +67,6 @@ class StateStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("transformWithState client counts accumulate per key (state API v2)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    // transformWithState requires the RocksDB provider
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[String]
-      def line(ip: String, uri: String): String =
-        s"""$ip - - [27/Aug/2020:10:20:53 +0800] "GET $uri HTTP/1.1" 200 1024 "-" "Mozilla/5.0""""
-      val counts = graft.streaming.TwsClientCounts(
-        LogStream.parsedTuples(mem.toDF().withColumnRenamed("value", "line")))
-      val q = counts.toDF("client_ip", "cnt").writeStream.outputMode("update")
-        .format("memory").queryName("tws_counts").start()
-      try {
-        mem.addData(
-          line("10.0.0.1", "/forum.php?mod=viewthread&tid=9"),
-          line("10.0.0.1", "/forum.php?mod=forumdisplay&fid=3"),
-          line("10.0.0.2", "/forum.php?mod=viewthread&tid=9"),
-          line("10.0.0.9", "/index.html")) // no ids -> filtered
-        q.processAllAvailable()
-        mem.addData(line("10.0.0.1", "/forum.php?mod=viewthread&tid=7"))
-        q.processAllAvailable()
-        val out = spark.table("tws_counts").groupBy($"client_ip")
-          .agg(max($"cnt").as("c")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        assert(out == Map("10.0.0.1" -> 3L, "10.0.0.2" -> 1L))
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("streaming aggregate recovers state across a stop/restart from checkpoint") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

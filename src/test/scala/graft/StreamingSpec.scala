@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.logs.LogParser
 import graft.streaming.{LogStream, UpsertSink}
 
 /** Streaming semantics: continuous aggregation over added batches
@@ -21,7 +22,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
     val counts = LogStream.clientTotals(LogStream.keyedCounts(
-      LogStream.parsedTuples(mem.toDF().withColumnRenamed("value", "line"))))
+      LogParser.accessEvents(mem.toDF().withColumnRenamed("value", "line"))))
     val q = counts.writeStream.outputMode("update")
       .format("memory").queryName("client_counts").start()
     try {
@@ -51,7 +52,7 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[String]
     val dim = Seq((3L, "tech"), (5L, "life")).toDF("fid", "name")
     val counts = LogStream.keyedCounts(
-      LogStream.parsedTuples(mem.toDF().withColumnRenamed("value", "line")))
+      LogParser.accessEvents(mem.toDF().withColumnRenamed("value", "line")))
     val sink = new UpsertSink(Seq("section_id"))
     val q = counts.writeStream.outputMode("update")
       .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
