@@ -1869,9 +1869,7 @@ object Queries {
     * over the harness query set (vec_id < 10) — delegates to
     * [[graft.ops.Similarity.lshMultiTableTopK]] with the memoized
     * corpus code table. ONE definition so the pipeline [[annRecall]]
-    * certifies is exactly the one [[annMultiTable]] serves (and the
-    * same generic operator [[graft.streaming.AnnStream]] runs per
-    * micro-batch).
+    * certifies is exactly the one [[annMultiTable]] serves.
     */
   private def annMtTopK(spark: SparkSession, sfDir: String, e: DataFrame,
       k: Int): DataFrame =

@@ -17,6 +17,13 @@ import org.apache.spark.sql.functions._
   * is a pure hash of doc_id — reproducible across runs, engines, and
   * cluster sizes, with no RNG state.
   *
+  * docs(doc_id, text) → kept rows (doc_id, quality, split), over a
+  * bounded corpus: [[curate]], [[curateWithHandle]] and [[curateScoped]]
+  * run the one pipeline, which the q_curation* queries call.
+  * Near-dup policy: for every verified pair (a, b) with a < b, the
+  * larger id is dropped — deterministic, order-free, and safe under
+  * chains (b~c with no a: c drops, b survives).
+  *
   * Thresholds are part of the oracle contract (SparkEntry mirrors them
   * verbatim in the DuckDB SQL).
   */
@@ -57,12 +64,6 @@ object Curation {
     */
   val LmPerBigramMicro = -8000000L
 
-  /** docs(doc_id, text) → kept rows (doc_id, quality, split).
-    *
-    * Near-dup policy: for every verified pair (a, b) with a < b, the
-    * larger id is dropped — deterministic, order-free, and safe under
-    * chains (b~c with no a: c drops, b survives).
-    */
   /** Language + quality gates as one narrow codegen'd projection+filter.
     *
     * Each language score counts ~5 stopword substrings (2 string scans
@@ -219,138 +220,5 @@ object Curation {
     val (result, handles) = curatePipeline(docs, spanStage, spanPolicy)
     try use(result)
     finally handles.foreach(_.unpersist(blocking = false))
-  }
-
-  /** Incremental curation over a STREAMING doc source — how a 100 TB
-    * corpus actually arrives. Returns
-    *
-    *   (kept, nearDupCandidates)
-    *
-    * kept = gates (stateless, same codegen'd projection as batch) +
-    * exact dedup via streaming dropDuplicates on md5(text) (first
-    * arrival wins — the streaming analog of batch min-id), with the
-    * hash split attached. nearDupCandidates = the per-band LSH state
-    * stream (graft.streaming.DedupStream): each arriving doc that
-    * shares a MinHash band with an earlier doc emits a candidate pair.
-    * Production pipelines sink candidates to a reconciliation table and
-    * anti-join kept against it — the same drop-later-arrival policy as
-    * batch, kept as two streams because chaining a third stateful
-    * operator after flatMapGroupsWithState is where Spark's
-    * multi-stateful support ends.
-    */
-  def curateStream(docs: DataFrame): (DataFrame, org.apache.spark.sql.Dataset[graft.streaming.DedupStream.BandHit]) = {
-    val gated = gate(docs)
-    val bucket = TextOps.portableHash64(concat(lit("split:"), col("doc_id"))) % 100
-    val kept = gated
-      .withColumn("text_md5", md5(col("text")))
-      .dropDuplicates("text_md5")
-      .select(
-        col("doc_id"), col("quality"),
-        when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test").as("split"))
-    val candidates = graft.streaming.DedupStream.lshCandidates(
-      gated.select(col("doc_id"), col("text")))
-    (kept, candidates)
-  }
-
-  /** Jaccard-verify a (micro-)batch of LSH band candidates against the
-    * corpus store and name the doc to drop. `candidates` carries
-    * (doc_id = later arrival, first_doc = earlier occupant);
-    * `docTexts(doc_id, text)` is the batch view of the corpus the
-    * stream has been sinking (the lake table in production — pair ids
-    * only ever reference already-arrived docs, so reading the live
-    * store is race-free for this batch's pairs). Multi-band hits
-    * collapse in the DISTINCT before any shingle fetch, and only
-    * candidate ids fetch shingles — duplicate-sized work, exactly the
-    * batch verify-join shape. A verified (later, first) pair drops the
-    * LATER arrival: the streaming analog of batch drop-larger-id
-    * (identical under ordered ingest, where later ⇒ larger id).
-    *
-    * `mode` picks the verification statistic over the same candidate
-    * pairs: "jaccard" (resemblance — the near-dup policy) or
-    * "containment" (max of |∩|/|later|, |∩|/|first| — the
-    * near-SUPERSET policy: an aggregator doc arriving after its parts
-    * has jaccard ≈ 1/n to each part but containment ≈ 1, so only this
-    * mode drops it). The score column is named after the mode.
-    */
-  def verifyCandidates(candidates: DataFrame, docTexts: DataFrame,
-      threshold: Double = JaccardMin, mode: String = "jaccard"): DataFrame = {
-    require(mode == "jaccard" || mode == "containment",
-      s"unknown verification mode '$mode' (jaccard | containment)")
-    val pairs = candidates.select(col("doc_id"), col("first_doc")).distinct()
-    // semi-join the corpus store down to candidate ids BEFORE shingling:
-    // Catalyst won't pull the expensive shingle projection above the
-    // pair joins on its own, and without this cut each micro-batch
-    // would shingle the ENTIRE (growing) corpus twice
-    val candidateIds = pairs.select(col("doc_id"))
-      .union(pairs.select(col("first_doc").as("doc_id"))).distinct()
-    val sh = Dedup.shingleSets(
-      docTexts.join(candidateIds, Seq("doc_id"), "left_semi"))
-    val inter =
-      size(array_intersect(col("sh_later"), col("sh_first"))).cast("double")
-    val score = mode match {
-      case "jaccard" =>
-        round(inter / size(array_union(col("sh_later"), col("sh_first"))), 6)
-      case "containment" =>
-        // round each direction, then take the max — the containmentPairs
-        // filter convention, so thresholds compare identically
-        greatest(round(inter / size(col("sh_later")), 6),
-          round(inter / size(col("sh_first")), 6))
-    }
-    pairs
-      .join(sh.select(col("doc_id"), col("shingles").as("sh_later")), "doc_id")
-      .join(sh.select(col("doc_id").as("first_doc"), col("shingles").as("sh_first")),
-        "first_doc")
-      .withColumn(mode, score)
-      .filter(col(mode) >= threshold)
-      .select(col("doc_id"), col("first_doc"), col(mode))
-  }
-
-  /** Closes the streaming-curation loop: sink the candidate stream via
-    * foreachBatch, verifying each micro-batch with [[verifyCandidates]]
-    * and handing the verified drops to `onDrops` (a [[DropLedger]] in
-    * tests; a JDBC upsert / lake append in production). `docTexts` is
-    * re-read per batch so the verify join always sees the current
-    * corpus store.
-    */
-  def reconcileStream(
-      candidates: org.apache.spark.sql.Dataset[graft.streaming.DedupStream.BandHit],
-      docTexts: () => DataFrame,
-      threshold: Double = JaccardMin,
-      mode: String = "jaccard")(
-      onDrops: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    candidates.toDF().writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        onDrops(verifyCandidates(batch, docTexts(), threshold, mode))
-      }
-      .start()
-
-  /** kept minus verified drops — the final reconciled corpus view.
-    * `drops` needs only a `doc_id` column.
-    */
-  def applyDrops(kept: DataFrame, drops: DataFrame): DataFrame =
-    kept.join(drops.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-
-  /** In-memory verified-drop ledger — the test/reference `onDrops` sink
-    * for [[reconcileStream]] (the UpsertSink pattern: collect the
-    * DUPLICATE-SIZED drop set, never the corpus; production swaps in a
-    * reconciliation table). Thread-safe: foreachBatch may overlap with
-    * readers.
-    */
-  final class DropLedger {
-    private val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    def add(drops: DataFrame): Unit =
-      drops.select(col("doc_id")).collect().foreach(r => ids.add(r.getLong(0)))
-    def snapshot: Set[Long] = {
-      import scala.jdk.CollectionConverters._
-      ids.asScala.toSet
-    }
-    /** kept minus ledger — [[applyDrops]] with the ledger as a local
-      * relation (tiny: broadcastable by construction).
-      */
-    def filterKept(kept: DataFrame): DataFrame = {
-      val spark = kept.sparkSession
-      import spark.implicits._
-      applyDrops(kept, snapshot.toSeq.toDF("doc_id"))
-    }
   }
 }

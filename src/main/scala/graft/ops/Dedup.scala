@@ -424,7 +424,7 @@ object Dedup {
     * arrays and shingles, multi-band duplicate hits are removed by the
     * stateless min-common-band filter, and the Jaccard check runs on
     * the joined row. Works identically on batch and STREAMING deltas
-    * (no aggregation, no state — see DedupStream.versusCorpus).
+    * (no aggregation, no state).
     */
   def newVersusCorpusPrebuilt(newDocs: DataFrame, corpusBands: DataFrame,
       threshold: Double): DataFrame = {
@@ -895,7 +895,8 @@ object Dedup {
     * in ascending global key order and the index accumulates every
     * batch's [[gramFirstTable]], the concatenated outputs are
     * ROW-IDENTICAL to one whole-corpus [[stripDuplicateSpans]] run —
-    * DedupStreamSpec pins that parity end-to-end through foreachBatch.
+    * DedupStreamSpec "streaming ExactSubstr" pins that parity end to end
+    * through foreachBatch.
     */
   def stripVersusCorpus(batch: DataFrame, corpusFirst: DataFrame,
       k: Int = 8): DataFrame = {

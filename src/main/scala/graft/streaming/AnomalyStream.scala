@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent
   * 1349·dev₂ vs 3500·mad₄ integer gate, no sqrt and no float) applied
   * at ingest. This is the pager alarm that catches "this batch is
   * 6 MADs above any day we've ever seen" BEFORE downstream jobs
-  * inherit the surge — the volume sibling of [[DriftStream]]'s
+  * inherit the surge — the volume sibling of the q_ks_drift
   * distribution check.
   *
   * Scale shape: the reference collapses ONCE to two integers

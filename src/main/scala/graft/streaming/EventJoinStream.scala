@@ -17,8 +17,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * O(history). The pairing runs as one keyed stateful operator: one scan,
   * one parse and one state store per partition, where a stream-stream
   * join of the stream with itself reads its source once per side and
-  * keeps four. Two independently paced streams join with
-  * [[LogStream.attributionJoin]] / [[LogStream.attributionJoinOuter]].
+  * keeps four.
   */
 object EventJoinStream {
 

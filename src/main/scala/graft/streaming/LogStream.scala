@@ -23,10 +23,6 @@ import org.apache.spark.sql.functions._
   *     `LogAnalysis.java:184-185`) → the sink's top 10 merged with each
   *     changelog's top 10 inside foreachBatch (Blink's rank-operator
   *     rewrite, done by hand; `graft.LogAnalysisApp`)
-  *
-  * The reference is processing-time only (no watermarks — SURVEY.md §2.3);
-  * [[windowedEventCounts]] adds the event-time+watermark variant Spark
-  * gives for free, as the extension surface.
   */
 object LogStream {
 
@@ -85,60 +81,4 @@ object LogStream {
       .join(broadcast(dim), col(id) === col(dimKey))
       .select(col(id), col(attr), col(pv))
   }
-
-  /** Stream-stream interval join (attribution): each purchase matched to
-    * the SAME user's views within the trailing `windowSeconds` —
-    * view.ts ∈ [purchase.ts - window, purchase.ts]. Both sides carry
-    * watermarks, so the join state is BOUNDED: a buffered view row is
-    * evicted once the purchase watermark passes view.ts + window (Spark
-    * derives the eviction bound from the range condition), which is what
-    * lets this run forever on a 1000-executor cluster. The state exchange
-    * hashes on user_id — at scale the same hot-key note as the batch
-    * as-of applies (pre-filter bot traffic, or bucket the attribution
-    * window upstream).
-    *
-    * Inner join: purchases with no prior view in-window are dropped
-    * (funnel semantics). Append output mode.
-    */
-  def attributionJoin(
-      views: DataFrame, purchases: DataFrame,
-      watermarkDelay: String, windowSeconds: Long): DataFrame =
-    attribution(views, purchases, watermarkDelay, windowSeconds, "inner")
-
-  /** LEFT OUTER variant of [[attributionJoin]]: unattributed purchases
-    * still emit (null view columns) — but only once the watermark
-    * passes the purchase's join window, because until then a matching
-    * view could still arrive. Both watermarks bound the join state;
-    * the outer row's emission latency IS the watermark delay — the
-    * price of "every purchase appears exactly once".
-    */
-  def attributionJoinOuter(
-      views: DataFrame, purchases: DataFrame,
-      watermarkDelay: String, windowSeconds: Long): DataFrame =
-    attribution(views, purchases, watermarkDelay, windowSeconds, "left_outer")
-
-  private def attribution(views: DataFrame, purchases: DataFrame,
-      watermarkDelay: String, windowSeconds: Long, joinType: String): DataFrame = {
-    val v = views
-      .select(col("event_id").as("view_id"), col("user_id").as("v_user"), col("ts").as("v_ts"))
-      .withWatermark("v_ts", watermarkDelay)
-    val p = purchases
-      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", watermarkDelay)
-    p.join(v, expr(
-      s"""user_id = v_user AND
-         |v_ts <= p_ts AND
-         |v_ts >= p_ts - INTERVAL $windowSeconds SECONDS""".stripMargin), joinType)
-      .select(col("purchase_id"), col("user_id"), col("p_ts"), col("view_id"), col("v_ts"))
-  }
-
-  /** Event-time tumbling window with watermark (extension beyond the
-    * reference's processing-time-only surface).
-    */
-  def windowedEventCounts(events: DataFrame, watermarkDelay: String, windowLen: String): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowLen), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("n_events"))
 }

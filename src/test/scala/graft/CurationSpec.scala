@@ -167,120 +167,4 @@ class CurationSpec extends AnyFunSuite {
     try assert(result.collect().toSeq.sortBy(_.getLong(0)) == scopedRows)
     finally handle.unpersist(blocking = false)
   }
-
-  test("streaming curation gates, dedups across batches, and surfaces near-dup candidates") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val good = "the quick brown fox jumps over the lazy dog and runs to the river " +
-      "bank where a second dog waits for the data of the day to arrive with more words"
-    val near = good.replace("data", "info")
-    val spanish = "el perro corre por la calle y la casa de la ciudad es grande y " +
-      "que bonita es la vida de el que corre y que salta por la manana"
-    val mem = MemoryStream[(Long, String)]
-    val (kept, cands) = graft.ops.Curation.curateStream(mem.toDF().toDF("doc_id", "text"))
-    val qk = kept.writeStream.outputMode("append")
-      .format("memory").queryName("cur_kept").start()
-    val qc = cands.toDF().writeStream.outputMode("append")
-      .format("memory").queryName("cur_cands").start()
-    try {
-      mem.addData((1L, good), (2L, spanish), (3L, "tiny"))
-      qk.processAllAvailable(); qc.processAllAvailable()
-      mem.addData((4L, good), (5L, near)) // exact dup of 1; near dup of 1
-      qk.processAllAvailable(); qc.processAllAvailable()
-      val keptIds = spark.table("cur_kept").select($"doc_id").collect().map(_.getLong(0)).toSet
-      // 2 fails the language gate, 3 the quality gate, 4 the exact-dedup
-      // state across batches; 5 survives kept (near-dups are candidates)
-      assert(keptIds == Set(1L, 5L), keptIds)
-      val pairs = spark.table("cur_cands").select($"doc_id", $"first_doc")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(pairs.contains((5L, 1L)), pairs) // cross-batch band collision
-    } finally { qk.stop(); qc.stop() }
-  }
-
-  test("containment-mode reconciliation drops an aggregator arriving after its parts") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.ops.Curation
-    val part1 = "the quick brown fox jumps over the lazy dog and runs to the river " +
-      "bank where a second dog waits for the data of the day to arrive with more words"
-    val part2 = "a completely different english document about query engines that " +
-      "the optimizer rewrites with rules for the plans and the costs of the work done"
-    // the aggregator doc: both parts verbatim — jaccard to each part is
-    // ~1/2 (below no near-dup bar discriminates at 0.9), containment of
-    // the part's shingles is ~1.0
-    val agg = part1 + " " + part2
-    val batch1 = Seq((1L, part1), (2L, part2))
-    val batch2 = Seq((3L, agg))
-    val allDocs = (batch1 ++ batch2).toDF("doc_id", "text")
-
-    val mem = MemoryStream[(Long, String)]
-    val (kept, cands) = Curation.curateStream(mem.toDF().toDF("doc_id", "text"))
-    val jacLedger = new Curation.DropLedger
-    val conLedger = new Curation.DropLedger
-    val qk = kept.writeStream.outputMode("append")
-      .format("memory").queryName("con_kept").start()
-    // two reconcilers over the SAME candidate stream: jaccard at 0.9
-    // must keep the aggregator, containment at 0.9 must drop it
-    val qj = Curation.reconcileStream(cands, () => allDocs, 0.9, "jaccard")(jacLedger.add)
-    val qc2 = Curation.reconcileStream(cands, () => allDocs, 0.9, "containment")(conLedger.add)
-    try {
-      mem.addData(batch1: _*)
-      Seq(qk, qj, qc2).foreach(_.processAllAvailable())
-      mem.addData(batch2: _*)
-      Seq(qk, qj, qc2).foreach(_.processAllAvailable())
-      assert(conLedger.snapshot.contains(3L),
-        s"containment mode kept the aggregator: ${conLedger.snapshot}")
-      assert(!jacLedger.snapshot.contains(3L),
-        s"jaccard@0.9 should not drop the aggregator: ${jacLedger.snapshot}")
-      // the parts themselves stay kept under containment reconciliation
-      val keptIds = Curation.applyDrops(
-        spark.table("con_kept"), conLedger.snapshot.toSeq.toDF("doc_id"))
-        .select($"doc_id").collect().map(_.getLong(0)).toSet
-      assert(keptIds == Set(1L, 2L), keptIds)
-    } finally { qk.stop(); qj.stop(); qc2.stop() }
-  }
-
-  test("reconciled streaming curation converges to the batch result across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.ops.Curation
-    val base = "the quick brown fox jumps over the lazy dog and runs to the river " +
-      "bank where a second dog waits for the data of the day to arrive with more words"
-    val near = base.replace("data", "info")
-    val other = "a completely different english document about query engines that " +
-      "the optimizer rewrites with rules for the plans and the costs of the work done"
-    // ordered ingest (later arrival = larger id), so the streaming
-    // drop-later policy must land exactly on batch drop-larger-id
-    val batch1 = Seq((1L, base), (2L, other), (3L, "tiny"))
-    val batch2 = Seq((4L, base), (5L, near), (6L, other.replace("costs", "cost")))
-    val allDocs = (batch1 ++ batch2).toDF("doc_id", "text")
-
-    val mem = MemoryStream[(Long, String)]
-    val (kept, cands) = Curation.curateStream(mem.toDF().toDF("doc_id", "text"))
-    val ledger = new Curation.DropLedger
-    val qk = kept.writeStream.outputMode("append")
-      .format("memory").queryName("rec_kept").start()
-    // docTexts: the corpus store the pipeline has been sinking — here
-    // the (static) union of all arrived batches; pair ids only ever
-    // reference arrived docs, so the wider view is harmless
-    val qc = Curation.reconcileStream(cands, () => allDocs)(ledger.add)
-    try {
-      mem.addData(batch1: _*)
-      qk.processAllAvailable(); qc.processAllAvailable()
-      mem.addData(batch2: _*)
-      qk.processAllAvailable(); qc.processAllAvailable()
-
-      val streamed = ledger.filterKept(spark.table("rec_kept"))
-        .select($"doc_id", $"quality", $"split")
-        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet
-      val batch = Curation.curateScoped(allDocs)(
-        _.collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet)
-      assert(streamed == batch, s"streamed=$streamed batch=$batch")
-      // and the reconciliation actually dropped a near-dup (5 vs 1):
-      assert(ledger.snapshot.contains(5L), ledger.snapshot)
-    } finally { qk.stop(); qc.stop() }
-  }
 }

@@ -3,65 +3,15 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.DedupStream
-
+/** Streaming dedup in the batch-incremental shape: a `foreachBatch` over a
+  * MemoryStream probes a lake-resident index built by `graft.ops.Dedup`
+  * and folds each micro-batch back into it, so no dedup state lives in
+  * the state store. Pins paragraph dedup against an accumulating hash
+  * index, and ExactSubstr span stripping that matches one whole-corpus
+  * `Dedup.stripDuplicateSpans` run.
+  */
 class DedupStreamSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
-
-  val original = "the quick brown fox jumps over the lazy dog near the river bank " +
-    "while the sun sets slowly behind the old wooden bridge in the quiet village"
-  val nearDup = original.replace("dog", "cat")
-  val unrelated = "completely different content about spark catalyst optimizer rules " +
-    "and whole stage code generation for vectorized parquet scans in modern engines"
-
-  test("bounded exact dedup: drops dups within the horizon, re-admits after state expiry") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val out = DedupStream.exactDedupBounded(
-      mem.toDF().toDF("doc_id", "text", "ts"), "ts", "10 minutes")
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("bounded_dedup").start()
-    try {
-      // batch 1: original + in-horizon dup -> dup dropped
-      mem.addData(
-        (1L, original, ts("2024-01-01 10:00:00")),
-        (2L, original, ts("2024-01-01 10:05:00")),
-        (3L, unrelated, ts("2024-01-01 10:06:00")))
-      q.processAllAvailable()
-      // batch 2: advance the watermark far past 10:00 + 10min...
-      mem.addData((4L, nearDup, ts("2024-01-01 12:00:00")))
-      q.processAllAvailable()
-      // batch 3: ...so the SAME text is re-admitted (its state expired)
-      mem.addData((5L, original, ts("2024-01-01 12:01:00")))
-      q.processAllAvailable()
-      val ids = spark.table("bounded_dedup").select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      assert(ids == Set(1L, 3L, 4L, 5L), ids)
-    } finally q.stop()
-  }
-
-  test("streaming LSH flags near-dups across micro-batches, not unrelated docs") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val q = DedupStream.lshCandidates(mem.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("append").format("memory").queryName("lsh_hits").start()
-    try {
-      mem.addData((1L, original), (2L, unrelated))
-      q.processAllAvailable()
-      assert(spark.table("lsh_hits").count() == 0) // nothing similar yet
-
-      mem.addData((3L, nearDup), (4L, original)) // near-dup + exact dup arrive later
-      q.processAllAvailable()
-      val hits = spark.table("lsh_hits").as[DedupStream.BandHit].collect()
-      val pairs = hits.map(h => (h.first_doc, h.doc_id)).distinct.toSet
-      assert(pairs.contains((1L, 4L))) // exact dup: every band collides
-      assert(pairs.contains((1L, 3L))) // near dup: >=1 band collides
-      assert(!pairs.exists(p => p._1 == 2L || p._2 == 2L))
-    } finally q.stop()
-  }
 
   test("streaming paragraph dedup: foreachBatch against an accumulating hash index") {
     import spark.implicits._
@@ -148,43 +98,5 @@ class DedupStreamSpec extends AnyFunSuite {
     assert(expected(20L)._2 == expected(20L)._1)      // first occurrence kept
     assert(expected(21L)._2 < expected(21L)._1)       // later occurrence cut
     assert(expected(22L)._2 < expected(22L)._1)       // corpus-resident run cut
-  }
-
-  test("streaming versusCorpus: stateless stream-static dedup against a static corpus") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq((10L, original), (20L, unrelated)).toDF("doc_id", "text")
-    val mem = MemoryStream[(Long, String)]
-    val stream = DedupStream.versusCorpus(
-      mem.toDF().toDF("doc_id", "text"), corpus, 0.5)
-    // truly stateless: the physical plan must contain NO stateful operator
-    val q = stream.writeStream.outputMode("append")
-      .format("memory").queryName("vs_corpus").start()
-    try {
-      mem.addData((100L, original), (200L, "nothing in common with anything at all here truly"))
-      q.processAllAvailable()
-      mem.addData((300L, original)) // later batch matches independently (no cross-batch state)
-      q.processAllAvailable()
-      val rows = spark.table("vs_corpus").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      // exact copies: exactly ONE row per (new, corpus) pair despite all
-      // 4 bands colliding (min-common-band dedup), jaccard 1.0
-      assert(rows.count(r => r._1 == 100L && r._2 == 10L) == 1, rows.toSeq)
-      assert(rows.count(r => r._1 == 300L && r._2 == 10L) == 1, rows.toSeq)
-      assert(rows.filter(r => r._1 == 100L || r._1 == 300L).forall(_._3 == 1.0))
-      assert(!rows.exists(_._1 == 200L), rows.toSeq)
-      // and the streaming plan holds no state store
-      val statefulOps = q.lastProgress.stateOperators
-      assert(statefulOps == null || statefulOps.isEmpty,
-        s"expected stateless plan, got ${statefulOps.mkString(",")}")
-    } finally q.stop()
-    // batch agreement: the same operator over a batch frame reproduces
-    // Dedup.newVersusCorpus
-    val batchDocs = Seq((100L, original), (300L, nearDup)).toDF("doc_id", "text")
-    val viaStreamOp = DedupStream.versusCorpus(batchDocs, corpus, 0.5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val viaBatch = graft.ops.Dedup.newVersusCorpus(batchDocs, corpus, 0.5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(viaStreamOp == viaBatch)
   }
 }

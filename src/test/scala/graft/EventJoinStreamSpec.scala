@@ -5,78 +5,17 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{EventJoinStream, LogStream}
+import graft.streaming.EventJoinStream
 
-/** The two interval-join idioms. Two independently paced streams join
-  * with [[LogStream.attributionJoin]]: same-user purchases within the
-  * window match, outside-window and cross-user purchases do not, a side
-  * that arrives in a later batch still matches, and the physical plan is
-  * the symmetric stateful join (bounded state), not a static join. The
-  * one-stream funnel ([[EventJoinStream.browseToRead]]) pairs like a
-  * brute-force pairing of every row it kept, drops rows at or below its
-  * watermark, and empties its state once the watermark passes every
-  * buffered row.
+/** The browse-to-read funnel ([[EventJoinStream.browseToRead]]): it
+  * pairs like a brute-force pairing of every row it kept, drops rows at
+  * or below its watermark, and empties its state once the watermark
+  * passes every buffered row.
   */
 class EventJoinStreamSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
 
   private def t(sec: Long) = new Timestamp(sec * 1000L)
-
-  // (event_id, user_id, ts): the columns attributionJoin reads on each side
-  private type Event = (Long, Long, Timestamp)
-
-  /** Start `attributionJoin` (window 600 s, watermark delay 300 s) on two
-    * memory streams into a memory sink named `name`.
-    */
-  private def attribution(name: String) = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[Event]
-    val buys = MemoryStream[Event]
-    val q = LogStream.attributionJoin(
-        views.toDF().toDF("event_id", "user_id", "ts"),
-        buys.toDF().toDF("event_id", "user_id", "ts"),
-        watermarkDelay = "300 seconds", windowSeconds = 600)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    (views, buys, q)
-  }
-
-  private def pairs(name: String): Seq[(Long, Long)] =
-    spark.sql(s"SELECT purchase_id, view_id FROM $name").collect().toSeq
-      .map(r => (r.getLong(0), r.getLong(1))).sorted
-
-  test("views match same-user purchases inside the gap; outside-gap and cross-user do not") {
-    val (views, buys, q) = attribution("ej")
-    try {
-      views.addData((1L, 1L, t(1000)), (2L, 2L, t(1000)))
-      buys.addData(
-        (10L, 1L, t(1100)),   // inside the window, same user -> match
-        (11L, 1L, t(2000)),   // 1000s after the view -> outside the window
-        (12L, 3L, t(1100)))   // no view for user 3
-      q.processAllAvailable()
-      assert(pairs("ej") == Seq((10L, 1L)))
-      // second round: the other stream side arrives later, still matches
-      buys.addData((13L, 2L, t(1500)))
-      q.processAllAvailable()
-      assert(pairs("ej") == Seq((10L, 1L), (13L, 2L)))
-    } finally q.stop()
-  }
-
-  test("the plan is a symmetric stateful stream-stream join, state bounded by watermarks") {
-    val (views, buys, q) = attribution("ejplan")
-    try {
-      views.addData((1L, 1L, t(100)))
-      buys.addData((10L, 1L, t(150)))
-      q.processAllAvailable()
-      // public progress API: the stateful operator is the symmetric
-      // stream-stream join, and its buffered state is row-bounded
-      val ops = q.lastProgress.stateOperators
-      assert(ops.nonEmpty, q.lastProgress.prettyJson)
-      assert(ops.exists(_.operatorName.toLowerCase.contains("symmetrichashjoin")),
-        ops.map(_.operatorName).mkString(","))
-      assert(ops.map(_.numRowsTotal).sum <= 4, q.lastProgress.prettyJson)
-    } finally q.stop()
-  }
 
   // (client_ip, ts, section_id, article_id): the parsed-row columns the funnel reads
   private type Row = (String, Timestamp, Int, Int)

@@ -1,44 +1,13 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.SessionStream
-
+/** The `spark.sql` surface of the reference's hot-section queries
+  * (`GraftSql`, SURVEY Q8/Q9) returns the same rows as the DataFrame
+  * form `Queries.hotSection`.
+  */
 class SessionStreamSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
-
-  test("flatMapGroupsWithState closes sessions on gap + event-time timeout") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-
-    val mem = MemoryStream[(Long, java.sql.Timestamp)]
-    val sessions = SessionStream.sessionize(
-      mem.toDF().toDF("user_id", "ts"), gapSeconds = 600, watermark = "0 seconds")
-    val q = sessions.writeStream.outputMode("append")
-      .format("memory").queryName("sessions").start()
-    try {
-      // user 1: two events 10s apart (one session); user 2: one event
-      mem.addData((1L, ts("2024-01-01 00:00:00")), (1L, ts("2024-01-01 00:00:10")),
-        (2L, ts("2024-01-01 00:00:05")))
-      q.processAllAvailable()
-      // in-batch gap: user 1 again 1h later -> first session closes inline
-      mem.addData((1L, ts("2024-01-01 01:00:00")), (1L, ts("2024-01-01 01:00:30")))
-      q.processAllAvailable()
-      val afterGap = spark.table("sessions").as[SessionStream.ClosedSession].collect()
-      assert(afterGap.exists(s => s.user_id == 1L && s.n_events == 2 && s.duration_sec == 10))
-
-      // watermark push far ahead -> timeouts close everything still open
-      mem.addData((3L, ts("2024-01-01 09:00:00")))
-      q.processAllAvailable()
-      mem.addData((3L, ts("2024-01-01 10:00:00")))
-      q.processAllAvailable()
-      val all = spark.table("sessions").as[SessionStream.ClosedSession].collect()
-      assert(all.exists(s => s.user_id == 2L && s.n_events == 1 && s.duration_sec == 0))
-      assert(all.exists(s => s.user_id == 1L && s.n_events == 2 && s.duration_sec == 30))
-    } finally q.stop()
-  }
 
   test("spark.sql surface produces the same hot-section result as the DataFrame form") {
     val sf = "/root/testdata/sf0.001"

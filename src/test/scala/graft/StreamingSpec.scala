@@ -9,7 +9,7 @@ import graft.streaming.{LogStream, UpsertSink}
 
 /** Streaming semantics: continuous aggregation over added batches
   * (reference Q2), stream-static dim join (Q3), foreachBatch upsert (S3),
-  * event-time window with watermark (extension).
+  * and Spark's native `session_window` merging across micro-batches.
   */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
@@ -72,88 +72,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(byKey(3).last == 3L) // upserted count after second batch
       assert(byKey(5).last == 1L)
       assert(!byKey.contains(99))
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join: purchases matched to recent views") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val views = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val purchases = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    // view within 30 minutes BEFORE the purchase, same user
-    val joined = LogStream.attributionJoin(
-      views.toDF().toDF("event_id", "user_id", "ts"),
-      purchases.toDF().toDF("event_id", "user_id", "ts"),
-      watermarkDelay = "1 hour", windowSeconds = 30 * 60)
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("ss_join").start()
-    try {
-      views.addData((1L, 7L, ts("2024-01-01 00:00:00")), (2L, 7L, ts("2024-01-01 02:00:00")))
-      purchases.addData((10L, 7L, ts("2024-01-01 00:20:00")), (11L, 7L, ts("2024-01-01 03:00:00")))
-      q.processAllAvailable()
-      val pairs = spark.table("ss_join").select("purchase_id", "view_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(pairs == Set((10L, 1L))) // 11 is 60min after view 2 -> outside window
-    } finally q.stop()
-  }
-
-  test("stream-stream LEFT OUTER interval join: unmatched purchase emits after watermark") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val views = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val purchases = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val joined = LogStream.attributionJoinOuter(
-      views.toDF().toDF("event_id", "user_id", "ts"),
-      purchases.toDF().toDF("event_id", "user_id", "ts"),
-      watermarkDelay = "10 minutes", windowSeconds = 30 * 60)
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("ss_outer").start()
-    try {
-      views.addData((1L, 7L, ts("2024-01-01 00:00:00")))
-      purchases.addData(
-        (10L, 7L, ts("2024-01-01 00:20:00")),  // matches view 1
-        (11L, 9L, ts("2024-01-01 00:25:00")))  // no view for user 9 -> outer row
-      q.processAllAvailable()
-      // advance BOTH watermarks far past the join window so the
-      // unmatched purchase's null row finalizes
-      views.addData((2L, 7L, ts("2024-01-01 06:00:00")))
-      purchases.addData((12L, 7L, ts("2024-01-01 06:00:00")))
-      q.processAllAvailable()
-      views.addData((3L, 7L, ts("2024-01-01 12:00:00")))
-      purchases.addData((13L, 7L, ts("2024-01-01 12:00:00")))
-      q.processAllAvailable()
-      val rows = spark.table("ss_outer").select("purchase_id", "view_id")
-        .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
-      assert(rows(10L) == 1L, rows)  // matched pair
-      assert(rows.get(11L).contains(-1L), rows)  // outer row with null view
-    } finally q.stop()
-  }
-
-  test("event-time tumbling window with watermark (append mode)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val windowed = LogStream.windowedEventCounts(
-      mem.toDF().toDF("ts", "event_type"), "10 minutes", "5 minutes")
-    val q = windowed.writeStream.outputMode("append")
-      .format("memory").queryName("win_counts").start()
-    try {
-      def ts(s: String) = java.sql.Timestamp.valueOf(s)
-      mem.addData((ts("2024-01-01 00:01:00"), "click"), (ts("2024-01-01 00:02:00"), "click"),
-        (ts("2024-01-01 00:07:00"), "view"))
-      q.processAllAvailable()
-      // advance watermark far past the first windows so they finalize
-      mem.addData((ts("2024-01-01 01:00:00"), "click"))
-      q.processAllAvailable()
-      mem.addData((ts("2024-01-01 02:00:00"), "click"))
-      q.processAllAvailable()
-      val rows = spark.table("win_counts")
-        .select(date_format($"win_start", "HH:mm").as("w"), $"event_type", $"n_events")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-      assert(rows.contains(("00:00", "click", 2L)))
-      assert(rows.contains(("00:05", "view", 1L)))
     } finally q.stop()
   }
 
