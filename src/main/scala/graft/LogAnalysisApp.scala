@@ -21,14 +21,14 @@ import graft.streaming.{LogStream, UpsertSink}
   * and parsed once per micro-batch. Every parsed row becomes tagged
   * (kind, key) rows counted by one update-mode aggregate
   * ([[graft.streaming.LogStream.keyedCounts]]): one state store, one
-  * checkpoint. One foreachBatch splits the changelog by kind into the
-  * three sinks.
+  * checkpoint. One foreachBatch collects the changelog once and splits
+  * it by kind into the three sinks.
   *
   * Top-10 (Blink's streaming Top-N rewrite, SURVEY.md §2.1 Q4): each
-  * batch merges the sink's current top 10 with the changelog's top 10,
-  * count desc then id asc. The merge is exact because counts never
-  * decrease on this insert-only stream: a key outside the old top 10
-  * that the batch did not touch still ranks below the old tenth row,
+  * batch merges the sink's current top 10 with every touched row of the
+  * changelog, count desc then id asc. The merge is exact because counts
+  * never decrease on this insert-only stream: a key outside the old top
+  * 10 that the batch did not touch still ranks below the old tenth row,
   * and every kept row can only have moved up.
   */
 object LogAnalysisApp {
@@ -39,10 +39,13 @@ object LogAnalysisApp {
       articleSink: UpsertSink,
       clientSink: UpsertSink)
 
-  /** Wire the three analytics onto an unbounded `line` stream. Dims are
-    * static snapshots (broadcast per micro-batch — the lookup-join
-    * analog). Sinks are in-memory upsert tables; swap the merge lambda
-    * for graft.sources.JdbcUpsert#write against MySQL in production.
+  /** Wire the three analytics onto an unbounded `line` stream. Each
+    * trigger runs one Spark action: it collects the changelog joined to
+    * the dims ([[graft.streaming.LogStream.named]]), and the driver merges
+    * the rows into the three in-memory upsert tables. The dims are read
+    * inside that action, once per trigger (the lookup-join analog), so a
+    * dim that changes is seen at the next trigger. A batch that fails
+    * fails in the collect, before any sink is written.
     *
     * Sinks start empty. On a restart from a checkpoint with a committed
     * batch they are first filled from the committed state, so they then
@@ -53,24 +56,18 @@ object LogAnalysisApp {
       checkpointRoot: String): Pipelines = {
     useRocksDbState(spark)
     val checkpoint = s"$checkpointRoot/product"
-    val sectionSink = new UpsertSink(Seq("section_id"))
-    val articleSink = new UpsertSink(Seq("article_id"))
-    val clientSink = new UpsertSink(Seq("client_ip"))
+    val sectionSink = new UpsertSink(1)
+    val articleSink = new UpsertSink(1)
+    val clientSink = new UpsertSink(1)
 
     // rows are (id, name, pv): count desc, then id asc
-    def top10(sink: UpsertSink, rows: DataFrame, batchId: Long): Unit = {
-      val Array(id, _, pv) = rows.columns
-      sink.mergeTop(rows.orderBy(col(pv).desc, col(id)).limit(10), batchId, 10) { v =>
-        (-v(2).asInstanceOf[Long], v(0).asInstanceOf[Int])
-      }
-    }
+    def rank(v: Seq[Any]): (Long, Int) = (-v(2).asInstanceOf[Long], v(0).asInstanceOf[Int])
     def publish(batch: DataFrame, batchId: Long): Unit = {
-      val changes = batch.persist()
-      try {
-        top10(sectionSink, LogStream.sectionTotals(changes, sectionDim), batchId)
-        top10(articleSink, LogStream.articleTotals(changes, articleDim), batchId)
-        clientSink.merge(LogStream.clientTotals(changes), batchId)
-      } finally changes.unpersist()
+      val (sections, articles, clients) =
+        LogStream.split(LogStream.named(batch, sectionDim, articleDim).collect().toSeq)
+      sectionSink.mergeTop(sections, batchId, 10)(rank)
+      articleSink.mergeTop(articles, batchId, 10)(rank)
+      clientSink.merge(clients, batchId)
     }
 
     // Spark's `statestore` source reads the aggregate's committed state
@@ -161,7 +158,7 @@ object LogAnalysisApp {
       refVolumes: DataFrame, checkpointRoot: String,
       maxGapSec: Int = 600, watermarkSec: Int = 300): Monitors = {
     val alarms = scala.collection.concurrent.TrieMap[Long, (Long, Option[Long], Boolean)]()
-    val funnelSink = new UpsertSink(Seq("user_id", "view_ts", "purchase_ts"))
+    val funnelSink = new UpsertSink(3) // (user_id, view_ts, purchase_ts)
     useRocksDbState(spark)
     val funnel = graft.streaming.AnomalyStream.volumeAlarm(LogParser.accessEvents(lines), refVolumes) {
       (id, x, z, fired) => alarms.put(id, (x, z, fired))
@@ -169,7 +166,7 @@ object LogAnalysisApp {
       graft.streaming.EventJoinStream.browseToRead(counted, maxGapSec, watermarkSec).toDF()
         .writeStream.outputMode("append")
         .option("checkpointLocation", s"$checkpointRoot/funnel")
-        .foreachBatch { (df: DataFrame, id: Long) => funnelSink.merge(df, id) }
+        .foreachBatch { (df: DataFrame, id: Long) => funnelSink.merge(df.collect().toSeq.map(_.toSeq), id) }
         .start()
     }
     Monitors(funnel, alarms, funnelSink)

@@ -69,13 +69,6 @@ object LogParser {
   def parseAccessTs(dateTime: Column): Column =
     try_to_timestamp(substring_index(dateTime, " ", 1), lit(DateFormat))
 
-  /** Zone-CORRECT variant (the reference drops the ±zzzz offset and
-    * keeps wall-clock — SURVEY.md §7.4; this parses it, yielding the
-    * true instant). Offered for pipelines that need real event time.
-    */
-  def parseAccessTsZoned(dateTime: Column): Column =
-    try_to_timestamp(dateTime, lit(DateFormat + " Z"))
-
   /** P6 — `"GET /uri HTTP/1.1"` → (method, uri, proto); null unless
     * exactly 3 space-separated parts (`LogParse.java:62-71`).
     */

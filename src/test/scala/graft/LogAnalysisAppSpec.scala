@@ -109,14 +109,13 @@ class LogAnalysisAppSpec extends AnyFunSuite {
     } finally p2.query.stop()
   }
 
-  test("a batch that fails mid-sink and is replayed after a restart gives the uninterrupted sinks") {
+  test("a batch that fails in publish leaves every sink as it was, and its replay after a restart gives the uninterrupted sinks") {
     import spark.implicits._
     val logDir = Files.createTempDirectory("graft-logs-f").toFile
     val ckpt = Files.createTempDirectory("graft-ckpt-f").toString
     val sectionDim = Seq((3L, "tech"), (5L, "life"), (8L, "news")).toDF("fid", "name")
-    // the article dim throws while the flag is set; sections are
-    // written before articles, so the failing batch leaves its section
-    // rows in the sink and its article and client rows unwritten
+    // the article dim throws while the flag is set, inside the batch's
+    // one collect: no sink is written
     val articleDim = Seq((9L, "post nine"), (7L, "post seven")).toDF("tid", "subject")
       .select($"tid", FailingDim.subject($"subject").as("subject"))
     val files = Seq(
@@ -142,11 +141,14 @@ class LogAnalysisAppSpec extends AnyFunSuite {
     val p1 = run(logDir, ckpt)
     try {
       p1.query.processAllAvailable()
+      val afterBatch0 = sinks(p1)
       write(logDir, 1)
       FailingDim.fail = true
       intercept[org.apache.spark.sql.streaming.StreamingQueryException](p1.query.processAllAvailable())
-      assert(p1.sectionSink.snapshot(Seq(5L)).last == 2L) // written before the failure
+      assert(sinks(p1) == afterBatch0)
+      assert(p1.sectionSink.snapshot(Seq(5L)).last == 1L)
       assert(!p1.articleSink.snapshot.contains(Seq(7L)))
+      assert(!p1.clientSink.snapshot.contains(Seq("10.0.0.3")))
     } finally { FailingDim.fail = false; p1.query.stop() }
 
     write(logDir, 2)
@@ -162,6 +164,45 @@ class LogAnalysisAppSpec extends AnyFunSuite {
     assert(uninterrupted._1(Seq(3L)).last == 2L)
     assert(uninterrupted._2.keySet == Set(Seq(9L), Seq(7L)))
     assert(uninterrupted._3(Seq("10.0.0.1")).last == 3L)
+  }
+
+  test("each product trigger runs one Spark action and leaves nothing cached") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val logDir = Files.createTempDirectory("graft-logs-a").toFile
+    val ckpt = Files.createTempDirectory("graft-ckpt-a").toString
+    // (action, run on this session rather than the query's clone)
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add(funcName -> (qe.sparkSession eq spark))
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        actions.add(funcName -> (qe.sparkSession eq spark))
+    }
+    writeInOrder(logDir, Seq(
+      Seq(line("10.0.0.1", "/forum.php?mod=forumdisplay&fid=3"),
+        line("10.0.0.1", "/forum.php?mod=viewthread&tid=9")),
+      Seq(line("10.0.0.2", "/forum.php?mod=forumdisplay&fid=3"))))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    // registered before start, so the query's cloned session carries it
+    spark.listenerManager.register(listener)
+    val p = try LogAnalysisApp.start(spark, oneFilePerTrigger(logDir),
+      Seq((3L, "tech")).toDF("fid", "name"), Seq((9L, "post nine")).toDF("tid", "subject"), ckpt)
+    finally spark.listenerManager.unregister(listener)
+    try p.query.processAllAvailable() finally p.query.stop()
+    val batches = p.query.lastProgress.batchId + 1
+    assert(batches == 2)
+    // a marker action on this session: listener events arrive in order,
+    // so once it is seen every product action has been seen
+    spark.listenerManager.register(listener)
+    try eventually(timeout(Span(30, Seconds))) {
+      spark.range(1).collect()
+      assert(actions.asScala.exists(_._2))
+    } finally spark.listenerManager.unregister(listener)
+    assert(actions.asScala.filterNot(_._2).map(_._1).toSeq == Seq.fill(batches.toInt)("collect"))
+    assert(p.sectionSink.snapshot(Seq(3L)).last == 2L)
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore == Set.empty)
   }
 
   test("monitors: robust-z volume alarm + browse→read interval join") {

@@ -83,14 +83,6 @@ class LogParserSpec extends AnyFunSuite {
     assert(r.getAs[Int]("article_id") == 0)
   }
 
-  test("zoned ts variant keeps the offset (true instant, UTC session)") {
-    import spark.implicits._
-    val out = Seq("27/Aug/2020:10:20:53 +0800").toDF("dt")
-      .select(LogParser.parseAccessTsZoned($"dt").cast("string").as("t"))
-      .collect()(0).getString(0)
-    assert(out == "2020-08-27 02:20:53") // 10:20 at +0800 == 02:20 UTC
-  }
-
   test("non-ASCII line takes the String fallback path and still parses") {
     val ua = "Mozilla/5.0 (测试端末; ブラウザ)"
     val r = parseOne(

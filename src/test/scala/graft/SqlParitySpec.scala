@@ -84,28 +84,15 @@ class SqlParitySpec extends AnyFunSuite {
     assert(lines(1).exists(_.startsWith("10.")))
   }
 
-  test("UpsertSink.replace never exposes an empty table and survives bad batches") {
-    val sink = new graft.streaming.UpsertSink(Seq("k"))
-    sink.replace(Seq((1, "a"), (2, "b")).toDF("k", "v"), 0L)
-    assert(sink.snapshot.size == 2)
-    // a failing batch (bad column) must leave previous state intact
-    intercept[Throwable] {
-      sink.replace(Seq((3, "c")).toDF("k", "v").select(expr("raise_error('boom')").as("k"), $"v"), 1L)
-    }
-    assert(sink.snapshot.size == 2)
-    // replacement drops stale keys, keeps the new set
-    sink.replace(Seq((2, "b2"), (5, "e")).toDF("k", "v"), 2L)
-    assert(sink.snapshot.keySet == Set(Seq(2), Seq(5)))
-    assert(sink.snapshot(Seq(2)) == Seq(2, "b2"))
-  }
-
-  test("UpsertSink.replace publishes whole tables: a concurrent reader never sees a mix") {
-    val sink = new graft.streaming.UpsertSink(Seq("k"))
-    val a = Seq((1, "a"), (2, "b")).toDF("k", "v")
-    val b = Seq((3, "c"), (4, "d"), (5, "e")).toDF("k", "v")
-    sink.replace(a, 0L)
+  test("UpsertSink.merge publishes whole tables: a concurrent reader never sees a mix") {
+    val sink = new graft.streaming.UpsertSink(1)
+    // the same keys with all-"a" or all-"b" values: a key-by-key write
+    // would expose a table holding both
+    val a = (1 to 50).map(k => Seq[Any](k, "a"))
+    val b = (1 to 50).map(k => Seq[Any](k, "b"))
+    sink.merge(a, 0L)
     val tableA = sink.snapshot
-    sink.replace(b, 1L)
+    sink.merge(b, 1L)
     val tableB = sink.snapshot
     val mixed = new java.util.concurrent.ConcurrentLinkedQueue[Map[Seq[Any], Seq[Any]]]()
     @volatile var done = false
@@ -114,7 +101,7 @@ class SqlParitySpec extends AnyFunSuite {
       if (s != tableA && s != tableB) mixed.add(s)
     })
     reader.start()
-    try (2 until 200).foreach(i => sink.replace(if (i % 2 == 0) a else b, i.toLong))
+    try (2 until 200).foreach(i => sink.merge(if (i % 2 == 0) a else b, i.toLong))
     finally { done = true; reader.join() }
     assert(mixed.isEmpty, s"reader saw ${mixed.size} mixed tables, e.g. ${mixed.peek()}")
   }

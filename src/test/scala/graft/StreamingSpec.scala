@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,14 +18,27 @@ class StreamingSpec extends AnyFunSuite {
   def line(ip: String, uri: String, ts: String = "27/Aug/2020:10:20:53 +0800"): String =
     s"""$ip - - [$ts] "GET $uri HTTP/1.1" 200 1024 "-" "Mozilla/5.0""""
 
+  /** A keyed-count query over `mem` whose foreachBatch collects the named
+    * changelog once and hands [[LogStream.split]]'s rows to `publish`.
+    */
+  def keyedToSinks(mem: MemoryStream[String], sectionDim: DataFrame, articleDim: DataFrame)(
+      publish: ((Seq[Seq[Any]], Seq[Seq[Any]], Seq[Seq[Any]]), Long) => Unit) =
+    LogStream.keyedCounts(LogParser.accessEvents(mem.toDF().withColumnRenamed("value", "line")))
+      .writeStream.outputMode("update")
+      .foreachBatch((df: DataFrame, id: Long) =>
+        publish(LogStream.split(LogStream.named(df, sectionDim, articleDim).collect().toSeq), id))
+      .start()
+
   test("update-mode client counts accumulate across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
-    val counts = LogStream.clientTotals(LogStream.keyedCounts(
-      LogParser.accessEvents(mem.toDF().withColumnRenamed("value", "line"))))
-    val q = counts.writeStream.outputMode("update")
-      .format("memory").queryName("client_counts").start()
+    val noDim = Seq.empty[(Long, String)].toDF("fid", "name")
+    val sink = new UpsertSink(1)
+    val q = keyedToSinks(mem, noDim, noDim.toDF("tid", "subject")) {
+      case ((_, _, clients), id) => sink.merge(clients, id)
+    }
+    def counts = sink.snapshot.values.map(v => v(0).asInstanceOf[String] -> v(1).asInstanceOf[Long]).toMap
     try {
       mem.addData(
         line("10.0.0.1", "/forum.php?mod=viewthread&tid=9"),
@@ -32,16 +46,12 @@ class StreamingSpec extends AnyFunSuite {
         line("10.0.0.2", "/forum.php?mod=viewthread&tid=9"),
         line("10.0.0.3", "/index.html")) // no ids -> filtered out
       q.processAllAvailable()
-      val t1 = spark.table("client_counts").groupBy($"client_ip")
-        .agg(max($"client_access_cnt").as("c")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val t1 = counts
       assert(t1 == Map("10.0.0.1" -> 2L, "10.0.0.2" -> 1L))
 
       mem.addData(line("10.0.0.1", "/forum.php?mod=viewthread&tid=7"))
       q.processAllAvailable()
-      val t2 = spark.table("client_counts").groupBy($"client_ip")
-        .agg(max($"client_access_cnt").as("c")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val t2 = counts
       assert(t2("10.0.0.1") == 3L) // state carried across batches
     } finally q.stop()
   }
@@ -51,13 +61,10 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
     val dim = Seq((3L, "tech"), (5L, "life")).toDF("fid", "name")
-    val counts = LogStream.keyedCounts(
-      LogParser.accessEvents(mem.toDF().withColumnRenamed("value", "line")))
-    val sink = new UpsertSink(Seq("section_id"))
-    val q = counts.writeStream.outputMode("update")
-      .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-        sink.merge(LogStream.sectionTotals(df, dim), id))
-      .start()
+    val sink = new UpsertSink(1)
+    val q = keyedToSinks(mem, dim, Seq.empty[(Long, String)].toDF("tid", "subject")) {
+      case ((sections, _, _), id) => sink.merge(sections, id)
+    }
     try {
       mem.addData(
         line("10.0.0.1", "/forum.php?mod=forumdisplay&fid=3"),

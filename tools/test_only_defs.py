@@ -11,7 +11,9 @@ definition is listed when every occurrence of its name lies inside its own
 extent or inside the extent of another listed definition, so a helper that
 only a listed definition calls is listed too. The lookup is by name, not by
 type: a definition shares its uses with every other definition of the same
-name. `override def`, `main`, `apply` and `unapply` are never listed: the
+name, and with any library method of that name that program code calls
+(a test-only `UpsertSink.replace` would stay hidden behind the program's
+calls to `String.replace`). `override def`, `main`, `apply` and `unapply` are never listed: the
 framework, the JVM or their owner's name reaches them. Neither is an object
 that holds a `main`: it is an entry point.
 
