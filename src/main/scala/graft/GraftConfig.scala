@@ -1,23 +1,15 @@
 package graft
 
-/** Externalized endpoint/config surface.
+/** Externalized config surface of the product main.
   *
   * The reference ships `src/main/resources/param.conf` (Typesafe config
   * with Kafka + MySQL endpoints) but never loads it — every endpoint is
   * hard-coded (SURVEY.md §2.1 config note, reference
-  * `LogAnalysis.java:54-63,108-113`). This rebuild actually externalizes:
-  * every setting reads `GRAFT_<KEY>` from the environment, then the
-  * `graft.<key>` JVM system property, then the reference's documented
-  * default.
+  * `LogAnalysis.java:54-63,108-113`). This rebuild externalizes what its
+  * main reads: every setting reads `GRAFT_<KEY>` from the environment,
+  * then the `graft.<key>` JVM system property, then the default.
   */
 final case class GraftConfig(
-    kafkaBrokers: String,
-    kafkaTopic: String,
-    kafkaGroupId: String,
-    kafkaStartingOffsets: String,
-    jdbcUrl: String,
-    jdbcUser: String,
-    jdbcPassword: String,
     checkpointDir: String,
     shufflePartitions: Int)
 
@@ -27,18 +19,10 @@ object GraftConfig {
     sys.env.getOrElse(s"GRAFT_${key.toUpperCase.replace('.', '_')}",
       sys.props.getOrElse(s"graft.$key", default))
 
-  /** Defaults mirror the reference deployment (`LogAnalysis.java:56,62,
-    * 66,108-113`, checkpoint at `:43`): kms-2/3/4 brokers, topic
-    * `user_access_logs`, group `log_consumer`, MySQL on kms-4.
+  /** The streaming checkpoint root (the reference checkpoints at
+    * `LogAnalysis.java:43`) and the shuffle partition count.
     */
   def load(): GraftConfig = GraftConfig(
-    kafkaBrokers = get("kafka.brokers", "kms-2:9092,kms-3:9092,kms-4:9092"),
-    kafkaTopic = get("kafka.topic", "user_access_logs"),
-    kafkaGroupId = get("kafka.group.id", "log_consumer"),
-    kafkaStartingOffsets = get("kafka.starting.offsets", "earliest"),
-    jdbcUrl = get("jdbc.url", "jdbc:mysql://kms-4:3306/mydb"),
-    jdbcUser = get("jdbc.user", "root"),
-    jdbcPassword = get("jdbc.password", ""),
     checkpointDir = get("checkpoint.dir", "/tmp/graft-checkpoints"),
     shufflePartitions = get("shuffle.partitions", "32").toInt)
 }

@@ -44,8 +44,10 @@ object LogAnalysisApp {
     * the dims ([[graft.streaming.LogStream.named]]), and the driver merges
     * the rows into the three in-memory upsert tables. The dims are read
     * inside that action, once per trigger (the lookup-join analog), so a
-    * dim that changes is seen at the next trigger. A batch that fails
-    * fails in the collect, before any sink is written.
+    * dim that changes is seen at the next trigger (LogAnalysisAppSpec "a
+    * JDBC dim row inserted after start names its section at the next
+    * trigger"). A batch that fails fails in the collect, before any sink
+    * is written.
     *
     * Sinks start empty. On a restart from a checkpoint with a committed
     * batch they are first filled from the committed state, so they then
@@ -173,8 +175,8 @@ object LogAnalysisApp {
   }
 
   /** CLI: `LogAnalysisApp <logDir> <sfDir>` — file-arrival stream over
-    * logDir (Kafka in production: graft.sources.LogSources.kafkaLines),
-    * dims from the sfDir testdata.
+    * logDir (the stand-in for the reference's Kafka topic: no Kafka
+    * connector ships with this build), dims from the sfDir testdata.
     */
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {

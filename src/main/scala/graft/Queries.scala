@@ -1795,11 +1795,13 @@ object Queries {
 
   /** [[annIvfPq]] served from the PARTITION-PRUNED lake layout — the
     * proof of the IVFADC storage claim: the residual code table is
-    * WRITTEN to parquet partitioned by `ivf_cell`
-    * ([[graft.sources.LakeWriter.writeCellPartitioned]]), read back,
-    * and filtered to the queries' probed cells BEFORE the ADC join, so
-    * the scan node itself carries `PartitionFilters` and reads only
-    * nprobe-of-ncells directories (PlanSpec asserts both). The probed
+    * WRITTEN to parquet partitioned by `ivf_cell` (the IVFADC
+    * vector-store layout: codes + cell id on disk), read back, and
+    * filtered to the queries' probed cells BEFORE the ADC join, so the
+    * scan node itself carries `PartitionFilters` and reads only
+    * nprobe-of-ncells directories (PlanSpec asserts both). At 100 TB the
+    * code table is the only corpus-sized index artifact, and this layout
+    * turns nprobe/ncells from a join selectivity into an IO bound. The probed
     * cell-id list is collected to the driver — bounded by the COARSE
     * MODEL (≤ ncells ids, here ≤ |labels|), never the corpus, the same
     * budget as broadcasting the centroids themselves. Results are
@@ -1816,7 +1818,7 @@ object Queries {
       val path = java.nio.file.Paths.get(
         sys.props("java.io.tmpdir"), "graft_ivfpq_lake",
         "lake" + sfDir.replaceAll("[^A-Za-z0-9.]+", "_")).toString
-      graft.sources.LakeWriter.writeCellPartitioned(codes, "ivf_cell", path)
+      codes.write.mode("overwrite").partitionBy("ivf_cell").parquet(path)
       spark.read.parquet(path)
     }
     val qs = probeSlice(raw, 10)

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * max IS the latest row; no sort window), then one full-outer
   * equi-join against the snapshot. At scale both sides hash-partition
   * on the key; with the snapshot bucketed by key on disk
-  * (LakeWriter.writeBucketed) the join reads sorted buckets
+  * (`df.write.bucketBy(...)`) the join reads sorted buckets
   * exchange-free and the per-apply shuffle is DELTA-sized. The caller
   * contracts that `seqCol` is strictly ordered per key (CDC logs are);
   * equal seqs would tie-break on (op, payload) struct order.

@@ -86,26 +86,6 @@ object Dedup {
     hashed.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
   }
 
-  /** Stateless per-row signature variant for STREAMING inputs: 8 lambda
-    * folds over the (already natively hashed) shingle array — no
-    * aggregation state, so it composes with append-mode pipelines. Batch
-    * jobs prefer [[minhashSignatures]] (codegen'd, map-side combined);
-    * same values either way.
-    */
-  def minhashSignaturesNarrow(shingled: DataFrame,
-      keep: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
-    val sigCols = MinHashA.zip(MinHashB).zipWithIndex.map { case ((a, b), j) =>
-      aggregate(col("shingles"), lit(MinHashP),
-        (acc, h) => least(acc, (h * a + b) % MinHashP)).as(s"s$j")
-    }
-    // `keep` carries payload columns (e.g. the shingle set itself)
-    // through the projection — callers must NOT re-join the input to
-    // fetch them: on a STREAMING frame that self-join plans as a
-    // stateful symmetricHashJoin.
-    shingled.filter(size(col("shingles")) > 0)
-      .select(col("doc_id") +: (keep ++ sigCols): _*)
-  }
-
   /** LSH banding: 4 bands × 2 rows; band key = "j:s2j:s2j+1". Candidate
     * pairs = equi-join on band key (deduped) — the scale path that
     * replaces the O(n²) cross join.
@@ -290,7 +270,7 @@ object Dedup {
     * Scale shape: the posting table is the inverted index a corpus
     * search system materializes anyway — (h, corpus_id), size
     * Σ|shingles|, written once and bucketed by h in production
-    * (LakeWriter.writeBucketed) so each probe batch shuffles only its
+    * (`df.write.bucketBy(...)`) so each probe batch shuffles only its
     * k·|probe| sample rows. Fan-out per sample row is df(h), capped by
     * dropping posting hashes with df > maxDocFreq (the winnowPairs
     * boilerplate cap) at the declared cost: a probe whose k smallest
@@ -311,7 +291,7 @@ object Dedup {
     * frequency cap applied at BUILD time (identical semantics to the
     * inline path's per-call cap — the cap is a property of the corpus,
     * so pay its aggregate once, not per probe batch). Write it with
-    * `LakeWriter.writeBucketed(_, "h", N, table)` and every probe
+    * `df.write.bucketBy(N, "h")` as a table and every probe
     * batch's candidate join shuffles ONLY the k·|probe| sample rows —
     * the posting side is a sorted-bucket columnar scan, never
     * re-shuffled or re-exploded. Companion doc-side store for the
@@ -330,8 +310,8 @@ object Dedup {
   /** One-sided containment search against a PREBUILT posting table
     * ([[containmentPostingTable]], ideally h-bucketed on disk) and a
     * corpus shingle store (`shingleSets(corpus)` shape, ideally
-    * doc_id-bucketed) — the continual-ingest twin of
-    * [[newVersusCorpusPrebuilt]]: per-probe-batch work is the batch's
+    * doc_id-bucketed) — the continual-ingest form of one-sided
+    * containment: per-probe-batch work is the batch's
     * own shingling + a sample-row join into sorted posting buckets +
     * a candidate-sized verify fetch. Same output contract as
     * [[containmentVersusCorpus]].
@@ -369,8 +349,8 @@ object Dedup {
     *
     * Scale posture: both sides run the same signature pipeline, but the
     * corpus side is STATIC — in production you materialize its
-    * (band, doc_id) table once (bucketed by band, see
-    * LakeWriter.writeBucketed) so each delta batch's candidate join
+    * (band, doc_id) table once (bucketed by band,
+    * `df.write.bucketBy(...)`) so each delta batch's candidate join
     * shuffles ONLY the delta. The batch side is small by definition, so
     * the verify join's shingle fetch is batch-sized too. Per-ingest
     * cost: delta-sized SHUFFLE + one sequential columnar SCAN of the
@@ -392,52 +372,6 @@ object Dedup {
     cands
       .join(shNew.select(col("doc_id").as("new_id"), col("shingles").as("sh_n")), "new_id")
       .join(shCorp.select(col("doc_id").as("corpus_id"), col("shingles").as("sh_c")), "corpus_id")
-      .withColumn("jaccard",
-        round(size(array_intersect(col("sh_n"), col("sh_c"))).cast("double") /
-          size(array_union(col("sh_n"), col("sh_c"))), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_id"), col("corpus_id"), col("jaccard"))
-  }
-
-  /** The materializable corpus side of incremental dedup: one row per
-    * (corpus doc, band) carrying the doc's full band array and shingle
-    * set. Write it once with `LakeWriter.writeBucketed(_, "band", N,
-    * table)` and every future ingest joins it WITHOUT shuffling the
-    * corpus (bucketed scan satisfies the join distribution; only the
-    * delta exchanges). The corpus side is still a sequential scan per
-    * ingest — what's eliminated is its shuffle, sort, and re-signing.
-    */
-  def corpusBandTable(corpus: DataFrame): DataFrame = {
-    val bandKeys = (0 until 4).map(j =>
-      concat_ws(":", lit(j), col(s"s${2 * j}"), col(s"s${2 * j + 1}")))
-    val shCorp = shingleSets(corpus)
-    minhashSignatures(shCorp)
-      .join(shCorp.select(col("doc_id"), col("shingles").as("sh_c")), "doc_id")
-      .select(col("doc_id").as("corpus_id"), col("sh_c"), array(bandKeys: _*).as("bands_c"))
-      .select(col("corpus_id"), col("sh_c"), col("bands_c"),
-        explode(col("bands_c")).as("band"))
-  }
-
-  /** Incremental dedup against a PREBUILT corpus band table
-    * ([[corpusBandTable]], ideally band-bucketed on disk). One equi-join
-    * does candidates AND verification: both sides carry their band
-    * arrays and shingles, multi-band duplicate hits are removed by the
-    * stateless min-common-band filter, and the Jaccard check runs on
-    * the joined row. Works identically on batch and STREAMING deltas
-    * (no aggregation, no state).
-    */
-  def newVersusCorpusPrebuilt(newDocs: DataFrame, corpusBands: DataFrame,
-      threshold: Double): DataFrame = {
-    val bandKeys = (0 until 4).map(j =>
-      concat_ws(":", lit(j), col(s"s${2 * j}"), col(s"s${2 * j + 1}")))
-    val delta = minhashSignaturesNarrow(shingleSets(newDocs),
-        keep = Seq(col("shingles").as("sh_n")))
-      .select(col("doc_id").as("new_id"), col("sh_n"), array(bandKeys: _*).as("bands_n"))
-      .select(col("new_id"), col("sh_n"), col("bands_n"),
-        explode(col("bands_n")).as("band"))
-    delta.join(corpusBands, Seq("band"))
-      .filter(col("band") ===
-        array_min(array_intersect(col("bands_n"), col("bands_c"))))
       .withColumn("jaccard",
         round(size(array_intersect(col("sh_n"), col("sh_c"))).cast("double") /
           size(array_union(col("sh_n"), col("sh_c"))), 6))
@@ -840,7 +774,7 @@ object Dedup {
   /** Prebuilt gram-first index: h → earliest packed occurrence key in
     * the corpus — the index side of [[duplicateSpansVersusCorpus]].
     * Distinct-gram-sized; write once with
-    * `LakeWriter.writeBucketed(_, "h", N, table)` so every delta batch
+    * `df.write.bucketBy(N, "h")` as a table so every delta batch
     * joins into sorted buckets with no index-side shuffle (the
     * containmentPostingTable convention).
     */
@@ -879,43 +813,12 @@ object Dedup {
     * a fully-duplicated doc comes back with n_kept = 0 and empty text.
     */
   def stripDuplicateSpans(docs: DataFrame, k: Int = 8): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val grams = gramHashes(docs, k).withColumn("key", firstKey)
     val first = grams.groupBy(col("h")).agg(min(col("key")).as("first_key"))
     val marks = grams.join(first, "h")
       .filter(col("key") =!= col("first_key"))
       .select(col("doc_id"), col("pos"), lit(1).as("dup"))
-    stripFromMarks(docs, marks, k)
-  }
-
-  /** Strip of a DELTA batch against a prebuilt corpus gram index —
-    * [[stripDuplicateSpans]]'s continual-ingest twin, the strip analog
-    * of [[duplicateSpansVersusCorpus]] (same dup predicate: a batch
-    * gram occurrence is duplicated if its gram exists in the corpus at
-    * all, or occurred earlier within the batch). When batches arrive
-    * in ascending global key order and the index accumulates every
-    * batch's [[gramFirstTable]], the concatenated outputs are
-    * ROW-IDENTICAL to one whole-corpus [[stripDuplicateSpans]] run —
-    * DedupStreamSpec "streaming ExactSubstr" pins that parity end to end
-    * through foreachBatch.
-    */
-  def stripVersusCorpus(batch: DataFrame, corpusFirst: DataFrame,
-      k: Int = 8): DataFrame = {
-    val grams = gramHashes(batch, k).withColumn("key", firstKey)
-    val first = grams.groupBy(col("h")).agg(min(col("key")).as("batch_first"))
-    val marks = grams
-      .join(first, "h")
-      .join(corpusFirst.select(col("h"), lit(1).as("in_corpus")), Seq("h"), "left")
-      .filter(col("in_corpus").isNotNull || col("key") =!= col("batch_first"))
-      .select(col("doc_id"), col("pos"), lit(1).as("dup"))
-    stripFromMarks(batch, marks, k)
-  }
-
-  /** Shared strip tail: rebuild each doc with tokens covered by a
-    * dup-gram run cut out (running max of dup-start + k − 1 — one
-    * doc-partitioned window, never a range join).
-    */
-  private def stripFromMarks(docs: DataFrame, marks: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = docs.select(col("doc_id"),
       posexplode(split(trim(lower(col("text"))), "\\s+")).as(Seq("pos", "tok")))
     val wo = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
@@ -1016,8 +919,8 @@ object Dedup {
 
   /** Corpus-side paragraph-hash index: the distinct segment hashes of
     * the ingested corpus — what a delta batch probes. Distinct-
-    * paragraph-sized; write once with `LakeWriter.writeBucketed(_,
-    * "h", N, table)` so every batch joins into sorted buckets with no
+    * paragraph-sized; write once with `df.write.bucketBy(N, "h")` as
+    * a table so every batch joins into sorted buckets with no
     * index-side shuffle (the gramFirstTable convention).
     */
   def paragraphHashTable(corpusSegments: DataFrame): DataFrame =

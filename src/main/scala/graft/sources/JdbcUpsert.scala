@@ -23,7 +23,6 @@ class JdbcUpsert(
     keyCols: Seq[String],
     connect: () => Connection,
     batchSize: Int = 500,
-    dialectSql: Option[String] = None,
     /** true → portable two-statement upsert (UPDATE; INSERT when no row
       * matched) instead of a native single-statement dialect. Works on
       * every JDBC engine (Derby has no usable MERGE-over-VALUES, old
@@ -49,10 +48,9 @@ class JdbcUpsert(
   /** MySQL-dialect upsert statement (the reference's sink DDL dialect):
     * INSERT INTO t (c1,c2,...) VALUES (?,?,...)
     * ON DUPLICATE KEY UPDATE c2=VALUES(c2), ...   (non-key columns only)
-    * Override via `dialectSql` for other engines — see
-    * [[JdbcUpsert.ansiMergeSql]] for the standard MERGE form.
+    * Other engines take `updateThenInsert`.
     */
-  val upsertSql: String = dialectSql.getOrElse {
+  val upsertSql: String = {
     val cols = columns.mkString(", ")
     val placeholders = columns.map(_ => "?").mkString(", ")
     val updates = columns.filterNot(keyCols.contains)
@@ -159,33 +157,5 @@ class JdbcUpsert(
           } finally conn.close()
         }
       }
-  }
-}
-
-object JdbcUpsert {
-
-  /** ANSI `MERGE` upsert (Derby / Oracle / SQL Server / Postgres 15+):
-    *
-    *   MERGE INTO t USING (VALUES (CAST(? AS T1), ...)) v(c1,...)
-    *   ON t.k = v.k
-    *   WHEN MATCHED THEN UPDATE SET c = v.c, ...
-    *   WHEN NOT MATCHED THEN INSERT (c1,...) VALUES (v.c1,...)
-    *
-    * `sqlTypes` gives each column's SQL type (same order as `columns`) —
-    * standard MERGE sources reject untyped parameter markers, so every
-    * placeholder is CAST.
-    */
-  def ansiMergeSql(table: String, columns: Seq[String], keyCols: Seq[String],
-      sqlTypes: Seq[String]): String = {
-    require(columns.length == sqlTypes.length, "one SQL type per column")
-    val typed = columns.zip(sqlTypes)
-      .map { case (_, t) => s"CAST(? AS $t)" }.mkString(", ")
-    val on = keyCols.map(k => s"t.$k = v.$k").mkString(" AND ")
-    val updates = columns.filterNot(keyCols.contains)
-      .map(c => s"$c = v.$c").mkString(", ")
-    s"MERGE INTO $table t USING (VALUES ($typed)) v(${columns.mkString(", ")}) " +
-      s"ON $on WHEN MATCHED THEN UPDATE SET $updates " +
-      s"WHEN NOT MATCHED THEN INSERT (${columns.mkString(", ")}) " +
-      s"VALUES (${columns.map(c => s"v.$c").mkString(", ")})"
   }
 }

@@ -1,69 +1,19 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.GraftConfig
-
-/** Log-line sources — the reference's ingestion surface re-expressed:
-  *
-  *   S1 Kafka (`LogAnalysis.java:54-70`): topic of raw combined-format
-  *      lines. [[kafkaLines]] builds the exact readStream; offsets ride
-  *      in the checkpoint (the analog of Flink's offset state).
-  *   S4 file fixture (`access_log.txt`): [[textLines]] (batch) and
-  *      [[textStreamLines]] (file-arrival streaming — also the local
-  *      stand-in for Kafka in tests, same downstream plan).
+/** Log-line sources — the reference's ingestion surface re-expressed.
+  * [[textStreamLines]] is a file-arrival stream of raw combined-format
+  * lines, the stand-in for the reference's Kafka topic
+  * (`LogAnalysis.java:54-70`): one string column `line`, the shape every
+  * downstream plan reads, with the read offsets kept in the checkpoint.
   */
 object LogSources {
 
   val LineSchema: StructType = StructType(Seq(StructField("line", StringType)))
 
-  /** The exact (format, options) [[kafkaLines]] wires into its
-    * DataStreamReader — exposed so KafkaConfigSpec can pin the mapping
-    * option-for-option against the reference consumer config
-    * (`LogAnalysis.java:54-63`) without a live broker.
-    */
-  def kafkaReaderConfig(cfg: GraftConfig): (String, Map[String, String]) =
-    ("kafka", Map(
-      "kafka.bootstrap.servers" -> cfg.kafkaBrokers,
-      "subscribe" -> cfg.kafkaTopic,
-      "startingOffsets" -> cfg.kafkaStartingOffsets))
-
-  /** Streaming Kafka source → one string column `line`. Option names/
-    * values mirror the reference consumer config: brokers, subscribe
-    * topic, earliest offsets (`auto.offset.reset=earliest`); group id is
-    * managed by Spark's checkpoint rather than Kafka group state.
-    */
-  def kafkaLines(spark: SparkSession, cfg: GraftConfig = GraftConfig.load()): DataFrame = {
-    val (fmt, opts) = kafkaReaderConfig(cfg)
-    spark.readStream
-      .format(fmt)
-      .options(opts)
-      .load()
-      .select(col("value").cast("string").as("line"))
-  }
-
-  /** Batch text source (the fixture-corpus path). */
-  def textLines(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(LineSchema).text(path).toDF("line")
-
   /** File-arrival streaming text source. */
   def textStreamLines(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(LineSchema).text(dir).toDF("line")
-
-  /** S2 — JDBC dimension snapshot (`pre_forum_post` / `pre_forum_forum`,
-    * reference `LogAnalysis.java:138-152,199-215`). Re-read per
-    * micro-batch inside foreachBatch and `broadcast()`ed at the join —
-    * the stream-static analog of the reference's TTL'd lookup cache
-    * (`lookup.cache.ttl`, `:211-212`).
-    */
-  def jdbcDim(spark: SparkSession, table: String,
-      cfg: GraftConfig = GraftConfig.load()): DataFrame =
-    spark.read.format("jdbc")
-      .option("url", cfg.jdbcUrl)
-      .option("dbtable", table)
-      .option("user", cfg.jdbcUser)
-      .option("password", cfg.jdbcPassword)
-      .load()
 }

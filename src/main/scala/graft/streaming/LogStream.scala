@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * continuously-updating aggregates → upsert sink.
   *
   * Reference ⇄ Spark mapping (SURVEY.md §1.3):
-  *   - Kafka `DataStream<String>`      → `readStream` lines (kafka/file/
+  *   - Kafka `DataStream<String>`      → `readStream` lines (file/
   *     MemoryStream — the transforms below are source-agnostic)
   *   - continuous `count(1) GROUP BY`   → update-mode streaming aggregate
   *     (state in Spark's StateStore, keyed exchange on the group key)
@@ -64,7 +64,9 @@ object LogStream {
     * with a null name. The dims are read when the plan runs, once per
     * trigger (stream-static broadcast join — Spark's semantic for the
     * reference's `FOR SYSTEM_TIME AS OF proctime` lookup join,
-    * `LogAnalysis.java:251`), so a JDBC dim sees rows added after start.
+    * `LogAnalysis.java:251`), so a JDBC dim sees rows added after start
+    * (LogAnalysisAppSpec "a JDBC dim row inserted after start names its
+    * section at the next trigger").
     */
   def named(changes: DataFrame, sectionDim: DataFrame, articleDim: DataFrame): DataFrame = {
     def dim(kind: String, d: DataFrame, id: String, name: String): DataFrame =

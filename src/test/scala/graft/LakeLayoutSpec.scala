@@ -6,98 +6,17 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{LakeWriter, Tables}
+import graft.sources.Tables
 
-/** Storage-layout guarantees: date-partition pruning and shuffle-free
-  * bucketed joins — the layout decisions that dominate at 100 TB.
+/** Storage-layout guarantees, the layout decisions that dominate at
+  * 100 TB: an h-bucketed posting table that one-sided containment probes
+  * without shuffling the index, an `ivf_cell`-partitioned PQ code table
+  * whose probe join prunes partitions, and streaming `dropDuplicates`
+  * within a watermark.
   */
 class LakeLayoutSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
   val sf = "/root/testdata/sf0.001"
-
-  test("date-partitioned write prunes partitions on read") {
-    val out = Files.createTempDirectory("graft-lake").toString + "/events"
-    LakeWriter.writeDatePartitioned(Tables.events(spark, sf), "ts", out)
-    val read = spark.read.parquet(out).filter(col("dt") === "2024-01-05")
-    val plan = read.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(plan.contains("PartitionFilters") && plan.contains("2024-01-05"), plan)
-    val expected = Tables.events(spark, sf)
-      .filter(date_format(col("ts"), "yyyy-MM-dd") === "2024-01-05").count()
-    assert(read.count() == expected && expected > 0)
-  }
-
-  test("dynamic partition overwrite: re-running one day is idempotent, other days untouched") {
-    val out = Files.createTempDirectory("graft-lake").toString + "/events"
-    val all = Tables.events(spark, sf)
-    LakeWriter.writeDatePartitioned(all, "ts", out)
-    val before = spark.read.parquet(out).count()
-    val day = "2024-01-05"
-    val dayRows = all.filter(date_format(col("ts"), "yyyy-MM-dd") === day)
-    assert(dayRows.count() > 0)
-    // re-process the day twice — count must not move and other
-    // partitions must survive (static overwrite would clear them)
-    LakeWriter.overwriteDatePartitions(dayRows, "ts", out)
-    LakeWriter.overwriteDatePartitions(dayRows, "ts", out)
-    val after = spark.read.parquet(out)
-    assert(after.count() == before)
-    assert(after.filter(col("dt") =!= day).count() == before - dayRows.count())
-  }
-
-  test("bucketed tables join without any exchange") {
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    Seq("li_b", "o_b").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:"), t)
-      if (loc.exists()) org.apache.commons.io.FileUtils.deleteDirectory(loc)
-    }
-    LakeWriter.writeBucketed(
-      Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity"), "l_orderkey", 8, "li_b")
-    LakeWriter.writeBucketed(
-      Tables.orders(spark, sf).select("o_orderkey", "o_orderpriority"), "o_orderkey", 8, "o_b")
-    val joined = spark.table("li_b")
-      .join(spark.table("o_b").hint("merge"), col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderpriority").agg(sum("l_quantity").as("q"))
-    val plan = joined.queryExecution.executedPlan.toString
-    // co-located: sort-merge join directly over the bucketed scans —
-    // no ShuffleExchange below the join (only the final agg exchanges)
-    val joinIdx = plan.indexOf("SortMergeJoin")
-    assert(joinIdx >= 0, plan)
-    assert(!plan.substring(joinIdx).contains("Exchange hashpartitioning(l_orderkey"), plan)
-    assert(!plan.substring(joinIdx).contains("Exchange hashpartitioning(o_orderkey"), plan)
-    assert(joined.count() > 0)
-  }
-
-  test("band-bucketed corpus table: incremental dedup joins without shuffling the corpus") {
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    spark.sql("DROP TABLE IF EXISTS corpus_bands")
-    val loc = new java.io.File(spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:"), "corpus_bands")
-    if (loc.exists()) org.apache.commons.io.FileUtils.deleteDirectory(loc)
-    val corpus = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    LakeWriter.writeBucketed(graft.ops.Dedup.corpusBandTable(corpus), "band", 8, "corpus_bands")
-
-    val delta = corpus.filter(col("doc_id") % 9 === 0)
-      .select((col("doc_id") + 70000).as("doc_id"), col("text"))
-    val matches = graft.ops.Dedup.newVersusCorpusPrebuilt(
-      delta, spark.table("corpus_bands").hint("merge"), 0.5)
-    val plan = matches.queryExecution.executedPlan.toString
-    // the bucketed corpus scan feeds the join with NO exchange of its
-    // own — only the delta side repartitions (the O(delta) ingest shape)
-    val joinIdx = plan.indexOf("SortMergeJoin")
-    assert(joinIdx >= 0, plan)
-    val corpusShuffles = "Exchange hashpartitioning\\(band".r
-      .findAllIn(plan.substring(joinIdx)).size
-    assert(corpusShuffles <= 1, s"corpus side shuffled:\n$plan")
-    assert(plan.contains("SelectedBucketsCount") || plan.contains("Bucketed: true"), plan)
-    // and the prebuilt path returns the SAME matches as the inline one
-    val viaPrebuilt = matches.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val viaInline = graft.ops.Dedup.newVersusCorpus(delta, corpus, 0.5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(viaPrebuilt == viaInline)
-    assert(viaPrebuilt.nonEmpty) // exact copies must match their source
-  }
 
   test("h-bucketed posting table: one-sided containment probes without shuffling the index") {
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
@@ -113,8 +32,8 @@ class LakeLayoutSpec extends AnyFunSuite {
         sort_array(collect_list(struct(col("doc_id"), col("text")))),
         x => x.getField("text")), " ").as("text"))
       .select((col("g") + 90000L).as("doc_id"), col("text"))
-    LakeWriter.writeBucketed(
-      graft.ops.Dedup.containmentPostingTable(corpus), "h", 8, "corpus_postings")
+    graft.ops.Dedup.containmentPostingTable(corpus)
+      .write.bucketBy(8, "h").sortBy("h").format("parquet").saveAsTable("corpus_postings")
 
     val probe = docs.filter(col("doc_id") % 5 === 0)
     val matches = graft.ops.Dedup.containmentVersusCorpusPrebuilt(
@@ -123,7 +42,7 @@ class LakeLayoutSpec extends AnyFunSuite {
     val plan = matches.queryExecution.executedPlan.toString
     // the bucketed posting scan feeds the candidate join with NO
     // exchange of its own — only the probe samples repartition (the
-    // O(probe) ingest shape, same contract as the band table)
+    // O(probe) ingest shape)
     val joinIdx = plan.indexOf("SortMergeJoin")
     assert(joinIdx >= 0, plan)
     val indexShuffles = "Exchange hashpartitioning\\(h".r
@@ -168,36 +87,6 @@ class LakeLayoutSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     res.unpersist(blocking = false)
     assert(got == expect && got.nonEmpty, s"disk=${got.size} mem=${expect.size}")
-  }
-
-  test("csv and json-lines interchange round-trips with explicit schemas") {
-    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("lang"), col("n_chars"))
-    val schema = docs.schema
-    val base = Files.createTempDirectory("graft-interchange").toString
-    LakeWriter.writeCsv(docs, s"$base/csv")
-    LakeWriter.writeJsonLines(docs, s"$base/json")
-    val fromCsv = LakeWriter.readCsv(spark, s"$base/csv", schema)
-    val fromJson = LakeWriter.readJsonLines(spark, s"$base/json", schema)
-    val exp = docs.orderBy(col("doc_id")).collect().toSeq
-    assert(fromCsv.orderBy(col("doc_id")).collect().toSeq == exp)
-    assert(fromJson.orderBy(col("doc_id")).collect().toSeq == exp)
-    // schema honored without inference (no extra pass at scale)
-    assert(fromCsv.schema == schema && fromJson.schema == schema)
-  }
-
-  test("orc round-trips and pushes filters/pruning into the scan") {
-    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("lang"), col("n_chars"))
-    val base = Files.createTempDirectory("graft-orc").toString
-    LakeWriter.writeOrc(docs, s"$base/orc")
-    val back = LakeWriter.readOrc(spark, s"$base/orc")
-    assert(back.orderBy(col("doc_id")).collect().toSeq ==
-      docs.orderBy(col("doc_id")).collect().toSeq)
-    // same scan properties as parquet: pushed filter + pruned columns
-    val plan = back.filter(col("doc_id") > 100).select("doc_id")
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(plan.contains("PushedFilters") && plan.contains("GreaterThan(doc_id,100)"), plan)
-    assert(!plan.replace("graft-orc", "").contains("n_chars"), plan)
   }
 
   test("streaming dropDuplicates dedups within the watermark") {

@@ -166,6 +166,39 @@ class LogAnalysisAppSpec extends AnyFunSuite {
     assert(uninterrupted._3(Seq("10.0.0.1")).last == 3L)
   }
 
+  test("a JDBC dim row inserted after start names its section at the next trigger") {
+    import spark.implicits._
+    // embedded Derby (ships with Spark), its own database
+    val url = "jdbc:derby:memory:graftsectiondim;create=true"
+    def sql(statements: String*): Unit = {
+      val conn = java.sql.DriverManager.getConnection(url)
+      try statements.foreach(conn.createStatement().execute(_)) finally conn.close()
+    }
+    sql("CREATE TABLE forum_section (fid BIGINT PRIMARY KEY, name VARCHAR(64))",
+      "INSERT INTO forum_section VALUES (3, 'tech')")
+    val sectionDim = spark.read.format("jdbc")
+      .option("url", url).option("dbtable", "forum_section").load()
+    val articleDim = Seq((9L, "post nine")).toDF("tid", "subject")
+    val logDir = Files.createTempDirectory("graft-logs-j").toFile
+    Files.writeString(new java.io.File(logDir, "b0.log").toPath, Seq(
+      line("10.0.0.1", "/forum.php?mod=forumdisplay&fid=3"),
+      line("10.0.0.2", "/forum.php?mod=forumdisplay&fid=5")).mkString("\n"))
+    val p = LogAnalysisApp.start(spark,
+      graft.sources.LogSources.textStreamLines(spark, logDir.toString),
+      sectionDim, articleDim, Files.createTempDirectory("graft-ckpt-j").toString)
+    try {
+      p.query.processAllAvailable()
+      // fid 5 has no dim row yet: its changelog row drops at the join
+      assert(p.sectionSink.snapshot.keySet == Set(Seq(3L)))
+
+      sql("INSERT INTO forum_section VALUES (5, 'life')")
+      Files.writeString(new java.io.File(logDir, "b1.log").toPath,
+        line("10.0.0.3", "/forum.php?mod=forumdisplay&fid=5"))
+      p.query.processAllAvailable()
+      assert(p.sectionSink.snapshot(Seq(5L)) == Seq(5, "life", 2L))
+    } finally p.query.stop()
+  }
+
   test("each product trigger runs one Spark action and leaves nothing cached") {
     import spark.implicits._
     import org.apache.spark.sql.execution.QueryExecution
@@ -404,10 +437,10 @@ class LogAnalysisAppSpec extends AnyFunSuite {
   }
 
   test("config precedence: env > sysprop > reference default") {
-    assert(GraftConfig.load().kafkaTopic == "user_access_logs")
-    sys.props.put("graft.kafka.topic", "override_topic")
-    try assert(GraftConfig.load().kafkaTopic == "override_topic")
-    finally sys.props.remove("graft.kafka.topic")
+    assert(GraftConfig.load().checkpointDir == "/tmp/graft-checkpoints")
+    sys.props.put("graft.checkpoint.dir", "/tmp/graft-override")
+    try assert(GraftConfig.load().checkpointDir == "/tmp/graft-override")
+    finally sys.props.remove("graft.checkpoint.dir")
   }
 }
 

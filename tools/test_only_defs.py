@@ -15,7 +15,10 @@ name, and with any library method of that name that program code calls
 (a test-only `UpsertSink.replace` would stay hidden behind the program's
 calls to `String.replace`). `override def`, `main`, `apply` and `unapply` are never listed: the
 framework, the JVM or their owner's name reaches them. Neither is an object
-that holds a `main`: it is an entry point.
+that holds a `main`: it is an entry point. Companions share their uses: a
+top-level `class` or `trait` and the `object` of its name in its file count
+a use inside either extent as inside both, so the pair is listed when only
+tests name it.
 
 A definition's extent runs from its line over every following line that is
 blank or indented deeper, plus a closing `}` or `)` line at its own indent.
@@ -103,6 +106,7 @@ def main(dirs):
     uses = {}      # name -> [(file, line)]
     defs = []      # (file, name, first line, last line)
     mains = []     # (file, line) of each `def main`
+    tops = []      # the top-level object, class and trait definitions
     for path in files:
         lines = strip_comments(path.read_text(encoding="utf-8")).split("\n")
         for no, line in enumerate(lines):
@@ -112,7 +116,8 @@ def main(dirs):
                 continue
             top = TOP.match(line)
             if top:
-                defs.append((path, top.group(1), no, extent_end(lines, no)))
+                tops.append((path, top.group(1), no, extent_end(lines, no)))
+                defs.append(tops[-1])
             for m in DEF.finditer(line):
                 if m.group(2) == "main":
                     mains.append((path, no))
@@ -123,6 +128,14 @@ def main(dirs):
         return use[0] == d[0] and d[2] <= use[1] <= d[3]
 
     defs = [d for d in defs if not any(inside(m, d) and d[2] < m[1] for m in mains)]
+    # each top-level definition -> itself and its same-named companions
+    # (an entry-point object is no companion: its uses are program uses)
+    tops = [d for d in tops if d in defs]
+    pair = {d: [c for c in tops if c[:2] == d[:2]] for d in tops}
+
+    def own(use, d):
+        return any(inside(use, c) for c in pair.get(d, [d]))
+
     listed = []
     changed = True
     while changed:
@@ -130,7 +143,7 @@ def main(dirs):
         for d in defs:
             if d in listed:
                 continue
-            if all(inside(u, d) or any(inside(u, l) for l in listed) for u in uses[d[1]]):
+            if all(own(u, d) or any(inside(u, l) for l in listed) for u in uses[d[1]]):
                 listed.append(d)
                 changed = True
 

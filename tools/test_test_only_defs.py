@@ -5,11 +5,14 @@ Usage: python3 tools/test_test_only_defs.py
 
 Writes a main and a test source tree under a temp dir, runs the tool on the
 main tree only (as it is run on the repo: program dirs, no test dirs) and
-checks four rules:
+checks five rules:
   - a def named only under the test dir is listed;
   - a helper called only by a listed def is listed;
   - a name that appears only in a comment does not count as a use;
-  - an object that holds `main` is never listed.
+  - an object that holds `main` is never listed;
+  - a class and its companion object, named only by each other and by
+    tests, are listed, but not a class whose companion holds `main`
+    (their own tree, so the totals above stay apart).
 """
 import subprocess
 import sys
@@ -61,26 +64,63 @@ class LibSpec {
 }
 
 
+COMPANION_MAIN = {
+    "Foo.scala": """\
+package demo
+
+class Foo(val n: Int)
+
+object Foo {
+  def make(n: Int): Foo = new Foo(n)
+}
+""",
+    "Bar.scala": """\
+package demo
+
+class Bar
+
+object Bar {
+  def main(args: Array[String]): Unit = println(new Bar)
+}
+""",
+}
+
+COMPANION_TEST = {
+    "FooSpec.scala": """\
+package demo
+
+class FooSpec {
+  assert(Foo.make(1).n == 1)
+}
+""",
+}
+
+
 def write(root, files):
     root.mkdir(parents=True)
     for name, text in files.items():
         (root / name).write_text(text, encoding="utf-8")
 
 
+def run_tool(main_files, test_files):
+    """The tool's output on the main tree, and the set of names it lists."""
+    with tempfile.TemporaryDirectory() as tmp:
+        main, test = Path(tmp) / "main", Path(tmp) / "test"
+        write(main, main_files)
+        write(test, test_files)
+        out = subprocess.run([sys.executable, str(TOOL), str(main)],
+                             capture_output=True, text=True, check=True).stdout
+    listed = set()
+    for line in out.splitlines():
+        if ": " in line and "named by no program code: " in line:
+            listed.update(line.split("named by no program code: ", 1)[1].split(", "))
+    return out, listed
+
+
 class TestOnlyDefsTest(unittest.TestCase):
     @classmethod
     def setUpClass(cls):
-        with tempfile.TemporaryDirectory() as tmp:
-            main, test = Path(tmp) / "main", Path(tmp) / "test"
-            write(main, MAIN)
-            write(test, TEST)
-            out = subprocess.run([sys.executable, str(TOOL), str(main)],
-                                 capture_output=True, text=True, check=True).stdout
-        cls.out = out
-        cls.listed = set()
-        for line in out.splitlines():
-            if ": " in line and "named by no program code: " in line:
-                cls.listed.update(line.split("named by no program code: ", 1)[1].split(", "))
+        cls.out, cls.listed = run_tool(MAIN, TEST)
 
     def test_def_named_only_under_test_dir_is_listed(self):
         self.assertIn("onlyTested", self.listed, self.out)
@@ -99,6 +139,13 @@ class TestOnlyDefsTest(unittest.TestCase):
         self.assertNotIn("used", self.listed, self.out)
         self.assertNotIn("Lib", self.listed, self.out)
         self.assertIn("total: 3 of ", self.out)
+
+    def test_companions_share_their_uses(self):
+        out, listed = run_tool(COMPANION_MAIN, COMPANION_TEST)
+        self.assertIn("Foo", listed, out)
+        self.assertIn("make", listed, out)
+        self.assertNotIn("Bar", listed, out)  # its entry point names it
+        self.assertIn("total: 3 of 4 ", out)
 
 
 if __name__ == "__main__":
